@@ -13,9 +13,11 @@ Scale notes:
   re-execution risk) doesn't grow with iterations;
 - AQE handles moderate skew; for hub nodes the edges side can be
   pre-salted (see ``model.with_subject_bucket``);
-- connected components uses the *small-star/large-star*-style
-  min-label propagation: converges in O(log n) rounds on natural
-  graphs.
+- connected components uses min-label propagation with root hooking
+  and pointer doubling: rounds grow like log(component size). It is
+  the large-input path of entity canonicalization;
+  up to ``linkage.DRIVER_CANON_MAX_EDGES`` sameAs edges a driver
+  union-find gives the same labels without a job per round.
 """
 
 from __future__ import annotations
@@ -125,17 +127,34 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) with component = min node id in the component.
 
-    Min-label propagation over undirected edges **with pointer
-    doubling** (the large-star step of Kiveris et al.'s CC): each round
-    first takes the min label over neighbors, then replaces every
-    node's label by its label's label. Propagation alone needs
-    O(diameter) rounds (a length-k chain takes k); the doubling step
-    halves the remaining distance, so convergence is O(log diameter) —
-    the difference between 40 shuffles and 6 on a web-graph component.
+    Min-label propagation over undirected edges with **root hooking and
+    pointer doubling** (Shiloach–Vishkin-style hook and shortcut
+    steps). Each round, for every
+    edge (a, b), both ``a`` and ``a``'s current label take ``b``'s label
+    when it is smaller — hooking a whole tree, not one node — then
+    every node's label is replaced by its label's label. Propagation
+    alone moves a label one hop per round, and propagation plus
+    doubling without the hook still only a few hops when the node ids
+    along a path are in random order (a 70-node chain took more than
+    20 rounds); with the hook, trees merge pairwise and rounds grow
+    like log(component size) (random-order chains of 70, 500 and 3000
+    nodes: 6, 9 and 11 rounds).
+
+    Labels only decrease and each stays a node of the same component
+    with ``label(x) <= x``, so the fixed point the loop stops at (a
+    round that changes no label) is the component minimum. A loop that
+    reaches ``max_iterations`` without that fixed point raises rather
+    than return labels that are not yet minimal.
 
     Deterministic: labels are the minimum node id, so canonical entity
     IRIs are stable across runs and partitionings (north rule:
     deterministic canonicalization).
+
+    Each round costs a few Spark jobs whatever the edge count, so
+    entity canonicalization (``linkage.sameas_canonical_map``) calls
+    this only above ``linkage.DRIVER_CANON_MAX_EDGES`` edges; smaller
+    edge sets get the same min labels from a driver-side union-find
+    (``linkage.union_find_canonical``).
     """
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
@@ -152,14 +171,23 @@ def connected_components(
         .withColumn("comp", F.col("node"))
     ).transform(_materialize)
     for _ in range(max_iterations):
-        # 1) neighbor propagation: label ← min(own, labels of neighbors)
-        neigh = (
+        # 1) propagation + hooking: a ← label(b) and label(a) ← label(b)
+        cb = F.col("lb.comp")
+        offers = (
             sym.alias("e")
-            .join(labels.alias("l"), F.col("e.b") == F.col("l.node"))
-            .select(F.col("e.a").alias("node"), F.col("l.comp").alias("comp"))
+            .join(labels.alias("la"), F.col("e.a") == F.col("la.node"))
+            .join(labels.alias("lb"), F.col("e.b") == F.col("lb.node"))
+            .select(
+                F.inline(
+                    F.array(
+                        F.struct(F.col("e.a").alias("node"), cb.alias("comp")),
+                        F.struct(F.col("la.comp").alias("node"), cb.alias("comp")),
+                    )
+                )
+            )
         )
         new_labels = (
-            labels.unionByName(neigh)
+            labels.unionByName(offers)
             .groupBy("node")
             .agg(F.min("comp").alias("comp"))
         )
@@ -181,8 +209,10 @@ def connected_components(
         )
         labels = new_labels
         if changed.isEmpty():
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components did not converge in {max_iterations} rounds"
+    )
 
 
 def closure_from_triples(

@@ -38,7 +38,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..rdf.html import decode_bytes, extract_text, looks_like_html, scan_html
+from ..rdf.html import (
+    decode_bytes,
+    extract_text,
+    looks_like_html,
+    scan_html,
+    starts_like_html,
+)
 from ..rdf.parse import parse_rdf_auto
 from ..rdf.terms import Triple
 
@@ -103,7 +109,11 @@ def extract_page(url: str, body: str) -> Tuple[List[Tuple[Triple, str]], List[st
         triples.extend(
             (t, "rdfa") for t in parse_rdfa(body, base=url, events=events)
         )
-        return triples, links
+        if triples or links or starts_like_html(body):
+            return triples, links
+        # only a bare <head/<body substring said HTML (a Turtle
+        # document with the relative IRI <body>, say) and the HTML
+        # consumers found nothing: try the RDF chain instead
     parsed, fmt = parse_rdf_auto(body, base=url)
     if parsed:
         return [(t, fmt) for t in parsed], links

@@ -7,9 +7,11 @@ reference has no implementation, BASELINE.json:6 defines the contract):
 2. **Candidate scoring** — dictionary-match score fused with an
    embedding-cosine score (mention context vs entity embedding).
 3. **Canonicalization** — owl:sameAs-style equivalence edges →
-   connected components (iterative min-label propagation, see
-   :mod:`closure`) → rewrite triples' s/o to the deterministic
-   component representative (lexicographic min IRI).
+   connected components → rewrite triples' s/o to the deterministic
+   component representative (lexicographic min IRI). Up to
+   ``DRIVER_CANON_MAX_EDGES`` edges the components come from a
+   union-find on the driver (one bounded collect, no loop jobs); above
+   it from the iterative min-label propagation of :mod:`closure`.
 
 Scale: the dictionary is the small side (broadcast); mentions explode
 ~len(text)/token n-grams map-side and immediately semi-join against
@@ -19,6 +21,8 @@ broadcast in practice.
 """
 
 from __future__ import annotations
+
+from typing import Iterable, List, Optional, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -143,11 +147,85 @@ def score_candidates(
 
 def canonical_map(equiv_edges: DataFrame) -> DataFrame:
     """(member, canonical) from equivalence edges via connected
-    components; canonical = min IRI in the component (deterministic)."""
+    components; canonical = min IRI in the component (deterministic).
+
+    This is the distributed path: a few Spark jobs per
+    pointer-doubling round. :func:`sameas_canonical_map` uses it only
+    above ``DRIVER_CANON_MAX_EDGES`` edges and otherwise builds the same
+    map on the driver with :func:`union_find_canonical`."""
     cc = connected_components(equiv_edges)
     return cc.select(
         F.col("node").alias("member"), F.col("comp").alias("canonical")
     ).where(F.col("member") != F.col("canonical"))
+
+
+# Equivalence-edge count up to which canonicalization collects the
+# edges and runs a union-find on the driver (zero loop jobs) instead of
+# the connected-components loop. 200k string pairs are tens of MB on
+# the driver.
+DRIVER_CANON_MAX_EDGES = 200_000
+
+
+def union_find_canonical(
+    edges: Iterable[Tuple[Optional[str], Optional[str]]],
+) -> List[Tuple[str, str]]:
+    """(member, canonical) pairs, sorted, from (src, dst) equivalence
+    edges — the driver twin of :func:`canonical_map`.
+
+    Union-find that always makes the smaller IRI the root, so every
+    root is its component's minimum: the same label as
+    :func:`connected_components`' min-label propagation. Python's
+    code-point order equals Spark's UTF-8 binary string order. Edges
+    with a null endpoint are skipped (as the Spark path does), and
+    roots are left out (``member != canonical``)."""
+    parent: dict = {}
+
+    def find(x: str) -> str:
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        if a is None or b is None:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    return sorted((x, r) for x in parent if (r := find(x)) != x)
+
+
+def sameas_canonical_map(equiv_edges: DataFrame) -> Optional[DataFrame]:
+    """(member, canonical) map of (src, dst) equivalence edges, or
+    None when no IRI needs rewriting.
+
+    One bounded collect decides the path: up to
+    ``DRIVER_CANON_MAX_EDGES`` edges run :func:`union_find_canonical`
+    on the driver and come back as a small Arrow-built frame (a
+    pandas frame, not a list of tuples, which would become a
+    PythonRDD); more edges take the distributed
+    :func:`canonical_map`."""
+    rows = equiv_edges.select("src", "dst").limit(DRIVER_CANON_MAX_EDGES + 1).collect()
+    if not rows:
+        return None
+    if len(rows) > DRIVER_CANON_MAX_EDGES:
+        return canonical_map(equiv_edges)
+    pairs = union_find_canonical((r[0], r[1]) for r in rows)
+    if not pairs:
+        return None
+    import pandas as pd
+
+    spark = equiv_edges.sparkSession
+    return spark.createDataFrame(
+        pd.DataFrame(pairs, columns=["member", "canonical"]),
+        "member string, canonical string",
+    )
 
 
 def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:

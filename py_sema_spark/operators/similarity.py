@@ -412,8 +412,11 @@ def embedding_neardup_pairs(
     minhash path's (dedup.lsh_candidate_pairs): near-constant
     embeddings (boilerplate pages, parked domains) collapse into one
     hyperplane bucket whose B² pair output quadratic-bombs the join.
-    Capping drops buckets above the threshold from the exact side
-    BEFORE probing/joining, bounding output at cap·N pairs. Default
+    Capping drops every (table, bucket) holding more than the cap
+    before the self-join, so its members leave that table on BOTH
+    sides — they neither probe nor get probed there, and pair only
+    through another table's bucket. Each probe then meets at most
+    cap rows, bounding output at cap·probes·tables·N pairs. Default
     None keeps exact LSH semantics (the oracle-checked form)."""
     masks = _probe_masks(planes, probe_radius)
     # one corpus scan for all tables (see lsh_cosine_topk), then one

@@ -11,8 +11,14 @@ the T4 pattern (SURVEY.md §2.9) where the reference diffs mtimes
 (/root/reference/sema/syncfs/service.py:140-171) and we diff stage
 markers.
 
+Metrics rows (``METRICS_SCHEMA``: rows per written part file) come
+from the parquet footers of the files a stage just wrote, read with
+pyarrow and appended to ``stage_metrics`` as one pyarrow-written file
+per stage or chunk — no Spark job, and no read-back of the output.
+
 Production mapping: stage outputs are Iceberg tables (atomic snapshot
-commits replace the _SUCCESS-marker protocol); metrics rows go to a
+commits replace the _SUCCESS-marker protocol, and per-file record
+counts are in the snapshot manifests); metrics rows go to a
 ``stage_metrics`` table via append; this parquet stand-in keeps the
 identical call surface.
 """
@@ -23,6 +29,7 @@ import datetime as _dt
 import json
 import os
 import time
+import uuid
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -31,10 +38,10 @@ from pyspark.sql import functions as F
 from .model import dedup_triples, skolemize
 from .operators.extract import extract_structured, triples_of
 from .operators.linkage import (
-    canonical_map,
     detect_mentions,
     mention_triples,
     rewrite_triples,
+    sameas_canonical_map,
     score_candidates,
 )
 from .functions.clean import apply_node_clean_chain
@@ -42,6 +49,9 @@ from .functions.clean import apply_node_clean_chain
 METRICS_SCHEMA = (
     "stage string, partition_id int, rows bigint, ts timestamp, status string"
 )
+
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_DRIVER_LISTING_MAX = 1024
 
 
 class Pipeline:
@@ -65,20 +75,52 @@ class Pipeline:
     def _done(self, name: str) -> bool:
         return os.path.exists(f"{self._stage_path(name)}/_STAGE_DONE")
 
-    def _write_metrics(self, name: str, df: DataFrame) -> None:
-        metrics = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count(F.lit(1)).alias("rows"))
-            .withColumns(
-                {
-                    "stage": F.lit(name),
-                    "ts": F.lit(_dt.datetime.utcnow()),
-                    "status": F.lit("complete"),
-                }
-            )
-            .select("stage", "partition_id", "rows", "ts", "status")
+    def _read(self, path: str) -> DataFrame:
+        """Scan a stage checkpoint. Partition discovery lists the
+        partition directories in a Spark job once there are more than
+        ``parallelPartitionDiscovery.threshold`` (32) of them, as the
+        64 ``s_bucket`` directories are; up to ``_DRIVER_LISTING_MAX``
+        they are listed on the driver instead."""
+        conf = self.spark.conf
+        prev = conf.get(_LISTING_THRESHOLD)
+        conf.set(_LISTING_THRESHOLD, str(max(int(prev), _DRIVER_LISTING_MAX)))
+        try:
+            return self.spark.read.parquet(path)
+        finally:
+            conf.set(_LISTING_THRESHOLD, prev)
+
+    def _record_metrics(self, name: str, path: str) -> None:
+        """Append ``name``'s rows per written part file, read from the
+        parquet footers under ``path`` (partition subdirectories
+        included): no Spark job. ``partition_id`` is the file's position
+        in the sorted file list; files without rows are left out."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        files = sorted(
+            os.path.join(dp, f)
+            for dp, _dirs, fs in os.walk(path)
+            for f in fs
+            if f.startswith("part-") and f.endswith(".parquet")
         )
-        metrics.write.mode("append").parquet(f"{self.workdir}/stage_metrics")
+        counts = [
+            (i, n)
+            for i, f in enumerate(files)
+            if (n := pq.read_metadata(f).num_rows) > 0
+        ]
+        ts = _dt.datetime.now(_dt.timezone.utc)
+        table = pa.table(
+            {
+                "stage": pa.array([name] * len(counts), pa.string()),
+                "partition_id": pa.array([i for i, _ in counts], pa.int32()),
+                "rows": pa.array([n for _, n in counts], pa.int64()),
+                "ts": pa.array([ts] * len(counts), pa.timestamp("us", tz="UTC")),
+                "status": pa.array(["complete"] * len(counts), pa.string()),
+            }
+        )
+        out_dir = f"{self.workdir}/stage_metrics"
+        os.makedirs(out_dir, exist_ok=True)
+        pq.write_table(table, f"{out_dir}/part-{uuid.uuid4().hex}.parquet")
 
     def stage(
         self, name: str, build: Callable[[], DataFrame], partition_by: Optional[str] = None
@@ -96,8 +138,7 @@ class Pipeline:
             if partition_by:
                 writer = writer.partitionBy(partition_by)
             writer.parquet(path)
-            out = self.spark.read.parquet(path)
-            self._write_metrics(name, out)
+            self._record_metrics(name, path)
             with open(f"{path}/_STAGE_DONE", "w") as fh:
                 json.dump({"stage": name, "secs": time.time() - t0}, fh)
             self.trace.add_event(
@@ -105,7 +146,7 @@ class Pipeline:
             )
         else:
             self.trace.add_event(TraceEvent("stage", "resumed", name))
-        return self.spark.read.parquet(path)
+        return self._read(path)
 
     def chunked_stage(
         self,
@@ -174,8 +215,7 @@ class Pipeline:
                     chunked.where(F.col("_chunk") == i).drop("_chunk")
                 )
                 out.write.mode("overwrite").parquet(f"{path}/chunk={i}")
-                committed = self.spark.read.parquet(f"{path}/chunk={i}")
-                self._write_metrics(f"{name}/chunk={i}", committed)
+                self._record_metrics(f"{name}/chunk={i}", f"{path}/chunk={i}")
                 with open(marker, "w") as fh:
                     json.dump(
                         {"stage": name, "chunk": i, "secs": time.time() - tc},
@@ -194,10 +234,12 @@ class Pipeline:
             )
         else:
             self.trace.add_event(TraceEvent("stage", "resumed", name))
-        return self.spark.read.parquet(path).drop("chunk")
+        return self._read(path).drop("chunk")
 
     def metrics(self) -> DataFrame:
-        return self.spark.read.parquet(f"{self.workdir}/stage_metrics")
+        return self.spark.read.schema(METRICS_SCHEMA).parquet(
+            f"{self.workdir}/stage_metrics"
+        )
 
     # ---- the pipeline ----
 
@@ -292,9 +334,9 @@ class Pipeline:
                 )
                 & (F.col("o_kind") == "iri")
             ).select(F.col("s").alias("src"), F.col("o").alias("dst"))
-            if sameas.isEmpty():
+            mapping = sameas_canonical_map(sameas)
+            if mapping is None:
                 return linked
-            mapping = canonical_map(sameas)
             return rewrite_triples(linked, mapping)
 
         canonical = self.stage("04_canonicalize", _canon)

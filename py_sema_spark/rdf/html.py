@@ -163,11 +163,20 @@ def extract_text(html_text: str) -> str:
     return _NL_RE.sub("\n", "\n".join(lines)).strip("\n").strip()
 
 
-def looks_like_html(text: str) -> bool:
+def starts_like_html(text: str) -> bool:
+    """The document opens with a doctype or an ``<html`` tag."""
     head = text[:512].lstrip().lower()
-    return head.startswith("<!doctype html") or head.startswith("<html") or (
-        "<head" in head or "<body" in head
-    )
+    return head.startswith("<!doctype html") or head.startswith("<html")
+
+
+def looks_like_html(text: str) -> bool:
+    """:func:`starts_like_html`, or a ``<head``/``<body`` substring in
+    the first 512 characters. The substring branch alone is a guess:
+    a Turtle document may hold the relative IRI ``<body>``."""
+    if starts_like_html(text):
+        return True
+    head = text[:512].lower()
+    return "<head" in head or "<body" in head
 
 
 def decode_bytes(data: bytes) -> str:

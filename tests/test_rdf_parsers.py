@@ -266,6 +266,29 @@ class TestHtml:
         assert extract_text(html) == "A B\nc"
         assert extract_text(html) == extract_text(html)
 
+    def test_turtle_with_body_iri_is_not_misrouted(self):
+        """A bare ``<body``/``<head`` substring makes a document look
+        like HTML; when the HTML consumers then find nothing, the RDF
+        chain still parses it."""
+        from py_sema_spark.operators.extract import extract_page
+        from py_sema_spark.rdf.html import looks_like_html
+
+        doc = (
+            "@prefix ex: <http://ex.org/> .\n"
+            '<body> ex:p "x" .\n'
+            "ex:a ex:q <head> .\n"
+        )
+        assert looks_like_html(doc)
+        got, links = extract_page("http://site.ex/doc.ttl", doc)
+        assert links == []
+        assert {(t.s.value, t.p.value, t.o.value, fmt) for t, fmt in got} == {
+            ("http://site.ex/body", "http://ex.org/p", "x", "turtle"),
+            ("http://ex.org/a", "http://ex.org/q", "http://site.ex/head", "turtle"),
+        }
+        # a page that opens like HTML keeps the HTML-only route
+        page = "<!DOCTYPE html><html><body><p>@prefix ex: <x> .</p></body></html>"
+        assert extract_page("http://site.ex/p.html", page) == ([], [])
+
 
 class TestClean:
     def test_url_checks(self):
