@@ -11,8 +11,8 @@ Reproduces the semantics of the reference's store layer
   IRIs (north rule), computed as pure column expressions (sha2), no UDF.
 - *Named graphs + admin registry*: ``GraphNameMapper`` base+quote(key)
   (store.py:40-63) and the admin graph's per-graph lastmod
-  (store.py:397-440). Here: a ``g`` column + a small ``graph_registry``
-  table maintained by :class:`GraphRegistry`.
+  (store.py:397-440). Here: a ``g`` column + a ``{graph: lastmod}``
+  JSON snapshot maintained driver-side by :class:`GraphRegistry`.
 - *Partitioning for 100 TB*: final triples are written bucketed by
   ``pmod(hash(s), n_buckets)`` with an explicit ``salt`` column for
   hub subjects (north rule) — see :func:`with_subject_bucket`.
@@ -25,9 +25,16 @@ parquet-backed stand-in with the same call surface.
 
 from __future__ import annotations
 
-from typing import Optional
+import datetime as _dt
+import contextlib
+import json
+import os
+import shutil
+import uuid
+from typing import Iterable, Optional
 from urllib.parse import quote, unquote
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -44,6 +51,43 @@ TRIPLE_SCHEMA = T.StructType(
         T.StructField("o_lang", T.StringType(), True),
     ]
 )
+
+# the same columns as an Arrow schema, for driver-side frames and files
+TRIPLE_ARROW_SCHEMA = pa.schema([(c, pa.string()) for c in TRIPLE_FIELDS])
+
+
+def triples_table(rows: Iterable[tuple]) -> pa.Table:
+    """``(s, p, o, o_kind, o_datatype, o_lang)`` tuples → Arrow table."""
+    cols = list(zip(*rows)) or [()] * len(TRIPLE_FIELDS)
+    return pa.Table.from_arrays(
+        [pa.array(c, pa.string()) for c in cols], schema=TRIPLE_ARROW_SCHEMA
+    )
+
+
+def triples_frame(spark: SparkSession, rows: Iterable[tuple]) -> DataFrame:
+    """A driver-side triples frame. Built from an Arrow table it plans
+    as a ``LocalRelation``: building and collecting it start no Spark
+    job (a list-of-tuples frame, even an empty one, costs one)."""
+    return spark.createDataFrame(triples_table(rows), TRIPLE_SCHEMA)
+
+
+def write_durable(path: str, data: str) -> None:
+    """Write ``data`` to ``path`` and fsync it before returning."""
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write(data)
+        fh.flush()
+        os.fsync(fh.fileno())
+
+
+def fsync_path(path: str) -> None:
+    """fsync a file or a directory (a rename is durable once its
+    directory is)."""
+    fd = os.open(path, os.O_RDONLY)
+    try:
+        os.fsync(fd)
+    finally:
+        os.close(fd)
+
 
 # extraction output carries provenance + winning parse format
 EXTRACTED_SCHEMA = T.StructType(
@@ -294,13 +338,31 @@ class GraphNameMapper:
 
 
 class GraphRegistry:
-    """The admin graph as a table: one (graph, lastmod) row per named
-    graph (mirrors ``urn:py-rdf-store:admin`` holding
-    ``<ng> schema:dateModified <ts>`` — store.py:18-20,397-440).
+    """The admin graph: one lastmod per named graph (mirrors
+    ``urn:py-rdf-store:admin`` holding ``<ng> schema:dateModified <ts>``
+    — store.py:18-20,397-440). The table is tiny by contract, so every
+    operation is plain Python on the driver and starts no Spark job.
 
-    Backed by a parquet path; ``touch`` upserts (the Iceberg version is
-    a 2-line MERGE INTO). Small table — driver-side ops are fine and
-    never on the data path.
+    On disk, for ``path``:
+
+    - ``<path>_versions/<uuid>.json`` — a snapshot ``{graph: lastmod}``,
+      lastmod as naive-UTC ISO time with microseconds;
+    - ``<path>_CURRENT`` — the name of the live snapshot.
+
+    A commit writes and fsyncs a new snapshot, writes the new name to a
+    temporary pointer, and swings ``_CURRENT`` onto it with
+    ``os.replace``; superseded snapshots are deleted afterwards. A kill
+    at any step leaves ``_CURRENT`` naming either the old or the new
+    complete snapshot. A pointer naming a missing snapshot, or a
+    snapshot that does not parse, raises: reading it as empty would let
+    the next ``touch`` wipe every other graph's lastmod. Concurrent
+    committers are last-writer-wins on the pointer (the Iceberg
+    version is MERGE INTO with a real atomic snapshot commit).
+
+    Registries written by earlier versions are parquet: a bare parquet
+    dir at ``path``, or a pointer naming a parquet snapshot dir. They
+    are read once through Spark and rewritten as JSON on the next
+    commit.
     """
 
     SCHEMA = T.StructType(
@@ -314,89 +376,110 @@ class GraphRegistry:
         self.spark = spark
         self.path = path
         self._pointer = path + "_CURRENT"
+        self._versions = path + "_versions"
+        self._legacy: Optional[tuple] = None  # (location, snapshot)
 
-    def _current_dir(self):
-        import os
-
-        if os.path.exists(self._pointer):
-            with open(self._pointer) as fh:
+    def _read_pointer(self) -> Optional[str]:
+        try:
+            with open(self._pointer, encoding="utf-8") as fh:
                 name = fh.read().strip()
-            if name:
-                return os.path.join(self.path + "_versions", name)
-        import os.path as _p
+        except FileNotFoundError:
+            return None
+        if not name:
+            raise ValueError(f"registry pointer {self._pointer!r} is empty")
+        return name
 
-        # legacy layout: the parquet dir itself (pre-pointer registries)
-        return self.path if _p.exists(self.path) else None
+    def snapshot(self) -> dict:
+        """The live ``{graph: lastmod}`` map. Only a missing registry
+        reads as empty; a dangling pointer or a corrupt snapshot
+        raises."""
+        name = self._read_pointer()
+        if name is None:
+            if os.path.exists(self.path):
+                return self._read_legacy(self.path)
+            return {}
+        snap = os.path.join(self._versions, name)
+        if not name.endswith(".json"):
+            return self._read_legacy(snap)
+        try:
+            with open(snap, encoding="utf-8") as fh:
+                text = fh.read()
+        except FileNotFoundError:
+            if self._read_pointer() != name:
+                # a concurrent commit swung the pointer and deleted the
+                # snapshot between the two reads: read the new one
+                return self.snapshot()
+            raise FileNotFoundError(
+                f"registry pointer {self._pointer!r} names a missing "
+                f"snapshot {snap!r}"
+            ) from None
+        try:
+            doc = json.loads(text)
+        except ValueError as e:
+            raise ValueError(f"corrupt registry snapshot {snap!r}: {e}") from e
+        return {g: _dt.datetime.fromisoformat(ts) for g, ts in doc.items()}
+
+    def _read_legacy(self, location: str) -> dict:
+        if self._legacy is None or self._legacy[0] != location:
+            rows = self.spark.read.schema(self.SCHEMA).parquet(location).collect()
+            self._legacy = (location, {r["graph"]: r["lastmod"] for r in rows})
+        return dict(self._legacy[1])
 
     def load(self) -> DataFrame:
-        # Only a missing registry means "empty". Any other read
-        # failure (corrupt part-file, dangling pointer, permissions)
-        # must propagate: swallowing it would make the next touch()
-        # overwrite the registry with only the newly-touched rows,
-        # silently wiping every other graph's lastmod.
-        cur = self._current_dir()
-        if cur is None:
-            return self.spark.createDataFrame([], self.SCHEMA)
-        return self.spark.read.schema(self.SCHEMA).parquet(cur)
+        """The registry as a ``(graph, lastmod)`` frame, built from an
+        Arrow table (no Spark job)."""
+        snap = self.snapshot()
+        table = pa.table(
+            {
+                "graph": pa.array(list(snap), pa.string()),
+                "lastmod": pa.array(
+                    list(snap.values()), pa.timestamp("us", tz="UTC")
+                ),
+            }
+        )
+        return self.spark.createDataFrame(table, self.SCHEMA)
 
-    def _commit(self, rows) -> None:
-        """Versioned commit: write the new snapshot to a fresh dir,
-        then atomically swing the pointer file (os.replace). A plain
-        ``mode("overwrite")`` on the live path is delete-then-write —
-        a concurrent load() in that window sees an EMPTY registry and
-        the next touch() persists the wipe; a crash mid-write loses
-        the registry entirely. Concurrent touches remain last-writer-
-        wins on the pointer (the Iceberg version is MERGE INTO with a
-        real atomic snapshot commit)."""
-        import os
-        import shutil as _sh
-        import uuid
-
-        name = uuid.uuid4().hex
-        vdir = os.path.join(self.path + "_versions", name)
-        self.spark.createDataFrame(rows, self.SCHEMA).coalesce(
-            1
-        ).write.mode("overwrite").parquet(vdir)
+    def _commit(self, snap: dict) -> None:
+        """Versioned commit (see the class docstring)."""
+        name = uuid.uuid4().hex + ".json"
+        os.makedirs(self._versions, exist_ok=True)
+        doc = {g: ts.isoformat(timespec="microseconds") for g, ts in snap.items()}
+        write_durable(os.path.join(self._versions, name), json.dumps(doc))
+        fsync_path(self._versions)
         tmp = self._pointer + "." + name
-        with open(tmp, "w") as fh:
-            fh.write(name)
+        write_durable(tmp, name)
         os.replace(tmp, self._pointer)
+        fsync_path(os.path.dirname(os.path.abspath(self._pointer)))
+        self._legacy = None
         # best-effort cleanup of superseded snapshots + legacy dir
-        base = self.path + "_versions"
-        for old in os.listdir(base):
+        for old in os.listdir(self._versions):
             if old != name:
-                _sh.rmtree(os.path.join(base, old), ignore_errors=True)
+                old = os.path.join(self._versions, old)
+                if os.path.isdir(old):
+                    shutil.rmtree(old, ignore_errors=True)
+                else:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(old)
         if os.path.isdir(self.path):
-            _sh.rmtree(self.path, ignore_errors=True)
+            shutil.rmtree(self.path, ignore_errors=True)
 
     def touch(self, graphs: list[str]) -> None:
-        import datetime as _dt
-
         now = _dt.datetime.now(_dt.timezone.utc).replace(tzinfo=None)
-        new = self.spark.createDataFrame(
-            [(g, now) for g in graphs], self.SCHEMA
-        )
-        merged = (
-            self.load()
-            .join(new.select("graph"), "graph", "left_anti")
-            .unionByName(new)
-        )
-        # registry is tiny by contract: collect severs the lineage on
-        # the live snapshot before committing the replacement
-        self._commit(merged.collect())
+        snap = self.snapshot()
+        for g in graphs:
+            snap.pop(g, None)
+            snap[g] = now
+        self._commit(snap)
 
     def lastmod_ts(self, graph: str):
-        rows = self.load().where(F.col("graph") == graph).collect()
-        return rows[0]["lastmod"] if rows else None
+        return self.snapshot().get(graph)
 
     def named_graphs(self) -> list[str]:
-        return [r["graph"] for r in self.load().select("graph").collect()]
+        return list(self.snapshot())
 
     def verify_max_age(self, graph: str, age_minutes: float, reference_time=None) -> bool:
         """True iff the graph exists and is younger than ``age_minutes``
         (mirrors store.py:224-255)."""
-        import datetime as _dt
-
         ts = self.lastmod_ts(graph)
         if ts is None:
             return False
@@ -409,7 +492,9 @@ class GraphRegistry:
         return (ref - ts).total_seconds() / 60.0 <= age_minutes
 
     def drop(self, graph: str) -> None:
-        self._commit(self.load().where(F.col("graph") != graph).collect())
+        snap = self.snapshot()
+        if snap.pop(graph, None) is not None:
+            self._commit(snap)
 
 
 def graph_diff(

@@ -109,11 +109,11 @@ def extract_page(url: str, body: str) -> Tuple[List[Tuple[Triple, str]], List[st
         triples.extend(
             (t, "rdfa") for t in parse_rdfa(body, base=url, events=events)
         )
-        if triples or links or starts_like_html(body):
+        if triples or links or (starts_like_html(body) and "</" in body):
             return triples, links
-        # only a bare <head/<body substring said HTML (a Turtle
-        # document with the relative IRI <body>, say) and the HTML
-        # consumers found nothing: try the RDF chain instead
+        # the HTML consumers found nothing and no closing tag backs the
+        # opening token (a Turtle document whose first term is the
+        # relative IRI <html> or <body>, say): try the RDF chain instead
     parsed, fmt = parse_rdf_auto(body, base=url)
     if parsed:
         return [(t, fmt) for t in parsed], links
@@ -163,7 +163,11 @@ def extract_structured(corpus: DataFrame, prefilter: bool = True) -> DataFrame:
     if prefilter:
         body = F.col("html").cast("string")
         head = F.lower(F.substring(body, 1, 512))
-        is_html = head.contains("<!doctype html") | head.contains("<html")
+        # a closing tag is the evidence extract_page needs before it
+        # treats an <html-opening page as HTML only
+        is_html = (
+            head.contains("<!doctype html") | head.contains("<html")
+        ) & body.contains("</")
         low = F.lower(body)
         marker = F.lit(False)
         for m in _HTML_MARKERS:

@@ -281,15 +281,17 @@ def _ground_triples(text: str, pfx: Dict[str, str]) -> List[tuple]:
 
 
 def _quads_frame(triples: DataFrame, quads, has_g: bool) -> DataFrame:
-    spark = triples.sparkSession
-    rows = [
-        ((g,) if has_g else ()) + t for g, t in quads
-    ]
-    schema = ("g string, " if has_g else "") + (
-        "s string, p string, o string, o_kind string, "
-        "o_datatype string, o_lang string"
+    """The DATA block as a frame, built from an Arrow table: it plans as
+    a ``LocalRelation``, so unions and broadcasts of it start no job."""
+    import pyarrow as pa
+
+    names = (["g"] if has_g else []) + _TRIPLE_KEY
+    rows = [((g,) if has_g else ()) + tuple(t) for g, t in quads]
+    cols = list(zip(*rows)) or [()] * len(names)
+    table = pa.table({n: pa.array(c, pa.string()) for n, c in zip(names, cols)})
+    return triples.sparkSession.createDataFrame(
+        table, ", ".join(f"{n} string" for n in names)
     )
-    return spark.createDataFrame(rows, schema)
 
 
 _TRIPLE_KEY = ["s", "p", "o", "o_kind", "o_datatype", "o_lang"]
@@ -318,14 +320,18 @@ def apply_update(
     update: str,
     prefixes: Optional[Dict[str, str]] = None,
     default_graph: Optional[str] = None,
+    dedup: bool = True,
 ) -> DataFrame:
     """Apply a SPARQL Update request to a triples (or quads) DataFrame
     and return the updated frame — same columns, set semantics
-    preserved. ``default_graph`` names the graph identity of the
-    frame: on a quads table, the graph that graph-less INSERT rows
-    land in; on a g-less (single-graph) table, the IRI this frame IS,
-    so graph-targeted DELETE/CLEAR ops apply only when they name it
-    (a ``DELETE DATA { GRAPH <other> … }`` routed to graph A must not
+    preserved (``dedup=False`` leaves the final set-dedup, a shuffle
+    and so one more Spark job, to a caller that dedups the collected
+    rows itself, as the parquet store does when it writes).
+    ``default_graph`` names the graph identity of the frame: on a
+    quads table, the graph that graph-less INSERT rows land in; on a
+    g-less (single-graph) table, the IRI this frame IS, so
+    graph-targeted DELETE/CLEAR ops apply only when they name it (a
+    ``DELETE DATA { GRAPH <other> … }`` routed to graph A must not
     mutate A)."""
     pfx, ops = parse_update(update, prefixes)
     has_g = "g" in triples.columns
@@ -448,4 +454,4 @@ def apply_update(
                 if default_graph is not None:
                     cond = cond & (F.col("g") != F.lit(default_graph))
                 out = out.where(cond)
-    return _dedup(out) if dirty else out
+    return _dedup(out) if dirty and dedup else out

@@ -11,6 +11,15 @@ This is the CDC/MERGE pattern: on Iceberg the three branches are one
 ``MERGE INTO`` from a changed-files DataFrame; the parquet store keeps
 the same call surface. It doubles as the resume-from-checkpoint
 template: a restart diffs completion state and only re-does stale work.
+
+A sync starts no Spark job: dump files are parsed on the driver into
+Arrow-built frames, and :class:`..store.ParquetTripleStore` writes each
+graph as one parquet file renamed into place and records its lastmod in
+a JSON registry snapshot. A kill mid-sync leaves every registered graph
+with its old or its new triples (see :mod:`..store`); a graph whose
+rename landed but whose lastmod did not still compares older than its
+file, and an update whose drop landed but whose insert did not has no
+graph, so re-running the sync finishes the work.
 """
 
 from __future__ import annotations
@@ -21,7 +30,7 @@ from typing import Dict, List
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .model import TRIPLE_SCHEMA
+from .model import triples_frame
 from .rdf.parse import parse_rdf_auto
 from .store import ParquetTripleStore
 
@@ -35,7 +44,9 @@ def load_graph_file(spark: SparkSession, path: str) -> DataFrame:
     """One RDF dump file → triples DataFrame. Dump files are
     dimension-sized (the reference loads each into one in-memory
     rdflib.Graph); corpus-scale ingestion goes through
-    :func:`..operators.extract.extract_structured` instead."""
+    :func:`..operators.extract.extract_structured` instead. The frame
+    is built from an Arrow table, so it plans as a ``LocalRelation``
+    and collecting it starts no Spark job."""
     with open(path, encoding="utf-8") as f:
         text = f.read()
     triples, fmt = parse_rdf_auto(text, base=Path(path).as_uri())
@@ -45,11 +56,13 @@ def load_graph_file(spark: SparkSession, path: str) -> DataFrame:
         # truncated/corrupt write — raise like the reference's
         # rdflib graph.parse instead of silently syncing an empty graph
         raise ValueError(f"no RDF format could parse dump file {path!r}")
-    rows = [
-        (t.s.value, t.p.value, t.o.value, t.o.kind, t.o.datatype, t.o.lang)
-        for t in triples
-    ]
-    return spark.createDataFrame(rows, TRIPLE_SCHEMA)
+    return triples_frame(
+        spark,
+        (
+            (t.s.value, t.p.value, t.o.value, t.o.kind, t.o.datatype, t.o.lang)
+            for t in triples
+        ),
+    )
 
 
 def lastmod_by_relname(root: str) -> Dict[str, float]:

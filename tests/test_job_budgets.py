@@ -1,6 +1,8 @@
 """Spark job budgets of one small ``Pipeline.run``, plus the stage
 metrics and canonicalization parity of that same run, and a
-differential test of the two canonicalization paths on random graphs.
+differential test of the two canonicalization paths on random graphs;
+then job budgets of the serve-side operations (syncfs, the parquet
+store and its registry) on a few tiny Turtle dumps.
 
 At today's sizes a job costs ~0.2-0.4 s whatever its input, so a build's
 cost follows how many jobs it starts. Job counts per stage are
@@ -8,9 +10,9 @@ deterministic for a fixed input and session, so they are pinned here as
 upper bounds: a change that adds a per-call job (a probe, a read-back, a
 metrics aggregate, a loop round) fails here, not only in a benchmark.
 
-Each stage runs in its own job group; ``statusTracker`` gives its jobs.
-The inputs are tiny (a few dozen pages, a handful of sameAs edges) and
-the run is shared by every test in the module.
+Each stage or operation runs in its own job group; ``statusTracker``
+gives its jobs. The inputs are tiny (a few dozen pages, a handful of
+sameAs edges) and each run is shared by the tests that read it.
 """
 
 import os
@@ -285,3 +287,107 @@ class TestCanonicalizationPaths:
             ("b", "a"),
             ("c", "a"),
         ]
+
+
+# ---- serve-side operations: syncfs, the store and its registry ----
+
+# jobs per serve operation (upper bounds). The write path runs on the
+# driver; a scoped update evaluates in Spark and collects once; a
+# select is one collect of its plan.
+SERVE_JOB_BUDGETS = {
+    "sync.add": 0,
+    "sync.update_add_remove": 0,
+    "registry.touch": 0,
+    "registry.drop": 0,
+    "registry.lastmod_ts": 0,
+    "registry.named_graphs": 0,
+    "store.update": 1,
+    "store.select": 1,
+}
+SYNC_EX = "http://t.ex/"
+SYNC_TTL = '@prefix ex: <http://t.ex/> .\nex:{k} ex:p "{v}" ; ex:q ex:{k}2 .\n'
+
+
+@pytest.fixture(scope="module")
+def serve_run(spark, tmp_path_factory):
+    """Two syncs (three adds; then an update, an add and a remove),
+    registry calls, a scoped update and a select, each operation in
+    its own job group."""
+    from py_sema_spark.store import ParquetTripleStore
+    from py_sema_spark.syncfs import perform_sync
+
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    root = tmp_path_factory.mktemp("serve_budget")
+    dumps = root / "dumps"
+    dumps.mkdir()
+    for k in "abc":
+        (dumps / f"{k}.ttl").write_text(SYNC_TTL.format(k=k, v=1))
+    store = ParquetTripleStore(spark, str(root / "store"))
+    jobs, out = {}, {}
+
+    def run(name, fn):
+        group = f"serve-{tag}-{name}"
+        with _job_group(sc, group):
+            out[name] = fn()
+        jobs[name] = _jobs(sc, group)
+
+    run("sync.add", lambda: perform_sync(spark, str(dumps), store))
+    (dumps / "a.ttl").write_text(SYNC_TTL.format(k="a", v=2))
+    future = time.time() + 3600
+    os.utime(dumps / "a.ttl", (future, future))
+    (dumps / "c.ttl").unlink()
+    (dumps / "d.ttl").write_text(SYNC_TTL.format(k="d", v=1))
+    run("sync.update_add_remove", lambda: perform_sync(spark, str(dumps), store))
+
+    reg = store.registry
+    ng = store.mapper.key_to_ng("b.ttl")
+    run("registry.touch", lambda: reg.touch([ng]))
+    run("registry.lastmod_ts", lambda: reg.lastmod_ts(ng))
+    run("registry.named_graphs", reg.named_graphs)
+    reg.touch(["urn:sync:scratch"])
+    run("registry.drop", lambda: reg.drop("urn:sync:scratch"))
+    note = f"<{SYNC_EX}b> <{SYNC_EX}note> ?n"
+    run(
+        "store.update",
+        lambda: store.update(
+            f'INSERT DATA {{ <{SYNC_EX}b> <{SYNC_EX}note> "n1" }}', named_graph=ng
+        ),
+    )
+    run(
+        "store.select",
+        lambda: store.select(f"SELECT ?n WHERE {{ {note} }}", named_graph=ng).to_list(),
+    )
+    print(f"serve budget run: jobs {jobs}")
+    return {"jobs": jobs, "out": out, "store": store, "dumps": dumps}
+
+
+class TestServeJobBudgets:
+    def test_serve_job_budgets(self, serve_run):
+        jobs = serve_run["jobs"]
+        assert set(jobs) == set(SERVE_JOB_BUDGETS)
+        for name, budget in SERVE_JOB_BUDGETS.items():
+            assert jobs[name] <= budget, (name, jobs[name], budget)
+
+    def test_serve_run_results(self, serve_run):
+        from py_sema_spark.syncfs import load_graph_file
+
+        out, store = serve_run["out"], serve_run["store"]
+        assert out["sync.add"]["added"] == ["a.ttl", "b.ttl", "c.ttl"]
+        rep = out["sync.update_add_remove"]
+        assert (rep["added"], rep["updated"], rep["removed"], rep["skipped"]) == (
+            ["d.ttl"], ["a.ttl"], ["c.ttl"], ["b.ttl"]
+        )
+        ng = store.mapper.key_to_ng("b.ttl")
+        # the scoped update touched b after the lookup
+        assert out["registry.lastmod_ts"] < store.registry.lastmod_ts(ng)
+        assert sorted(out["registry.named_graphs"]) == [
+            store.mapper.key_to_ng(k) for k in ("a.ttl", "b.ttl", "d.ttl")
+        ]
+        assert sorted(store.keys) == ["a.ttl", "b.ttl", "d.ttl"]
+        assert out["store.select"] == [{"n": "n1"}]
+        spark = store.spark
+        for key in ("a.ttl", "d.ttl"):
+            want = load_graph_file(spark, str(serve_run["dumps"] / key)).collect()
+            assert sorted(store.graph_for_key(key).collect()) == sorted(want)
+        assert store.graph_for_key("b.ttl").count() == 3

@@ -289,6 +289,35 @@ class TestHtml:
         page = "<!DOCTYPE html><html><body><p>@prefix ex: <x> .</p></body></html>"
         assert extract_page("http://site.ex/p.html", page) == ([], [])
 
+    def test_turtle_with_html_iri_is_not_misrouted(self, spark):
+        """A Turtle document whose first term is a relative IRI opening
+        ``<html`` starts like HTML but carries no closing tag: when the
+        HTML consumers find nothing the RDF chain parses it, and the JVM
+        prefilter of ``extract_structured`` keeps the page."""
+        from py_sema_spark.operators.extract import (
+            extract_page,
+            extract_structured,
+        )
+
+        docs = {
+            f"http://site.ex/{name}.ttl": f'<{name}> <http://ex.org/p> "x" .'
+            for name in ("html", "htmlx")
+        }
+        for url, doc in docs.items():
+            got, links = extract_page(url, doc)
+            assert links == []
+            assert [(t.s.value, t.p.value, t.o.value) for t, _ in got] == [
+                (url.rsplit(".", 1)[0], "http://ex.org/p", "x")
+            ]
+        corpus = spark.createDataFrame(
+            [(url, doc.encode()) for url, doc in docs.items()],
+            "url string, html binary",
+        )
+        rows = extract_structured(corpus).where("kind = 'triple'").collect()
+        assert sorted((r["src_url"], r["s"]) for r in rows) == [
+            (url, url.rsplit(".", 1)[0]) for url in sorted(docs)
+        ]
+
 
 class TestClean:
     def test_url_checks(self):
