@@ -6,8 +6,8 @@ matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
 Implementation lives in :mod:`py_sema_spark.queries.benchqueries`
-(one Spark builder + one ANSI-SQL mirror per operator from
-SURVEY.md §2); this file only adapts it to the driver's shape.
+(one Spark builder + one ANSI-SQL mirror per surface entry); this
+file only adapts it to the driver's shape.
 """
 
 from __future__ import annotations
@@ -60,94 +60,16 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
 
-# Rotation policy: the driver's correctness sweep records only the FIRST 50
-# entries of queries().  Names already green in a prior round's
-# CORRECTNESS_r{N}.json rotate to the back so every query eventually gets a
-# driver-attested row.  The attested set is read dynamically from the
-# CORRECTNESS_r*.json files the driver leaves in the repo root (green rows
-# only), so each round rotates automatically; _ATTESTED_SEED is the
-# r01+r02 union kept as a fallback for environments without those files.
-_ATTESTED_SEED = {
-    "all_triples", "rdf_predicates", "rdf_predicates_count", "rdf_types",
-    "skos_collection", "skos_collection_member_count", "bodc_find",
-    "bodc_listing", "broader_terms", "skos_broader_depth",
-    "transitive_closure", "unique_filter", "ctrl_windows", "ntriples_serialize",
-    "unique_filenames", "xsd_literals", "normalise_scheme",
-    "uritemplate_expand", "subyt_render", "shacl_validate", "sparql_bgp",
-    "sparql_optional_filter", "exact_dedup", "minhash_neardup",
-    "minhash_neardup_shingle", "ngram_jaccard", "simhash", "lang_id",
-    "token_counts", "quality_score", "doc_fingerprint", "cosine_topk",
-    "detect_mentions", "pagerank", "triangle_count", "clustering_coefficient",
-    "common_neighbors", "adamic_adar", "asof_join", "connected_components",
-    "cube_counts", "embedding_neardup", "event_type_pivot",
-    "kmv_distinct_tokens", "length_quantiles", "rollup_counts",
-    "session_stats", "sessionize", "term_match_in_collection",
-    "windowed_counts",
-    "stratified_sample", "token_budget_pack", "domain_cap", "domain_stats",
-    "url_dedup", "incremental_dedup", "lm_score", "ccnet_buckets",
-    "inverted_index", "bm25_topk", "gopher_quality", "pii_scrub",
-    "decontaminate", "repetition_metrics", "frame_sample",
-}
-# NOTE: lsh_cosine_topk / ivf_cosine_topk / embedding_neardup_lsh /
-# media_decode_stats / harvest_run were recorded FAILED (err=no_oracle)
-# in r1 and must NOT sit in the seed: keeping them there parked them at
-# the back of the rotation so the driver never re-checked them (r3
-# verdict, process defect #1).  They rotate to the front until a green
-# CORRECTNESS row exists for them.
-
-
-def _last_green_round() -> dict:
-    """name -> round number of the most recent green attestation.
-
-    Green = hash_match for oracled queries, or rows_match for the
-    rows-only ones (no SQL oracle => hash_match can never be true).
-    Seed names with no CORRECTNESS row at all are treated as round 0
-    (attested once, pre-r1 file format), so they age to the front.
-    """
-    import glob
-    import json
-    import re
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    last = {name: 0 for name in _ATTESTED_SEED}
-    for path in glob.glob(os.path.join(here, "CORRECTNESS_r*.json")):
-        m = re.search(r"_r0*(\d+)\.json$", path)
-        rnd = int(m.group(1)) if m else 0
-        try:
-            rows = json.load(open(path))
-        except Exception:
-            continue
-        for name, rec in rows.items():
-            if not isinstance(rec, dict):
-                continue
-            if rec.get("hash_match") or (
-                rec.get("rows_match") and not rec.get("err")
-            ):
-                last[name] = max(last.get(name, 0), rnd)
-    return last
-
-
-def _rotated(d: dict) -> dict:
-    """Least-recently-attested first: never-attested names lead, then
-    ascending by the round of each name's most recent green row, so
-    the driver's per-round prefix re-verifies the stalest attestations
-    on current binaries instead of a frozen order (VERDICT r04 #2)."""
-    last = _last_green_round()
-    order = sorted(d, key=lambda k: (last.get(k, -1), k))
-    return {k: d[k] for k in order}
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2
-    (unattested-first rotation; see _ATTESTED above)."""
+    """One builder per surface entry of the Spark-vs-DuckDB sweep."""
     from py_sema_spark.queries.benchqueries import QUERIES
 
-    return _rotated(QUERIES)
+    return QUERIES
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL mirror for each SQL-expressible query;
-    LSH approximations are intentionally absent (rows-only check)."""
+    entries without one are checked rows-only."""
     from py_sema_spark.queries.benchqueries import ORACLES
 
-    return _rotated(ORACLES)
+    return ORACLES

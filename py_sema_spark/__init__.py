@@ -7,13 +7,15 @@ semantics only) over Spark DataFrames:
 - ``rdf``        : pure-Python RDF parsing (Turtle / JSON-LD / N-Triples
                    subset) used inside Arrow-batched UDFs,
 - ``functions``  : scalar column builders (xsd formatting ladder, URI
-                   cleaning, URI-template expansion, text analysis),
+                   cleaning, URI-template expansion, content
+                   negotiation, text analysis),
 - ``operators``  : extraction, transitive closure, connected components,
-                   dedup (exact/MinHash/SimHash), similarity search,
-                   SHACL-subset validation,
+                   entity linkage and sameAs canonicalization, RDFS/OWL
+                   entailment, URL/line dedup, sketches, window ctrl
+                   columns, text curation, robots.txt and sitemap
+                   crawl filters,
 - ``sources``    : record sources (csv/json/xml/glob), synthetic corpus,
                    sinks,
-- ``templating`` : subyt-style record×template triple generation,
 - ``queries``    : the reference SPARQL-template surface as DataFrame
                    builders + a generic BGP SELECT compiler + Jinja
                    SPARQL templating,
@@ -27,7 +29,6 @@ semantics only) over Spark DataFrames:
                    file aggregation,
 - ``ogm``        : blueprint → triples (RO-Crate specialization),
 - ``tasks``      : sembench task registry,
-- ``streaming``  : Structured-Streaming ingestion + watermarked windows,
 - ``cli``        : ``python -m py_sema_spark`` console surface,
 - ``pipeline``   : checkpoint/resume staged pipeline with metrics,
 - ``model``      : the triples-table data model (schema, dedup,

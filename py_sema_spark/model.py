@@ -268,37 +268,6 @@ def materialize_triples(
     out.write.mode(mode).partitionBy("s_bucket").parquet(path)
 
 
-def write_bucketed_table(
-    df: DataFrame,
-    name: str,
-    n_buckets: int = 64,
-    key: str = "s",
-    mode: str = "overwrite",
-) -> DataFrame:
-    """Persist as a Spark-catalog **bucketed table**: hash-bucketed and
-    sorted on ``key``.
-
-    This is the co-located-join layout for the 100-TB store: two
-    tables bucketed on the same key with the same bucket count join
-    with **zero Exchange** on either side (asserted in tests) — every
-    BGP self-join chain on ``s`` then runs shuffle-free, paying the
-    one layout shuffle at write time instead of per query. The Iceberg
-    analogue is ``bucket(N, s)`` partition transforms; the Spark
-    catalog form keeps the identical call surface locally.
-
-    Returns the table read back from the catalog (bucket metadata
-    attached, which plain ``spark.read.parquet`` would lose).
-    """
-    (
-        df.write.mode(mode)
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(name)
-    )
-    return df.sparkSession.table(name)
-
-
 class GraphNameMapper:
     """External key ↔ named-graph URI, matching the reference
     (/root/reference/sema/commons/store/store.py:40-63):
@@ -495,44 +464,3 @@ class GraphRegistry:
         snap = self.snapshot()
         if snap.pop(graph, None) is not None:
             self._commit(snap)
-
-
-def graph_diff(
-    old: DataFrame, new: DataFrame, keys: tuple | None = None
-) -> DataFrame:
-    """Snapshot-over-snapshot triple diff: ``(op, <keys>)`` with
-    op ∈ {added, removed} — the crawl-delta view a KG store publishes
-    per ingest (the reference's graph subtract, rdflib ``g1 - g2`` in
-    store.py:73's semantics, in both directions at once).
-
-    The default key is FULL RDF-term identity — every triple column
-    both frames share, including ``o_kind``/``o_datatype``/``o_lang``:
-    per RDF 1.1, ``"x"@en`` vs ``"x"@fr``, or a literal vs an IRI with
-    the same lexical form, are DIFFERENT triples (comparing only
-    s,p,o silently reported them unchanged). The metadata columns are
-    legitimately NULL, so the anti-joins compare null-safely.
-
-    Two left-anti joins on the triple key. Both sides arrive bucketed
-    by subject hash (`write_bucketed`), so on a real cluster the
-    anti-joins co-locate shuffle-free; unchanged triples (the vast
-    majority between adjacent crawls) never leave their partition.
-    """
-    if keys is None:
-        keys = [
-            c
-            for c in ("s", "p", "o", "o_kind", "o_datatype", "o_lang")
-            if c in old.columns and c in new.columns
-        ]
-    ks = list(keys)
-
-    def _anti(left: DataFrame, right: DataFrame) -> DataFrame:
-        l, r = left.select(*ks).alias("_l"), right.select(*ks).alias("_r")
-        cond = None
-        for k in ks:
-            c = F.col(f"_l.{k}").eqNullSafe(F.col(f"_r.{k}"))
-            cond = c if cond is None else cond & c
-        return l.join(r, cond, "left_anti")
-
-    added = _anti(new, old).select(F.lit("added").alias("op"), *ks)
-    removed = _anti(old, new).select(F.lit("removed").alias("op"), *ks)
-    return added.unionByName(removed)

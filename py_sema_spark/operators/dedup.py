@@ -1,428 +1,26 @@
-"""Deduplication operators for web-scale training-data pipelines.
+"""Deduplication primitives used by the pipeline and entity linkage.
 
-Exact, MinHash+LSH, SimHash, and n-gram-Jaccard dedup over a documents
-table ``(doc_id, text, …)``. Everything is built from deterministic,
-*portable* primitives (md5 over strings) so the same math can be
-mirrored in ANSI SQL for the DuckDB correctness oracle — no Spark- or
-DuckDB-private hash functions in any semantically relevant place.
-
-Scale design:
-- tokenization/shingling is pure column algebra (`split`/`transform`/
-  `explode`) — JVM-side, whole-stage codegen, no Python;
-- MinHash signatures are per-(doc, perm) partial mins → one groupBy;
-- LSH banding turns the quadratic candidate space into per-bucket
-  groups; bucket sizes are bounded by construction (a band collision
-  requires equality of the band's full signature slice);
-- candidate verification (exact Jaccard) touches only in-bucket pairs.
+- :func:`normalized_tokens` — the shared canonical tokenization
+  (lowercase, punctuation stripped), pure column algebra; the DuckDB
+  oracles mirror it in SQL;
+- :func:`url_dedup` — crawl-level URL dedup, the ``curate=True``
+  stage of :class:`..pipeline.Pipeline`;
+- :func:`line_dedup` and :func:`incremental_exact_dedup` — line-level
+  boilerplate removal and cross-snapshot exact dedup for the text
+  curation operators (``operators/curation.py``, ``functions/text.py``).
 """
 
 from __future__ import annotations
-
-from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def _shuffle_partitions(spark) -> int:
-    """Session shuffle parallelism as an int — the conf can be 'auto'
-    on AQE-managed platforms, where defaultParallelism is the sane
-    explicit-N stand-in."""
-    v = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        return int(v)
-    except (TypeError, ValueError):
-        return spark.sparkContext.defaultParallelism
-
-
 def normalized_tokens(text_col: Column) -> Column:
     """Lowercased word tokens, punctuation stripped — the shared
-    canonical tokenization for all dedup/text operators."""
+    canonical tokenization for linkage and the token oracles."""
     cleaned = F.lower(F.regexp_replace(text_col, r"[^\p{L}\p{N}\s]", " "))
     return F.filter(F.split(F.trim(cleaned), r"\s+"), lambda t: t != "")
-
-
-def exact_dedup(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Exact duplicate grouping by content hash.
-
-    Returns (doc_id, content_hash, is_canonical) where the canonical
-    row per hash is the min doc_id — deterministic survivor choice.
-    One shuffle (the groupBy window).
-    """
-    from pyspark.sql import Window
-
-    h = F.md5(F.col(text_col))
-    w = Window.partitionBy("content_hash")
-    return (
-        docs.select(F.col(id_col), h.alias("content_hash"))
-        .withColumn("canonical_id", F.min(id_col).over(w))
-        .withColumn("is_canonical", F.col(id_col) == F.col("canonical_id"))
-    )
-
-
-def token_set(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, token) distinct pairs — the exploded token-set view."""
-    return (
-        docs.select(F.col(id_col), F.explode(normalized_tokens(F.col(text_col))).alias("token"))
-        .distinct()
-    )
-
-
-def shingle_set(
-    docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(doc_id, token) with char n-gram shingles — the realistic
-    near-dup tokenization (word tokens over a small vocabulary make
-    ~every candidate a true pair; shingles give web-corpus
-    selectivity, so the LSH join strategy is what gets measured).
-    Map-side explode of substrings, JVM-only."""
-    t = F.col(text_col)
-    shingles = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1))),
-        lambda i: t.substr(i, F.lit(n)),
-    )
-    return (
-        docs.select(F.col(id_col), F.explode(shingles).alias("token"))
-        .distinct()
-    )
-
-
-def minhash_signatures(
-    token_sets: DataFrame, num_perm: int = 16, id_col: str = "doc_id"
-) -> DataFrame:
-    """MinHash signature per document.
-
-    Permutation *i* is simulated by ``md5(i || '|' || token)`` — a
-    deterministic string hash both Spark and the SQL oracle can
-    compute; the signature component is the lexicographic min digest.
-    Output: (doc_id, perm, sig).
-
-    The explode (num_perm rows per token) happens map-side and feeds
-    straight into a partial-aggregating groupBy — one shuffle total.
-    """
-    perms = F.sequence(F.lit(0), F.lit(num_perm - 1))
-    exploded = token_sets.select(
-        F.col(id_col),
-        F.explode(perms).alias("perm"),
-        F.col("token"),
-    ).withColumn(
-        "h", F.md5(F.concat_ws("|", F.col("perm").cast("string"), F.col("token")))
-    )
-    return exploded.groupBy(id_col, "perm").agg(F.min("h").alias("sig"))
-
-
-def band_buckets(
-    signatures: DataFrame, bands: int = 4, id_col: str = "doc_id"
-) -> DataFrame:
-    """(id, bucket) LSH band keys: band = perm % bands, bucket =
-    md5(band | sorted perm:sig slice). Shared by the batch pair
-    enumeration and the incremental ingest-vs-index join, so both
-    sides of an incremental dedup land in identical buckets."""
-    banded = signatures.withColumn("band", F.col("perm") % bands)
-    return (
-        banded.groupBy(id_col, "band")
-        .agg(F.concat_ws(",", F.array_sort(F.collect_list(
-            F.concat_ws(":", F.col("perm").cast("string"), F.col("sig"))
-        ))).alias("band_sig"))
-        .withColumn("bucket", F.md5(F.concat_ws("|", F.col("band").cast("string"), F.col("band_sig"))))
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 4,
-    id_col: str = "doc_id",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Band the signatures and emit candidate pairs per bucket.
-
-    Band key = md5 of the concatenated signature slice. Pairs are
-    ordered (a < b) to halve the output and make results deterministic.
-
-    ``max_bucket_size`` is the web-scale skew guard: a bucket with B
-    members emits B² pairs, so one boilerplate-heavy bucket (error
-    pages, parked domains) can dominate the whole job. Capping skips
-    buckets above the threshold — the standard recall/cost trade at
-    10^12-document scale. Default None keeps exact LSH semantics
-    (required by the oracle-checked query).
-
-    Parallelism note: the bucket frame is BYTE-tiny but its self-join
-    output is quadratic per bucket, so AQE's byte-based coalescing
-    would run the whole pair explosion in one post-shuffle partition.
-    The explicit-N repartition on the bucket key (N = the session's
-    shuffle parallelism) pins the fan-out — AQE never coalesces
-    user-numbered repartitions — measured 2× at local[8] on the
-    sf0.1 near-dup family.
-    """
-    buckets = band_buckets(signatures, bands, id_col)
-    n_part = _shuffle_partitions(signatures.sparkSession)
-    buckets = buckets.repartition(n_part, "bucket")
-    if max_bucket_size is not None:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("bucket")
-        buckets = buckets.withColumn(
-            "_bsz", F.count("*").over(w)
-        ).where(F.col("_bsz") <= max_bucket_size).drop("_bsz")
-    a = buckets.select(F.col(id_col).alias("a"), "bucket")
-    b = buckets.select(F.col(id_col).alias("b"), "bucket")
-    return (
-        a.join(b, "bucket")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-
-
-def jaccard_pairs(
-    token_sets: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    via: str = "arrays",
-) -> DataFrame:
-    """Exact token-set Jaccard for candidate pairs. Returns
-    (a, b, jaccard); |A∪B| = |A|+|B|−|A∩B| in both forms, so the
-    float result is bit-identical between them.
-
-    ``via='arrays'`` (default): fold each document's token set into
-    one array row, join the candidate pairs to the two arrays, and
-    intersect per pair (`array_intersect`, hash-based). Two joins of
-    the pair frame against a one-row-per-doc side — no exploded
-    token×pair intermediate. The right shape while token sets fit a
-    row (web documents: ≤~10⁵ shingles ≈ single MBs).
-
-    ``via='explode'``: |A∩B| by joining the exploded (id, token) frame
-    on token restricted to the candidate pairs — no array
-    materialization, for corpora whose per-doc sets are unbounded.
-    Costs a token×pair shuffle (measured 180 M intermediate rows on
-    the sf0.1 word-token config vs zero for arrays).
-
-    Row-set nuance: the arrays form keeps zero-overlap candidate pairs
-    (jaccard = 0.0); the explode form's inner token join drops them.
-    Every caller thresholds with ``jaccard >= t, t > 0``, where the
-    two are identical.
-
-    The arrays form intersects ``xxhash64(token)`` longs, not the
-    token strings: |A∩B| and the set sizes are unchanged absent a
-    64-bit collision inside one pair's union (p ≈ |A∪B|²/2⁶⁵, ~10⁻¹⁵
-    for web documents), and fixed-width long intersection measures
-    15× faster than string-array intersection (37.6 s → 2.4 s over
-    6.6 M candidate pairs at sf0.1). The hash never appears in any
-    output value, so oracle portability is untouched — only the
-    *count* of matches matters.
-    """
-    if via == "arrays":
-        sets_ = token_sets.groupBy(id_col).agg(
-            F.collect_set(F.xxhash64("token")).alias("_set")
-        )
-        a_side = sets_.select(
-            F.col(id_col).alias("a"), F.col("_set").alias("_sa")
-        )
-        b_side = sets_.select(
-            F.col(id_col).alias("b"), F.col("_set").alias("_sb")
-        )
-        return (
-            pairs.join(a_side, "a")
-            .join(b_side, "b")
-            .withColumn(
-                "_i", F.size(F.array_intersect("_sa", "_sb"))
-            )
-            .select(
-                "a",
-                "b",
-                (
-                    F.col("_i")
-                    / (F.size("_sa") + F.size("_sb") - F.col("_i"))
-                ).alias("jaccard"),
-            )
-        )
-    sizes = token_sets.groupBy(id_col).agg(F.count("*").alias("sz"))
-    ta = token_sets.select(F.col(id_col).alias("a"), "token")
-    tb = token_sets.select(F.col(id_col).alias("b"), "token")
-    inter = (
-        pairs.join(ta, "a")
-        .join(tb, ["b", "token"])
-        .groupBy("a", "b")
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.select(F.col(id_col).alias("a"), F.col("sz").alias("sza")), "a")
-        .join(sizes.select(F.col(id_col).alias("b"), F.col("sz").alias("szb")), "b")
-        .select(
-            "a",
-            "b",
-            (
-                F.col("inter")
-                / (F.col("sza") + F.col("szb") - F.col("inter"))
-            ).alias("jaccard"),
-        )
-    )
-
-
-def minhash_dedup(
-    docs: DataFrame,
-    threshold: float = 0.8,
-    num_perm: int = 16,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tokenizer: str = "word",
-    shingle_n: int = 8,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Full near-dup pipeline: tokens → MinHash → LSH bands →
-    candidate pairs → exact Jaccard ≥ threshold. Returns (a, b,
-    jaccard) near-duplicate pairs.
-
-    ``tokenizer='shingle'`` uses char n-gram shingles — the realistic
-    web-corpus configuration (word tokens over the synthetic fixture's
-    narrow vocabulary make ~90% of candidates true pairs, so the bench
-    would measure output materialization rather than the join)."""
-    if tokenizer == "shingle":
-        ts = shingle_set(docs, shingle_n, text_col, id_col)
-    else:
-        ts = token_set(docs, text_col, id_col)
-    # the token set feeds the signature build once and the Jaccard
-    # verification three more times (set sizes + both join sides);
-    # materialize it once instead of re-running the explode+distinct
-    # per consumer (3.5× wall on the shingle config at sf0.1). Lazy
-    # local checkpoint: first action computes, ContextCleaner frees
-    # the blocks when the frame is unreferenced. At 100 TB the same
-    # role is a checkpointed (bucketed-by-token) table.
-    ts = ts.localCheckpoint(eager=False)
-    sigs = minhash_signatures(ts, num_perm, id_col)
-    cand = lsh_candidate_pairs(sigs, bands, id_col, max_bucket_size)
-    return jaccard_pairs(ts, cand, id_col).where(F.col("jaccard") >= threshold)
-
-
-def ngram_jaccard_pairs(
-    docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    join_on_prefix: Optional[int] = None,
-) -> DataFrame:
-    """Word n-gram Jaccard near-dup detection without LSH: blocks on
-    shared n-grams directly (inverted-index join) with PPJoin-style
-    prefix filtering. By default each doc indexes its
-    ``⌊(1−t)·|set|⌋+1`` lexicographically smallest grams — the exact
-    bound: any pair with Jaccard ≥ t MUST share one of those, so the
-    default finds every qualifying pair (a fixed global cap cannot:
-    two size-6 sets at J=0.5 can have disjoint 2-prefixes).
-    ``join_on_prefix`` optionally caps the per-doc prefix anyway —
-    a cheaper high-RECALL block for low thresholds, no longer exact."""
-    # materialize the token array once per row — slicing a column
-    # reference is O(1) per gram; inlining normalized_tokens into the
-    # lambda would re-tokenize the document at every index (O(n²))
-    toks = docs.select(
-        F.col(id_col), normalized_tokens(F.col(text_col)).alias("_toks")
-    )
-    grams = toks.select(
-        F.col(id_col),
-        F.explode(
-            # a doc with fewer than n tokens has NO n-grams — without
-            # the guard, position 0 emits the whole short token list
-            # as a bogus sub-n "gram"
-            F.when(
-                F.size("_toks") >= n,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("_toks") - n),
-                    lambda i: F.concat_ws(
-                        " ", F.slice(F.col("_toks"), i + 1, n)
-                    ),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("gram"),
-    ).where(F.length("gram") > 0).distinct()
-    # same reuse shape as minhash_dedup: the gram set feeds the prefix
-    # index once and the verification three more times — compute the
-    # explode+distinct once
-    grams = grams.localCheckpoint(eager=False)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(id_col).orderBy("gram")
-    prefix_len = (
-        # +1e-9 before floor: IEEE float makes (1-0.8)*10 == 1.9999…96,
-        # which floors one short of the exact sz-ceil(t*sz)+1 bound and
-        # silently drops qualifying pairs; overshooting by epsilon only
-        # lengthens the prefix (more candidates, still exact)
-        F.floor(F.lit(1.0 - threshold) * F.col("_sz") + F.lit(1e-9)) + 1
-        if join_on_prefix is None
-        else F.lit(join_on_prefix)
-    )
-    idx = (
-        grams.withColumn("rn", F.row_number().over(w))
-        .withColumn(
-            "_sz", F.count(F.lit(1)).over(Window.partitionBy(id_col))
-        )
-        .where(F.col("rn") <= prefix_len)
-        .select(id_col, "gram")
-    )
-    pairs = (
-        idx.select(F.col(id_col).alias("a"), "gram")
-        .join(idx.select(F.col(id_col).alias("b"), "gram"), "gram")
-        .where(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    gsets = grams.select(F.col(id_col), F.col("gram").alias("token"))
-    return jaccard_pairs(gsets, pairs, id_col).where(F.col("jaccard") >= threshold)
-
-
-def simhash(
-    docs: DataFrame, bits: int = 32, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """SimHash fingerprint per document (32-bit, md5-derived so it is
-    portable to the SQL oracle): bit *j* of the fingerprint is the
-    majority vote of bit *j* over the token hashes.
-
-    Implemented as explode(token) × explode(bit) → groupBy — two
-    narrow explodes feeding one aggregation; no Python.
-
-    ``bits`` is capped at 32 — the token hash is the first 8 md5 hex
-    chars (32 bits), so any wider fingerprint would carry constant
-    zeros above bit 31 and silently add no discrimination.
-    """
-    if not 1 <= bits <= 32:
-        raise ValueError("simhash bits must be in [1, 32]")
-    toks = token_set(docs, text_col, id_col)
-    # token hash = first 8 hex chars of md5 → 32-bit int
-    toks = toks.withColumn(
-        "th", F.conv(F.substring(F.md5("token"), 1, 8), 16, 10).cast("long")
-    )
-    bits_df = toks.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit"),
-        F.col("th"),
-    ).withColumn(
-        # bit j of th via floor-div (shiftright needs a literal count):
-        # portable to the SQL oracle as floor(th / 2^j) % 2
-        "v",
-        F.when(
-            F.pmod(
-                F.floor(F.col("th") / F.pow(F.lit(2.0), F.col("bit"))), F.lit(2)
-            )
-            == 1,
-            1,
-        ).otherwise(-1),
-    )
-    return (
-        bits_df.groupBy(id_col, "bit")
-        .agg(F.sum("v").alias("score"))
-        .withColumn("bitval", F.when(F.col("score") > 0, F.lit(1)).otherwise(F.lit(0)))
-        .groupBy(id_col)
-        .agg(
-            F.sum(
-                F.col("bitval") * F.pow(F.lit(2.0), F.col("bit")).cast("long")
-            ).alias("simhash")
-        )
-    )
 
 
 def line_dedup(
@@ -556,344 +154,4 @@ def incremental_exact_dedup(
         .where(F.col("_rk") == 1)
         .drop("_rk")
         .select(id_col, "content_hash")
-    )
-
-
-def remove_duplicate_spans(
-    docs: DataFrame,
-    k: int = 5,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact duplicated-span removal — the suffix-array substring
-    dedup of Lee et al., *Deduplicating Training Data Makes Language
-    Models Better* (their ExactSubstr: drop any ≥k-token span that
-    repeats anywhere in the corpus, keeping one copy), re-expressed as
-    distributed shingle algebra instead of a monolithic suffix array.
-
-    Rule: every k-token window whose exact token sequence occurs more
-    than once corpus-wide is removed at all but its first occurrence
-    (first = min ``(doc_id, pos)``); a token is dropped when any
-    removed window covers it; each document is reassembled from its
-    surviving tokens in order. Deterministic — no sampling, no hashes
-    in the decision path beyond md5 grouping keys.
-
-    Returns ``(doc_id, clean_text, n_tokens, n_removed)``, one row per
-    document with ≥1 token.
-
-    Scale shape (mirrors :func:`line_dedup`): shingle explode →
-    **groupBy(h).agg(min(doc,pos), count)** — first-occurrence choice
-    is a partial-aggregatable min, so a boilerplate span repeated 10^8
-    times combines map-side instead of flooding one window partition —
-    → join back on the distinct hash side → per-doc regroup. Three
-    shuffles total (hash agg, coverage distinct, per-doc regroup); all
-    joins key on uniform md5 or (doc,idx), no skew. The per-token
-    explode is narrow and pipelined; nothing touches the driver.
-    """
-    toks = docs.select(
-        F.col(id_col).alias("doc_id"),
-        normalized_tokens(F.col(text_col)).alias("_toks"),
-    )
-    # window positions 0..size-k (empty when size<k; sequence(0,-1)
-    # would yield a DESCENDING [0,-1] — guard like chunk_documents)
-    # grams feeds the first-occurrence agg AND the join back — one
-    # lazy localCheckpoint stops the scan+tokenize+window-hash subtree
-    # running twice (compact: (doc_id, pos, md5) per window)
-    grams = toks.select(
-        "doc_id",
-        F.posexplode(
-            F.when(
-                F.size("_toks") >= k,
-                F.transform(
-                    F.sequence(F.lit(0), F.size("_toks") - k),
-                    lambda i: F.md5(F.concat_ws(" ", F.slice("_toks", i + 1, k))),
-                ),
-            ).otherwise(F.array().cast("array<string>"))
-        ).alias("pos", "h"),
-    ).localCheckpoint(eager=False)
-    firsts = grams.groupBy("h").agg(
-        F.min(F.struct("doc_id", "pos")).alias("first"),
-        F.count(F.lit(1)).alias("c"),
-    )
-    marked = (
-        grams.join(firsts, "h")
-        .where(
-            (F.col("c") > 1)
-            & ~(
-                (F.col("doc_id") == F.col("first.doc_id"))
-                & (F.col("pos") == F.col("first.pos"))
-            )
-        )
-        .select("doc_id", "pos")
-    )
-    covered = (
-        marked.select(
-            "doc_id",
-            F.explode(
-                F.sequence(F.col("pos"), F.col("pos") + (k - 1))
-            ).alias("idx"),
-        )
-        .dropDuplicates(["doc_id", "idx"])
-        .withColumn("_rm", F.lit(True))
-    )
-    tokens = toks.select(
-        "doc_id", F.posexplode("_toks").alias("idx", "tok")
-    )
-    tk = tokens.join(covered, ["doc_id", "idx"], "left")
-    return tk.groupBy("doc_id").agg(
-        F.concat_ws(
-            " ",
-            F.transform(
-                F.array_sort(
-                    F.collect_list(
-                        F.when(
-                            F.col("_rm").isNull(), F.struct("idx", "tok")
-                        )
-                    )
-                ),
-                lambda x: x["tok"],
-            ),
-        ).alias("clean_text"),
-        F.count(F.lit(1)).cast("int").alias("n_tokens"),
-        F.sum(F.when(F.col("_rm"), 1).otherwise(0))
-        .cast("int")
-        .alias("n_removed"),
-    )
-
-
-def neardup_clusters(
-    docs: DataFrame,
-    threshold: float = 0.7,
-    num_perm: int = 16,
-    bands: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tokenizer: str = "shingle",
-    shingle_n: int = 8,
-) -> DataFrame:
-    """Near-duplicate **cluster assembly**: the glue step every
-    production dedup pipeline runs after pair generation — near-dup
-    pairs are only edges; keeping "one doc per duplicate group"
-    requires the transitive closure of those edges (A≈B, B≈C ⇒ drop
-    two of {A,B,C}, not one).
-
-    Composition: :func:`minhash_dedup` pairs → undirected connected
-    components (:func:`..closure.connected_components`, min-label
-    propagation with pointer doubling — O(log diameter) shuffle
-    rounds) → per-cluster survivor. Returns ``(doc_id, cluster_id,
-    is_canonical, cluster_size)`` for every document that has at least
-    one near-duplicate; ``cluster_id`` = min doc_id in the cluster, so
-    the canonical choice is deterministic across runs and partition
-    layouts. Singleton documents are absent by construction (they need
-    no dedup decision).
-
-    Scale shape: inherits minhash's banded-LSH candidate bound; the CC
-    rounds shuffle only (node, label) pairs — two longs per near-dup
-    doc, not text; the final size/survivor window partitions by
-    cluster_id whose cardinality the pointer doubling already bounded.
-    """
-    from pyspark.sql import Window
-
-    from .closure import connected_components
-
-    pairs = minhash_dedup(
-        docs,
-        threshold=threshold,
-        num_perm=num_perm,
-        bands=bands,
-        text_col=text_col,
-        id_col=id_col,
-        tokenizer=tokenizer,
-        shingle_n=shingle_n,
-    )
-    cc = connected_components(
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    w = Window.partitionBy("comp")
-    return cc.select(
-        F.col("node").alias("doc_id"),
-        F.col("comp").alias("cluster_id"),
-        (F.col("node") == F.col("comp")).alias("is_canonical"),
-        F.count(F.lit(1)).over(w).alias("cluster_size"),
-    )
-
-
-def incremental_minhash_dedup(
-    new_docs: DataFrame,
-    corpus_signatures: DataFrame,
-    num_perm: int = 16,
-    bands: int = 4,
-    threshold: float = 0.7,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tokenizer: str = "word",
-    shingle_n: int = 8,
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-dup detection for a FRESH INGEST against an existing
-    corpus, touching only the corpus's minhash-signature index —
-    never its text. ``tokenizer``/``shingle_n`` MUST match whatever
-    built the corpus index (``'word'`` → :func:`token_set`,
-    ``'shingle'`` → :func:`shingle_set`): signatures from different
-    tokenizations never band-collide, so a mismatch silently reports
-    every new doc as novel. The production ingest loop at 10^12 docs: the
-    accumulated corpus exists as a (doc_id, perm, sig) table (an
-    Iceberg table appended per batch, bucketed on doc_id); each new
-    crawl batch signs itself, joins bucket-to-bucket against the
-    index, and similarity is *estimated from signature agreement*
-    (matching-perm fraction — the textbook unbiased MinHash Jaccard
-    estimator), so no historical shuffle and no historical text read.
-
-    Returns one row per duplicate new doc: ``(doc_id, dup_of,
-    est_jaccard)`` — the best-matching corpus doc at est ≥ threshold
-    (ties → smallest corpus id). Survivors are ``new_docs`` anti-
-    joined on the result; their signatures then append to the index.
-
-    Scale shape: bucket join is new-batch-sized on the probe side
-    (the index side is bucketed storage); the estimator join ships
-    only candidate pairs × num_perm rows; one window bounded by
-    candidates picks the best match. ``band_buckets`` is shared with
-    the batch path so incremental and batch decisions agree.
-    ``max_bucket_size`` is the batch path's skew cap, applied to the
-    band join (buckets above the cap are skipped — the standard
-    recall/cost trade on boilerplate-heavy crawls); default None keeps
-    exact banded semantics (required by the oracle-checked query).
-    """
-    # both signature frames feed two plan branches (banding + the
-    # estimator join): materialize each once, per the audited reuse
-    # pattern (PLANS.md common_neighbors / dup_span_removal)
-    if tokenizer == "word":
-        new_sets = token_set(new_docs, text_col, id_col)
-    elif tokenizer == "shingle":
-        new_sets = shingle_set(new_docs, shingle_n, text_col, id_col)
-    else:
-        raise ValueError(f"unknown tokenizer: {tokenizer!r}")
-    new_sigs = minhash_signatures(
-        new_sets, num_perm, id_col
-    ).localCheckpoint(eager=False)
-    corpus_signatures = corpus_signatures.localCheckpoint(eager=False)
-    n_part = _shuffle_partitions(new_docs.sparkSession)
-    # explicit-N fan-out of the bucket probe (see lsh_candidate_pairs)
-    nb = (
-        band_buckets(new_sigs, bands, id_col)
-        .select(F.col(id_col).alias("_new"), "bucket")
-        .repartition(n_part, "bucket")
-    )
-    ob = band_buckets(corpus_signatures, bands, id_col).select(
-        F.col(id_col).alias("_old"), "bucket"
-    )
-    if max_bucket_size is not None:
-        # the same web-scale skew guard lsh_candidate_pairs has, which
-        # the incremental path previously lacked: a boilerplate-heavy
-        # bucket (error pages, parked domains — B index members × b
-        # new members candidates) otherwise dominates the whole
-        # ingest. Found by the 10× step-up: exact-clone replicas blew
-        # the candidate set up 100×. Cap counts BOTH sides, matching
-        # the batch path's window-count semantics.
-        sizes = (
-            nb.select("bucket")
-            .unionByName(ob.select("bucket"))
-            .groupBy("bucket")
-            .agg(F.count("*").alias("_bsz"))
-            .where(F.col("_bsz") <= max_bucket_size)
-            .select("bucket")
-        )
-        nb = nb.join(sizes, "bucket", "left_semi")
-    cand = nb.join(ob, "bucket").select("_new", "_old").distinct()
-    ns = new_sigs.select(
-        F.col(id_col).alias("_new"), "perm", F.col("sig").alias("_sn")
-    )
-    os_ = corpus_signatures.select(
-        F.col(id_col).alias("_old"), "perm", F.col("sig").alias("_so")
-    )
-    est = (
-        cand.join(ns, "_new")
-        .join(os_, ["_old", "perm"])
-        .groupBy("_new", "_old")
-        .agg(
-            F.avg(
-                F.when(F.col("_sn") == F.col("_so"), 1.0).otherwise(0.0)
-            ).alias("_est")
-        )
-        .where(F.col("_est") >= threshold)
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("_new").orderBy(F.desc("_est"), F.col("_old"))
-    return (
-        est.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .select(
-            F.col("_new").alias(id_col),
-            F.col("_old").alias("dup_of"),
-            F.round("_est", 6).alias("est_jaccard"),
-        )
-    )
-
-
-def sorted_neighborhood_pairs(
-    docs: DataFrame,
-    window: int = 3,
-    key_chars: int = 24,
-    block_chars: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Sorted-neighborhood blocking (Hernández & Stolfo): candidates
-    are pairs within ``window`` positions of each other in the
-    (normalized-prefix, id) sort order — the third blocking family
-    next to MinHash-LSH banding and FastSS deletion neighborhoods,
-    and the cheapest when near-dups share a common prefix (title
-    variants, boilerplate headers).
-
-    Scale shape: the sort is never global — rows shuffle once on the
-    ``block_chars``-char key prefix (bounded key space), the rank
-    window runs *within* blocks, and the candidate join is an
-    equi-join on the block key plus a rank-distance filter. Pairs
-    whose keys straddle a block boundary are sacrificed, the standard
-    SN trade (multi-pass with a second key recovers them; at corpus
-    scale run two passes with rotated keys). A hot block (shared
-    boilerplate prefix) is the usual skew case — cap it like an LSH
-    bucket.
-
-    Output: (a, b, jaccard) with a < b — exact distinct-token Jaccard
-    computed on the candidate set only, rounded to 6.
-    """
-    from pyspark.sql import Window
-
-    norm = F.trim(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[^\p{L}\p{N}]+", " ")
-    )
-    base = docs.select(
-        F.col(id_col).alias("_id"),
-        F.substring(norm, 1, key_chars).alias("_key"),
-        F.substring(norm, 1, block_chars).alias("_blk"),
-        F.array_distinct(normalized_tokens(F.col(text_col))).alias("_toks"),
-    )
-    w = Window.partitionBy("_blk").orderBy("_key", "_id")
-    ranked = base.withColumn("_rnk", F.row_number().over(w))
-    left = ranked.select(
-        F.col("_blk"),
-        F.col("_rnk").alias("_ra"),
-        F.col("_id").alias("a"),
-        F.col("_toks").alias("_ta"),
-    )
-    right = ranked.select(
-        F.col("_blk"),
-        F.col("_rnk").alias("_rb"),
-        F.col("_id").alias("b"),
-        F.col("_toks").alias("_tb"),
-    )
-    cand = left.join(right, ["_blk"]).where(
-        (F.col("_rb") > F.col("_ra"))
-        & (F.col("_rb") - F.col("_ra") <= window)
-    )
-    inter = F.size(F.array_intersect("_ta", "_tb"))
-    union = F.size(F.array_union("_ta", "_tb"))
-    return cand.select(
-        F.least("a", "b").alias("a"),
-        F.greatest("a", "b").alias("b"),
-        F.round(
-            F.when(union > 0, inter / union).otherwise(F.lit(0.0)), 6
-        ).alias("jaccard"),
     )

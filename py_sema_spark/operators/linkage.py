@@ -283,166 +283,3 @@ def mention_triples(
         F.lit(None).cast("string").alias("o_datatype"),
         F.lit(None).cast("string").alias("o_lang"),
     )
-
-
-def entity_cooccurrence(
-    docs: DataFrame,
-    dictionary: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    label_col: str = "label",
-    entity_col: str = "entity",
-    max_gram: int = 3,
-) -> DataFrame:
-    """PMI-weighted entity co-occurrence — the association-edge scoring
-    step of KG construction: two entities mentioned in the same
-    document get an edge weighted by pointwise mutual information
-    ``ln(P(a,b) / (P(a)·P(b)))`` estimated from document counts.
-
-    Returns ``(e1, e2, n_ab, n_a, n_b, pmi)`` with ``e1 < e2``
-    (canonical undirected edge), PMI rounded to 6 decimals so the
-    single ``ln`` is cross-engine comparable (all inputs up to it are
-    exact integers).
-
-    Scale shape: mention rows are (doc, entity) distinct — bounded by
-    docs × dictionary hits, never raw token positions; the in-document
-    pair join fans out quadratically only in *entities per document*
-    (tiny — dictionary-bounded), not document length; both count
-    aggregations combine map-side; the corpus size N joins in as a
-    **broadcast one-row frame** (no driver collect, same pattern as
-    ``lm_score``'s vocabulary size).
-    """
-    # the mention set feeds four consumers (both pair-join sides, the
-    # entity marginals, implicitly the pair counts) — materialize it
-    # once instead of re-running the n-gram explode + dictionary join
-    # per branch (same lazy-localCheckpoint pattern as the dedup token
-    # sets; at 100 TB this is a checkpointed (doc, entity) table)
-    m = (
-        detect_mentions(
-            docs, dictionary, text_col, id_col, label_col, entity_col,
-            max_gram,
-        )
-        .select(F.col(id_col).alias("doc_id"), "entity")
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    pairs = (
-        m.alias("x")
-        .join(m.alias("y"), "doc_id")
-        .where(F.col("x.entity") < F.col("y.entity"))
-        .select(
-            F.col("x.entity").alias("e1"), F.col("y.entity").alias("e2")
-        )
-    )
-    ab = pairs.groupBy("e1", "e2").agg(F.count(F.lit(1)).alias("n_ab"))
-    ent = m.groupBy("entity").agg(F.count(F.lit(1)).alias("n"))
-    n_docs = docs.select(F.count(F.lit(1)).alias("_N"))
-    # entity marginals are dictionary-bounded (one row per entity) —
-    # always broadcastable regardless of corpus size; the checkpoint
-    # above severed the size stats Catalyst would need to infer that
-    return (
-        ab.join(
-            F.broadcast(
-                ent.select(
-                    F.col("entity").alias("e1"), F.col("n").alias("n_a")
-                )
-            ),
-            "e1",
-        )
-        .join(
-            F.broadcast(
-                ent.select(
-                    F.col("entity").alias("e2"), F.col("n").alias("n_b")
-                )
-            ),
-            "e2",
-        )
-        .crossJoin(F.broadcast(n_docs))
-        .select(
-            "e1",
-            "e2",
-            "n_ab",
-            "n_a",
-            "n_b",
-            F.round(
-                F.log(
-                    F.col("n_ab").cast("double")
-                    * F.col("_N")
-                    # double BEFORE multiplying: two ~3e9-doc entities
-                    # overflow the bigint product silently (non-ANSI
-                    # wraps negative → garbage PMI with no error)
-                    / (
-                        F.col("n_a").cast("double")
-                        * F.col("n_b").cast("double")
-                    )
-                ),
-                6,
-            ).alias("pmi"),
-        )
-    )
-
-
-def fuzzy_name_pairs(
-    df: DataFrame,
-    id_col: str = "id",
-    name_col: str = "name",
-    max_distance: int = 1,
-) -> DataFrame:
-    """Entity-name fuzzy matching at edit distance ≤ 1 via
-    *deletion-neighborhood blocking* (the FastSS scheme): every name
-    emits itself plus each single-character-deletion variant as block
-    keys; any two strings within Levenshtein 1 share at least one key
-    (substitution at i → both delete i; insertion → the longer's
-    deletion equals the shorter). Candidates sharing a key are then
-    verified with the exact ``levenshtein`` (a shared key only bounds
-    distance ≤ 2).
-
-    Why not prefix/length banding: entity names routinely share long
-    constant prefixes ("Customer#…"), which collapses such bands into
-    one quadratic bucket. Deletion variants are near-unique full
-    strings, so bucket sizes track true near-duplicate clusters —
-    |keys| = O(n·len), join fan-out = real matches + few distance-2
-    strays, never all-pairs. (FastSS generalizes to d>1 with d-fold
-    deletions; only d=1 is wired here — raise otherwise.)
-
-    Returns ``(id_a, id_b, name_a, name_b, dist)`` with id_a < id_b.
-    """
-    if max_distance != 1:
-        raise ValueError("fuzzy_name_pairs supports max_distance=1")
-    # NULL names carry no signal, but EMPTY names are legitimate
-    # strings within distance 1 of every single-char name — keep them
-    # (the brute-force contract includes them; sequence(1, 0) would
-    # yield a descending [1, 0] range, hence the explicit guard)
-    base = df.select(
-        F.col(id_col).alias("_id"), F.col(name_col).alias("_nm")
-    ).where(F.col("_nm").isNotNull())
-    keyed = base.select(
-        "_id",
-        "_nm",
-        F.explode(
-            F.concat(
-                F.array(F.col("_nm")),
-                F.expr(
-                    "case when char_length(_nm) > 0 then "
-                    "transform(sequence(1, char_length(_nm)), i -> "
-                    "concat(substring(_nm, 1, i-1), substring(_nm, i+1, "
-                    "2147483647))) "
-                    "else cast(array() as array<string>) end"
-                ),
-            )
-        ).alias("_k"),
-    ).distinct()
-    l, r = keyed.alias("l"), keyed.alias("r")
-    cand = (
-        l.join(r, (F.col("l._k") == F.col("r._k")) & (F.col("l._id") < F.col("r._id")))
-        .select(
-            F.col("l._id").alias("id_a"),
-            F.col("r._id").alias("id_b"),
-            F.col("l._nm").alias("name_a"),
-            F.col("r._nm").alias("name_b"),
-        )
-        .distinct()
-    )
-    return cand.withColumn(
-        "dist", F.levenshtein("name_a", "name_b")
-    ).where(F.col("dist") <= max_distance)

@@ -1,30 +1,14 @@
-"""Similarity search over embedding columns (``array<float>``).
+"""Vector algebra over embedding columns (``array<float>``).
 
-- :func:`cosine_topk` — brute-force exact top-k (the baseline the
-  judge's oracle can verify 1:1 in SQL);
-- :func:`lsh_cosine_topk` — random-hyperplane LSH bucketing as the
-  scale path: candidates only within matching sign-bit buckets, then
-  exact cosine on candidates (multi-probe via several independent
-  tables to keep recall);
-- :func:`embedding_neardup_pairs` — near-duplicate detection by
-  cosine ≥ threshold (the embedding-cosine dedup mode).
-
-All vector math is ``zip_with`` / ``aggregate`` column algebra —
-JVM-side, no UDFs. Hyperplane coefficients are derived from md5 of
-(table, plane, dim) so buckets are deterministic across runs and
-partitions.
-
-Scale: brute force is O(Q·N) — fine for a broadcast query set against
-a partitioned corpus (each executor scores its shard; the global top-k
-is a TakeOrderedAndProject). The LSH path replaces the N in Q·N with
-the bucket population.
+:func:`dot` and :func:`norm` are ``zip_with`` / ``aggregate`` column
+algebra — JVM-side, no UDFs. Entity linkage scores mention contexts
+against entity embeddings with them (:mod:`.linkage`).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -38,778 +22,4 @@ def dot(a: Column, b: Column) -> Column:
 def norm(a: Column) -> Column:
     return F.sqrt(
         F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """Exact top-k neighbors per query: broadcast(queries) ⋈ corpus →
-    score → rank window. Returns (q_id, vec_id, cos, rank)."""
-    joined = embeddings.alias("e").join(
-        F.broadcast(queries.alias("q"))
-    )  # cartesian with broadcast: each corpus row scores all queries
-    scored = joined.select(
-        F.col(f"q.{q_id_col}").alias("q_id"),
-        F.col(f"e.{id_col}").alias(id_col),
-        cosine(
-            F.col(f"e.{vec_col}").cast("array<double>"),
-            F.col(f"q.{q_vec_col}").cast("array<double>"),
-        ).alias("cos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def _hyperplane(table: int, plane: int, dim: int) -> list:
-    """Deterministic pseudo-random unit-ish hyperplane from md5."""
-    import hashlib
-
-    coeffs = []
-    for d in range(dim):
-        h = hashlib.md5(f"{table}|{plane}|{d}".encode()).digest()
-        v = int.from_bytes(h[:4], "big") / 2**31 - 1.0  # ~U(-1,1)
-        coeffs.append(v)
-    return coeffs
-
-
-def lsh_bucket_col(vec: Column, table: int, planes: int, dim: int) -> Column:
-    """Sign-bit bucket id for one hash table.
-
-    A ``dim`` that mismatches the actual vector length would null-pad
-    the zip_with dot → null bucket → the candidate equi-join silently
-    matches nothing; fail the job loudly instead."""
-    bucket = F.lit(0).cast("long")
-    for p in range(planes):
-        coeffs = F.array(*[F.lit(c) for c in _hyperplane(table, p, dim)])
-        sign = (dot(vec.cast("array<double>"), coeffs) > 0).cast("long")
-        bucket = bucket * 2 + sign
-    return F.when(F.size(vec) == dim, bucket).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit(f"lsh dim mismatch: expected {dim}, got "),
-                F.size(vec).cast("string"),
-            )
-        ).cast("long")
-    )
-
-
-def _probe_masks(planes: int, radius: int) -> list:
-    """All XOR masks of Hamming weight ≤ radius over ``planes`` bits."""
-    return [m for m in range(2 ** planes) if bin(m).count("1") <= radius]
-
-
-def _table_buckets(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    tables: int,
-    planes: int,
-    dim: int,
-) -> DataFrame:
-    """(id, t, bucket) — all hash tables' bucket ids from one scan:
-    the per-table signatures are independent column projections of the
-    same vector, exploded from a struct array (tables·planes dot
-    products per row, zero extra scans/exchanges)."""
-    tb = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("t"),
-                lsh_bucket_col(F.col(vec_col), t, planes, dim).alias(
-                    "bucket"
-                ),
-            )
-            for t in range(tables)
-        ]
-    )
-    return df.select(F.col(id_col), F.explode(tb).alias("_tb")).select(
-        id_col,
-        F.col("_tb.t").alias("t"),
-        F.col("_tb.bucket").alias("bucket"),
-    )
-
-
-def _with_norm(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, _v: array<double>, _n: ‖v‖) — norm computed once per
-    vector so candidate-pair scoring is a single dot product."""
-    v = F.col(vec_col).cast("array<double>")
-    return df.select(F.col(id_col), v.alias("_v")).withColumn(
-        "_n", norm(F.col("_v"))
-    )
-
-
-def lsh_cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    dim: int = 16,
-    planes: int = 6,
-    tables: int = 4,
-    probe_radius: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """Approximate top-k: union of per-table bucket joins, exact cosine
-    on the candidate set, rank window. Recall grows with ``tables`` and
-    with ``probe_radius`` (multi-probe: each query also probes buckets
-    within Hamming distance ≤ radius of its own signature — the
-    standard way to buy recall without more tables; only the broadcast
-    query side fans out, the corpus is hashed once per table)."""
-    masks = _probe_masks(planes, probe_radius)
-    # every hash table in ONE corpus scan: the per-table bucket ids are
-    # independent projections of the same vector, so they explode from
-    # one (table, bucket) struct array instead of re-scanning the
-    # corpus per table and unioning (tables× scans → 1 scan, one join
-    # on (t, bucket) instead of `tables` joins + union)
-    e_b = _table_buckets(
-        embeddings, id_col, vec_col, tables, planes, dim
-    )
-    q_b = (
-        _table_buckets(queries, q_id_col, q_vec_col, tables, planes, dim)
-        .select(
-            q_id_col,
-            "t",
-            F.explode(F.array(*[F.lit(m) for m in masks])).alias("_m"),
-            "bucket",
-        )
-        .select(
-            q_id_col,
-            "t",
-            F.col("bucket").bitwiseXOR(F.col("_m")).alias("bucket"),
-        )
-    )
-    cand = e_b.join(F.broadcast(q_b), ["t", "bucket"]).select(
-        q_id_col, id_col
-    )
-    # id pairs only through the dedup exchange (vectors are 64 doubles
-    # a row — 30× the payload); attach vectors + the per-row norms
-    # afterwards, so each norm is computed once per vector instead of
-    # once per candidate pair. Values are identical: same
-    # dot/(sqrt·sqrt) expression, same operand order.
-    cand = cand.dropDuplicates([q_id_col, id_col])
-    ev = _with_norm(embeddings, id_col, vec_col)
-    qv = _with_norm(queries, q_id_col, q_vec_col)
-    scored = (
-        cand.join(ev, id_col)
-        .join(
-            F.broadcast(
-                qv.select(
-                    q_id_col,
-                    F.col("_v").alias("_qv"),
-                    F.col("_n").alias("_qn"),
-                )
-            ),
-            q_id_col,
-        )
-        .select(
-            F.col(q_id_col).alias("q_id"),
-            F.col(id_col),
-            (dot(F.col("_v"), F.col("_qv")) / (F.col("_n") * F.col("_qn"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def _ivf_centroids(
-    embeddings: DataFrame,
-    n_lists: int,
-    id_col: str,
-    vec_col: str,
-) -> list:
-    """Deterministic coarse quantizer: centroids = the vectors whose
-    ids hash smallest (a seeded sample standing in for k-means — the
-    IVF property that matters for the *plan* is the bucket structure,
-    not centroid optimality). Driver-side: n_lists vectors only."""
-    rows = (
-        embeddings.select(id_col, vec_col)
-        .withColumn("_h", F.md5(F.col(id_col).cast("string")))
-        .orderBy("_h")
-        .limit(n_lists)
-        .collect()
-    )
-    return [list(r[vec_col]) for r in rows]
-
-
-def _assign_lists(
-    df: DataFrame, centroids: list, vec_col: str, probe: int, out_col: str
-) -> DataFrame:
-    """Append ``out_col: array<int>`` — indices of the ``probe``
-    nearest centroids by cosine.
-
-    One Arrow-batched ``mapInPandas`` doing a single NumPy matmul per
-    batch (B×D · D×L). The centroid matrix rides in the task closure
-    (n_lists×dim floats — broadcast-sized), so assignment is map-side
-    with no shuffle and the cost per row is O(D·L) vectorized — unlike
-    the previous inlined-literal expression tree, this stays flat in
-    plan size and survives n_lists = 4096.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    C = np.asarray(centroids, dtype="float64")
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-30)
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                pdf[out_col] = pd.Series([], dtype=object)
-                yield pdf
-                continue
-            V = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            Vn = V / np.maximum(
-                np.linalg.norm(V, axis=1, keepdims=True), 1e-30
-            )
-            # round to 6 before ranking (same pinning as kmeans_assign):
-            # the oracle computes the identical cosine with sequential
-            # dot/sqrt arithmetic, and an unpinned argmax can flip
-            # between engines on <1e-13 differences
-            sims = np.round(Vn @ Cn.T, 6)  # B×L cosine matrix
-            # top-`probe` lists per row, best first; ties break to the
-            # lower index (argsort is stable on the negated scores)
-            idx = np.argsort(-sims, kind="stable", axis=1)[:, :probe]
-            pdf = pdf.copy()
-            pdf[out_col] = [row.tolist() for row in idx]
-            yield pdf
-
-    return df.mapInPandas(gen, schema)
-
-
-def ivf_cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    n_lists: int = 16,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """IVF-style approximate top-k: corpus vectors are assigned to
-    their nearest coarse centroid (one list each); queries probe their
-    ``n_probe`` nearest lists and score only those lists' members.
-
-    Scale shape: assignment is one map-side NumPy matmul per Arrow
-    batch (no shuffle, plan size independent of n_lists); the
-    probe-join is an equi-join on ``list`` (queries broadcast); at
-    10^12 scale the lists become the partition/bucket key so a query
-    touches n_probe/n_lists of the data. Recall grows with n_probe —
-    at n_probe = n_lists this degrades gracefully to brute force.
-    """
-    cents = _ivf_centroids(embeddings, n_lists, id_col, vec_col)
-    if not cents:
-        # empty corpus: no centroids to probe — degrade to the exact
-        # scorer (trivially empty here) instead of crashing NumPy on a
-        # 0-d array at plan-construction time
-        return cosine_topk(
-            embeddings, queries, k, id_col, vec_col, q_id_col, q_vec_col
-        )
-    e = _assign_lists(
-        embeddings.select(id_col, vec_col), cents, vec_col, 1, "_lists"
-    ).select(id_col, F.col("_lists")[0].alias("list"))
-    q = _assign_lists(
-        queries.select(q_id_col, q_vec_col), cents, q_vec_col, n_probe,
-        "_lists",
-    ).select(q_id_col, F.explode("_lists").alias("list"))
-    cand = (
-        e.join(F.broadcast(q), "list")
-        .select(q_id_col, id_col)
-        .dropDuplicates([q_id_col, id_col])
-    )
-    ev = _with_norm(embeddings, id_col, vec_col)
-    qv = _with_norm(queries, q_id_col, q_vec_col)
-    scored = (
-        cand.join(ev, id_col)
-        .join(
-            F.broadcast(
-                qv.select(
-                    q_id_col,
-                    F.col("_v").alias("_qv"),
-                    F.col("_n").alias("_qn"),
-                )
-            ),
-            q_id_col,
-        )
-        .select(
-            F.col(q_id_col).alias("q_id"),
-            F.col(id_col),
-            (dot(F.col("_v"), F.col("_qv")) / (F.col("_n") * F.col("_qn"))).alias(
-                "cos"
-            ),
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def recall_against_exact(
-    approx: DataFrame,
-    exact: DataFrame,
-    keys: tuple = ("q_id", "vec_id"),
-) -> float:
-    """|approx ∩ exact| / |exact| over the key tuple — the recall gate
-    for the ANN family (VERDICT r01 #5: approximations must be
-    quantified against their oracled brute-force twins, not just
-    row-counted). Driver-side scalars only; both inputs are tiny
-    top-k / pair sets."""
-    ks = list(keys)
-    a = approx.select(*ks).distinct()
-    e = exact.select(*ks).distinct()
-    total = e.count()
-    if total == 0:
-        return 1.0
-    return a.join(e, ks, "left_semi").count() / total
-
-
-def embedding_neardup_pairs(
-    embeddings: DataFrame,
-    threshold: float = 0.95,
-    dim: int = 16,
-    planes: int = 8,
-    tables: int = 2,
-    probe_radius: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_bucket_size: int | None = None,
-) -> DataFrame:
-    """Near-duplicate (a,b,cos) pairs with cos ≥ threshold, found via
-    LSH self-join (same deterministic buckets on both sides).
-
-    Multi-probe on one side only: the left side fans out to buckets
-    within Hamming radius of its signature, the right side keeps its
-    exact bucket — pair recall of radius-r probing at a fraction of
-    the cost of dropping ``planes`` (halving planes quadruples every
-    bucket's pair output; probing adds a linear factor instead).
-
-    ``max_bucket_size`` is the web-scale skew guard, symmetric to the
-    minhash path's (dedup.lsh_candidate_pairs): near-constant
-    embeddings (boilerplate pages, parked domains) collapse into one
-    hyperplane bucket whose B² pair output quadratic-bombs the join.
-    Capping drops every (table, bucket) holding more than the cap
-    before the self-join, so its members leave that table on BOTH
-    sides — they neither probe nor get probed there, and pair only
-    through another table's bucket. Each probe then meets at most
-    cap rows, bounding output at cap·probes·tables·N pairs. Default
-    None keeps exact LSH semantics (the oracle-checked form)."""
-    masks = _probe_masks(planes, probe_radius)
-    # one corpus scan for all tables (see lsh_cosine_topk), then one
-    # self-join on (t, bucket) — materialized once since both join
-    # sides derive from it
-    b = _table_buckets(
-        embeddings, id_col, vec_col, tables, planes, dim
-    ).localCheckpoint(eager=False)
-    if max_bucket_size is not None:
-        w = Window.partitionBy("t", "bucket")
-        b = (
-            b.withColumn("_bsz", F.count("*").over(w))
-            .where(F.col("_bsz") <= max_bucket_size)
-            .drop("_bsz")
-        )
-    probed = b.select(
-        id_col,
-        "t",
-        F.explode(F.array(*[F.lit(m) for m in masks])).alias("_m"),
-        "bucket",
-    ).select(
-        id_col,
-        "t",
-        F.col("bucket").bitwiseXOR(F.col("_m")).alias("bucket"),
-    )
-    pairs = (
-        probed.alias("x")
-        .join(b.alias("y"), ["t", "bucket"])
-        .where(F.col(f"x.{id_col}") < F.col(f"y.{id_col}"))
-        .select(
-            F.col(f"x.{id_col}").alias("a"),
-            F.col(f"y.{id_col}").alias("b"),
-        )
-    )
-    # id pairs only through the candidate union/dedup exchange; attach
-    # vectors + precomputed norms after (norm once per vector, not per
-    # pair; same dot/(sqrt·sqrt) expression so values are unchanged)
-    pairs = pairs.dropDuplicates(["a", "b"])
-    ev = _with_norm(embeddings, id_col, vec_col)
-    scored = (
-        pairs.join(
-            ev.select(
-                F.col(id_col).alias("a"),
-                F.col("_v").alias("_va"),
-                F.col("_n").alias("_na"),
-            ),
-            "a",
-        )
-        .join(
-            ev.select(
-                F.col(id_col).alias("b"),
-                F.col("_v").alias("_vb"),
-                F.col("_n").alias("_nb"),
-            ),
-            "b",
-        )
-        .select(
-            "a",
-            "b",
-            (dot(F.col("_va"), F.col("_vb")) / (F.col("_na") * F.col("_nb"))).alias(
-                "cos"
-            ),
-        )
-    )
-    return scored.where(F.col("cos") >= threshold)
-
-
-def quantize_int8(vec: Column) -> Column:
-    """Symmetric per-vector int8 quantization: ``q_i = round(127·v_i /
-    max|v|)`` (zero vectors quantize to zeros).
-
-    The standard memory lever for ANN at scale — a 64-dim float32
-    corpus drops 4× (256 B → 64 B per vector), which at 10¹⁰ vectors
-    is the difference between spilling and staying in executor memory.
-    Pure column algebra; round-half-away-from-zero on both engines, so
-    the DuckDB oracle mirrors it exactly.
-    """
-    scale = F.array_max(F.transform(vec, lambda v: F.abs(v)))
-    return F.transform(
-        vec,
-        lambda v: F.when(scale > 0, F.round(v * 127.0 / scale, 0))
-        .otherwise(F.lit(0.0))
-        .cast("int"),
-    )
-
-
-def quantized_cosine_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """:func:`cosine_topk` over int8-quantized vectors.
-
-    Dot products and squared norms are *integer* arithmetic
-    (|q_i| ≤ 127 → a 64-dim dot ≤ 2²⁰, exact in long), so scores are
-    bit-identical across engines and partition orders; only the final
-    ``÷ sqrt·sqrt`` is float. Returns (q_id, vec_id, qcos, rank) —
-    recall vs the float twin is gated in tests.
-    """
-    qe = embeddings.select(
-        F.col(id_col), quantize_int8(F.col(vec_col)).alias("_qv")
-    )
-    qq = queries.select(
-        F.col(q_id_col).alias("q_id"),
-        quantize_int8(F.col(q_vec_col)).alias("_qq"),
-    )
-
-    def idot(a: Column, b: Column) -> Column:
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
-    scored = qe.join(F.broadcast(qq)).select(
-        "q_id",
-        id_col,
-        (
-            idot(F.col("_qv"), F.col("_qq"))
-            / (
-                F.sqrt(idot(F.col("_qv"), F.col("_qv")))
-                * F.sqrt(idot(F.col("_qq"), F.col("_qq")))
-            )
-        ).alias("qcos"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("qcos"), F.asc(id_col))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def signed_random_projection(
-    embeddings: DataFrame,
-    out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "rp",
-    dim: int | None = None,
-) -> DataFrame:
-    """Johnson-Lindenstrauss-style dimensionality reduction with a
-    DETERMINISTIC ±1 projection matrix: component j of the output is
-    ``Σ_i v[i] · sign(md5(salt|i|j))`` — the matrix is a pure function
-    of (position, component, salt), so no matrix is stored or
-    broadcast, every executor derives the same signs, and reruns are
-    bit-stable (the precondition for using projected vectors as cache
-    / shard keys). The compress-before-ANN primitive: 64-d → 16-d
-    cuts candidate-scoring cost 4× while approximately preserving
-    cosine geometry (tested), and thresholding at 0 gives exactly the
-    hyperplane bits `lsh_cosine_topk` hashes with.
-
-    Plan: with ``dim`` given (the scale path), the sign matrix is
-    derived DRIVER-side with the same md5 formula and inlined as
-    out_dim literal arrays — each row emits its out_dim dots and one
-    posexplode to long form: zero joins, zero shuffles, zero
-    per-row-element hashing. Without ``dim`` (unknown vector length)
-    the explode × groupBy fallback computes the identical result at
-    N·dim·out_dim exploded rows + one exchange. Returns long form
-    ``(vec_id, j, proj)`` rounded to 6 — bit-identical either way.
-    """
-    if dim is not None:
-        import hashlib as _hl
-
-        def _sign(i: int, j: int) -> float:
-            h = _hl.md5(f"{salt}|{i}|{j}".encode()).hexdigest()
-            return 1.0 if int(h[0], 16) % 2 == 0 else -1.0
-
-        # ship the sign matrix as a BROADCAST out_dim-row frame and
-        # fan out 16× per row via the broadcast join — NOT as inlined
-        # literal arrays (dim×out_dim literal nodes made Catalyst
-        # analysis cost dominate at fixture scale: measured 2× slower
-        # than even the explode path) and NOT as an N×dim×out_dim
-        # explode+groupBy (a full shuffle of the expanded rows)
-        spark = embeddings.sparkSession
-        signs = F.broadcast(
-            spark.createDataFrame(
-                [
-                    (j, [_sign(i, j) for i in range(dim)])
-                    for j in range(out_dim)
-                ],
-                "j int, _signs array<double>",
-            )
-        )
-        return embeddings.crossJoin(signs).select(
-            F.col(id_col),
-            F.col("j"),
-            F.round(
-                dot(F.col(vec_col).cast("array<double>"), F.col("_signs")),
-                6,
-            ).alias("proj"),
-        )
-    ex = embeddings.select(
-        F.col(id_col),
-        F.posexplode(F.col(vec_col)).alias("_i", "_v"),
-    ).select(
-        id_col,
-        "_i",
-        F.col("_v").cast("double").alias("_v"),
-        F.explode(F.sequence(F.lit(0), F.lit(out_dim - 1))).alias("j"),
-    )
-    sign = F.when(
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.lit(salt),
-                        F.col("_i").cast("string"),
-                        F.col("j").cast("string"),
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 2
-        == 0,
-        F.lit(1.0),
-    ).otherwise(F.lit(-1.0))
-    return (
-        ex.withColumn("_s", sign)
-        .groupBy(id_col, "j")
-        .agg(F.round(F.sum(F.col("_v") * F.col("_s")), 6).alias("proj"))
-    )
-
-
-def squared_l2(a: Column, b: Column) -> Column:
-    """Elementwise (a−b)² folded in array order — deterministic
-    summation order, unlike a shuffled aggregate."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def kmeans_assign(
-    embeddings: DataFrame,
-    k: int = 4,
-    iterations: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd k-means over the embedding column — the SemDeDup-style
-    clustering step (cluster, then near-dedup within clusters) and the
-    IVF coarse quantizer trained in-engine rather than imported.
-
-    Deterministic by construction so an exact SQL oracle can replay
-    the trajectory: seeding = the k lowest-id vectors (TakeOrdered,
-    no RNG), every centroid coordinate and every distance rounds to 6
-    decimals per iteration (pins cross-engine float drift), argmin
-    tie-breaks on cluster id via one struct-min aggregate. One honest
-    caveat: the centroid mean itself is a shuffled double `avg`, so
-    its pre-round value is summation-order-dependent; round-to-6
-    absorbs that drift unless the true mean sits within ~1 ulp·n of a
-    5e-7 rounding boundary — possible in principle, never observed,
-    and shared by the DuckDB oracle's own avg. A fully order-free
-    update would sum fixed-point decimals at real cost; this operator
-    deliberately takes the cheap pin.
-
-    Scale shape per iteration: corpus ⋈ broadcast(centroids) → n×k
-    narrow rows → struct-min argmin (map-side combining, one exchange
-    on the id) → (cluster, dim)-keyed mean (posexplode, second
-    exchange) — the corpus itself never reshuffles, and centroid
-    frames are k rows with lineage cut each round so plan depth stays
-    constant across iterations.
-
-    Returns (id, cluster, dist) with dist = squared L2 to the final
-    assignment's centroid, rounded to 6.
-    """
-    emb = embeddings.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    w0 = Window.orderBy("_id")
-    cent = (
-        emb.orderBy("_id")
-        .limit(k)
-        .withColumn("cid", F.row_number().over(w0) - 1)
-        .select(
-            F.col("cid").cast("long").alias("cid"),
-            F.transform("_v", lambda x: F.round(x, 6)).alias("_c"),
-        )
-    )
-    if iterations < 1:
-        raise ValueError("kmeans_assign needs iterations >= 1")
-    assign = None
-    for it in range(iterations):
-        scored = emb.crossJoin(F.broadcast(cent)).select(
-            "_id",
-            "cid",
-            F.round(squared_l2(F.col("_v"), F.col("_c")), 6).alias("_d"),
-        )
-        assign = (
-            scored.groupBy("_id")
-            .agg(F.min(F.struct("_d", "cid")).alias("m"))
-            .select("_id", F.col("m.cid").alias("cid"), F.col("m._d").alias("_d"))
-        )
-        if it == iterations - 1:
-            break
-        members = emb.join(assign.select("_id", "cid"), "_id")
-        means = (
-            members.select("cid", F.posexplode("_v").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg("val"), 6).alias("mv"))
-        )
-        cent = (
-            means.groupBy("cid")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "mv"))),
-                    lambda s: s.mv,
-                ).alias("_c")
-            )
-            .localCheckpoint(eager=False)
-        )
-    return assign.select(
-        F.col("_id").alias(id_col),
-        F.col("cid").alias("cluster"),
-        F.col("_d").alias("dist"),
-    )
-
-
-def semantic_neardup(
-    embeddings: DataFrame,
-    k: int = 4,
-    iterations: int = 2,
-    threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_cluster_size: int | None = None,
-) -> DataFrame:
-    """SemDeDup (cluster-then-dedup): k-means the embeddings with
-    :func:`kmeans_assign`, then compute exact cosine near-dup pairs
-    *within* clusters only.
-
-    This is the scale answer to all-pairs embedding dedup: the
-    quadratic pair join is keyed on the cluster id, so the work is
-    Σ|cluster|² instead of n² — with k grown proportionally to the
-    corpus, cluster populations (and hence per-key fan-out) stay
-    bounded. Cross-cluster near-dups are sacrificed by design (the
-    SemDeDup trade); the exact twin `embedding_neardup` measures what
-    that costs on a given corpus.
-
-    ``max_cluster_size`` is the degenerate-cluster guard: k-means
-    cannot split a mass of near-identical embeddings (boilerplate-
-    heavy crawl data), so one giant cluster re-creates the n² bomb
-    inside this operator. When set, clusters larger than the cap are
-    deterministically sub-bucketed (xxhash64 of the id mod
-    ceil(size/cap)) and pairs are emitted within sub-buckets only —
-    output and compute bounded at ~cap·N while every member still
-    participates (nothing is dropped, unlike the LSH bucket cap).
-    Recall inside an oversized cluster falls to ~1/ceil(size/cap),
-    the explicit cost of surviving the degenerate case. Default None
-    keeps exact within-cluster semantics (the oracle-checked form).
-
-    Returns (cluster, a, b, cos) with a < b and cos ≥ ``threshold``,
-    cos rounded to 6 after the (unrounded) threshold gate — the same
-    gate-then-round the `embedding_neardup_pairs` call sites apply
-    (that operator returns raw cos and rounds at the query layer).
-    """
-    assign = kmeans_assign(embeddings, k, iterations, id_col, vec_col)
-    e = embeddings.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("_v")
-    ).join(assign.select(id_col, "cluster"), id_col)
-    join_keys = ["cluster"]
-    if max_cluster_size is not None:
-        w = Window.partitionBy("cluster")
-        e = e.withColumn(
-            "_sb",
-            F.pmod(
-                F.xxhash64(F.col(id_col)),
-                F.ceil(
-                    F.count("*").over(w) / F.lit(max_cluster_size)
-                ).cast("long"),
-            ),
-        )
-        join_keys = ["cluster", "_sb"]
-    a = e.select(
-        *join_keys, F.col(id_col).alias("a"), F.col("_v").alias("_va")
-    )
-    b = e.select(
-        *join_keys, F.col(id_col).alias("b"), F.col("_v").alias("_vb")
-    )
-    return (
-        a.join(b, join_keys)
-        .where(F.col("a") < F.col("b"))
-        .withColumn("cos", cosine(F.col("_va"), F.col("_vb")))
-        .where(F.col("cos") >= threshold)
-        .select("cluster", "a", "b", F.round("cos", 6).alias("cos"))
     )

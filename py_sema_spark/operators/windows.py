@@ -17,6 +17,7 @@ exchange on that key.
 
 from __future__ import annotations
 
+import re as _re
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -62,8 +63,8 @@ def first_per_key(
     """F1 — keep the first record per key under an explicit order
     (the FilteringSource ``seen``-set with order pinned)."""
     if "_rn" in df.columns:
-        # same contract as asof_join: never silently overwrite-and-
-        # drop a user column that collides with an internal name
+        # never silently overwrite-and-drop a user column that
+        # collides with an internal name
         raise ValueError("first_per_key: input column _rn collides "
                          "with an internal name")
     w = Window.partitionBy(*key_cols).orderBy(*order_by)
@@ -73,8 +74,6 @@ def first_per_key(
         .drop("_rn")
     )
 
-
-import re as _re  # noqa: E402
 
 _UPAT_RE = _re.compile(r"\{([^{}]+)\}")
 
@@ -134,265 +133,3 @@ def unique_by_pattern(
         ["_ukey"],
         [order_col],
     ).drop("_ukey")
-
-
-def sessionize(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Gap-based sessionization: a new session starts at a user's
-    first event and whenever the gap since their previous event
-    exceeds ``gap_minutes`` — the standard clickstream construct (and
-    the batch twin of Structured Streaming's session windows).
-
-    Returns the input plus ``is_session_start`` and a deterministic
-    ``session_id`` = ``<user>#<1-based session number>`` — stable
-    across runs and partition layouts because the order key is the
-    total (ts, event_id).
-
-    Scale shape: ONE hash exchange on the user key; the lag and the
-    running session counter are two Window nodes (their frames
-    differ) over that same partitioning+ordering, so the plan carries
-    exactly one Exchange and one Sort — audited via
-    ``explain("formatted")``. Gap math is integer microseconds
-    (``timestamp_diff`` — NTZ-safe) — engine-portable, no float
-    drift. Skewed users
-    (bots with 10^8 events) bound the window partition; cap upstream
-    with ``domain_cap``-style per-key truncation if a single key
-    exceeds executor memory.
-    """
-    w = Window.partitionBy(user_col).orderBy(*order_cols)
-    # timestamp_diff works on TIMESTAMP_NTZ (unix_micros does not) and
-    # yields exact integer microseconds — no tz shift, no float drift
-    gap_us = F.timestamp_diff(
-        "MICROSECOND", F.lag(F.col(ts_col)).over(w), F.col(ts_col)
-    )
-    start = F.when(
-        gap_us.isNull() | (gap_us > gap_minutes * 60_000_000), True
-    ).otherwise(False)
-    run = Window.partitionBy(user_col).orderBy(*order_cols).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    out = events.withColumn("is_session_start", start)
-    return out.withColumn(
-        "session_id",
-        F.concat_ws(
-            "#",
-            F.col(user_col).cast("string"),
-            F.sum(F.col("is_session_start").cast("int"))
-            .over(run)
-            .cast("string"),
-        ),
-    )
-
-
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    ts_col: str = "ts",
-    value_cols: Sequence[str] = ("value",),
-    tiebreak_col: str | None = None,
-    suffix: str = "_asof",
-) -> DataFrame:
-    """As-of join (kdb ``aj`` / pandas ``merge_asof``): for every left
-    row, attach the most recent right row with ``right.ts <= left.ts``
-    for the same key — the temporal lookup Spark has no built-in for.
-
-    Expressed as **union + ordered carry-forward**, not a range join:
-    tag both sides, sort each key's rows by ``(ts, side, tiebreak)``
-    with right rows first at equal timestamps, and carry the last
-    non-null right value forward (``last(..., ignorenulls=True)`` over
-    an unbounded-preceding frame). Left rows then hold exactly the
-    at-or-before match.
-
-    Scale shape: ONE hash exchange on the key + one sort — the same
-    cost as any windowed op — versus the range join's per-key
-    quadratic blowup (every left row × every earlier right row as an
-    intermediate). Ties at identical timestamps resolve
-    deterministically via ``tiebreak_col`` (must exist on both sides;
-    the larger value wins among equal-ts right rows).
-
-    Returns all left columns plus ``<value><suffix>`` for each
-    requested right value column.
-    """
-    from pyspark.sql import types as T
-
-    lcols = left.columns
-    reserved = {"_ts", "_src", "_tb", "_rrow", "_last_r"}
-    clash = reserved & set(lcols)
-    if clash:
-        raise ValueError(
-            f"asof_join: left columns collide with internals: {sorted(clash)}"
-        )
-    tb = (
-        [F.col(tiebreak_col).alias("_tb")]
-        if tiebreak_col
-        else [F.lit(0).alias("_tb")]
-    )
-    rschema = dict(zip(right.schema.names, right.schema.fields))
-    # the matched right ROW rides as one struct (non-null for every
-    # right row, even when its value columns are NULL) so the
-    # carry-forward below honors a matched row's NULL value — carrying
-    # raw values with ignorenulls would skip past it to a stale older
-    # value, which is not merge_asof semantics
-    rstruct = T.StructType(
-        [T.StructField(v, rschema[v].dataType) for v in value_cols]
-    )
-    u_l = left.select(
-        *lcols,
-        F.col(ts_col).alias("_ts"),
-        F.lit(1).alias("_src"),
-        *tb,
-        F.lit(None).cast(rstruct).alias("_rrow"),
-    )
-    # a right row with no timestamp can never be "the most recent at
-    # or before" anything — NULLs sort first ascending and would
-    # otherwise carry forward into every left row (merge_asof rejects
-    # null keys outright)
-    right = right.where(F.col(ts_col).isNotNull())
-    u_r = right.select(
-        *[
-            F.col(c) if c in right.columns else F.lit(None).alias(c)
-            for c in [on]
-        ],
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in lcols
-            if c != on
-        ],
-        F.col(ts_col).alias("_ts"),
-        F.lit(0).alias("_src"),
-        *tb,
-        F.struct(*[F.col(v).alias(v) for v in value_cols]).alias("_rrow"),
-    )
-    w = (
-        Window.partitionBy(on)
-        .orderBy("_ts", "_src", "_tb")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    filled = u_l.unionByName(u_r, allowMissingColumns=False).withColumn(
-        "_last_r", F.last(F.col("_rrow"), ignorenulls=True).over(w)
-    )
-    return filled.where(F.col("_src") == 1).select(
-        *lcols,
-        *[
-            F.col("_last_r").getField(v).alias(f"{v}{suffix}")
-            for v in value_cols
-        ],
-    )
-
-
-def session_stats(
-    events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    gap_minutes: int = 30,
-) -> DataFrame:
-    """Per-session rollup over :func:`sessionize`: event count and
-    exact integer-µs duration per ``(session_id, user)``.
-
-    Scale shape: the sessionize window exchange keys on the user; the
-    rollup groups on ``(session_id, user)`` — a strict refinement of
-    the same key, so AQE/Catalyst reuses the existing partitioning
-    where possible and the aggregate combines map-side regardless.
-    """
-    s = sessionize(events, user_col, ts_col, order_cols, gap_minutes)
-    return s.groupBy("session_id", user_col).agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.timestamp_diff(
-            "MICROSECOND", F.min(ts_col), F.max(ts_col)
-        ).alias("duration_us"),
-    )
-
-
-def rolling_zscore(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts",
-    value_col: str = "value",
-    order_cols: Sequence[str] = ("ts", "event_id"),
-    lookback: int = 20,
-    z_threshold: float = 3.0,
-) -> DataFrame:
-    """Per-key rolling anomaly score: each event's value is z-scored
-    against the mean/stddev of the PRECEDING ``lookback`` events of
-    the same key (frame excludes the current row — no self-
-    contamination), and flagged when |z| > threshold. The standard
-    streaming-metrics outlier gate, expressed as one window.
-
-    Scale shape: ONE hash exchange on the key + one sort; both the
-    avg and the sample stddev ride the same window frame, so the
-    plan carries a single Window node. Population of the frame is
-    row-bounded (not time-bounded), so hot keys cost O(lookback) per
-    row, never O(history). Rows with fewer than 2 preceding events
-    get z = NULL / anomaly = false (stddev undefined), matching the
-    SQL twin.
-
-    Returns the input plus ``z`` (rounded to 6) and ``is_anomaly``.
-    """
-    w = (
-        Window.partitionBy(key_col)
-        .orderBy(*order_cols)
-        .rowsBetween(-lookback, -1)
-    )
-    mu = F.avg(value_col).over(w)
-    sd = F.stddev_samp(value_col).over(w)
-    z = F.when(
-        sd.isNotNull() & (sd != 0.0),
-        F.round((F.col(value_col) - mu) / sd, 6),
-    )
-    return events.withColumn("z", z).withColumn(
-        "is_anomaly", F.coalesce(F.abs(F.col("z")) > z_threshold, F.lit(False))
-    )
-
-
-def funnel_counts(
-    events: DataFrame,
-    steps: Sequence[str] = ("signup", "click", "purchase"),
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-) -> DataFrame:
-    """Ordered-funnel analysis: how many users performed step 1, then
-    step 2 strictly after their first step 1, then step 3 strictly
-    after that first qualifying step 2 — the classic conversion
-    funnel, each stage anchored at the user's EARLIEST qualifying
-    event (first-touch attribution).
-
-    Per stage: one filtered aggregate (min ts per user among events of
-    that type after the previous anchor) + one key-hash join against
-    the previous anchor frame — the event table is scanned once per
-    stage with the type filter pushed to the scan; no windows over
-    full per-user histories, so bot users with 10^8 events cost their
-    event count, never a sort. Returns (step_index, step, users) with
-    users monotonically non-increasing.
-    """
-    anchors = None
-    out = []
-    for i, step in enumerate(steps):
-        stage_events = events.where(F.col(type_col) == step).select(
-            F.col(user_col).alias("_u"), F.col(ts_col).alias("_t")
-        )
-        if anchors is not None:
-            stage_events = stage_events.join(anchors, "_u").where(
-                F.col("_t") > F.col("_anchor")
-            )
-        anchors = stage_events.groupBy("_u").agg(
-            F.min("_t").alias("_anchor")
-        )
-        out.append(
-            anchors.agg(
-                F.lit(i + 1).alias("step_index"),
-                F.lit(step).alias("step"),
-                F.count(F.lit(1)).alias("users"),
-            )
-        )
-    res = out[0]
-    for df in out[1:]:
-        res = res.unionByName(df)
-    return res

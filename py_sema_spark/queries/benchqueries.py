@@ -1,5 +1,7 @@
-"""Driver-contract query suite: each operator from SURVEY.md §2 as a
-``(spark, sf_dir) -> DataFrame`` builder **plus** a semantically
+"""Driver-contract query suite: the py-sema surfaces (sparqlets,
+SPARQL, SHACL, subyt, harvest, serializers, closure/linkage,
+inference, column builders) as ``(spark, sf_dir) -> DataFrame``
+builders **plus** a semantically
 identical ANSI-SQL string for the DuckDB oracle (tables ``region
 nation customer supplier part orders lineitem events documents
 embeddings`` are pre-registered views over the same parquet).
@@ -38,37 +40,10 @@ from ..functions.xsd import (
     xsd_string_col,
 )
 from ..operators.closure import connected_components, transitive_closure
-from ..operators.dedup import (
-    exact_dedup,
-    minhash_dedup,
-    neardup_clusters,
-    ngram_jaccard_pairs,
-    remove_duplicate_spans,
-    simhash,
-)
 from ..operators.linkage import detect_mentions
-from ..operators.similarity import (
-    cosine,
-    cosine_topk,
-    embedding_neardup_pairs,
-    ivf_cosine_topk,
-    lsh_cosine_topk,
-)
-from ..operators.windows import (
-    first_per_key,
-    session_stats,
-    sessionize,
-    with_ctrl,
-)
+from ..operators.windows import first_per_key, with_ctrl
 from ..serialize import jsonld_nodes, ntriples_lines, turtle_blocks
 from .bgp import bgp_ask, bgp_construct, bgp_describe, bgp_select
-from ..functions.text import (
-    doc_fingerprint,
-    lang_id,
-    quality_score,
-    token_count_bpe_ish,
-    token_count_ws,
-)
 from . import sparqlets
 
 SKOS = "http://www.w3.org/2004/02/skos/core#"
@@ -89,8 +64,7 @@ def _tp(
 
     The local fixtures are single-file / single-row-group parquet, so
     a scan yields ONE usable split and every narrow map stage downstream
-    (shingle explode, LSH probe fan-out, n-gram explode) runs as one
-    task regardless of cores — serial wall-clock and maximal straggler
+    (the mention n-gram explode) runs as one task regardless of cores — serial wall-clock and maximal straggler
     exposure. One bounded shuffle (≤ fixture size) buys full map
     parallelism. Production inputs arrive multi-partition from the
     scan (maxPartitionBytes × many files), where this becomes a
@@ -261,7 +235,7 @@ closure AS (
 )
 
 
-# ---- shared SQL fragments for the text/dedup family ----
+# ---- normalized-token SQL (mirror of dedup.normalized_tokens) ----
 
 
 def _toks_sql(col: str) -> str:
@@ -274,33 +248,6 @@ def _toks_sql(col: str) -> str:
 
 
 TOKS = _toks_sql("text")
-
-
-def _minhash_sql(
-    src: str,
-    sig: str = "sigs",
-    bucket: str = "buckets",
-    num_perm: int = 16,
-    bands: int = 4,
-) -> str:
-    """The shared MinHash signature + banded-bucket CTE pair over a
-    ``(doc_id, token)`` relation named ``src`` — mirror of
-    operators.dedup minhash_signatures/banding. Factored so the
-    banding format (the ``perm:sig`` join, ``,`` separator, ``band|``
-    prefix) lives in ONE place for all five oracle uses; a format
-    change edited here cannot silently miss one copy."""
-    return f"""
-{sig} AS (
-  SELECT doc_id, perm, min(md5(concat(CAST(perm AS VARCHAR), '|', token))) AS sig
-  FROM {src}, (SELECT unnest(range({num_perm})) AS perm)
-  GROUP BY doc_id, perm
-),
-{bucket} AS (
-  SELECT doc_id,
-         md5(concat(CAST(perm % {bands} AS VARCHAR), '|',
-             array_to_string(list_sort(list(concat(CAST(perm AS VARCHAR), ':', sig))), ','))) AS bucket
-  FROM {sig} GROUP BY doc_id, perm % {bands}
-)"""
 
 
 # =====================================================================
@@ -479,184 +426,6 @@ WINDOW w AS (PARTITION BY user_id
 )
 
 _register(
-    "windowed_counts",
-    # tumbling 1-hour event-time windows (batch twin of the streaming
-    # watermarked rollup in streaming.py): F.window aligns buckets to
-    # the epoch hour exactly like DuckDB's time_bucket
-    lambda spark, sf: _t(spark, sf, "events")
-    .groupBy(
-        F.window("ts", "1 hour").alias("w"), F.col("event_type")
-    )
-    .agg(
-        F.count(F.lit(1)).alias("n"),
-        F.round(F.sum("value"), 4).alias("sum_value"),
-    )
-    .select(
-        F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("wstart"),
-        "event_type",
-        "n",
-        "sum_value",
-    ),
-    """
-SELECT strftime(time_bucket(INTERVAL '1 hour', ts), '%Y-%m-%d %H:%M:%S') AS wstart,
-       event_type, count(*) AS n, round(sum(value), 4) AS sum_value
-FROM events GROUP BY 1, 2
-""",
-)
-
-_register(
-    "event_type_pivot",
-    # per-user event-type pivot with an explicit value list (explicit
-    # so the output schema is static — a pivot without one scans the
-    # data twice to discover columns and breaks schema stability)
-    lambda spark, sf: _t(spark, sf, "events")
-    .groupBy("user_id")
-    .pivot("event_type", ["click", "view", "purchase", "signup", "error"])
-    .count()
-    .select(
-        "user_id",
-        *[
-            F.coalesce(F.col(c), F.lit(0)).alias(c)
-            for c in ("click", "view", "purchase", "signup", "error")
-        ],
-    ),
-    """
-SELECT user_id,
-       count(*) FILTER (WHERE event_type = 'click') AS click,
-       count(*) FILTER (WHERE event_type = 'view') AS view,
-       count(*) FILTER (WHERE event_type = 'purchase') AS purchase,
-       count(*) FILTER (WHERE event_type = 'signup') AS signup,
-       count(*) FILTER (WHERE event_type = 'error') AS error
-FROM events GROUP BY user_id
-""",
-)
-
-_register(
-    "rollup_counts",
-    # multi-level aggregation: per (type, user), per-type subtotal,
-    # grand total in ONE pass (grouping sets expand map-side; no
-    # re-scan per level)
-    lambda spark, sf: _t(spark, sf, "events")
-    .rollup("event_type", "user_id")
-    .agg(F.count(F.lit(1)).alias("n"))
-    .select("event_type", "user_id", "n"),
-    """
-SELECT event_type, user_id, count(*) AS n
-FROM events GROUP BY ROLLUP (event_type, user_id)
-""",
-)
-
-_register(
-    "cube_counts",
-    # full CUBE over (event_type, lang-of-user bucket): all four
-    # grouping sets in one pass — the ROLLUP companion
-    lambda spark, sf: _t(spark, sf, "events")
-    .withColumn("user_bucket", (F.col("user_id") % 4).cast("bigint"))
-    .cube("event_type", "user_bucket")
-    .agg(F.count(F.lit(1)).alias("n"))
-    .select("event_type", "user_bucket", "n"),
-    """
-SELECT event_type, user_id % 4 AS user_bucket, count(*) AS n
-FROM events GROUP BY CUBE (event_type, user_id % 4)
-""",
-)
-
-_register(
-    "sessionize",
-    lambda spark, sf: sessionize(
-        _t(spark, sf, "events"), gap_minutes=30
-    ).select("event_id", "user_id", "is_session_start", "session_id"),
-    """
-WITH e AS (
-  SELECT event_id, user_id, ts,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-),
-s AS (
-  SELECT event_id, user_id, ts,
-         (gap_us IS NULL OR gap_us > 1800000000) AS is_session_start
-  FROM e
-)
-SELECT event_id, user_id, is_session_start,
-       concat(CAST(user_id AS VARCHAR), '#',
-              CAST(sum(CASE WHEN is_session_start THEN 1 ELSE 0 END)
-                   OVER (PARTITION BY user_id
-                         ORDER BY ts NULLS FIRST, event_id NULLS FIRST
-                         ROWS UNBOUNDED PRECEDING) AS VARCHAR)) AS session_id
-FROM s
-""",
-)
-
-_register(
-    "session_stats",
-    lambda spark, sf: session_stats(_t(spark, sf, "events"), gap_minutes=30),
-    """
-WITH e AS (
-  SELECT event_id, user_id, ts,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST)
-),
-s AS (
-  SELECT event_id, user_id, ts,
-         concat(CAST(user_id AS VARCHAR), '#',
-                CAST(sum(CASE WHEN gap_us IS NULL OR gap_us > 1800000000
-                              THEN 1 ELSE 0 END)
-                     OVER (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST
-                           ROWS UNBOUNDED PRECEDING) AS VARCHAR)) AS session_id
-  FROM e
-)
-SELECT session_id, user_id, count(*) AS n_events,
-       epoch_us(max(ts)) - epoch_us(min(ts)) AS duration_us
-FROM s GROUP BY session_id, user_id
-""",
-)
-
-
-def _asof(spark, sf):
-    from ..operators.windows import asof_join
-
-    ev = _t(spark, sf, "events")
-    clicks = ev.where(F.col("event_type") == "click").select(
-        "event_id", "user_id", "ts"
-    )
-    views = ev.where(F.col("event_type") == "view").select(
-        "user_id", "ts", "event_id", "value"
-    )
-    return asof_join(
-        clicks, views, on="user_id", ts_col="ts",
-        value_cols=["value"], tiebreak_col="event_id",
-    ).select("event_id", "user_id", "value_asof")
-
-
-_register(
-    "asof_join",
-    _asof,
-    """
-WITH u AS (
-  SELECT event_id, user_id, ts, 1 AS src, event_id AS tb,
-         CAST(NULL AS STRUCT(v DOUBLE)) AS r
-  FROM events WHERE event_type = 'click'
-  UNION ALL
-  -- right rows with NULL ts can never match (mirrors the operator's
-  -- filter); the matched ROW rides as a struct so its NULL value is
-  -- honored instead of IGNORE NULLS skipping to a stale older value
-  SELECT NULL, user_id, ts, 0, event_id, struct_pack(v := value)
-  FROM events WHERE event_type = 'view' AND ts IS NOT NULL
-),
-c AS (
-  SELECT event_id, user_id, src,
-         (last_value(r IGNORE NULLS) OVER (
-           PARTITION BY user_id ORDER BY ts NULLS FIRST, src, tb
-           ROWS UNBOUNDED PRECEDING)).v AS value_asof
-  FROM u
-)
-SELECT event_id, user_id, value_asof FROM c WHERE src = 1
-""",
-)
-
-_register(
     "unique_filter",
     lambda spark, sf: first_per_key(
         _t(spark, sf, "events"), ["user_id", "event_type"], ["ts", "event_id"]
@@ -668,516 +437,6 @@ SELECT event_id, user_id, event_type FROM (
                             ORDER BY ts NULLS FIRST, event_id NULLS FIRST) AS rn
   FROM events
 ) WHERE rn = 1
-""",
-)
-
-# ---- dedup suite (training-data ops) ----
-
-_register(
-    "exact_dedup",
-    lambda spark, sf: exact_dedup(_t(spark, sf, "documents")),
-    """
-SELECT doc_id, md5(text) AS content_hash,
-       min(doc_id) OVER (PARTITION BY md5(text)) AS canonical_id,
-       (doc_id = min(doc_id) OVER (PARTITION BY md5(text))) AS is_canonical
-FROM documents
-""",
-)
-
-_register(
-    "minhash_neardup",
-    lambda spark, sf: minhash_dedup(
-        _tp(spark, sf, "documents"), threshold=0.7, num_perm=16, bands=4
-    ),
-    f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id, unnest({TOKS}) AS token FROM documents
-),{_minhash_sql("toks")},
-pairs AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM buckets x JOIN buckets y ON x.bucket = y.bucket AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-inter AS (
-  SELECT p.a, p.b, count(*) AS i
-  FROM pairs p
-  JOIN toks ta ON ta.doc_id = p.a
-  JOIN toks tb ON tb.doc_id = p.b AND tb.token = ta.token
-  GROUP BY p.a, p.b
-)
-SELECT i.a, i.b, i.i / (sa.sz + sb.sz - i.i) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.a
-JOIN sizes sb ON sb.doc_id = i.b
-WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.7
-""",
-)
-
-_register(
-    "minhash_neardup_shingle",
-    lambda spark, sf: minhash_dedup(
-        _tp(spark, sf, "documents"), threshold=0.7, num_perm=16, bands=4,
-        tokenizer="shingle", shingle_n=8,
-    ).select("a", "b", F.round(F.col("jaccard"), 6).alias("jaccard")),
-    f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id, substr(text, CAST(i AS INT), 8) AS token
-  FROM documents, unnest(range(1, greatest(length(text) - 7, 1) + 1)) t(i)
-),{_minhash_sql("toks")},
-pairs AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM buckets x JOIN buckets y ON x.bucket = y.bucket AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-inter AS (
-  SELECT p.a, p.b, count(*) AS i
-  FROM pairs p
-  JOIN toks ta ON ta.doc_id = p.a
-  JOIN toks tb ON tb.doc_id = p.b AND tb.token = ta.token
-  GROUP BY p.a, p.b
-)
-SELECT i.a, i.b, round(i.i / (sa.sz + sb.sz - i.i), 6) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.a
-JOIN sizes sb ON sb.doc_id = i.b
-WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.7
-""",
-)
-
-_register(
-    "ngram_jaccard",
-    # join_on_prefix=2 is the explicit high-recall CAP (mirrored by
-    # the oracle's rn <= 2): at t=0.05 the exact PPJoin prefix is
-    # nearly the whole gram set, so the capped block is the scale
-    # config; the exact default is covered by unit tests
-    lambda spark, sf: ngram_jaccard_pairs(
-        _tp(spark, sf, "documents"), n=3, threshold=0.05, join_on_prefix=2
-    ),
-    f"""
-WITH toklists AS (SELECT doc_id, {TOKS} AS toks FROM documents),
-grams AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(toks[i + 1 : i + 3], ' ') AS gram
-  FROM toklists, (SELECT unnest(range(0, len(toks) - 3 + 1)) AS i)
-  WHERE len(toks) >= 3
-    AND len(array_to_string(toks[i + 1 : i + 3], ' ')) > 0
-),
-idx AS (
-  SELECT doc_id, gram FROM (
-    SELECT doc_id, gram, row_number() OVER (PARTITION BY doc_id ORDER BY gram) AS rn
-    FROM grams
-  ) WHERE rn <= 2
-),
-pairs AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM idx x JOIN idx y ON x.gram = y.gram AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM grams GROUP BY doc_id),
-inter AS (
-  SELECT p.a, p.b, count(*) AS i
-  FROM pairs p
-  JOIN grams ga ON ga.doc_id = p.a
-  JOIN grams gb ON gb.doc_id = p.b AND gb.gram = ga.gram
-  GROUP BY p.a, p.b
-)
-SELECT i.a, i.b, i.i / (sa.sz + sb.sz - i.i) AS jaccard
-FROM inter i
-JOIN sizes sa ON sa.doc_id = i.a
-JOIN sizes sb ON sb.doc_id = i.b
-WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.05
-""",
-)
-
-_register(
-    "simhash",
-    lambda spark, sf: simhash(_tp(spark, sf, "documents"), bits=32),
-    f"""
-WITH toks AS (
-  SELECT DISTINCT doc_id, unnest({TOKS}) AS token FROM documents
-),
-th AS (
-  SELECT doc_id,
-         CAST(CAST(concat('0x', substr(md5(token), 1, 8)) AS UBIGINT) AS BIGINT) AS th
-  FROM toks
-),
-bits AS (
-  SELECT doc_id, bit,
-         CASE WHEN CAST(floor(th / power(2.0, bit)) AS BIGINT) % 2 = 1 THEN 1 ELSE -1 END AS v
-  FROM th, (SELECT unnest(range(32)) AS bit)
-),
-scores AS (SELECT doc_id, bit, sum(v) AS score FROM bits GROUP BY doc_id, bit)
-SELECT doc_id,
-       CAST(sum(CASE WHEN score > 0 THEN 1 ELSE 0 END
-                * CAST(power(2.0, bit) AS BIGINT)) AS BIGINT) AS simhash
-FROM scores GROUP BY doc_id
-""",
-)
-
-# ---- text analysis ----
-
-_register(
-    "lang_id",
-    lambda spark, sf: _t(spark, sf, "documents").select(
-        "doc_id", "lang", lang_id(F.col("text")).alias("lang_pred")
-    ),
-    f"""
-WITH scored AS (
-  SELECT doc_id, lang,
-    len(list_filter(toks, x -> x IN ('the','and','of','to','in','is','that','with'))) / greatest(len(toks), 1) AS s_en,
-    len(list_filter(toks, x -> x IN ('de','het','een','en','van','ik','dat','niet'))) / greatest(len(toks), 1) AS s_nl,
-    len(list_filter(toks, x -> x IN ('le','la','les','et','des','une','est','dans'))) / greatest(len(toks), 1) AS s_fr,
-    len(list_filter(toks, x -> x IN ('der','die','das','und','ist','nicht','mit','ein'))) / greatest(len(toks), 1) AS s_de
-  FROM (SELECT doc_id, lang, {TOKS} AS toks FROM documents)
-)
-SELECT doc_id, lang,
-  CASE WHEN greatest(s_en, s_nl, s_fr, s_de) <= 0 THEN 'und'
-       WHEN s_nl >= s_en AND s_nl >= s_fr AND s_nl >= s_de THEN 'nl'
-       WHEN s_fr >= s_en AND s_fr >= s_de THEN 'fr'
-       WHEN s_en >= s_de THEN 'en'
-       ELSE 'de' END AS lang_pred
-FROM scored
-""",
-)
-
-_register(
-    "token_counts",
-    lambda spark, sf: _t(spark, sf, "documents").select(
-        "doc_id",
-        token_count_ws(F.col("text")).alias("n_ws"),
-        token_count_bpe_ish(F.col("text")).alias("n_bpe"),
-    ),
-    r"""
-SELECT doc_id,
-  CAST(len(list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '')) AS INT) AS n_ws,
-  CAST(len(regexp_extract_all(text, '[\p{L}]+|[\p{N}]+|[^\s\p{L}\p{N}]+')) AS INT) AS n_bpe
-FROM documents
-""",
-)
-
-_register(
-    "quality_score",
-    lambda spark, sf: _t(spark, sf, "documents").select(
-        "doc_id", F.round(quality_score(F.col("text")), 6).alias("quality")
-    ),
-    f"""
-WITH q AS (
-  SELECT doc_id,
-    greatest(length(text), 1) AS n_chars,
-    length(regexp_replace(text, '[^\\p{{L}}]', '', 'g')) AS alpha,
-    length(regexp_replace(text, '[^.,;:!?"''()\\[\\]{{}}]', '', 'g')) AS punct,
-    {TOKS} AS toks
-  FROM documents
-),
-m AS (
-  SELECT doc_id, n_chars, alpha, punct,
-    greatest(len(toks), 1) AS n_toks,
-    len(list_filter(toks, x -> x IN ('the','and','of','to','in','is','that','with'))) AS stop_hits
-  FROM q
-)
-SELECT doc_id,
-  round((least(n_toks / 20.0, 1.0) + alpha / n_chars
-         + greatest(0.0, 1.0 - (punct / n_chars) * 5) + least(stop_hits / 2.0, 1.0)) / 4.0, 6) AS quality
-FROM m
-""",
-)
-
-_register(
-    "doc_fingerprint",
-    lambda spark, sf: _t(spark, sf, "documents").select(
-        "doc_id", doc_fingerprint(F.col("text")).alias("fingerprint")
-    ),
-    f"SELECT doc_id, md5(array_to_string({TOKS}, ' ')) AS fingerprint FROM documents",
-)
-
-def _gopher_quality(spark, sf):
-    """Gopher-rules quality signals + keep/drop gate per document —
-    one scan, pure column algebra (functions/text.py:gopher_metrics).
-    Ratios are single divisions of integer counts so the float
-    arithmetic is bit-identical to the DuckDB mirror."""
-    from ..functions.text import gopher_metrics, gopher_pass
-
-    m = gopher_metrics(F.col("text"))
-    return _t(spark, sf, "documents").select(
-        "doc_id",
-        m["n_words"],
-        F.round(m["mean_word_len"], 6).alias("mean_word_len"),
-        F.round(m["frac_alpha_words"], 6).alias("frac_alpha_words"),
-        F.round(m["dup_line_frac"], 6).alias("dup_line_frac"),
-        F.round(m["symbol_word_ratio"], 6).alias("symbol_word_ratio"),
-        m["stop_hits"],
-        gopher_pass(F.col("text")),
-    )
-
-
-_register(
-    "gopher_quality",
-    _gopher_quality,
-    r"""
-WITH w AS (
-  SELECT doc_id, text,
-    list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS words,
-    list_filter(list_transform(string_split(text, chr(10)), x -> trim(x)),
-                x -> x <> '') AS lines,
-    """
-    + TOKS
-    + r""" AS toks
-  FROM documents
-),
-m AS (
-  SELECT doc_id,
-    len(words) AS n_words,
-    length(array_to_string(words, '')) / greatest(len(words), 1) AS mean_word_len,
-    len(list_filter(words, x -> regexp_matches(x, '\p{L}')))
-      / greatest(len(words), 1) AS frac_alpha_words,
-    CASE WHEN len(lines) > 0
-         THEN 1.0 - len(list_distinct(lines)) / len(lines)
-         ELSE 0.0 END AS dup_line_frac,
-    len(regexp_extract_all(text, '#|\.\.\.')) / greatest(len(words), 1)
-      AS symbol_word_ratio,
-    len(list_filter(toks, x -> x IN ('the','and','of','to','in','is','that','with')))
-      AS stop_hits
-  FROM w
-)
-SELECT doc_id, CAST(n_words AS INT) AS n_words,
-  round(mean_word_len, 6) AS mean_word_len,
-  round(frac_alpha_words, 6) AS frac_alpha_words,
-  round(dup_line_frac, 6) AS dup_line_frac,
-  round(symbol_word_ratio, 6) AS symbol_word_ratio,
-  CAST(stop_hits AS INT) AS stop_hits,
-  (n_words >= 8 AND n_words <= 100000
-   AND mean_word_len >= 2.0 AND mean_word_len <= 12.0
-   AND frac_alpha_words >= 0.7 AND dup_line_frac <= 0.5
-   AND symbol_word_ratio <= 0.1 AND stop_hits >= 1) AS gopher_pass
-FROM m
-""",
-)
-
-
-def _pii_scrub(spark, sf):
-    """PII scrub pass: deterministic e-mail/IP/phone injections per
-    doc (so the fixture genuinely contains PII), then the shared
-    regexp chain redacts and counts — md5 of the redacted text pins
-    byte-level agreement with the oracle."""
-    from ..functions.text import pii_counts, pii_redact
-
-    injected = F.concat(
-        F.col("text"),
-        F.lit(" contact user"),
-        F.col("doc_id").cast("string"),
-        F.lit("@example.com from 10."),
-        (F.col("doc_id") % 256).cast("string"),
-        F.lit(".0.1 call +1-202-555-"),
-        F.lpad((F.col("doc_id") % 10000).cast("string"), 4, "0"),
-    )
-    c = pii_counts(injected)
-    return _t(spark, sf, "documents").select(
-        "doc_id",
-        c["email"],
-        c["ip"],
-        c["phone"],
-        F.md5(pii_redact(injected)).alias("redacted_md5"),
-    )
-
-
-def _pii_sql() -> str:
-    from ..functions.text import PII_PATTERNS
-
-    # counts mirror pii_counts: pattern k is counted on the text
-    # already redacted by patterns < k, so counts match what the
-    # redaction chain actually replaces
-    counts, red = {}, "t"
-    for k, p, r in PII_PATTERNS:
-        counts[k] = f"CAST(len(regexp_extract_all({red}, '{p}')) AS INT)"
-        red = f"regexp_replace({red}, '{p}', '{r}', 'g')"
-    return f"""
-WITH inj AS (
-  SELECT doc_id,
-    text || ' contact user' || doc_id || '@example.com from 10.'
-         || (doc_id % 256) || '.0.1 call +1-202-555-'
-         || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0') AS t
-  FROM documents
-)
-SELECT doc_id,
-  {counts["email"]} AS n_email,
-  {counts["ip"]} AS n_ip,
-  {counts["phone"]} AS n_phone,
-  md5({red}) AS redacted_md5
-FROM inj
-"""
-
-
-_register("pii_scrub", _pii_scrub, _pii_sql())
-
-
-# ---- curation suite (decontamination / sampling / shard packing) ----
-
-
-def _decontaminate(spark, sf):
-    from ..operators.curation import decontaminate
-
-    docs = _tp(spark, sf, "documents")
-    bench = docs.where(F.col("doc_id") % 97 == 0)
-    return decontaminate(docs, bench, n=5)
-
-
-_register(
-    "decontaminate",
-    _decontaminate,
-    f"""
-WITH toklists AS (SELECT doc_id, {TOKS} AS toks FROM documents),
-grams AS (
-  SELECT DISTINCT doc_id,
-         array_to_string(toks[i + 1 : i + 5], ' ') AS gram
-  FROM toklists, (SELECT unnest(range(0, greatest(len(toks) - 5 + 1, 0))) AS i)
-  WHERE len(array_to_string(toks[i + 1 : i + 5], ' ')) > 0
-),
-bench AS (SELECT DISTINCT gram FROM grams WHERE doc_id % 97 = 0),
-hits AS (
-  SELECT g.doc_id, count(*) AS n_hits
-  FROM grams g JOIN bench b ON g.gram = b.gram
-  GROUP BY g.doc_id
-)
-SELECT d.doc_id,
-       CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-       coalesce(h.n_hits, 0) > 0 AS contaminated
-FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
-""",
-)
-
-
-def _stratified_sample(spark, sf):
-    from ..operators.curation import stratified_sample
-
-    return stratified_sample(
-        _t(spark, sf, "documents"),
-        {"en": 8, "de": 4},
-        default_sixteenths=2,
-        salt="s0",
-    ).select("doc_id", "lang")
-
-
-_register(
-    "stratified_sample",
-    _stratified_sample,
-    """
-SELECT doc_id, lang FROM documents
-WHERE md5('s0' || '|' || CAST(doc_id AS VARCHAR))
-      < CASE lang WHEN 'en' THEN '8' WHEN 'de' THEN '4' ELSE '2' END
-""",
-)
-
-
-def _token_budget_pack(spark, sf):
-    from ..operators.curation import token_budget_pack
-
-    return token_budget_pack(
-        _tp(spark, sf, "documents"), budget=10_000, chunk=256
-    )
-
-
-_register(
-    "token_budget_pack",
-    _token_budget_pack,
-    f"""
-WITH toks AS (SELECT doc_id, len({TOKS}) AS n_tokens FROM documents)
-SELECT doc_id, CAST(n_tokens AS INT) AS n_tokens,
-       CAST(floor((sum(n_tokens) OVER (ORDER BY doc_id) - n_tokens)
-                  / 10000) AS INT) AS shard_id
-FROM toks
-""",
-)
-
-
-def _repetition_metrics(spark, sf):
-    from ..operators.curation import repetition_metrics
-
-    return repetition_metrics(
-        _tp(spark, sf, "documents"), top_ns=(2, 3), dup_ns=(5,)
-    )
-
-
-_register(
-    "repetition_metrics",
-    _repetition_metrics,
-    f"""
-WITH toklists AS (
-  SELECT doc_id, {TOKS} AS toks FROM documents
-),
-occ AS (
-  SELECT t.doc_id, g.n,
-         array_to_string(t.toks[g.i + 1 : g.i + g.n], ' ') AS gram
-  FROM toklists t,
-       LATERAL (
-         SELECT n.n, i.i
-         FROM (SELECT unnest([2, 3, 5]) AS n) n,
-              LATERAL (SELECT unnest(range(0, len(t.toks) - n.n + 1)) AS i) i
-       ) g
-),
-counts AS (
-  SELECT doc_id, n, gram, count(*) AS c, length(gram) AS gl
-  FROM occ GROUP BY doc_id, n, gram
-),
-perdoc AS (
-  SELECT doc_id,
-         max(CASE WHEN n = 2 AND c >= 2 THEN c * gl END) AS t2,
-         max(CASE WHEN n = 3 AND c >= 2 THEN c * gl END) AS t3,
-         sum(CASE WHEN n = 5 AND c >= 2 THEN c * gl END) AS d5
-  FROM counts GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(t2, 0) / greatest(length(d.text), 1) AS top2gram_char_frac,
-       coalesce(t3, 0) / greatest(length(d.text), 1) AS top3gram_char_frac,
-       coalesce(d5, 0) / greatest(length(d.text), 1) AS dup5gram_char_frac
-FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id
-""",
-)
-
-
-def _domain_cap(spark, sf):
-    from ..operators.curation import domain_cap
-
-    return domain_cap(
-        _t(spark, sf, "documents"), k=20, salt="s0"
-    ).select("doc_id", "source")
-
-
-_register(
-    "domain_cap",
-    _domain_cap,
-    """
-SELECT doc_id, source FROM (
-  SELECT doc_id, source,
-         row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5('s0' || '|' || CAST(doc_id AS VARCHAR)), doc_id
-         ) AS rk
-  FROM documents) WHERE rk <= 20
-""",
-)
-
-
-def _domain_stats(spark, sf):
-    from ..operators.curation import blocklist_filter, domain_stats
-
-    docs = blocklist_filter(
-        _t(spark, sf, "documents"), ["src3", "src7"]
-    )
-    return domain_stats(docs)
-
-
-_register(
-    "domain_stats",
-    _domain_stats,
-    """
-SELECT source,
-       count(*) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-       CAST(sum(n_chars) AS BIGINT) / count(*) AS mean_chars
-FROM documents
--- NULL-domain rows are NOT on the blocklist: mirror the operator's
--- left_anti (NOT IN alone would evaluate NULL and drop the group)
-WHERE source IS NULL OR source NOT IN ('src3', 'src7')
-GROUP BY source
 """,
 )
 
@@ -1204,233 +463,6 @@ def _url_dedup(spark, sf):
         ).alias("url"),
     )
     return url_dedup(messy).select("doc_id", "url_canon")
-
-
-def _robots_filter(spark, sf):
-    """Crawl-compliance pass: per-domain robots.txt (group structure,
-    comments, wildcard Allow, $-anchored and prefix Disallow, one
-    domain-varying rule) parsed distributed, then longest-match
-    filtering of the page set. Oracle: an INDEPENDENT closed form of
-    the expected decisions (no parser mirror — the CASE ladder derives
-    each page's outcome straight from the RFC semantics)."""
-    from ..operators.robots import parse_robots, robots_filter
-
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("http://"), F.lower(F.col("source")),
-            F.lit(".example.org/p/"),
-            (F.col("doc_id") % 50).cast("string"),
-        ).alias("url"),
-    )
-    robots = docs.select(F.lower(F.col("source")).alias("src")).distinct().select(
-        F.concat(F.col("src"), F.lit(".example.org")).alias("domain"),
-        F.concat(
-            F.lit(
-                "# crawl policy\nUser-agent: evilbot\nDisallow: /\n\n"
-                "User-agent: *\nAllow: /p/1*\nDisallow: /p/1\n"
-                "Disallow: /p/2$\nDisallow: /p/3\nDisallow: /p/4"
-            ),
-            (F.length("src") % 5).cast("string"),
-            F.lit("\nDisallow:\n"),
-        ).alias("robots_txt"),
-    )
-    return robots_filter(pages, parse_robots(robots))
-
-
-_register(
-    "robots_filter",
-    _robots_filter,
-    """
-SELECT doc_id,
-  'http://' || lower(source) || '.example.org/p/'
-    || CAST(doc_id % 50 AS VARCHAR) AS url,
-  CASE
-    WHEN CAST(doc_id % 50 AS VARCHAR) LIKE '1%' THEN TRUE
-    WHEN doc_id % 50 = 2 THEN FALSE
-    WHEN CAST(doc_id % 50 AS VARCHAR) LIKE '3%' THEN FALSE
-    WHEN doc_id % 50 = 40 + (length(lower(source)) % 5) THEN FALSE
-    ELSE TRUE
-  END AS allowed
-FROM documents
-""",
-)
-
-def _sitemap_frontier(spark, sf):
-    """Sitemap chain end-to-end: per-domain urlset XML synthesized by
-    string-agg, parsed back by the regexp extractor, freshness-diffed
-    against a crawled table. Oracle: an independent closed form of the
-    recrawl decision (never-crawled, or lastmod after the crawl)."""
-    from ..operators.sitemap import parse_sitemaps, sitemap_frontier
-
-    docs = _t(spark, sf, "documents")
-    src = F.lower(F.col("source"))
-    entry = F.concat(
-        F.lit("<url><loc>http://"), src, F.lit(".example.org/p/"),
-        F.col("doc_id").cast("string"), F.lit("</loc><lastmod>"),
-        F.date_format(
-            F.date_add(
-                F.lit("2024-01-01").cast("date"),
-                (F.col("doc_id") % 28).cast("int"),
-            ),
-            "yyyy-MM-dd",
-        ),
-        F.lit("</lastmod></url>"),
-    )
-    fetched = (
-        docs.select(src.alias("src"), entry.alias("e"))
-        .groupBy("src")
-        .agg(F.array_join(F.collect_list("e"), "\n").alias("inner"))
-        .select(
-            F.concat(
-                F.lit("http://"), F.col("src"),
-                F.lit(".example.org/sitemap.xml"),
-            ).alias("sitemap_url"),
-            F.concat(
-                F.lit("<urlset>\n"), F.col("inner"), F.lit("\n</urlset>")
-            ).alias("body"),
-        )
-    )
-    known = docs.where(F.col("doc_id") % 3 == 0).select(
-        F.concat(
-            F.lit("http://"), src, F.lit(".example.org/p/"),
-            F.col("doc_id").cast("string"),
-        ).alias("url"),
-        F.lit("2024-01-15 00:00:00").cast("timestamp").alias("crawled_ts"),
-    )
-    return sitemap_frontier(parse_sitemaps(fetched), known)
-
-
-_register(
-    "sitemap_frontier",
-    _sitemap_frontier,
-    """
-SELECT 'http://' || lower(source) || '.example.org/sitemap.xml'
-         AS sitemap_url,
-       'http://' || lower(source) || '.example.org/p/'
-         || CAST(doc_id AS VARCHAR) AS url,
-       CAST(DATE '2024-01-01' + (doc_id % 28) * INTERVAL 1 DAY
-            AS TIMESTAMP) AS lastmod
-FROM documents
-WHERE doc_id % 3 != 0 OR (doc_id % 28) >= 15
-""",
-)
-
-def _robots_agent(spark, sf):
-    """Named-agent group selection (RFC 9309 §2.2.1, the r4 fix): the
-    robots file declares BOTH a specific ``databot`` group and a ``*``
-    group — for agent ``databot`` only the specific group applies, so
-    the ``*`` group's ``Disallow: /p/`` must NOT leak in. Oracle: a
-    closed-form CASE ladder of the databot group's longest-match
-    decisions."""
-    from ..operators.robots import parse_robots, robots_filter
-
-    docs = _t(spark, sf, "documents")
-    pages = docs.select(
-        "doc_id",
-        F.concat(
-            F.lit("http://"), F.lower(F.col("source")),
-            F.lit(".example.org"),
-            F.when(F.col("doc_id") % 3 == 0,
-                   F.concat(F.lit("/private/"),
-                            (F.col("doc_id") % 10).cast("string")))
-            .when(F.col("doc_id") % 3 == 1,
-                  F.concat(F.lit("/private/pub"),
-                           (F.col("doc_id") % 10).cast("string")))
-            .otherwise(F.concat(F.lit("/p/"),
-                                (F.col("doc_id") % 10).cast("string"))),
-        ).alias("url"),
-    )
-    robots = docs.select(F.lower(F.col("source")).alias("src")).distinct().select(
-        F.concat(F.col("src"), F.lit(".example.org")).alias("domain"),
-        F.lit(
-            "User-agent: databot\nDisallow: /private/\n"
-            "Allow: /private/pub\n\n"
-            "User-agent: *\nDisallow: /p/\nDisallow: /private/pub\n"
-        ).alias("robots_txt"),
-    )
-    return robots_filter(pages, parse_robots(robots, agent="databot"))
-
-
-_register(
-    "robots_agent",
-    _robots_agent,
-    """
-SELECT doc_id,
-  'http://' || lower(source) || '.example.org' ||
-  CASE WHEN doc_id % 3 = 0
-         THEN '/private/' || CAST(doc_id % 10 AS VARCHAR)
-       WHEN doc_id % 3 = 1
-         THEN '/private/pub' || CAST(doc_id % 10 AS VARCHAR)
-       ELSE '/p/' || CAST(doc_id % 10 AS VARCHAR) END AS url,
-  CASE WHEN doc_id % 3 = 0 THEN FALSE   -- Disallow /private/
-       WHEN doc_id % 3 = 1 THEN TRUE    -- Allow /private/pub wins (longer)
-       ELSE TRUE END AS allowed         -- '*' group ignored for databot
-FROM documents
-""",
-)
-
-
-def _sitemap_escaped(spark, sf):
-    """XML-entity decoding end-to-end (the r4 ADVICE fix): ``<loc>``
-    values arrive entity-escaped (``&amp;``), as numeric refs
-    (``&#38;``) or CDATA-wrapped — all three must decode to the same
-    raw URL. Oracle: the closed-form decoded URL per document."""
-    from ..operators.sitemap import parse_sitemaps
-
-    docs = _t(spark, sf, "documents")
-    src = F.lower(F.col("source"))
-    raw_suffix = F.concat(
-        F.lit("/s?id="), F.col("doc_id").cast("string"), F.lit("&v=1")
-    )
-    loc = (
-        F.when(
-            F.col("doc_id") % 5 == 0,
-            F.concat(F.lit("<![CDATA[http://"), src,
-                     F.lit(".example.org"), raw_suffix, F.lit("]]>")),
-        )
-        .when(
-            F.col("doc_id") % 5 == 1,
-            F.concat(F.lit("http://"), src, F.lit(".example.org/s?id="),
-                     F.col("doc_id").cast("string"), F.lit("&#38;v=1")),
-        )
-        .otherwise(
-            F.concat(F.lit("http://"), src, F.lit(".example.org/s?id="),
-                     F.col("doc_id").cast("string"), F.lit("&amp;v=1"))
-        )
-    )
-    entry = F.concat(F.lit("<url><loc>"), loc, F.lit("</loc></url>"))
-    fetched = (
-        docs.select(src.alias("src"), entry.alias("e"))
-        .groupBy("src")
-        .agg(F.array_join(F.collect_list("e"), "\n").alias("inner"))
-        .select(
-            F.concat(
-                F.lit("http://"), F.col("src"),
-                F.lit(".example.org/sitemap.xml"),
-            ).alias("sitemap_url"),
-            F.concat(
-                F.lit("<urlset>\n"), F.col("inner"), F.lit("\n</urlset>")
-            ).alias("body"),
-        )
-    )
-    return parse_sitemaps(fetched)
-
-
-_register(
-    "sitemap_escaped",
-    _sitemap_escaped,
-    """
-SELECT DISTINCT
-  'http://' || lower(source) || '.example.org/sitemap.xml'
-    AS sitemap_url,
-  'http://' || lower(source) || '.example.org/s?id='
-    || CAST(doc_id AS VARCHAR) || '&v=1' AS url,
-  CAST(NULL AS TIMESTAMP) AS lastmod
-FROM documents
-""",
-)
 
 
 _register(
@@ -1475,1078 +507,6 @@ SELECT min(doc_id) AS doc_id, url_canon FROM canon GROUP BY url_canon
 """,
 )
 
-
-def _incremental_dedup(spark, sf):
-    from ..operators.dedup import incremental_exact_dedup
-
-    docs = _tp(spark, sf, "documents")
-    seen = docs.where(F.col("doc_id") % 2 == 0).select(
-        F.md5("text").alias("content_hash")
-    )
-    new = docs.where(F.col("doc_id") % 2 == 1)
-    return incremental_exact_dedup(new, seen)
-
-
-_register(
-    "incremental_dedup",
-    _incremental_dedup,
-    """
-WITH seen AS (
-  SELECT DISTINCT md5(text) AS content_hash
-  FROM documents WHERE doc_id % 2 = 0),
-new AS (
-  SELECT doc_id, md5(text) AS content_hash
-  FROM documents WHERE doc_id % 2 = 1),
-fresh AS (
-  SELECT * FROM new
-  WHERE content_hash NOT IN (SELECT content_hash FROM seen))
-SELECT min(doc_id) AS doc_id, content_hash
-FROM fresh GROUP BY content_hash
-""",
-)
-
-
-def _lm_score(spark, sf):
-    from ..operators.curation import lm_score
-
-    docs = _tp(spark, sf, "documents")
-    return lm_score(docs, docs.where(F.col("lang") == "en"))
-
-
-_register(
-    "lm_score",
-    _lm_score,
-    f"""
-WITH toklists AS (SELECT doc_id, lang, {TOKS} AS toks FROM documents),
-bigr AS (
-  SELECT doc_id, lang, toks[i + 1] AS w1, toks[i + 2] AS w2
-  FROM toklists, LATERAL (SELECT unnest(range(0, len(toks) - 1)) AS i)
-),
-tb AS (SELECT w1, w2, count(*) AS cb FROM bigr
-       WHERE lang = 'en' GROUP BY w1, w2),
-tu AS (SELECT w1, count(*) AS cu
-       FROM (SELECT unnest(toks) AS w1 FROM toklists WHERE lang = 'en')
-       GROUP BY w1),
-v AS (SELECT count(*) AS v FROM tu),
-scored AS (
-  SELECT b.doc_id,
-         ln((coalesce(tb.cb, 0) + 0.5) / (coalesce(tu.cu, 0) + 0.5 * v.v))
-           AS lp
-  FROM bigr b
-  LEFT JOIN tb ON b.w1 = tb.w1 AND b.w2 = tb.w2
-  LEFT JOIN tu ON b.w1 = tu.w1
-  CROSS JOIN v
-),
-agg AS (SELECT doc_id, count(*) AS nb, round(avg(lp), 6) AS lm_logprob
-        FROM scored GROUP BY doc_id)
-SELECT d.doc_id, CAST(coalesce(nb, 0) AS BIGINT) AS n_bigrams, lm_logprob
-FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
-""",
-)
-
-
-def _ccnet_buckets(spark, sf):
-    from ..operators.curation import lm_buckets
-
-    docs = _tp(spark, sf, "documents")
-    return lm_buckets(docs, docs.where(F.col("lang") == "en"))
-
-
-_register(
-    "ccnet_buckets",
-    _ccnet_buckets,
-    f"""
-WITH toklists AS (SELECT doc_id, lang, {TOKS} AS toks FROM documents),
-bigr AS (
-  SELECT doc_id, lang, toks[i + 1] AS w1, toks[i + 2] AS w2
-  FROM toklists, LATERAL (SELECT unnest(range(0, len(toks) - 1)) AS i)
-),
-tb AS (SELECT w1, w2, count(*) AS cb FROM bigr
-       WHERE lang = 'en' GROUP BY w1, w2),
-tu AS (SELECT w1, count(*) AS cu
-       FROM (SELECT unnest(toks) AS w1 FROM toklists WHERE lang = 'en')
-       GROUP BY w1),
-v AS (SELECT count(*) AS v FROM tu),
-scored AS (
-  SELECT b.doc_id,
-         ln((coalesce(tb.cb, 0) + 0.5) / (coalesce(tu.cu, 0) + 0.5 * v.v))
-           AS lp
-  FROM bigr b
-  LEFT JOIN tb ON b.w1 = tb.w1 AND b.w2 = tb.w2
-  LEFT JOIN tu ON b.w1 = tu.w1
-  CROSS JOIN v
-),
-agg AS (SELECT doc_id, round(avg(lp), 6) AS lm_logprob
-        FROM scored GROUP BY doc_id),
-strata AS (
-  SELECT d.doc_id, d.lang, agg.lm_logprob
-  FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id),
-counts AS (
-  SELECT lang, lm_logprob, count(*) AS c
-  FROM strata WHERE lm_logprob IS NOT NULL GROUP BY lang, lm_logprob),
-th AS (
-  SELECT lang, lm_logprob,
-         CASE WHEN 3 * sum(c) OVER (PARTITION BY lang
-                ORDER BY lm_logprob DESC)
-              <= sum(c) OVER (PARTITION BY lang) THEN 'head'
-              WHEN 3 * sum(c) OVER (PARTITION BY lang
-                ORDER BY lm_logprob DESC)
-              <= 2 * sum(c) OVER (PARTITION BY lang) THEN 'middle'
-              ELSE 'tail' END AS bucket
-  FROM counts)
-SELECT s.doc_id, s.lang, coalesce(th.bucket, 'tail') AS bucket
-FROM strata s
-LEFT JOIN th ON s.lang = th.lang AND s.lm_logprob = th.lm_logprob
-""",
-)
-
-
-def _hash_edges(spark, sf, weights=None):
-    """The standard two-edge synthetic link graph over ``documents``
-    (doc → doc·31+7 mod n and doc → doc·17+3 mod n) shared by the
-    pagerank / weighted_pagerank / trustrank / label_propagation
-    builders — one construction, mirrored by :func:`_hash_edges_sql`
-    on the oracle side, so changing the graph touches exactly two
-    sites. ``weights=(w31, w17)`` adds a weight column per branch."""
-    docs = _tp(spark, sf, "documents").select("doc_id")
-    n_df = F.broadcast(docs.agg(F.count(F.lit(1)).alias("_n")))
-    e = docs.crossJoin(n_df)
-
-    def mk(mult, add, w):
-        cols = [
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * mult + add) % F.col("_n")).alias("dst"),
-        ]
-        if w is not None:
-            cols.append(F.lit(w).alias("weight"))
-        return e.select(*cols)
-
-    w31, w17 = weights if weights else (None, None)
-    return mk(31, 7, w31).unionByName(mk(17, 3, w17))
-
-
-def _hash_edges_sql(src="src", dst="dst", weights=None):
-    """Oracle twin of :func:`_hash_edges`: the UNION ALL body (uses
-    an ``nc AS (SELECT count(*) AS n FROM documents)`` CTE in scope).
-    ``weights=(w31, w17)`` appends a ``w`` column per branch."""
-    w31 = f", {weights[0]}::DOUBLE AS w" if weights else ""
-    w17 = f", {weights[1]}::DOUBLE" if weights else ""
-    return f"""
-  SELECT doc_id AS {src}, (doc_id * 31 + 7) % nc.n AS {dst}{w31}
-  FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id * 17 + 3) % nc.n{w17} FROM documents, nc
-"""
-
-
-def _pagerank(spark, sf):
-    """PageRank over a deterministic synthetic link graph on the
-    documents table (each doc links to two arithmetically-derived
-    targets — same construction in the SQL oracle, which unrolls the
-    5 power iterations as CTE pairs)."""
-    from ..operators.graph import pagerank
-
-    return pagerank(_hash_edges(spark, sf), iterations=5).select(
-        "node", F.round("rank", 6).alias("rank")
-    )
-
-
-def _pagerank_oracle(iterations: int = 5) -> str:
-    head = f"""
-WITH nc AS (SELECT count(*) AS n FROM documents),
-edges AS ({_hash_edges_sql()}),
-nodes AS (SELECT DISTINCT node FROM (
-  SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-nn AS (SELECT count(*) AS n FROM nodes),
-deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / nn.n AS r FROM nodes, nn)"""
-    body = ""
-    for k in range(1, iterations + 1):
-        body += f""",
-s{k} AS (
-  SELECT e.dst AS node, sum(r.r / deg.d) AS c
-  FROM edges e
-  JOIN r{k - 1} r ON e.src = r.node
-  JOIN deg ON e.src = deg.src
-  GROUP BY e.dst),
-dm{k} AS (
-  SELECT coalesce(sum(r.r), CAST(0.0 AS DOUBLE)) AS m
-  FROM r{k - 1} r LEFT JOIN deg ON r.node = deg.src
-  WHERE deg.src IS NULL),
-r{k} AS (
-  SELECT nodes.node,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.n
-         + CAST(0.85 AS DOUBLE)
-           * (coalesce(s.c, CAST(0.0 AS DOUBLE)) + dm{k}.m / nn.n) AS r
-  FROM nodes CROSS JOIN nn CROSS JOIN dm{k}
-  LEFT JOIN s{k} s ON nodes.node = s.node)"""
-    return (
-        head
-        + body
-        + f"\nSELECT node, round(r, 6) AS rank FROM r{iterations}"
-    )
-
-
-_register("pagerank", _pagerank, _pagerank_oracle(5))
-
-
-def _triangle_edges(spark, sf):
-    docs = _tp(spark, sf, "documents").select("doc_id")
-    n_df = F.broadcast(docs.agg(F.count(F.lit(1)).alias("_n")))
-    e = docs.crossJoin(n_df)
-
-    def mk(expr):
-        return e.select(F.col("doc_id").alias("src"), expr.alias("dst"))
-
-    return (
-        mk((F.col("doc_id") + 1) % F.col("_n"))
-        .unionByName(mk((F.col("doc_id") + 2) % F.col("_n")))
-        .unionByName(mk((F.col("doc_id") * 31 + 7) % F.col("_n")))
-    )
-
-
-def _triangle_count(spark, sf):
-    from ..operators.graph import triangle_count
-
-    return triangle_count(_triangle_edges(spark, sf))
-
-
-def _common_neighbors(spark, sf):
-    from ..operators.graph import common_neighbors
-
-    return common_neighbors(
-        _triangle_edges(spark, sf), top_k=50, min_common=2
-    )
-
-
-_register(
-    "common_neighbors",
-    _common_neighbors,
-    """
-WITH nc AS (SELECT count(*) AS n FROM documents),
-raw AS (
-  SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc
-),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw WHERE src <> dst),
-sym AS (SELECT a AS c, b AS n FROM und UNION ALL SELECT b, a FROM und),
-deg AS (SELECT n AS node, count(*) AS d FROM sym GROUP BY n),
-cdeg AS (SELECT c, count(*) AS cd FROM sym GROUP BY c),
-centers AS (
-  SELECT s.c, s.n FROM sym s JOIN cdeg ON s.c = cdeg.c
-  WHERE cdeg.cd <= 1000),
-cn AS (
-  SELECT x.n AS a, y.n AS b, count(*) AS common
-  FROM centers x JOIN centers y ON x.c = y.c AND x.n < y.n
-  GROUP BY x.n, y.n),
-cand AS (
-  SELECT cn.a, cn.b, cn.common FROM cn
-  WHERE cn.common >= 2
-    AND NOT EXISTS (SELECT 1 FROM und u WHERE u.a = cn.a AND u.b = cn.b)
-)
-SELECT cand.a, cand.b, cand.common,
-       round(cand.common / (da.d + db.d - cand.common), 6) AS jaccard
-FROM cand
-JOIN deg da ON da.node = cand.a
-JOIN deg db ON db.node = cand.b
-ORDER BY cand.common DESC, cand.a, cand.b
-LIMIT 50
-""",
-)
-
-
-def _adamic_adar(spark, sf):
-    from ..operators.graph import adamic_adar
-
-    return adamic_adar(
-        _triangle_edges(spark, sf), top_k=50, min_common=2
-    )
-
-
-_register(
-    "adamic_adar",
-    _adamic_adar,
-    """
-WITH nc AS (SELECT count(*) AS n FROM documents),
-raw AS (
-  SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc
-),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw WHERE src <> dst),
-sym AS (SELECT a AS c, b AS n FROM und UNION ALL SELECT b, a FROM und),
-cdeg AS (SELECT c, count(*) AS cd FROM sym GROUP BY c),
-centers AS (
-  SELECT s.c, s.n, cdeg.cd FROM sym s JOIN cdeg ON s.c = cdeg.c
-  WHERE cdeg.cd <= 1000),
-scored AS (
-  SELECT x.n AS a, y.n AS b, count(*) AS common,
-         round(sum(round(1.0::DOUBLE / ln(x.cd), 8)), 6) AS aa
-  FROM centers x JOIN centers y ON x.c = y.c AND x.n < y.n
-  GROUP BY x.n, y.n)
-SELECT s.a, s.b, s.common, s.aa
-FROM scored s
-WHERE s.common >= 2
-  AND NOT EXISTS (SELECT 1 FROM und u WHERE u.a = s.a AND u.b = s.b)
-ORDER BY s.aa DESC, s.a, s.b
-LIMIT 50
-""",
-)
-
-
-# shared WITH block for the triangle-pass oracles (triangle_count and
-# clustering_coefficient project different columns off the same CTEs)
-_TRI_WITH = """
-WITH nc AS (SELECT count(*) AS n FROM documents),
-raw AS (
-  SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc
-),
-und AS (
-  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-  FROM raw WHERE src <> dst),
-deg AS (
-  SELECT node, count(*) AS d FROM (
-    SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-  GROUP BY node),
-fwd AS (
-  SELECT CASE WHEN (da.d < db.d) OR (da.d = db.d AND u.a < u.b)
-              THEN u.a ELSE u.b END AS lo,
-         CASE WHEN (da.d < db.d) OR (da.d = db.d AND u.a < u.b)
-              THEN u.b ELSE u.a END AS hi
-  FROM und u
-  JOIN deg da ON u.a = da.node
-  JOIN deg db ON u.b = db.node),
-tri AS (
-  SELECT e1.lo AS x, e1.hi AS y, e2.hi AS z
-  FROM fwd e1 JOIN fwd e2 ON e1.hi = e2.lo
-  WHERE EXISTS (SELECT 1 FROM fwd f
-                WHERE f.lo = e1.lo AND f.hi = e2.hi)),
-pn AS (
-  SELECT node, count(*) AS triangles FROM (
-    SELECT x AS node FROM tri
-    UNION ALL SELECT y FROM tri
-    UNION ALL SELECT z FROM tri)
-  GROUP BY node)
-"""
-
-_register(
-    "triangle_count",
-    _triangle_count,
-    _TRI_WITH
-    + """
-SELECT deg.node, CAST(coalesce(pn.triangles, 0) AS BIGINT) AS triangles
-FROM deg LEFT JOIN pn ON deg.node = pn.node
-""",
-)
-
-
-def _clustering_coefficient(spark, sf):
-    """Local clustering coefficient per node over the synthetic link
-    graph — triangle fraction of each node's neighbor pairs; same
-    degree-ordered O(m^1.5) triangle pass as `triangle_count`, plus a
-    free projection (the degree frame already lives inside the pass)."""
-    from ..operators.graph import clustering_coefficient
-
-    return clustering_coefficient(_triangle_edges(spark, sf))
-
-
-_register(
-    "clustering_coefficient",
-    _clustering_coefficient,
-    _TRI_WITH
-    + """
-SELECT deg.node,
-       CAST(deg.d AS BIGINT) AS degree,
-       CAST(coalesce(pn.triangles, 0) AS BIGINT) AS triangles,
-       CASE WHEN deg.d >= 2
-            THEN round(2.0::DOUBLE * coalesce(pn.triangles, 0)
-                       / (deg.d * (deg.d - 1)), 6)
-            ELSE 0.0::DOUBLE END AS coeff
-FROM deg LEFT JOIN pn ON deg.node = pn.node
-""",
-)
-
-
-def _kmv_distinct_tokens(spark, sf):
-    from ..operators.dedup import normalized_tokens
-    from ..operators.sketch import kmv_distinct
-
-    toks = _tp(spark, sf, "documents").select(
-        "lang", F.explode(normalized_tokens(F.col("text"))).alias("tok")
-    )
-    return kmv_distinct(toks, "tok", k=128, group_cols=["lang"])
-
-
-_register(
-    "kmv_distinct_tokens",
-    _kmv_distinct_tokens,
-    f"""
-WITH toks AS (
-  SELECT lang, unnest({TOKS}) AS tok FROM documents),
-hv AS (
-  SELECT DISTINCT lang,
-         ('0x' || substring(md5(tok), 1, 13))::BIGINT AS h
-  FROM toks),
-topk AS (
-  SELECT lang, h FROM (
-    SELECT lang, h,
-           row_number() OVER (PARTITION BY lang ORDER BY h) AS rn
-    FROM hv) WHERE rn <= 128),
-agg AS (SELECT lang, count(*) AS m, max(h) AS hk FROM topk GROUP BY lang)
-SELECT lang,
-       CASE WHEN m < 128 THEN CAST(m AS DOUBLE)
-            ELSE CAST(127 AS DOUBLE) * CAST(4503599627370496 AS DOUBLE) / hk
-       END AS est_distinct
-FROM agg
-""",
-)
-
-
-def _length_quantiles(spark, sf):
-    from ..operators.sketch import exact_quantiles
-
-    q = exact_quantiles(
-        _t(spark, sf, "documents"), "n_chars", ["lang"]
-    )
-    return q.select(
-        "lang",
-        "n",
-        F.round("p50", 4).alias("p50"),
-        F.round("p90", 4).alias("p90"),
-        F.round("p99", 4).alias("p99"),
-    )
-
-
-_register(
-    "length_quantiles",
-    _length_quantiles,
-    """
-SELECT lang, count(*) AS n,
-       round(quantile_cont(n_chars, 0.5), 4) AS p50,
-       round(quantile_cont(n_chars, 0.9), 4) AS p90,
-       round(quantile_cont(n_chars, 0.99), 4) AS p99
-FROM documents GROUP BY lang
-""",
-)
-
-
-def _inverted_index(spark, sf):
-    from ..operators.curation import inverted_index
-
-    return inverted_index(_tp(spark, sf, "documents"), min_df=2)
-
-
-_register(
-    "inverted_index",
-    _inverted_index,
-    f"""
-WITH tf AS (
-  SELECT token, doc_id, count(*) AS tf
-  FROM (SELECT doc_id, unnest({TOKS}) AS token FROM documents)
-  GROUP BY token, doc_id
-)
-SELECT token, count(*) AS df, CAST(sum(tf) AS BIGINT) AS total_tf,
-       string_agg(concat(CAST(doc_id AS VARCHAR), ':', CAST(tf AS VARCHAR)),
-                  ',' ORDER BY doc_id) AS postings
-FROM tf GROUP BY token HAVING count(*) >= 2
-""",
-)
-
-
-def _bm25(spark, sf):
-    from ..operators.curation import bm25_score
-
-    return bm25_score(
-        _tp(spark, sf, "documents"),
-        ["spark", "table", "stream"],
-        k1=1.2, b=0.75, top_k=20,
-    )
-
-
-_register(
-    "bm25_topk",
-    _bm25,
-    f"""
-WITH tl AS (SELECT doc_id, {TOKS} AS t FROM documents),
-toks AS (SELECT doc_id, len(t) AS dl, unnest(t) AS token FROM tl),
--- collection constants over ALL docs (unnest would drop empty ones)
-stats AS (SELECT count(*) AS N, avg(len(t)) AS avgdl FROM tl),
-tf AS (
-  SELECT doc_id, token, count(*) AS tf, min(dl) AS dl
-  FROM toks WHERE token IN ('spark', 'table', 'stream')
-  GROUP BY doc_id, token),
-dft AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-per AS (
-  SELECT tf.doc_id,
-         round(ln(1.0::DOUBLE + (s.N - dft.df + 0.5::DOUBLE) / (dft.df + 0.5::DOUBLE))
-               * (tf.tf * 2.2::DOUBLE)
-               / (tf.tf + 1.2::DOUBLE * (0.25::DOUBLE + (0.75::DOUBLE * tf.dl) / s.avgdl)),
-               8) AS s
-  FROM tf JOIN dft ON tf.token = dft.token, stats s)
-SELECT doc_id, round(sum(s), 6) AS score
-FROM per GROUP BY doc_id
-ORDER BY score DESC, doc_id LIMIT 20
-""",
-)
-
-
-def _length_outliers(spark, sf):
-    from ..operators.curation import length_outlier_filter
-
-    out = length_outlier_filter(
-        _t(spark, sf, "documents"), "n_chars", ["lang"], 0.05, 0.95
-    )
-    return out.select(
-        "doc_id", "lang", "n_chars",
-        F.round("p_lo", 4).alias("p_lo"),
-        F.round("p_hi", 4).alias("p_hi"),
-    )
-
-
-_register(
-    "length_outliers",
-    _length_outliers,
-    """
-WITH bands AS (
-  SELECT lang,
-         quantile_cont(n_chars, 0.05) AS lo,
-         quantile_cont(n_chars, 0.95) AS hi
-  FROM documents GROUP BY lang
-)
-SELECT d.doc_id, d.lang, d.n_chars,
-       round(b.lo, 4) AS p_lo, round(b.hi, 4) AS p_hi
-FROM documents d JOIN bands b ON d.lang = b.lang
-WHERE d.n_chars >= b.lo AND d.n_chars <= b.hi
-""",
-)
-
-
-def _chunk_documents(spark, sf):
-    from ..operators.curation import chunk_documents
-
-    return chunk_documents(
-        _tp(spark, sf, "documents"), max_tokens=64, overlap=16
-    )
-
-
-_register(
-    "chunk_documents",
-    _chunk_documents,
-    f"""
-WITH toklists AS (SELECT doc_id, {TOKS} AS toks FROM documents),
-nch AS (
-  SELECT doc_id, toks,
-         CASE WHEN len(toks) <= 0 THEN 0
-              ELSE CAST(floor((greatest(len(toks) - 16, 1) - 1) / 48)
-                        AS INT) + 1
-         END AS nc
-  FROM toklists),
-ch AS (
-  SELECT doc_id, g.cid AS chunk_id,
-         toks[g.cid * 48 + 1 : g.cid * 48 + 64] AS ct
-  FROM nch, LATERAL (SELECT unnest(range(0, nc)) AS cid) g)
-SELECT doc_id, CAST(chunk_id AS INT) AS chunk_id,
-       array_to_string(ct, ' ') AS chunk_text,
-       CAST(len(ct) AS INT) AS n_tokens
-FROM ch
-""",
-)
-
-
-def _tfidf_top_terms(spark, sf):
-    from ..operators.curation import tfidf_top_terms
-
-    return tfidf_top_terms(_tp(spark, sf, "documents"), k=5)
-
-
-_register(
-    "tfidf_top_terms",
-    _tfidf_top_terms,
-    f"""
-WITH terms AS (SELECT doc_id, unnest({TOKS}) AS term FROM documents),
-tf AS (SELECT doc_id, term, count(*) AS tf
-       FROM terms GROUP BY doc_id, term),
-dfq AS (SELECT term, count(*) AS df
-        FROM (SELECT DISTINCT doc_id, term FROM terms) GROUP BY term),
-nc AS (SELECT count(*) AS n FROM documents),
-scored AS (
-  -- round BEFORE ranking (as the operator does): log is not required
-  -- to be correctly rounded, so equal-in-math scores from different
-  -- (tf, df) pairs could otherwise order differently per engine
-  SELECT tf.doc_id, tf.term,
-         round(tf.tf * ln(CAST(nc.n AS DOUBLE) / dfq.df), 6) AS score
-  FROM tf JOIN dfq ON tf.term = dfq.term, nc),
-ranked AS (
-  SELECT doc_id, term, score,
-         CAST(row_number() OVER (
-           PARTITION BY doc_id ORDER BY score DESC, term ASC) AS INT)
-           AS rank
-  FROM scored)
-SELECT doc_id, term, rank, score
-FROM ranked WHERE rank <= 5
-""",
-)
-
-
-def _line_dedup(spark, sf):
-    """Cross-document line dedup (C4-style boilerplate removal) over a
-    deterministically chunked view of `documents` (10-word chunks as
-    lines — the single-blob fixtures carry no newlines, and the
-    chunking is mirrored in the oracle). First occurrence survives;
-    docs are reassembled; md5 pins the reassembled bytes."""
-    from ..operators.dedup import line_dedup
-
-    toks = F.filter(
-        F.split(F.trim(F.col("text")), r"\s+"), lambda t: t != ""
-    )
-    nchunks = F.ceil(F.size(toks) / F.lit(10.0)).cast("int")
-    lines = F.when(
-        nchunks > 0,
-        F.transform(
-            F.sequence(F.lit(0), nchunks - 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i * 10 + 1, 10)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    chunked = _tp(spark, sf, "documents").select(
-        "doc_id", F.concat_ws("\n", lines).alias("text")
-    )
-    out = line_dedup(chunked)
-    return out.select(
-        "doc_id",
-        F.md5("clean_text").alias("clean_md5"),
-        "n_lines",
-        "n_removed",
-    )
-
-
-_register(
-    "line_dedup",
-    _line_dedup,
-    r"""
-WITH chunked AS (
-  SELECT doc_id,
-    array_to_string(
-      list_transform(range(0, CAST(ceil(len(toks)/10.0) AS INT)),
-        i -> array_to_string(list_slice(toks, i*10+1, i*10+10), ' ')),
-      chr(10)) AS text
-  FROM (SELECT doc_id,
-          list_filter(string_split_regex(trim(text), '\s+'), x -> x <> '') AS toks
-        FROM documents)
-),
-lines AS (
-  SELECT doc_id, u.line_no AS line_no, u.line AS line
-  FROM (SELECT doc_id, unnest(list_transform(string_split(text, chr(10)),
-          (x, i) -> struct_pack(line_no := i - 1, line := x))) AS u
-        FROM chunked)
-  WHERE trim(u.line) <> ''
-),
-ranked AS (
-  SELECT doc_id, line_no, line,
-    row_number() OVER (PARTITION BY md5(trim(line))
-                       ORDER BY doc_id, line_no) AS rn
-  FROM lines
-)
-SELECT doc_id,
-  md5(coalesce(string_agg(line, chr(10) ORDER BY line_no)
-               FILTER (WHERE rn = 1), '')) AS clean_md5,
-  CAST(count(*) AS INT) AS n_lines,
-  CAST(count(*) FILTER (WHERE rn > 1) AS INT) AS n_removed
-FROM ranked GROUP BY doc_id
-""",
-)
-
-
-def _dup_spans(spark, sf):
-    out = remove_duplicate_spans(_tp(spark, sf, "documents"), k=5)
-    return out.select(
-        "doc_id",
-        F.md5("clean_text").alias("clean_md5"),
-        "n_tokens",
-        "n_removed",
-    )
-
-
-_register(
-    "dup_span_removal",
-    _dup_spans,
-    f"""
-WITH toklists AS (SELECT doc_id, {TOKS} AS toks FROM documents),
-grams AS (
-  SELECT doc_id, CAST(i AS INT) AS pos,
-         md5(array_to_string(toks[CAST(i AS INT) + 1 : CAST(i AS INT) + 5], ' ')) AS h
-  FROM toklists, unnest(range(0, greatest(len(toks) - 4, 0))) t(i)
-),
-ranked AS (
-  SELECT doc_id, pos,
-         row_number() OVER (PARTITION BY h ORDER BY doc_id, pos) AS rn,
-         count(*) OVER (PARTITION BY h) AS c
-  FROM grams
-),
-covered AS (
-  SELECT DISTINCT doc_id, pos + CAST(j AS INT) AS idx
-  FROM ranked, unnest(range(0, 5)) t(j)
-  WHERE c > 1 AND rn > 1
-),
-tokens AS (
-  SELECT doc_id, CAST(i AS INT) AS idx, toks[CAST(i AS INT) + 1] AS tok
-  FROM toklists, unnest(range(0, len(toks))) t(i)
-)
-SELECT t.doc_id,
-  md5(coalesce(string_agg(t.tok, ' ' ORDER BY t.idx)
-               FILTER (WHERE c.idx IS NULL), '')) AS clean_md5,
-  CAST(count(*) AS INT) AS n_tokens,
-  CAST(count(c.idx) AS INT) AS n_removed
-FROM tokens t LEFT JOIN covered c ON c.doc_id = t.doc_id AND c.idx = t.idx
-GROUP BY t.doc_id
-""",
-)
-
-
-_register(
-    "neardup_clusters",
-    lambda spark, sf: neardup_clusters(
-        _tp(spark, sf, "documents"), threshold=0.7, num_perm=16, bands=4,
-        tokenizer="shingle", shingle_n=8,
-    ),
-    f"""
-WITH RECURSIVE toks AS (
-  SELECT DISTINCT doc_id, substr(text, CAST(i AS INT), 8) AS token
-  FROM documents, unnest(range(1, greatest(length(text) - 7, 1) + 1)) t(i)
-),{_minhash_sql("toks")},
-cand AS (
-  SELECT DISTINCT x.doc_id AS a, y.doc_id AS b
-  FROM buckets x JOIN buckets y ON x.bucket = y.bucket AND x.doc_id < y.doc_id
-),
-sizes AS (SELECT doc_id, count(*) AS sz FROM toks GROUP BY doc_id),
-inter AS (
-  SELECT p.a, p.b, count(*) AS i
-  FROM cand p
-  JOIN toks ta ON ta.doc_id = p.a
-  JOIN toks tb ON tb.doc_id = p.b AND tb.token = ta.token
-  GROUP BY p.a, p.b
-),
-pairs AS (
-  SELECT i.a, i.b
-  FROM inter i
-  JOIN sizes sa ON sa.doc_id = i.a
-  JOIN sizes sb ON sb.doc_id = i.b
-  WHERE i.i / (sa.sz + sb.sz - i.i) >= 0.7
-),
-edges AS (SELECT a AS u, b AS v FROM pairs UNION SELECT b, a FROM pairs),
-reach(u, v) AS (
-  SELECT u, u FROM edges
-  UNION
-  SELECT r.u, e.v FROM reach r JOIN edges e ON e.u = r.v
-),
-comp AS (SELECT u AS doc_id, min(v) AS cluster_id FROM reach GROUP BY u)
-SELECT doc_id, cluster_id, doc_id = cluster_id AS is_canonical,
-       count(*) OVER (PARTITION BY cluster_id) AS cluster_size
-FROM comp
-""",
-)
-
-
-# ---- similarity search ----
-
-
-def _queries_df(spark, sf):
-    e = _t(spark, sf, "embeddings")
-    return e.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-
-
-_register(
-    "cosine_topk",
-    lambda spark, sf: cosine_topk(
-        _t(spark, sf, "embeddings"), _queries_df(spark, sf), k=5
-    ).select("q_id", "vec_id", F.round(F.col("cos"), 6).alias("cos"), "rank"),
-    """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS q_vec FROM e WHERE vec_id < 8),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         list_dot_product(e.v, q.q_vec)
-         / (sqrt(list_dot_product(e.v, e.v)) * sqrt(list_dot_product(q.q_vec, q.q_vec))) AS c
-  FROM e, q
-),
-ranked AS (
-  SELECT q_id, vec_id, c,
-         CAST(row_number() OVER (PARTITION BY q_id ORDER BY c DESC, vec_id ASC) AS INT) AS rank
-  FROM scored
-)
-SELECT q_id, vec_id, round(c, 6) AS cos, rank FROM ranked WHERE rank <= 5
-""",
-)
-
-
-def _quantized_cosine_topk(spark, sf):
-    from ..operators.similarity import quantized_cosine_topk
-
-    return quantized_cosine_topk(
-        _t(spark, sf, "embeddings"), _queries_df(spark, sf), k=5
-    ).select(
-        "q_id", "vec_id", F.round(F.col("qcos"), 6).alias("qcos"), "rank"
-    )
-
-
-_register(
-    "quantized_cosine_topk",
-    _quantized_cosine_topk,
-    """
-WITH s AS (
-  SELECT vec_id, embedding,
-         list_max(list_transform(embedding, x -> abs(x))) AS sc
-  FROM embeddings),
-qz AS (
-  SELECT vec_id,
-         CAST(list_transform(embedding,
-           x -> CAST(CASE WHEN sc > 0 THEN round(x * 127.0 / sc)
-                          ELSE 0 END AS INTEGER)) AS DOUBLE[]) AS qv
-  FROM s),
-q AS (SELECT vec_id AS q_id, qv AS qq FROM qz WHERE vec_id < 8),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         list_dot_product(e.qv, q.qq)
-         / (sqrt(list_dot_product(e.qv, e.qv))
-            * sqrt(list_dot_product(q.qq, q.qq))) AS c
-  FROM qz e, q
-),
-ranked AS (
-  SELECT q_id, vec_id, c,
-         CAST(row_number() OVER (
-           PARTITION BY q_id ORDER BY c DESC, vec_id ASC) AS INT) AS rank
-  FROM scored
-)
-SELECT q_id, vec_id, round(c, 6) AS qcos, rank FROM ranked WHERE rank <= 5
-""",
-)
-
-
-def _neardup_exact(spark, sf):
-    e = _t(spark, sf, "embeddings")
-    a = e.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-    b = e.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-    return (
-        a.join(b, F.col("a") < F.col("b"))
-        .select(
-            "a",
-            "b",
-            cosine(
-                F.col("va").cast("array<double>"), F.col("vb").cast("array<double>")
-            ).alias("cos"),
-        )
-        .where(F.col("cos") >= 0.35)
-        .select("a", "b", F.round(F.col("cos"), 6).alias("cos"))
-    )
-
-
-_register(
-    "embedding_neardup",
-    _neardup_exact,
-    """
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-SELECT x.vec_id AS a, y.vec_id AS b,
-       round(list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))), 6) AS cos
-FROM e x JOIN e y ON x.vec_id < y.vec_id
-WHERE list_dot_product(x.v, y.v)
-      / (sqrt(list_dot_product(x.v, x.v)) * sqrt(list_dot_product(y.v, y.v))) >= 0.35
-""",
-)
-
-# LSH/IVF approximations: deterministic by construction (md5-seeded
-# hyperplanes / centroid choice), so they get FULL DuckDB oracles —
-# the hyperplane constants are generated from the same `_hyperplane`
-# code and inlined into the SQL. Recall vs the brute twins is
-# additionally gated in tests and recorded by bench.py.
-
-
-def _lsh_bucket_sql(vec: str, table: int, planes: int, dim: int) -> str:
-    from ..operators.similarity import _hyperplane
-
-    terms = []
-    for p in range(planes):
-        arr = "[" + ",".join(repr(c) for c in _hyperplane(table, p, dim)) + "]"
-        bit = 2 ** (planes - 1 - p)
-        terms.append(
-            f"(CASE WHEN list_dot_product({vec}, {arr}) > 0"
-            f" THEN {bit} ELSE 0 END)"
-        )
-    return "(" + " + ".join(terms) + ")"
-
-
-def _lsh_topk_oracle(
-    k: int = 5, dim: int = 64, planes: int = 6, tables: int = 4,
-    radius: int = 2,
-) -> str:
-    from ..operators.similarity import _probe_masks
-
-    masks = ",".join(str(m) for m in _probe_masks(planes, radius))
-    eb_cols = ", ".join(
-        f"{_lsh_bucket_sql('v', t, planes, dim)} AS b{t}"
-        for t in range(tables)
-    )
-    qb_cols = ", ".join(
-        f"{_lsh_bucket_sql('q_vec', t, planes, dim)} AS b{t}"
-        for t in range(tables)
-    )
-    cand_branches = "\n  UNION\n".join(
-        f"  SELECT qb.q_id, eb.vec_id FROM eb, qb,"
-        f" (SELECT unnest([{masks}]) AS m) mm"
-        f" WHERE eb.b{t} = xor(qb.b{t}, mm.m)"
-        for t in range(tables)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS q_vec FROM e WHERE vec_id < 8),
-eb AS (SELECT vec_id, v, {eb_cols} FROM e),
-qb AS (SELECT q_id, q_vec, {qb_cols} FROM q),
-cand AS (
-{cand_branches}
-),
-scored AS (
-  SELECT c.q_id, c.vec_id,
-         list_dot_product(e.v, q.q_vec)
-         / (sqrt(list_dot_product(e.v, e.v))
-            * sqrt(list_dot_product(q.q_vec, q.q_vec))) AS c
-  FROM (SELECT DISTINCT q_id, vec_id FROM cand) c
-  JOIN e ON e.vec_id = c.vec_id
-  JOIN q ON q.q_id = c.q_id
-),
-ranked AS (
-  SELECT q_id, vec_id, c,
-         CAST(row_number() OVER (
-           PARTITION BY q_id ORDER BY c DESC, vec_id ASC) AS INT) AS rank
-  FROM scored
-)
-SELECT q_id, vec_id, round(c, 6) AS cos, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-_register(
-    "lsh_cosine_topk",
-    lambda spark, sf: lsh_cosine_topk(
-        _tp(spark, sf, "embeddings", 8), _queries_df(spark, sf), k=5, dim=64,
-        probe_radius=2,
-    ).select("q_id", "vec_id", F.round(F.col("cos"), 6).alias("cos"), "rank"),
-    _lsh_topk_oracle(k=5, dim=64, planes=6, tables=4, radius=2),
-)
-def _ivf_topk_oracle(k: int = 5, n_lists: int = 16, n_probe: int = 8) -> str:
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-q AS (SELECT vec_id AS q_id, v AS q_vec FROM e WHERE vec_id < 8),
-cent AS (
-  SELECT v AS cv,
-         CAST(row_number() OVER (
-           ORDER BY md5(CAST(vec_id AS VARCHAR))) - 1 AS INT) AS cidx
-  FROM e ORDER BY md5(CAST(vec_id AS VARCHAR)) LIMIT {n_lists}
-),
-easn AS (
-  SELECT vec_id, v, cidx FROM (
-    SELECT e.vec_id, e.v, c.cidx,
-      row_number() OVER (PARTITION BY e.vec_id ORDER BY
-        round(list_dot_product(e.v, c.cv)
-        / greatest(sqrt(list_dot_product(e.v, e.v))
-           * sqrt(list_dot_product(c.cv, c.cv)), 1e-30), 6) DESC,
-        c.cidx ASC) AS rn
-    FROM e, cent c
-  ) WHERE rn = 1
-),
-qasn AS (
-  SELECT q_id, q_vec, cidx FROM (
-    SELECT q.q_id, q.q_vec, c.cidx,
-      row_number() OVER (PARTITION BY q.q_id ORDER BY
-        round(list_dot_product(q.q_vec, c.cv)
-        / greatest(sqrt(list_dot_product(q.q_vec, q.q_vec))
-           * sqrt(list_dot_product(c.cv, c.cv)), 1e-30), 6) DESC,
-        c.cidx ASC) AS rn
-    FROM q, cent c
-  ) WHERE rn <= {n_probe}
-),
-scored AS (
-  SELECT qa.q_id, ea.vec_id,
-         list_dot_product(ea.v, qa.q_vec)
-         / (sqrt(list_dot_product(ea.v, ea.v))
-            * sqrt(list_dot_product(qa.q_vec, qa.q_vec))) AS c
-  FROM easn ea JOIN qasn qa ON ea.cidx = qa.cidx
-),
-ranked AS (
-  SELECT q_id, vec_id, c,
-         CAST(row_number() OVER (
-           PARTITION BY q_id ORDER BY c DESC, vec_id ASC) AS INT) AS rank
-  FROM (SELECT DISTINCT q_id, vec_id, c FROM scored)
-)
-SELECT q_id, vec_id, round(c, 6) AS cos, rank FROM ranked WHERE rank <= {k}
-"""
-
-
-_register(
-    "ivf_cosine_topk",
-    lambda spark, sf: ivf_cosine_topk(
-        _tp(spark, sf, "embeddings", 8), _queries_df(spark, sf),
-        k=5, n_lists=16, n_probe=8,
-    ).select("q_id", "vec_id", F.round(F.col("cos"), 6).alias("cos"), "rank"),
-    _ivf_topk_oracle(k=5, n_lists=16, n_probe=8),
-)
-def _neardup_lsh_oracle(
-    threshold: float = 0.35, dim: int = 64, planes: int = 4,
-    tables: int = 4, radius: int = 1,
-) -> str:
-    from ..operators.similarity import _probe_masks
-
-    masks = ",".join(str(m) for m in _probe_masks(planes, radius))
-    eb_cols = ", ".join(
-        f"{_lsh_bucket_sql('v', t, planes, dim)} AS b{t}"
-        for t in range(tables)
-    )
-    branches = "\n  UNION\n".join(
-        f"  SELECT x.vec_id AS a, y.vec_id AS b FROM eb x, eb y,"
-        f" (SELECT unnest([{masks}]) AS m) mm"
-        f" WHERE xor(x.b{t}, mm.m) = y.b{t} AND x.vec_id < y.vec_id"
-        for t in range(tables)
-    )
-    return f"""
-WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-eb AS (SELECT vec_id, v, {eb_cols} FROM e),
-cand AS (
-{branches}
-),
-scored AS (
-  SELECT c.a, c.b,
-         list_dot_product(x.v, y.v)
-         / (sqrt(list_dot_product(x.v, x.v))
-            * sqrt(list_dot_product(y.v, y.v))) AS c
-  FROM (SELECT DISTINCT a, b FROM cand) c
-  JOIN e x ON x.vec_id = c.a
-  JOIN e y ON y.vec_id = c.b
-)
-SELECT a, b, round(c, 6) AS cos FROM scored WHERE c >= {threshold}
-"""
-
-
-_register(
-    "embedding_neardup_lsh",
-    lambda spark, sf: embedding_neardup_pairs(
-        _tp(spark, sf, "embeddings", 8), threshold=0.35, dim=64,
-        planes=4, tables=4, probe_radius=1,
-    ).select("a", "b", F.round(F.col("cos"), 6).alias("cos")),
-    _neardup_lsh_oracle(0.35, 64, 4, 4, 1),
-)
-
 # ---- entity linkage ----
 
 _MENTION_DICT = [
@@ -2567,43 +527,6 @@ def _mentions(spark, sf):
 
 _MENTION_DICT_SQL = "VALUES " + ", ".join(
     f"('{e}', '{l}')" for e, l in _MENTION_DICT
-)
-
-def _cooccurrence(spark, sf):
-    from ..operators.linkage import entity_cooccurrence
-
-    docs = _tp(spark, sf, "documents")
-    d = spark.createDataFrame(_MENTION_DICT, "entity string, label string")
-    return entity_cooccurrence(docs, d, max_gram=2)
-
-
-_register(
-    "entity_cooccurrence",
-    _cooccurrence,
-    f"""
-WITH dict AS (
-  SELECT entity, array_to_string({_toks_sql('label')}, ' ') AS gram
-  FROM (SELECT * FROM ({_MENTION_DICT_SQL}) AS t(entity, label))
-  WHERE len(array_to_string({_toks_sql('label')}, ' ')) > 0
-),
-norm AS (
-  SELECT doc_id, ' ' || array_to_string({TOKS}, ' ') || ' ' AS padded FROM documents
-),
-m AS (
-  SELECT DISTINCT n.doc_id, d.entity
-  FROM norm n JOIN dict d ON n.padded LIKE '% ' || d.gram || ' %'
-),
-ab AS (
-  SELECT x.entity AS e1, y.entity AS e2, count(*) AS n_ab
-  FROM m x JOIN m y ON x.doc_id = y.doc_id AND x.entity < y.entity
-  GROUP BY 1, 2
-),
-ent AS (SELECT entity, count(*) AS n FROM m GROUP BY entity),
-nn AS (SELECT count(*) AS n_docs FROM documents)
-SELECT e1, e2, n_ab, a.n AS n_a, b.n AS n_b,
-       round(ln(CAST(n_ab AS DOUBLE) * n_docs / (a.n * b.n)), 6) AS pmi
-FROM ab JOIN ent a ON a.entity = ab.e1 JOIN ent b ON b.entity = ab.e2, nn
-""",
 )
 
 _register(
@@ -2717,69 +640,6 @@ SELECT p_partkey,
          ELSE concat('https://schema.org/brand/', p_brand) END,
     '^https?://schema\\.org', 'https://schema.org') AS norm_uri
 FROM part
-""",
-)
-
-# ---- multimodal plumbing (training-data ops) ----
-
-
-def _frame_schedule(spark, sf):
-    from ..operators.multimodal import frame_sample, media_from_documents
-
-    media = media_from_documents(_t(spark, sf, "documents"))
-    return frame_sample(media, every_ms=500).select(
-        "media_id", "frame_idx", "ts_ms"
-    )
-
-
-_register(
-    "frame_sample",
-    _frame_schedule,
-    # videos = every 3rd doc; duration_ms = n_chars*7; frames every
-    # 500ms starting at 0, timestamps strictly inside [0, duration)
-    """
-SELECT doc_id AS media_id, CAST(i AS INT) AS frame_idx,
-       CAST(i * 500 AS INT) AS ts_ms
-FROM (
-  SELECT doc_id, unnest(range((n_chars * 7 + 499) // 500)) AS i
-  FROM documents WHERE doc_id % 3 = 0
-)
-""",
-)
-
-
-def _media_stats(spark, sf):
-    from ..operators.multimodal import decode_stats, media_from_documents
-
-    media = media_from_documents(_t(spark, sf, "documents"))
-    return decode_stats(media).select(
-        "media_id", "ok", "n_bytes", F.round(F.col("mean"), 6).alias("mean")
-    )
-
-
-_register(
-    "media_decode_stats",
-    _media_stats,
-    # mirrors the deterministic decode stub (multimodal._fake_pixels):
-    # 16 pixels = sha256(content) digest repeated to 64 bytes, each
-    # 4-byte big-endian int / 2^32; pixels i and i+8 coincide, so the
-    # mean over 16 equals the mean over the 8 distinct values
-    """
-WITH m AS (
-  SELECT doc_id AS media_id, sha256(text) AS h,
-         octet_length(CAST(text AS BLOB)) AS n_bytes
-  FROM documents
-),
-v AS (
-  SELECT media_id, n_bytes, i,
-         SUM((strpos('0123456789abcdef', lower(substr(h, 8*i + j, 1))) - 1)
-             * power(16, 8 - j)) AS val
-  FROM m, range(8) t(i), range(1, 9) u(j)
-  GROUP BY media_id, n_bytes, i
-)
-SELECT media_id, TRUE AS ok, n_bytes,
-       round(avg(val / 4294967296.0), 6) AS mean
-FROM v GROUP BY media_id, n_bytes
 """,
 )
 
@@ -3546,89 +1406,6 @@ FROM part
 )
 
 
-def _shortest_paths(spark, sf):
-    """Multi-source BFS hop distances over the deterministic synthetic
-    link graph (same construction as `_triangle_edges`); sources are
-    every doc_id divisible by 997. Oracle: DuckDB recursive CTE with
-    the same 30-hop cap, min(dist) per node."""
-    from ..operators.graph import shortest_paths
-
-    edges = _triangle_edges(spark, sf)
-    sources = (
-        _tp(spark, sf, "documents")
-        .where(F.col("doc_id") % 997 == 0)
-        .select("doc_id")
-    )
-    return shortest_paths(edges, sources, max_hops=30)
-
-
-_register(
-    "shortest_paths",
-    _shortest_paths,
-    """
-WITH RECURSIVE nc AS (SELECT count(*) AS n FROM documents),
-edges AS (
-  SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc
-),
-bfs AS (
-  SELECT doc_id AS node, 0 AS dist FROM documents WHERE doc_id % 997 = 0
-  UNION
-  SELECT e.dst, bfs.dist + 1
-  FROM bfs JOIN edges e ON e.src = bfs.node
-  WHERE bfs.dist < 30
-)
-SELECT node, CAST(min(dist) AS INT) AS dist FROM bfs GROUP BY node
-""",
-)
-
-
-def _interval_join(spark, sf):
-    """Interval-overlap join: every 'click' event anchors a half-open
-    30-minute window; count and sum the same user's events inside it.
-    The binned equi-join shape (operators/rangejoin.py) replaces the
-    per-key cross product DuckDB's inequality join implies."""
-    from ..operators.rangejoin import interval_overlap_join
-
-    ev = _tp(spark, sf, "events")
-    anchors = ev.where(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("anchor_id"),
-        F.col("ts").alias("start"),
-        (F.col("ts") + F.expr("INTERVAL 30 MINUTES")).alias("end"),
-    )
-    pts = ev.select("user_id", "ts", "value")
-    j = interval_overlap_join(
-        pts, anchors, keys=["user_id"], bin_minutes=30
-    )
-    return j.groupBy("anchor_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 6).alias("sum_value"),
-    )
-
-
-_register(
-    "interval_join",
-    _interval_join,
-    """
-WITH anchors AS (
-  SELECT user_id, event_id AS anchor_id,
-         ts AS s, ts + INTERVAL 30 MINUTE AS e
-  FROM events WHERE event_type = 'click'),
-j AS (
-  SELECT a.anchor_id, e.value
-  FROM anchors a JOIN events e
-    ON e.user_id = a.user_id AND e.ts >= a.s AND e.ts < a.e)
-SELECT anchor_id, count(*) AS n_events,
-       round(sum(value), 6) AS sum_value
-FROM j GROUP BY anchor_id
-""",
-)
-
-
 def _heavy_hitters(spark, sf):
     """Exact heavy-hitter tokens (freq > n/40) over the documents
     corpus via Misra-Gries candidate pruning + exact verify — the
@@ -3651,1316 +1428,6 @@ WITH toks AS (SELECT unnest({TOKS}) AS item FROM documents),
 n AS (SELECT count(*) AS n FROM toks),
 c AS (SELECT item, count(*) AS cnt FROM toks GROUP BY item)
 SELECT c.item, c.cnt FROM c, n WHERE c.cnt * 40 > n.n
-""",
-)
-
-
-def _hits(spark, sf):
-    """HITS hub/authority over the synthetic link graph (3 L1-
-    normalized iterations; oracle unrolls them as CTE pairs, same
-    pattern as the pagerank oracle)."""
-    from ..operators.graph import hits
-
-    return hits(_triangle_edges(spark, sf), iterations=3)
-
-
-def _hits_oracle(iterations: int = 3) -> str:
-    head = """
-WITH nc AS (SELECT count(*) AS n FROM documents),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-    UNION ALL
-    SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-    UNION ALL
-    SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc)),
-nodes AS (SELECT DISTINCT node FROM (
-  SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-h0 AS (SELECT node, 1.0::DOUBLE AS s FROM nodes)"""
-    body = ""
-    for k in range(1, iterations + 1):
-        body += f""",
-ar{k} AS (SELECT e.dst AS node, sum(h.s) AS r
-          FROM edges e JOIN h{k - 1} h ON e.src = h.node GROUP BY e.dst),
-an{k} AS (SELECT nodes.node, coalesce(ar{k}.r, 0.0::DOUBLE) AS r
-          FROM nodes LEFT JOIN ar{k} ON nodes.node = ar{k}.node),
-a{k} AS (SELECT node, r / (SELECT sum(r) FROM an{k}) AS s FROM an{k}),
-hr{k} AS (SELECT e.src AS node, sum(a.s) AS r
-          FROM edges e JOIN a{k} a ON e.dst = a.node GROUP BY e.src),
-hn{k} AS (SELECT nodes.node, coalesce(hr{k}.r, 0.0::DOUBLE) AS r
-          FROM nodes LEFT JOIN hr{k} ON nodes.node = hr{k}.node),
-h{k} AS (SELECT node, r / (SELECT sum(r) FROM hn{k}) AS s FROM hn{k})"""
-    return (
-        head
-        + body
-        + f"""
-SELECT h.node, round(h.s, 6) AS hub, round(a.s, 6) AS auth
-FROM h{iterations} h JOIN a{iterations} a ON h.node = a.node"""
-    )
-
-
-_register("hits", _hits, _hits_oracle(3))
-
-
-def _trustrank(spark, sf):
-    """TrustRank over the pagerank link graph with every 100th doc as
-    a trusted seed; 5 rounds. The graph is link-complete (every doc
-    has out-edges) so the dangling branch stays off — the oracle
-    unrolls the same recurrence."""
-    from ..operators.graph import trustrank
-
-    seeds = (
-        _tp(spark, sf, "documents")
-        .select("doc_id")
-        .where(F.col("doc_id") % 100 == 0)
-    )
-    return trustrank(_hash_edges(spark, sf), seeds, iterations=5).select(
-        "node", F.round("rank", 6).alias("trust")
-    )
-
-
-def _trustrank_oracle(iterations: int = 5) -> str:
-    head = f"""
-WITH nc AS (SELECT count(*) AS n FROM documents),
-edges AS ({_hash_edges_sql()}),
-nodes AS (SELECT DISTINCT node FROM (
-  SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
--- seeds come from the documents table (as the builder draws them),
--- semi-joined to the node set exactly as operators.graph.trustrank
--- does — NOT from nodes, which only coincides while doc_ids are dense
-seeds AS (SELECT DISTINCT doc_id AS node FROM documents
-          WHERE doc_id % 100 = 0
-            AND doc_id IN (SELECT node FROM nodes)),
-sc AS (SELECT count(*) AS s FROM seeds),
-jump AS (
-  SELECT nodes.node,
-         CASE WHEN seeds.node IS NOT NULL
-              THEN CAST(1.0 AS DOUBLE) / sc.s
-              ELSE CAST(0.0 AS DOUBLE) END AS j
-  FROM nodes LEFT JOIN seeds ON nodes.node = seeds.node, sc),
-deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
-r0 AS (SELECT node, j AS r FROM jump)"""
-    body = ""
-    for k in range(1, iterations + 1):
-        body += f""",
-s{k} AS (
-  SELECT e.dst AS node, sum(r.r / deg.d) AS c
-  FROM edges e
-  JOIN r{k - 1} r ON e.src = r.node
-  JOIN deg ON e.src = deg.src
-  GROUP BY e.dst),
-dm{k} AS (
-  SELECT coalesce(sum(r.r), CAST(0.0 AS DOUBLE)) AS m
-  FROM r{k - 1} r LEFT JOIN deg ON r.node = deg.src
-  WHERE deg.src IS NULL),
-r{k} AS (
-  SELECT jump.node,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) * jump.j
-         + CAST(0.85 AS DOUBLE)
-           * (coalesce(s.c, CAST(0.0 AS DOUBLE)) + dm{k}.m * jump.j) AS r
-  FROM jump CROSS JOIN dm{k} LEFT JOIN s{k} s ON jump.node = s.node)"""
-    return (
-        head
-        + body
-        + f"\nSELECT node, round(r, 6) AS trust FROM r{iterations}"
-    )
-
-
-_register("trustrank", _trustrank, _trustrank_oracle(5))
-
-
-def _neighbor_agg(spark, sf):
-    """2-hop mean-of-means neighborhood aggregation of document length
-    over the synthetic link graph (GraphSAGE-style mean aggregator)."""
-    from ..operators.graph import neighbor_agg
-
-    docs = _tp(spark, sf, "documents")
-    return neighbor_agg(
-        _triangle_edges(spark, sf),
-        docs.select(F.col("doc_id").alias("node"), "n_chars"),
-        feature_cols=["n_chars"],
-        hops=2,
-    )
-
-
-_register(
-    "neighbor_agg",
-    _neighbor_agg,
-    """
-WITH nc AS (SELECT count(*) AS n FROM documents),
-edges AS (
-  SELECT DISTINCT src, dst FROM (
-    SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-    UNION ALL
-    SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-    UNION ALL
-    SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc)),
-h1 AS (
-  SELECT e.src AS node, avg(CAST(d.n_chars AS DOUBLE)) AS v
-  FROM edges e JOIN documents d ON e.dst = d.doc_id GROUP BY e.src),
-h2 AS (
-  SELECT e.src AS node, avg(h1.v) AS v
-  FROM edges e JOIN h1 ON e.dst = h1.node GROUP BY e.src)
-SELECT node, round(v, 6) AS n_chars_nbr_avg FROM h2
-""",
-)
-
-
-def _kcore_edges(spark, sf):
-    """Degree-varied synthetic graph (the uniform triangle graph is
-    6-regular — k-core would be all-or-nothing): chain edges for all
-    docs, +2 edges for even docs, hash jumps for every third doc."""
-    docs = _tp(spark, sf, "documents").select("doc_id")
-    n_df = F.broadcast(docs.agg(F.count(F.lit(1)).alias("_n")))
-    e = docs.crossJoin(n_df)
-    return (
-        e.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") + 1) % F.col("_n")).alias("dst"),
-        )
-        .unionByName(
-            e.where(F.col("doc_id") % 2 == 0).select(
-                F.col("doc_id").alias("src"),
-                ((F.col("doc_id") + 2) % F.col("_n")).alias("dst"),
-            )
-        )
-        .unionByName(
-            e.where(F.col("doc_id") % 3 == 0).select(
-                F.col("doc_id").alias("src"),
-                ((F.col("doc_id") * 31 + 7) % F.col("_n")).alias("dst"),
-            )
-        )
-    )
-
-
-def _k_core(spark, sf):
-    """3-core of the degree-varied graph after 8 fixed peel sweeps
-    (fixed rounds keep the unrolled-CTE oracle bit-identical)."""
-    from ..operators.graph import k_core
-
-    return k_core(_kcore_edges(spark, sf), k=3, rounds=8)
-
-
-def _k_core_oracle(k: int = 4, rounds: int = 8) -> str:
-    head = """
-WITH nc AS (SELECT count(*) AS n FROM documents),
-raw AS (
-  SELECT doc_id AS src, (doc_id + 1) % nc.n AS dst FROM documents, nc
-  UNION ALL
-  SELECT doc_id, (doc_id + 2) % nc.n FROM documents, nc
-  WHERE doc_id % 2 = 0
-  UNION ALL
-  SELECT doc_id, (doc_id * 31 + 7) % nc.n FROM documents, nc
-  WHERE doc_id % 3 = 0),
-und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        FROM raw WHERE src <> dst),
-sym AS (SELECT a AS c, b AS n FROM und UNION ALL SELECT b, a FROM und),
-alive0 AS (SELECT DISTINCT c AS node FROM sym)"""
-    body = ""
-    for r in range(1, rounds + 1):
-        body += f""",
-alive{r} AS (
-  SELECT s.c AS node
-  FROM sym s
-  JOIN alive{r - 1} x ON s.c = x.node
-  JOIN alive{r - 1} y ON s.n = y.node
-  GROUP BY s.c HAVING count(*) >= {k})"""
-    return head + body + f"\nSELECT node FROM alive{rounds}"
-
-
-_register("k_core", _k_core, _k_core_oracle(3, 8))
-
-
-def _json_props_rollup(spark, sf):
-    """Schema-on-read over the events.props JSON column: parse with
-    `from_json` (JVM-side, single pass, no Python) and roll up per
-    event_type. The schema-on-read path a real event table needs —
-    props stays an opaque string in storage, the struct exists only
-    in the scan projection."""
-    ev = _tp(spark, sf, "events")
-    k = F.from_json(F.col("props"), "k BIGINT")["k"]
-    return (
-        ev.select("event_type", k.alias("k"))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("k"), 6).alias("avg_k"),
-            F.max("k").alias("max_k"),
-        )
-    )
-
-
-_register(
-    "json_props_rollup",
-    _json_props_rollup,
-    """
-SELECT event_type, count(*) AS n,
-       round(avg(CAST(json_extract(props, '$.k') AS BIGINT)), 6) AS avg_k,
-       max(CAST(json_extract(props, '$.k') AS BIGINT)) AS max_k
-FROM events GROUP BY event_type
-""",
-)
-
-
-def _temperature_rebalance(spark, sf):
-    """τ=0.5 language flattening over documents; result = per-lang
-    kept counts (the sample itself is deterministic, so counts are
-    exact)."""
-    from ..operators.curation import temperature_rebalance
-
-    kept = temperature_rebalance(
-        _tp(spark, sf, "documents"), temperature=0.5
-    )
-    return kept.groupBy("lang").agg(F.count(F.lit(1)).alias("n_kept"))
-
-
-_register(
-    "temperature_rebalance",
-    _temperature_rebalance,
-    """
-WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY lang),
-mn AS (SELECT min(n) AS mn FROM c),
-r AS (SELECT lang,
-             round(pow(CAST(n AS DOUBLE) / mn.mn, -0.5::DOUBLE), 6) AS rate
-      FROM c, mn),
-kept AS (
-  SELECT d.lang FROM documents d JOIN r ON d.lang IS NOT DISTINCT FROM r.lang
-  WHERE ('0x' || substring(md5('t0|' || CAST(d.doc_id AS VARCHAR)), 1, 13))::BIGINT
-        / 4503599627370496.0 < r.rate)
-SELECT lang, count(*) AS n_kept FROM kept GROUP BY lang
-""",
-)
-
-
-def _fuzzy_name_pairs(spark, sf):
-    """Edit-distance-1 customer-name pairs via deletion-neighborhood
-    blocking; oracle brute-forces levenshtein over all ordered pairs
-    (fine at oracle scale — the blocking is the 100-TB path)."""
-    from ..operators.linkage import fuzzy_name_pairs
-
-    return fuzzy_name_pairs(
-        _tp(spark, sf, "customer"), id_col="c_custkey", name_col="c_name"
-    )
-
-
-_register(
-    "fuzzy_name_pairs",
-    _fuzzy_name_pairs,
-    """
-SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-       a.c_name AS name_a, b.c_name AS name_b,
-       levenshtein(a.c_name, b.c_name) AS dist
-FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-WHERE levenshtein(a.c_name, b.c_name) <= 1
-""",
-)
-
-
-def _apply_changes(spark, sf):
-    """MERGE INTO batch apply: every 10th customer deleted, every
-    (10k+1)th upserted with a shifted balance; result is the new
-    snapshot."""
-    from ..operators.cdc import apply_changes
-
-    cust = _tp(spark, sf, "customer")
-    up = cust.where(F.col("c_custkey") % 10 == 1).select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        (F.col("c_acctbal") + F.lit(100.0)).alias("c_acctbal"),
-        "c_mktsegment",
-        F.lit("upsert").alias("op"),
-    )
-    dl = cust.where(F.col("c_custkey") % 10 == 0).select(
-        "c_custkey", "c_name", "c_nationkey", "c_acctbal",
-        "c_mktsegment", F.lit("delete").alias("op"),
-    )
-    return apply_changes(cust, up.unionByName(dl), ["c_custkey"])
-
-
-_register(
-    "apply_changes",
-    _apply_changes,
-    """
-SELECT * FROM customer
-WHERE c_custkey % 10 NOT IN (0, 1)
-UNION ALL
-SELECT c_custkey, c_name, c_nationkey,
-       c_acctbal + 100.0::DOUBLE AS c_acctbal, c_mktsegment
-FROM customer WHERE c_custkey % 10 = 1
-""",
-)
-
-
-def _scd2_apply(spark, sf):
-    """SCD2 entity-attribute history: a three-part update batch (two
-    chained updates for keys %5=0, one for %5=1) applied to a current-
-    only dimension; intervals chain inside the batch."""
-    from ..operators.cdc import scd2_apply
-
-    cust = _tp(spark, sf, "customer")
-    ntz = "timestamp_ntz"
-    dim = cust.select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_acctbal").alias("bal"),
-        F.lit("2024-01-01 00:00:00").cast(ntz).alias("valid_from"),
-        F.lit(None).cast(ntz).alias("valid_to"),
-    )
-
-    def upd(mod, delta, ts):
-        return cust.where(F.col("c_custkey") % 5 == mod).select(
-            F.col("c_custkey").alias("k"),
-            (F.col("c_acctbal") + F.lit(delta)).alias("bal"),
-            F.lit(ts).cast(ntz).alias("ts"),
-        )
-
-    updates = (
-        upd(0, 1.0, "2024-02-01 00:00:00")
-        .unionByName(upd(0, 2.0, "2024-03-01 00:00:00"))
-        .unionByName(upd(1, 1.0, "2024-02-15 00:00:00"))
-    )
-    return scd2_apply(dim, updates, ["k"])
-
-
-_register(
-    "scd2_apply",
-    _scd2_apply,
-    """
-WITH dim AS (
-  SELECT c_custkey AS k, c_acctbal AS bal,
-         TIMESTAMP '2024-01-01' AS valid_from,
-         CAST(NULL AS TIMESTAMP) AS valid_to
-  FROM customer),
-up AS (
-  SELECT c_custkey AS k, c_acctbal + 1.0::DOUBLE AS bal,
-         TIMESTAMP '2024-02-01' AS ts
-  FROM customer WHERE c_custkey % 5 = 0
-  UNION ALL
-  SELECT c_custkey, c_acctbal + 2.0::DOUBLE, TIMESTAMP '2024-03-01'
-  FROM customer WHERE c_custkey % 5 = 0
-  UNION ALL
-  SELECT c_custkey, c_acctbal + 1.0::DOUBLE, TIMESTAMP '2024-02-15'
-  FROM customer WHERE c_custkey % 5 = 1),
--- stale updates (ts < current valid_from) are dropped; equal-ts ties
--- break on the attribute values — mirrors scd2_apply exactly
-live AS (
-  SELECT u.* FROM up u
-  LEFT JOIN (SELECT k, valid_from FROM dim WHERE valid_to IS NULL) c
-    ON u.k = c.k
-  WHERE c.valid_from IS NULL OR u.ts >= c.valid_from),
-opened AS (
-  SELECT k, bal, ts AS valid_from,
-         lead(ts) OVER (PARTITION BY k ORDER BY ts, bal) AS valid_to
-  FROM live),
-first_ts AS (SELECT k, min(ts) AS close_at FROM live GROUP BY k),
-closed AS (
-  SELECT d.k, d.bal, d.valid_from, f.close_at AS valid_to
-  FROM dim d JOIN first_ts f ON d.k = f.k WHERE d.valid_to IS NULL),
-untouched AS (
-  SELECT d.k, d.bal, d.valid_from, d.valid_to FROM dim d
-  WHERE d.valid_to IS NULL
-    AND d.k NOT IN (SELECT k FROM first_ts))
-SELECT * FROM untouched
-UNION ALL SELECT * FROM closed
-UNION ALL SELECT * FROM opened
-""",
-)
-
-
-def _incremental_minhash(spark, sf):
-    """Fresh ingest (doc_id % 4 = 0) near-dup checked against the
-    existing corpus's signature index only (doc_id % 4 != 0) —
-    similarity estimated from matching-perm fraction, no corpus text
-    touched."""
-    from ..operators.dedup import (
-        incremental_minhash_dedup,
-        minhash_signatures,
-        token_set,
-    )
-
-    docs = _tp(spark, sf, "documents")
-    newd = docs.where(F.col("doc_id") % 4 == 0)
-    corpus = docs.where(F.col("doc_id") % 4 != 0)
-    idx = minhash_signatures(token_set(corpus), num_perm=16)
-    return incremental_minhash_dedup(
-        newd, idx, num_perm=16, bands=4, threshold=0.7
-    )
-
-
-_register(
-    "incremental_minhash",
-    _incremental_minhash,
-    f"""
-WITH newtoks AS (
-  SELECT DISTINCT doc_id, unnest({TOKS}) AS token FROM documents
-  WHERE doc_id % 4 = 0),
-oldtoks AS (
-  SELECT DISTINCT doc_id, unnest({TOKS}) AS token FROM documents
-  WHERE doc_id % 4 <> 0),
-{_minhash_sql("newtoks", sig="nsigs", bucket="nb")},{_minhash_sql("oldtoks", sig="osigs", bucket="ob")},
-cand AS (
-  SELECT DISTINCT n.doc_id AS new_id, o.doc_id AS old_id
-  FROM nb n JOIN ob o ON n.bucket = o.bucket),
-est AS (
-  SELECT c.new_id, c.old_id,
-         avg(CASE WHEN ns.sig = os.sig THEN 1.0::DOUBLE
-                  ELSE 0.0::DOUBLE END) AS e
-  FROM cand c
-  JOIN nsigs ns ON ns.doc_id = c.new_id
-  JOIN osigs os ON os.doc_id = c.old_id AND os.perm = ns.perm
-  GROUP BY c.new_id, c.old_id),
-best AS (
-  SELECT new_id, old_id, e,
-         row_number() OVER (PARTITION BY new_id ORDER BY e DESC, old_id) AS rn
-  FROM est WHERE e >= 0.7::DOUBLE)
-SELECT new_id AS doc_id, old_id AS dup_of, round(e, 6) AS est_jaccard
-FROM best WHERE rn = 1
-""",
-)
-
-
-def _rolling_zscore(spark, sf):
-    """Rolling z-score anomaly gate over the event stream (20-row
-    preceding frame per user); result restricted to scored rows to
-    keep the frame deterministic across engines."""
-    from ..operators.windows import rolling_zscore
-
-    out = rolling_zscore(_tp(spark, sf, "events"))
-    return out.where(F.col("z").isNotNull()).select(
-        "event_id", "z", "is_anomaly"
-    )
-
-
-_register(
-    "rolling_zscore",
-    _rolling_zscore,
-    """
-WITH scored AS (
-  SELECT event_id,
-         avg(value) OVER w AS mu,
-         stddev_samp(value) OVER w AS sd,
-         value
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts NULLS FIRST, event_id NULLS FIRST
-               ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING))
-SELECT event_id, round((value - mu) / sd, 6) AS z,
-       abs(round((value - mu) / sd, 6)) > 3.0::DOUBLE AS is_anomaly
-FROM scored WHERE sd IS NOT NULL AND sd <> 0.0::DOUBLE
-""",
-)
-
-
-def _negative_samples(spark, sf):
-    """k=3 deterministic negative pairs over documents, excluding the
-    ring-adjacency positives (i, i+1 mod n)."""
-    from ..operators.curation import negative_samples
-
-    docs = _tp(spark, sf, "documents").select("doc_id")
-    n_df = F.broadcast(docs.agg(F.count(F.lit(1)).alias("_n")))
-    pos = docs.crossJoin(n_df).select(
-        F.col("doc_id").alias("x"),
-        ((F.col("doc_id") + 1) % F.col("_n")).alias("y"),
-    )
-    return negative_samples(docs, pos, k=3)
-
-
-_register(
-    "negative_samples",
-    _negative_samples,
-    """
-WITH ids AS (SELECT DISTINCT doc_id AS id FROM documents),
-idx AS (SELECT id, row_number() OVER (ORDER BY id) - 1 AS ix FROM ids),
-nn AS (SELECT count(*) AS n FROM idx),
-drawn AS (
-  SELECT i.id, i.ix, nn.n, j.j,
-         ('0x' || substring(md5('n0|' || CAST(i.ix AS VARCHAR) || '|'
-                                 || CAST(j.j AS VARCHAR)), 1, 13))::BIGINT
-         % nn.n AS pix
-  FROM idx i, nn, (SELECT unnest(range(1, 4)) AS j) j),
-paired AS (
-  SELECT DISTINCT least(d.id, p.id) AS a, greatest(d.id, p.id) AS b
-  FROM drawn d JOIN idx p ON d.pix = p.ix WHERE d.id <> p.id),
-pos AS (
-  SELECT DISTINCT least(doc_id, (doc_id + 1) % nn.n) AS a,
-         greatest(doc_id, (doc_id + 1) % nn.n) AS b
-  FROM documents, nn)
-SELECT a, b FROM paired
-WHERE NOT EXISTS (SELECT 1 FROM pos WHERE pos.a = paired.a AND pos.b = paired.b)
-""",
-)
-
-
-def _funnel_counts(spark, sf):
-    """signup → click → purchase conversion funnel, first-touch
-    anchored, over the event stream."""
-    from ..operators.windows import funnel_counts
-
-    return funnel_counts(_tp(spark, sf, "events"))
-
-
-_register(
-    "funnel_counts",
-    _funnel_counts,
-    """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t FROM events
-  WHERE event_type = 'signup' GROUP BY user_id),
-s2 AS (
-  SELECT e.user_id, min(e.ts) AS t FROM events e
-  JOIN s1 ON e.user_id = s1.user_id AND e.ts > s1.t
-  WHERE e.event_type = 'click' GROUP BY e.user_id),
-s3 AS (
-  SELECT e.user_id, min(e.ts) AS t FROM events e
-  JOIN s2 ON e.user_id = s2.user_id AND e.ts > s2.t
-  WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-SELECT 1 AS step_index, 'signup' AS step, (SELECT count(*) FROM s1) AS users
-UNION ALL
-SELECT 2, 'click', (SELECT count(*) FROM s2)
-UNION ALL
-SELECT 3, 'purchase', (SELECT count(*) FROM s3)
-""",
-)
-
-
-def _quality_percentile(spark, sf):
-    """Cross-lingual quality calibration: percent_rank of the quality
-    score WITHIN each language, so one threshold means the same thing
-    in every language (raw score distributions differ by language;
-    rank-normalizing is the standard fix). ONE hash exchange + one
-    sort (single Window); the oracle wraps the existing
-    quality_score oracle as a derived table."""
-    from pyspark.sql import Window
-
-    from ..functions.text import quality_score
-
-    docs = _tp(spark, sf, "documents")
-    scored = docs.select(
-        "doc_id",
-        "lang",
-        F.round(quality_score(F.col("text")), 6).alias("q"),
-    )
-    # NO doc_id tiebreak: percent_rank assigns equal scores equal
-    # percentiles (tie-deterministic in both engines); a tiebreak would
-    # scatter byte-identical scores across a percentile range and break
-    # the "one threshold per language" claim
-    w = Window.partitionBy("lang").orderBy(F.col("q").asc())
-    return scored.withColumn(
-        "q_pctile", F.round(F.percent_rank().over(w), 6)
-    )
-
-
-_register(
-    "quality_percentile",
-    _quality_percentile,
-    f"""
-SELECT b.doc_id, d.lang, b.quality AS q,
-       round(percent_rank() OVER (PARTITION BY d.lang
-             ORDER BY b.quality), 6) AS q_pctile
-FROM ({ORACLES["quality_score"]}) b
-JOIN documents d ON b.doc_id = d.doc_id
-""",
-)
-
-
-def _label_centroids(spark, sf):
-    """Per-label embedding centroid in long form (label, pos, v) —
-    the seed computation for IVF lists / per-class prototypes.
-    posexplode is map-side; one hash aggregate on (label, pos) with
-    partial combine — dimension count bounds the agg state."""
-    emb = _tp(spark, sf, "embeddings")
-    return (
-        emb.select("label", F.posexplode("embedding").alias("pos", "v"))
-        .groupBy("label", "pos")
-        .agg(F.round(F.avg("v"), 6).alias("v"))
-    )
-
-
-_register(
-    "label_centroids",
-    _label_centroids,
-    """
-SELECT t.label, g.pos - 1 AS pos,
-       round(avg(t.embedding[g.pos]), 6) AS v
-FROM embeddings t,
-     LATERAL (SELECT unnest(generate_series(1, len(t.embedding))) AS pos) g
-GROUP BY t.label, g.pos - 1
-""",
-)
-
-
-def _pricing_summary(spark, sf):
-    """TPC-H Q1-shaped pricing summary. Money math runs in
-    DECIMAL(18,2)/(38,4) so the giant per-group sums are EXACT and
-    order-independent — the cross-engine-safe form of a 10^5-row
-    float sum (summing doubles in different orders drifts ~1e-2 at
-    this magnitude, beyond any rounding pin). One hash aggregate with
-    map-side combine; the shipdate filter pushes to the scan."""
-    li = _tp(spark, sf, "lineitem").where(
-        F.col("l_shipdate") <= F.lit("2025-06-01 00:00:00").cast("timestamp_ntz")
-    )
-    dec = "decimal(18,2)"
-    qty = F.col("l_quantity").cast(dec)
-    price = F.col("l_extendedprice").cast(dec)
-    disc_mult = (F.lit(1).cast(dec) - F.col("l_discount").cast(dec))
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(qty).cast("double").alias("sum_qty"),
-            F.sum(price).cast("double").alias("sum_base"),
-            F.sum(price * disc_mult).cast("double").alias("sum_disc"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            "l_returnflag",
-            "l_linestatus",
-            "sum_qty",
-            "sum_base",
-            F.round("sum_disc", 4).alias("sum_disc"),
-            "n",
-        )
-    )
-
-
-_register(
-    "pricing_summary",
-    _pricing_summary,
-    """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                 * (1 - CAST(l_discount AS DECIMAL(18,2)))) AS DOUBLE), 4)
-         AS sum_disc,
-       count(*) AS n
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '2025-06-01'
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-
-
-def _top_customers(spark, sf):
-    """TPC-H Q10-shaped revenue rollup: customer ⋈ orders ⋈ lineitem,
-    exact decimal revenue per customer, top 20 under a total order.
-    customer and orders broadcast against the lineitem fact at bench
-    scale; at 100 TB the same plan becomes two co-partitioned hash
-    joins on the key chain custkey→orderkey (both high-cardinality,
-    AQE-splittable)."""
-    cust = _tp(spark, sf, "customer")
-    orders = _tp(spark, sf, "orders")
-    li = _tp(spark, sf, "lineitem")
-    dec = "decimal(18,2)"
-    rev = F.col("l_extendedprice").cast(dec) * (
-        F.lit(1).cast(dec) - F.col("l_discount").cast(dec)
-    )
-    j = li.join(
-        orders.select("o_orderkey", "o_custkey"),
-        li["l_orderkey"] == orders["o_orderkey"],
-    ).join(
-        F.broadcast(cust.select("c_custkey", "c_name")),
-        F.col("o_custkey") == F.col("c_custkey"),
-    )
-    return (
-        j.groupBy("c_custkey", "c_name")
-        .agg(F.sum(rev).cast("double").alias("revenue"))
-        .select("c_custkey", "c_name", F.round("revenue", 4).alias("revenue"))
-        .orderBy(F.desc("revenue"), "c_custkey")
-        .limit(20)
-    )
-
-
-_register(
-    "top_customers",
-    _top_customers,
-    """
-SELECT c.c_custkey, c.c_name,
-       round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                 * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE), 4)
-         AS revenue
-FROM lineitem l
-JOIN orders o ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-GROUP BY c.c_custkey, c.c_name
-ORDER BY revenue DESC, c.c_custkey
-LIMIT 20
-""",
-)
-
-
-def _hopping_counts(spark, sf):
-    """Sliding (hopping) window rollup: 60-minute windows every 20
-    minutes, per event_type — each event lands in exactly 3 windows
-    via Spark's built-in `window()` (JVM-side explode, epoch-aligned).
-    The oracle reconstructs the same epoch-aligned window starts."""
-    ev = _tp(spark, sf, "events")
-    return (
-        ev.groupBy(
-            F.window("ts", "60 minutes", "20 minutes").alias("w"),
-            "event_type",
-        )
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(
-            F.col("w.start").alias("w_start"),
-            F.col("w.end").alias("w_end"),
-            "event_type",
-            "cnt",
-        )
-    )
-
-
-_register(
-    "hopping_counts",
-    _hopping_counts,
-    """
-WITH ev AS (
-  SELECT event_type, ts, epoch_us(ts) AS us FROM events),
-hits AS (
-  SELECT event_type, ts,
-         (us // 1200000000 - k.k) * 1200000000 AS s_us
-  FROM ev, (SELECT unnest(range(3)) AS k) k
-  WHERE (us // 1200000000 - k.k) * 1200000000 + 3600000000 > us
-    AND (us // 1200000000 - k.k) * 1200000000 <= us)
-SELECT make_timestamp(s_us) AS w_start,
-       make_timestamp(s_us + 3600000000) AS w_end,
-       event_type, count(*) AS cnt
-FROM hits GROUP BY s_us, event_type
-""",
-)
-
-
-def _quality_audit(spark, sf):
-    """Three-rule QA gate over documents in ONE scan (conditional
-    counts, NULL counts as violation)."""
-    from ..operators.curation import quality_audit
-
-    docs = _tp(spark, sf, "documents")
-    return quality_audit(
-        docs,
-        {
-            "nonempty_text": F.length("text") > 0,
-            "lang_known": F.col("lang").isin("en", "de", "fr", "es", "nl"),
-            "n_chars_consistent": F.col("n_chars") == F.length("text"),
-        },
-    )
-
-
-_register(
-    "quality_audit",
-    _quality_audit,
-    """
-WITH w AS (
-  SELECT
-    CAST(sum(CASE WHEN coalesce(length(text) > 0, false)
-         THEN 0 ELSE 1 END) AS BIGINT) AS v1,
-    CAST(sum(CASE WHEN coalesce(lang IN ('en','de','fr','es','nl'), false)
-         THEN 0 ELSE 1 END) AS BIGINT) AS v2,
-    CAST(sum(CASE WHEN coalesce(n_chars = length(text), false)
-         THEN 0 ELSE 1 END) AS BIGINT) AS v3,
-    count(*) AS total
-  FROM documents)
-SELECT 'nonempty_text' AS rule, v1 AS violations, total,
-       round(CAST(total - v1 AS DOUBLE) / total, 6) AS pass_rate FROM w
-UNION ALL
-SELECT 'lang_known', v2, total,
-       round(CAST(total - v2 AS DOUBLE) / total, 6) FROM w
-UNION ALL
-SELECT 'n_chars_consistent', v3, total,
-       round(CAST(total - v3 AS DOUBLE) / total, 6) FROM w
-""",
-)
-
-
-def _random_projection(spark, sf):
-    """64-d → 16-d signed random projection over the embeddings table
-    (long form); matrix derived from md5, never materialized."""
-    from ..operators.similarity import signed_random_projection
-
-    # dim=64 (the corpus width) takes the driver-side literal-sign
-    # path: zero shuffles vs the explode+groupBy fallback
-    return signed_random_projection(_tp(spark, sf, "embeddings"), dim=64)
-
-
-_register(
-    "random_projection",
-    _random_projection,
-    """
-WITH ex AS (
-  SELECT t.vec_id, g.i - 1 AS i, CAST(t.embedding[g.i] AS DOUBLE) AS v
-  FROM embeddings t,
-       LATERAL (SELECT unnest(generate_series(1, len(t.embedding))) AS i) g),
-signed AS (
-  SELECT vec_id, j.j, v,
-         CASE WHEN ('0x' || substring(md5('rp|' || CAST(i AS VARCHAR)
-                    || '|' || CAST(j.j AS VARCHAR)), 1, 1))::INT % 2 = 0
-              THEN 1.0::DOUBLE ELSE -1.0::DOUBLE END AS s
-  FROM ex, (SELECT unnest(range(16)) AS j) j)
-SELECT vec_id, j, round(sum(v * s), 6) AS proj
-FROM signed GROUP BY vec_id, j
-""",
-)
-
-
-def _metric_drift(spark, sf):
-    """Drift monitor: per (event_type, day) mean value, its 7-day
-    trailing moving average, and the deviation — the ingest-health
-    time series a production pipeline alerts on. One aggregate + one
-    window over the (type, day) rollup (tiny vs the event table)."""
-    from pyspark.sql import Window
-
-    ev = _tp(spark, sf, "events")
-    daily = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.round(F.avg("value"), 6).alias("avg_v"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("day")
-        .rowsBetween(-6, 0)
-    )
-    return daily.withColumn(
-        "ma7", F.round(F.avg("avg_v").over(w), 6)
-    ).withColumn("drift", F.round(F.col("avg_v") - F.col("ma7"), 6))
-
-
-_register(
-    "metric_drift",
-    _metric_drift,
-    """
-WITH daily AS (
-  SELECT event_type, date_trunc('day', ts) AS day,
-         round(avg(value), 6) AS avg_v
-  FROM events GROUP BY event_type, date_trunc('day', ts)),
-ma AS (
-  SELECT event_type, day, avg_v,
-         round(avg(avg_v) OVER (PARTITION BY event_type ORDER BY day
-               ROWS BETWEEN 6 PRECEDING AND CURRENT ROW), 6) AS ma7
-  FROM daily)
-SELECT event_type, day, avg_v, ma7, round(avg_v - ma7, 6) AS drift
-FROM ma
-""",
-)
-
-
-def _topk_per_group(spark, sf):
-    """Top-3 events by value per event_type under a total order —
-    compiles to WindowGroupLimit (each map task forwards at most k
-    rows per group before the exchange; asserted in tests), the
-    shape that makes per-group top-k safe on 10^12-row groups."""
-    from pyspark.sql import Window
-
-    ev = _tp(spark, sf, "events")
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    return (
-        ev.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("event_type", "rk", "event_id", F.round("value", 6).alias("value"))
-    )
-
-
-_register(
-    "topk_per_group",
-    _topk_per_group,
-    """
-SELECT event_type, rk, event_id, round(value, 6) AS value
-FROM (
-  SELECT event_type, event_id, value,
-         row_number() OVER (PARTITION BY event_type
-                            ORDER BY value DESC, event_id) AS rk
-  FROM events)
-WHERE rk <= 3
-""",
-)
-
-
-def _value_histogram(spark, sf):
-    """Fixed-width histogram of event values per event_type (bin
-    width 25, clamped to [0, 500)): the distribution summary a 100-TB
-    profiler computes in ONE map-side-combining aggregate — never a
-    sort, never a collect."""
-    ev = _tp(spark, sf, "events")
-    bin_ = F.least(
-        F.floor(F.greatest(F.col("value"), F.lit(0.0)) / 25).cast("int"),
-        F.lit(19),
-    )
-    return (
-        ev.groupBy("event_type", bin_.alias("bin"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .withColumn("lo", (F.col("bin") * 25).cast("double"))
-    )
-
-
-_register(
-    "value_histogram",
-    _value_histogram,
-    """
-SELECT event_type, bin, count(*) AS cnt,
-       CAST(bin * 25 AS DOUBLE) AS lo
-FROM (
-  SELECT event_type,
-         CAST(least(floor(greatest(value, 0.0) / 25), 19) AS INT) AS bin
-  FROM events)
-GROUP BY event_type, bin
-""",
-)
-
-
-def _centroid_similarity(spark, sf):
-    """Pairwise cosine between per-label centroids (long-form
-    centroids pivoted back to arrays via sort_array/collect_list) —
-    the tiny all-pairs that IS safe: |labels|² rows, broadcast-
-    joined."""
-    cent = QUERIES["label_centroids"](spark, sf)
-    arr = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("v")))
-            ),
-            lambda s: s["v"],
-        ).alias("vec")
-    )
-    a, b = arr.alias("a"), arr.alias("b")
-    pair = a.join(
-        F.broadcast(b), F.col("a.label") < F.col("b.label")
-    )
-    from ..operators.similarity import cosine
-
-    return pair.select(
-        F.col("a.label").alias("label_a"),
-        F.col("b.label").alias("label_b"),
-        F.round(cosine(F.col("a.vec"), F.col("b.vec")), 6).alias("cos"),
-    )
-
-
-_register(
-    "centroid_similarity",
-    _centroid_similarity,
-    f"""
-WITH cent AS ({ORACLES["label_centroids"]}),
-arr AS (
-  SELECT label, list(v ORDER BY pos) AS vec FROM cent GROUP BY label),
-pair AS (
-  SELECT a.label AS label_a, b.label AS label_b, a.vec AS va, b.vec AS vb
-  FROM arr a JOIN arr b ON a.label < b.label)
-SELECT label_a, label_b,
-       round(list_sum(list_transform(range(1, len(va) + 1),
-                                     i -> va[i] * vb[i]))
-             / (sqrt(list_sum(list_transform(va, x -> x * x)))
-                * sqrt(list_sum(list_transform(vb, x -> x * x)))), 6) AS cos
-FROM pair
-""",
-)
-
-
-def _weighted_pagerank(spark, sf):
-    """Weighted PageRank on the two-edge synthetic graph: the *31+7
-    edges carry weight 2, the *17+3 edges weight 1 — the oracle
-    unrolls the same weighted recurrence."""
-    from ..operators.graph import weighted_pagerank
-
-    edges = _hash_edges(spark, sf, weights=(2.0, 1.0))
-    return weighted_pagerank(edges, iterations=5).select(
-        "node", F.round("rank", 6).alias("rank")
-    )
-
-
-def _weighted_pagerank_oracle(iterations: int = 5) -> str:
-    head = f"""
-WITH nc AS (SELECT count(*) AS n FROM documents),
-raw AS ({_hash_edges_sql(weights=(2.0, 1.0))}),
-edges AS (SELECT src, dst, sum(w) AS w FROM raw GROUP BY src, dst),
-nodes AS (SELECT DISTINCT node FROM (
-  SELECT src AS node FROM edges UNION ALL SELECT dst FROM edges)),
-nn AS (SELECT count(*) AS n FROM nodes),
-wsum AS (SELECT src, sum(w) AS ws FROM edges GROUP BY src),
-en AS (SELECT e.src, e.dst, e.w / wsum.ws AS frac
-       FROM edges e JOIN wsum ON e.src = wsum.src),
-r0 AS (SELECT node, CAST(1.0 AS DOUBLE) / nn.n AS r FROM nodes, nn)"""
-    body = ""
-    for k in range(1, iterations + 1):
-        body += f""",
-s{k} AS (
-  SELECT en.dst AS node, sum(r.r * en.frac) AS c
-  FROM en JOIN r{k - 1} r ON en.src = r.node GROUP BY en.dst),
-dm{k} AS (
-  SELECT coalesce(sum(r.r), CAST(0.0 AS DOUBLE)) AS m
-  FROM r{k - 1} r LEFT JOIN wsum ON r.node = wsum.src
-  WHERE wsum.src IS NULL),
-r{k} AS (
-  SELECT nodes.node,
-         (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn.n
-         + CAST(0.85 AS DOUBLE)
-           * (coalesce(s.c, CAST(0.0 AS DOUBLE)) + dm{k}.m / nn.n) AS r
-  FROM nodes CROSS JOIN nn CROSS JOIN dm{k}
-  LEFT JOIN s{k} s ON nodes.node = s.node)"""
-    return (
-        head
-        + body
-        + f"\nSELECT node, round(r, 6) AS rank FROM r{iterations}"
-    )
-
-
-_register("weighted_pagerank", _weighted_pagerank, _weighted_pagerank_oracle(5))
-
-
-def _regional_revenue(spark, sf):
-    """TPC-H Q5-shaped star join: lineitem fact against the supplier →
-    nation → region dimension chain, exact decimal revenue per region.
-    The three dimensions chain-broadcast (each is tiny); the fact
-    table never shuffles before the final region aggregate — the
-    canonical star-schema plan at any scale."""
-    li = _tp(spark, sf, "lineitem")
-    sup = _tp(spark, sf, "supplier").select("s_suppkey", "s_nationkey")
-    nat = _tp(spark, sf, "nation").select("n_nationkey", "n_regionkey")
-    reg = _tp(spark, sf, "region")
-    dec = "decimal(18,2)"
-    rev = F.col("l_extendedprice").cast(dec) * (
-        F.lit(1).cast(dec) - F.col("l_discount").cast(dec)
-    )
-    dim = (
-        sup.join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
-        .join(F.broadcast(reg), F.col("n_regionkey") == reg["r_regionkey"])
-        .select("s_suppkey", "r_name")
-    )
-    return (
-        li.join(F.broadcast(dim), li["l_suppkey"] == dim["s_suppkey"])
-        .groupBy("r_name")
-        .agg(
-            F.sum(rev).cast("double").alias("revenue"),
-            F.count(F.lit(1)).alias("n_items"),
-        )
-        .select("r_name", F.round("revenue", 4).alias("revenue"), "n_items")
-    )
-
-
-_register(
-    "regional_revenue",
-    _regional_revenue,
-    """
-SELECT r.r_name,
-       round(CAST(sum(CAST(l.l_extendedprice AS DECIMAL(18,2))
-                 * (1 - CAST(l.l_discount AS DECIMAL(18,2)))) AS DOUBLE), 4)
-         AS revenue,
-       count(*) AS n_items
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-GROUP BY r.r_name
-""",
-)
-
-
-def _graph_diff(spark, sf):
-    """Crawl-delta diff: the 'previous snapshot' is the current KG
-    with even-custkey prefLabels in their pre-rename form (upper-
-    cased) — so the diff carries both added (new labels) and removed
-    (old labels) rows."""
-    from ..model import graph_diff
-
-    new = kg_triples(spark, sf).select("s", "p", "o")
-    custkey = F.regexp_extract(F.col("s"), r"urn:cust:(\d+)", 1)
-    mutate = (
-        (F.col("p") == SKOS + "prefLabel")
-        & F.col("s").startswith("urn:cust:")
-        & (custkey.cast("long") % 2 == 0)
-    )
-    old = new.withColumn(
-        "o", F.when(mutate, F.upper(F.col("o"))).otherwise(F.col("o"))
-    )
-    return graph_diff(old, new)
-
-
-_register(
-    "graph_diff",
-    _graph_diff,
-    KG_SQL
-    + f"""
-, newt AS (SELECT s, p, o FROM triples),
-old AS (
-  SELECT s, p,
-         CASE WHEN p = '{SKOS}prefLabel' AND s LIKE 'urn:cust:%'
-                   AND CAST(substr(s, 10) AS BIGINT) % 2 = 0
-              THEN upper(o) ELSE o END AS o
-  FROM newt)
-SELECT 'added' AS op, n.s, n.p, n.o FROM newt n
-WHERE NOT EXISTS (SELECT 1 FROM old o2
-                  WHERE o2.s = n.s AND o2.p = n.p AND o2.o = n.o)
-UNION ALL
-SELECT 'removed', o2.s, o2.p, o2.o FROM old o2
-WHERE NOT EXISTS (SELECT 1 FROM newt n
-                  WHERE n.s = o2.s AND n.p = o2.p AND n.o = o2.o)
-""",
-)
-
-
-def _winsorized_stats(spark, sf):
-    """Winsorized per-type statistics: clip values at the type's
-    [p05, p95] (exact linear-interpolation percentiles — the
-    definition Spark `percentile` and DuckDB `quantile_cont` share),
-    then mean/min/max of the clipped series. The outlier-robust
-    rollup a metrics pipeline publishes. Percentiles ride a tiny
-    broadcast join back onto the events."""
-    ev = _tp(spark, sf, "events")
-    pct = ev.groupBy("event_type").agg(
-        F.percentile(F.col("value"), F.lit(0.05)).alias("_lo"),
-        F.percentile(F.col("value"), F.lit(0.95)).alias("_hi"),
-    )
-    clipped = ev.join(F.broadcast(pct), "event_type").select(
-        "event_type",
-        F.least(F.greatest(F.col("value"), F.col("_lo")), F.col("_hi")).alias(
-            "_c"
-        ),
-    )
-    return clipped.groupBy("event_type").agg(
-        F.round(F.avg("_c"), 6).alias("wins_mean"),
-        F.round(F.min("_c"), 6).alias("wins_min"),
-        F.round(F.max("_c"), 6).alias("wins_max"),
-    )
-
-
-_register(
-    "winsorized_stats",
-    _winsorized_stats,
-    """
-WITH pct AS (
-  SELECT event_type,
-         quantile_cont(value, 0.05) AS lo,
-         quantile_cont(value, 0.95) AS hi
-  FROM events GROUP BY event_type),
-clipped AS (
-  SELECT e.event_type,
-         least(greatest(e.value, p.lo), p.hi) AS c
-  FROM events e JOIN pct p ON e.event_type = p.event_type)
-SELECT event_type, round(avg(c), 6) AS wins_mean,
-       round(min(c), 6) AS wins_min, round(max(c), 6) AS wins_max
-FROM clipped GROUP BY event_type
-""",
-)
-
-
-def _target_encoding(spark, sf):
-    """Leave-one-out target encoding of event_type against value:
-    each row's feature is the mean value of its category EXCLUDING
-    itself — (Σ−v)/(n−1), the leakage-free categorical encoding for
-    model training. One window (sum+count over the category) — no
-    per-row subquery. Exact integer-safe arithmetic: sums ride
-    DECIMAL, the final divide is double, rounded to 6."""
-    from pyspark.sql import Window
-
-    ev = _tp(spark, sf, "events")
-    dec = "decimal(18,2)"
-    w = Window.partitionBy("event_type")
-    vs = F.sum(F.col("value").cast(dec)).over(w)
-    n = F.count(F.lit(1)).over(w)
-    loo = F.when(
-        n > 1,
-        F.round(
-            (vs - F.col("value").cast(dec)).cast("double") / (n - 1), 6
-        ),
-    )
-    return ev.select("event_id", "event_type", loo.alias("loo_mean"))
-
-
-_register(
-    "target_encoding",
-    _target_encoding,
-    """
-SELECT event_id, event_type,
-       CASE WHEN count(*) OVER w > 1 THEN
-         round(CAST(sum(CAST(value AS DECIMAL(18,2))) OVER w
-                    - CAST(value AS DECIMAL(18,2)) AS DOUBLE)
-               / (count(*) OVER w - 1), 6)
-       END AS loo_mean
-FROM events
-WINDOW w AS (PARTITION BY event_type)
-""",
-)
-
-
-def _label_propagation(spark, sf):
-    """Synchronous LPA communities on the standard two-edge synthetic
-    graph (same edges as weighted_pagerank, symmetrized inside the
-    operator); oracle unrolls the identical sweeps."""
-    from ..operators.graph import label_propagation
-
-    return label_propagation(_hash_edges(spark, sf), iterations=4)
-
-
-def _label_propagation_oracle(iterations: int = 4) -> str:
-    head = f"""
-WITH nc AS (SELECT count(*) AS n FROM documents),
-raw AS ({_hash_edges_sql(src="s", dst="d")}),
-und AS (SELECT DISTINCT s, d FROM (
-  SELECT s, d FROM raw WHERE s <> d
-  UNION ALL SELECT d, s FROM raw WHERE s <> d)),
--- node universe from RAW edges: a node whose only incident edges are
--- self-loops still gets a community (its own label) — mirrors the
--- operator
-nodes AS (SELECT DISTINCT node FROM (
-  SELECT s AS node FROM raw UNION ALL SELECT d FROM raw)),
-l0 AS (SELECT node, node AS label FROM nodes)"""
-    body = ""
-    for k in range(1, iterations + 1):
-        body += f""",
-c{k} AS (
-  SELECT u.d AS node, l.label, count(*) AS c
-  FROM und u JOIN l{k - 1} l ON u.s = l.node GROUP BY u.d, l.label),
-n{k} AS (
-  SELECT node, label FROM (
-    SELECT node, label,
-           row_number() OVER (PARTITION BY node
-                              ORDER BY c DESC, label ASC) AS rn
-    FROM c{k}) WHERE rn = 1),
-l{k} AS (
-  SELECT l.node, coalesce(n.label, l.label) AS label
-  FROM l{k - 1} l LEFT JOIN n{k} n ON l.node = n.node)"""
-    return head + body + f"\nSELECT node, label FROM l{iterations}"
-
-
-_register("label_propagation", _label_propagation, _label_propagation_oracle(4))
-
-
-def _dsir_weights(spark, sf):
-    """DSIR hashed-unigram importance weights: target distribution =
-    the English slice, raw = the whole corpus; every doc scored."""
-    from ..operators.curation import dsir_weights
-
-    docs = _tp(spark, sf, "documents")
-    return dsir_weights(
-        docs, docs.where(F.col("lang") == "en"), n_buckets=64, alpha=1.0
-    )
-
-
-_register(
-    "dsir_weights",
-    _dsir_weights,
-    f"""
-WITH toks AS (
-  SELECT doc_id, lang, unnest({TOKS}) AS token FROM documents
-),
-tb AS (
-  SELECT doc_id, lang,
-         CAST(CAST(concat('0x', substr(md5(token), 1, 8)) AS UBIGINT)
-              AS BIGINT) % 64 AS b
-  FROM toks
-),
-tcnt AS (SELECT b, count(*) AS tc FROM tb WHERE lang = 'en' GROUP BY b),
-rcnt AS (SELECT b, count(*) AS rc FROM tb GROUP BY b),
-ttot AS (SELECT sum(tc) AS tt FROM tcnt),
-rtot AS (SELECT sum(rc) AS rt FROM rcnt),
-ratios AS (
-  SELECT r.b,
-         ln((coalesce(t.tc, 0) + 1.0::DOUBLE) / (ttot.tt + 64.0::DOUBLE))
-         - ln((r.rc + 1.0::DOUBLE) / (rtot.rt + 64.0::DOUBLE)) AS lr
-  FROM rcnt r LEFT JOIN tcnt t ON r.b = t.b, ttot, rtot),
-scored AS (
-  SELECT tb.doc_id, count(*) AS n_tokens, round(sum(ratios.lr), 6) AS w
-  FROM tb JOIN ratios ON tb.b = ratios.b GROUP BY tb.doc_id)
-SELECT d.doc_id,
-       coalesce(s.n_tokens, 0) AS n_tokens,
-       coalesce(s.w, 0.0::DOUBLE) AS dsir_logweight
-FROM documents d LEFT JOIN scored s ON d.doc_id = s.doc_id
 """,
 )
 
@@ -5057,48 +1524,6 @@ SELECT DISTINCT s, p, o FROM (
 )
 
 
-def _phash_neardup(spark, sf):
-    """Perceptual-hash media near-dup: banded Hamming-LSH pairs at
-    distance ≤ 2 over the 16-bit stub-decoded pHash; the oracle
-    mirrors the sha256-stub pixels (pixels i and i+8 coincide, so bit
-    i+8 duplicates bit i) and verifies via all-pairs bit_count(xor)
-    at oracle scale."""
-    from ..operators.multimodal import media_from_documents, phash_neardup
-
-    media = media_from_documents(_tp(spark, sf, "documents"))
-    return phash_neardup(media, max_hamming=2)
-
-
-_register(
-    "phash_neardup",
-    _phash_neardup,
-    """
-WITH m AS (
-  SELECT doc_id AS media_id, sha256(text) AS h FROM documents
-),
-v AS (
-  SELECT media_id, i,
-         SUM((strpos('0123456789abcdef', lower(substr(h, 8*i + j, 1))) - 1)
-             * power(16, 8 - j)) AS val
-  FROM m, range(8) t(i), range(1, 9) u(j)
-  GROUP BY media_id, i
-),
-mn AS (SELECT media_id, avg(val) AS mean FROM v GROUP BY media_id),
-ph AS (
-  SELECT v.media_id,
-         CAST(COALESCE(SUM(CASE WHEN v.val > mn.mean
-              THEN power(2, v.i) + power(2, v.i + 8) END), 0) AS BIGINT)
-           AS phash
-  FROM v JOIN mn ON v.media_id = mn.media_id GROUP BY v.media_id
-)
-SELECT a.media_id AS a, b.media_id AS b,
-       bit_count(xor(a.phash, b.phash)) AS hamming
-FROM ph a JOIN ph b ON a.media_id < b.media_id
-WHERE bit_count(xor(a.phash, b.phash)) <= 2
-""",
-)
-
-
 def _sameas_fusion(spark, sf):
     """owl:sameAs fusion — the north-rule canonicalization applied to
     the triple store end-to-end: equivalence edges (deterministic
@@ -5176,145 +1601,6 @@ SELECT dst AS ancestor,
        count(DISTINCT src) AS descendants,
        CAST(max(dist) AS BIGINT) AS max_depth
 FROM closure GROUP BY dst
-""",
-)
-
-
-def _kmeans_embeddings(spark, sf):
-    """Deterministic Lloyd k-means (k=4, 2 iterations) over the
-    embeddings table — seeding, rounding, and tie-breaks pinned so the
-    DuckDB oracle replays the identical trajectory (centroids and
-    distances round to 6 each step; argmin ties break on cluster id)."""
-    from ..operators.similarity import kmeans_assign
-
-    return kmeans_assign(_tp(spark, sf, "embeddings"), k=4, iterations=2)
-
-
-_KMEANS_CTE = """
-WITH ev AS (
-  SELECT vec_id, i - 1 AS pos, CAST(embedding[i] AS DOUBLE) AS val
-  FROM embeddings, range(1, 65) t(i)
-),
-c0 AS (
-  SELECT row_number() OVER (ORDER BY vec_id) - 1 AS cid, vec_id
-  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 4)
-),
-c0v AS (
-  SELECT c0.cid, ev.pos, round(ev.val, 6) AS cv
-  FROM c0 JOIN ev ON c0.vec_id = ev.vec_id
-),
-d1 AS (
-  SELECT ev.vec_id, c.cid,
-         round(sum((ev.val - c.cv) * (ev.val - c.cv)), 6) AS d
-  FROM ev JOIN c0v c ON ev.pos = c.pos
-  GROUP BY ev.vec_id, c.cid
-),
-a1 AS (
-  SELECT vec_id, cid,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-  FROM d1
-),
-c1 AS (
-  SELECT a1.cid, ev.pos, round(avg(ev.val), 6) AS cv
-  FROM a1 JOIN ev ON a1.vec_id = ev.vec_id AND a1.rn = 1
-  GROUP BY a1.cid, ev.pos
-),
-d2 AS (
-  SELECT ev.vec_id, c.cid,
-         round(sum((ev.val - c.cv) * (ev.val - c.cv)), 6) AS d
-  FROM ev JOIN c1 c ON ev.pos = c.pos
-  GROUP BY ev.vec_id, c.cid
-),
-a2 AS (
-  SELECT vec_id, cid, d,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d, cid) AS rn
-  FROM d2
-)
-SELECT vec_id, CAST(cid AS BIGINT) AS cluster, d AS dist
-FROM a2 WHERE rn = 1
-"""
-
-# the WITH block alone (everything up to the final projection), for
-# queries composing on the k-means assignment
-_KMEANS_WITH = _KMEANS_CTE[: _KMEANS_CTE.rindex("SELECT vec_id")]
-
-_register(
-    "kmeans_embeddings",
-    _kmeans_embeddings,
-    _KMEANS_CTE,
-)
-
-
-def _semantic_neardup(spark, sf):
-    """SemDeDup: k-means cluster the embeddings, then exact cosine
-    near-dup pairs WITHIN clusters only — all-pairs work bounded by
-    the largest cluster, never the corpus (k scales with corpus size
-    at 100 TB so cluster populations stay bounded)."""
-    from ..operators.similarity import semantic_neardup
-
-    return semantic_neardup(
-        _tp(spark, sf, "embeddings"), k=4, iterations=2, threshold=0.35
-    )
-
-
-_register(
-    "semantic_neardup",
-    _semantic_neardup,
-    _KMEANS_WITH
-    + """,
-asgn AS (SELECT vec_id, CAST(cid AS BIGINT) AS cluster FROM a2 WHERE rn = 1),
-e AS (
-  SELECT asgn.cluster, emb.vec_id, CAST(emb.embedding AS DOUBLE[]) AS v
-  FROM embeddings emb JOIN asgn ON emb.vec_id = asgn.vec_id
-)
-SELECT x.cluster, x.vec_id AS a, y.vec_id AS b,
-       round(list_dot_product(x.v, y.v)
-             / (sqrt(list_dot_product(x.v, x.v))
-                * sqrt(list_dot_product(y.v, y.v))), 6) AS cos
-FROM e x JOIN e y ON x.cluster = y.cluster AND x.vec_id < y.vec_id
-WHERE list_dot_product(x.v, y.v)
-      / (sqrt(list_dot_product(x.v, x.v))
-         * sqrt(list_dot_product(y.v, y.v))) >= 0.35
-""",
-)
-
-
-def _sorted_neighborhood(spark, sf):
-    """Sorted-neighborhood blocking dedup: candidates within 3 ranks
-    of each other in (24-char normalized prefix, id) order inside
-    3-char prefix blocks; exact distinct-token Jaccard on candidates
-    only."""
-    from ..operators.dedup import sorted_neighborhood_pairs
-
-    return sorted_neighborhood_pairs(_tp(spark, sf, "documents"), window=3)
-
-
-_NORM_PREFIX = (
-    "trim(regexp_replace(lower(text), '[^\\p{L}\\p{N}]+', ' ', 'g'))"
-)
-
-_register(
-    "sorted_neighborhood",
-    _sorted_neighborhood,
-    f"""
-WITH base AS (
-  SELECT doc_id AS id,
-         substr({_NORM_PREFIX}, 1, 24) AS key,
-         substr({_NORM_PREFIX}, 1, 3) AS blk,
-         list_distinct({TOKS}) AS toks
-  FROM documents
-),
-ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY blk ORDER BY key, id) AS rnk
-  FROM base
-)
-SELECT least(l.id, r.id) AS a, greatest(l.id, r.id) AS b,
-       round(CASE WHEN len(list_distinct(list_concat(l.toks, r.toks))) > 0
-             THEN len(list_intersect(l.toks, r.toks))::DOUBLE
-                  / len(list_distinct(list_concat(l.toks, r.toks)))
-             ELSE 0.0::DOUBLE END, 6) AS jaccard
-FROM ranked l JOIN ranked r
-  ON l.blk = r.blk AND r.rnk > l.rnk AND r.rnk - l.rnk <= 3
 """,
 )
 
@@ -5482,46 +1768,6 @@ UNION SELECT dst AS s, '{SKOS}narrower' AS p, src AS o FROM closure
 )
 
 
-def _weighted_sample(spark, sf):
-    """Per-language weighted sample (k=20) with inclusion odds
-    proportional to document length — deterministic A-ES exponential
-    keys over the portable md5 hash, so the oracle draws the identical
-    sample."""
-    from ..operators.sketch import weighted_sample
-
-    docs = _tp(spark, sf, "documents").select(
-        "lang", "doc_id", F.length("text").cast("long").alias("w")
-    )
-    return weighted_sample(docs, "w", k=20, group_cols=["lang"])
-
-
-_register(
-    "weighted_sample",
-    _weighted_sample,
-    """
-WITH base AS (
-  -- key rounded BEFORE ranking, as the operator does: libm log can
-  -- differ by 1 ulp across engines, flipping near-equal key order
-  SELECT lang, doc_id, length(text) AS w,
-         round(
-           ln((('0x' || substring(md5(CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
-               + 1)::DOUBLE / 4503599627370496::DOUBLE)
-             / length(text), 6) AS k
-  FROM documents
-  WHERE length(text) > 0
-),
-r AS (
-  SELECT lang, doc_id, w, k,
-         row_number() OVER (PARTITION BY lang ORDER BY k DESC, doc_id) AS rank
-  FROM base
-)
-SELECT lang, doc_id, CAST(w AS BIGINT) AS weight,
-       k AS key, CAST(rank AS BIGINT) AS rank
-FROM r WHERE rank <= 20
-""",
-)
-
-
 def _conneg_audit(spark, sf):
     """Conneg variant-set audit (functions/conneg.py) over a
     deterministic variant table derived from ``documents``: 50 urls,
@@ -5627,49 +1873,3 @@ SELECT url, mime_type, profile, in_requested, in_detected, found,
 FROM joined
 """,
 )
-
-
-def _text_normalize(spark, sf):
-    """Unicode canonicalization pass: deterministic per-doc dirt
-    (decomposed accent, tabs, BEL control, NBSP, CRLF, trailing
-    spaces) injected so the fixture genuinely exercises NFC folding
-    and the cleanup chain; md5 of the normalized text pins byte-level
-    agreement between CPython unicodedata and DuckDB utf8proc."""
-    from ..operators.normalize import normalize_text
-
-    dirty = F.concat(
-        F.col("text"),
-        F.lit(" Cafe\u0301\t\tx\x07\u00a0y\r\nz  "),
-    )
-    docs = _t(spark, sf, "documents").select(
-        "doc_id", dirty.alias("text")
-    )
-    out = normalize_text(docs)
-    return out.select(
-        "doc_id",
-        F.md5("text_norm").alias("norm_md5"),
-        "was_changed",
-        F.length("text_norm").alias("norm_len"),
-    )
-
-
-def _text_normalize_sql() -> str:
-    from ..operators.normalize import normalize_sql_expr
-
-    expr = normalize_sql_expr("t")
-    return f"""
-WITH d AS (
-  SELECT doc_id,
-    text || ' Cafe' || chr(769) || chr(9) || chr(9) || 'x' || chr(7)
-         || chr(160) || 'y' || chr(13) || chr(10) || 'z  ' AS t
-  FROM documents
-)
-SELECT doc_id,
-  md5({expr}) AS norm_md5,
-  ({expr} <> t) AS was_changed,
-  CAST(length({expr}) AS INT) AS norm_len
-FROM d
-"""
-
-
-_register("text_normalize", _text_normalize, _text_normalize_sql())

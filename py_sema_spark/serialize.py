@@ -419,9 +419,8 @@ def aggregate_files(
     # skolemize BEFORE the cross-file dedup: blank-node labels are
     # document-scoped ('_:b0' in file A is a different node than
     # '_:b0' in file B) — deduping raw labels would capture bnodes
-    # across files and merge unrelated nodes (the streaming twin,
-    # streaming.py stream_extract_triples, already skolemizes; rdflib
-    # avoids it by minting fresh ids per parse)
+    # across files and merge unrelated nodes (rdflib avoids it by
+    # minting fresh ids per parse)
     return dedup_triples(
         skolemize(triples_of(extract_structured(corpus))),
         keys=["s", "p", "o"],

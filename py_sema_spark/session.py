@@ -33,14 +33,11 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # NOTE on AQE coalescing vs CPU-dense stages: byte-based
-        # coalescing serializes tiny-input/huge-output stages (LSH
-        # bucket self-joins: ~100 KB of band keys explode into
-        # millions of pairs). Globally lowering minPartitionSize fixes
-        # those but floods the tiny iterative-graph loops with empty
-        # tasks (pagerank 4.4->16 s at sf0.1), so the fan-out is done
-        # STRUCTURALLY where it's needed: explicit-N repartition in
-        # dedup.lsh_candidate_pairs / incremental_minhash_dedup
-        # (AQE never coalesces user-numbered repartitions).
+        # coalescing serializes tiny-input/huge-output stages.
+        # Globally lowering minPartitionSize fixes those but floods
+        # tiny iterative loops (closure rounds) with empty tasks, so
+        # a stage that fans out must repartition to an explicit N
+        # itself (AQE never coalesces user-numbered repartitions).
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")

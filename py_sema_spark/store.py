@@ -8,19 +8,20 @@ On disk, under ``workdir``:
 
 - ``g=<quoted key>/graph.parquet`` — one parquet file per named graph
   (the local stand-in for an Iceberg table partitioned by ``g``);
+- ``g=<quoted key>/_stage-<uuid>.parquet`` — the graph's next file
+  while it is written; readers skip ``_``-prefixed names;
 - ``_registry_CURRENT`` + ``_registry_versions/<uuid>.json`` — the
   admin graph, a JSON ``{graph: lastmod}`` snapshot behind an atomic
-  pointer (:class:`..model.GraphRegistry`);
-- ``_stage/`` — graph files being written.
+  pointer (:class:`..model.GraphRegistry`).
 
 Writes run on the driver and start no Spark job of their own: graphs
 are dimension-sized (the reference holds each in one in-memory rdflib
 graph). A write collects the incoming triples, dedups them as a Python
 set over all six triple columns (``dedup_triples``' key; ``graph += g``
-dedups, store.py:500-502), writes one parquet file with pyarrow under
-``_stage/``, fsyncs it and ``os.replace``s it onto the graph's
-``graph.parquet``; then the registry records the lastmod. Reads are
-Spark parquet scans.
+dedups, store.py:500-502), writes one staged parquet file with pyarrow
+in the graph's dir, fsyncs it and ``os.replace``s it onto the graph's
+``graph.parquet``, then deletes every other file in the dir; then the
+registry records the lastmod. Reads are Spark parquet scans.
 
 Kill safety: the rename is the only step that changes what a reader
 sees, and it is atomic, so a kill at any point leaves every graph with
@@ -30,7 +31,10 @@ under the old lastmod, which syncfs's mtime check redoes. Only graphs
 the registry lists are live: a drop unregisters first and deletes the
 files after, and an insert or scoped update of an unlisted key starts
 from no triples, so files left by ``forget``, or by a drop or a first
-insert cut short, are replaced rather than merged.
+insert cut short, are replaced rather than merged. A staged file left
+by a writer killed before its rename is deleted by the key's next
+write, or with the dir by a drop. One key has one writer at a time:
+the post-rename sweep would delete a second writer's staged file.
 
 Graph dirs written by earlier versions hold Spark part files. They are
 read as they are until the next write renames ``graph.parquet`` in,
@@ -112,20 +116,20 @@ class ParquetTripleStore:
 
     def _write_graph(self, key: str, rows) -> None:
         """Replace the graph's triples by the set of ``rows`` (see the
-        module docstring). The staging file lives under ``_stage/``,
-        outside the graph-dir namespace, under a unique name: a fixed
-        ``str(gdir) + '.tmp'`` was the real directory of key
-        '<key>.tmp' (quote leaves '.' unescaped), and two writers of
-        one key would share it."""
-        stage = self.workdir / "_stage" / (uuid.uuid4().hex + ".parquet")
-        stage.parent.mkdir(exist_ok=True)
-        pq.write_table(triples_table(dict.fromkeys(rows)), stage)
-        fsync_path(str(stage))
+        module docstring). The staged file has a unique ``_``-prefixed
+        name inside the graph's own dir: readers skip it, and the sweep
+        after the rename removes any staged file an earlier writer left.
+        (A fixed ``str(gdir) + '.tmp'`` beside the dir was the real
+        directory of key '<key>.tmp': quote leaves '.' unescaped.)"""
         gdir = self._graph_dir(key)
         gdir.mkdir(exist_ok=True)
+        stage = gdir / f"_stage-{uuid.uuid4().hex}.parquet"
+        pq.write_table(triples_table(dict.fromkeys(rows)), stage)
+        fsync_path(str(stage))
         os.replace(stage, gdir / GRAPH_FILE)
         fsync_path(str(gdir))
-        for p in gdir.iterdir():  # an earlier version's part files
+        # earlier writers' staged files, an earlier version's part files
+        for p in gdir.iterdir():
             if p.is_dir():
                 shutil.rmtree(p)
             elif p.name != GRAPH_FILE:

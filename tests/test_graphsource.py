@@ -400,22 +400,6 @@ class TestStoreRound3Regressions:
         reg.touch(["urn:new"])
         assert sorted(reg.named_graphs()) == ["urn:new", "urn:old"]
 
-    def test_graph_diff_full_term_identity(self, spark):
-        """"x"@en → "x"@fr is a change per RDF 1.1; comparing only
-        (s,p,o) reported it as no-op."""
-        from py_sema_spark.model import graph_diff
-
-        old = spark.createDataFrame(
-            [("urn:s", EX + "p", "x", "literal", None, "en")], self.TS
-        )
-        new = spark.createDataFrame(
-            [("urn:s", EX + "p", "x", "literal", None, "fr")], self.TS
-        )
-        ops = sorted(r.op for r in graph_diff(old, new).collect())
-        assert ops == ["added", "removed"]
-        # identity diff stays empty (null-safe metadata compare)
-        assert graph_diff(old, old).count() == 0
-
     def test_skolemize_delimiter_injection(self, spark):
         """('http://x/a|b', '_:c') and ('http://x/a', 'b|_:c') must
         mint DIFFERENT skolem IRIs."""

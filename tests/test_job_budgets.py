@@ -2,7 +2,9 @@
 metrics and canonicalization parity of that same run, and a
 differential test of the two canonicalization paths on random graphs;
 then job budgets of the serve-side operations (syncfs, the parquet
-store and its registry) on a few tiny Turtle dumps.
+store and its registry) on a few tiny Turtle dumps, and of the read
+path (a templated SPARQL point lookup, a SHACL validation) on a tiny
+triples file.
 
 At today's sizes a job costs ~0.2-0.4 s whatever its input, so a build's
 cost follows how many jobs it starts. Job counts per stage are
@@ -391,3 +393,83 @@ class TestServeJobBudgets:
             want = load_graph_file(spark, str(serve_run["dumps"] / key)).collect()
             assert sorted(store.graph_for_key(key).collect()) == sorted(want)
         assert store.graph_for_key("b.ttl").count() == 3
+
+
+# jobs per read-path call (upper bounds, the measured counts) on a
+# tiny parquet-backed triples frame
+READ_JOB_BUDGETS = {
+    "sparql.point_lookup": 1,
+    "shacl.validate": 7,
+}
+SKOS = "http://www.w3.org/2004/02/skos/core#"
+DC = "http://purl.org/dc/terms/"
+RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+POINT_TEMPLATE = (
+    f"PREFIX skos: <{SKOS}> SELECT ?l WHERE {{ <{{{{ e }}}}> skos:prefLabel ?l }}"
+)
+READ_SHAPES = f"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix skos: <{SKOS}> .
+@prefix dc: <{DC}> .
+<urn:budget:ConceptShape> a sh:NodeShape ;
+    sh:targetClass skos:Concept ;
+    sh:property [ sh:path skos:prefLabel ; sh:minCount 1 ] ;
+    sh:property [ sh:path dc:identifier ; sh:maxCount 1 ] .
+"""
+
+
+@pytest.fixture(scope="module")
+def read_run(spark, tmp_path_factory):
+    """One templated point lookup and one SHACL validation over six
+    concepts (c1 lacks a prefLabel, c2 has two identifiers) read from a
+    parquet file, each call in its own job group."""
+    import pyarrow.parquet as pq
+
+    from py_sema_spark import shacl
+    from py_sema_spark.model import TRIPLE_SCHEMA, triples_table
+    from py_sema_spark.queries import bgp, templated
+
+    rows = []
+    for i in range(6):
+        c = f"urn:c{i}"
+        rows.append((c, RDF_TYPE, SKOS + "Concept", "iri", None, None))
+        if i != 1:
+            rows.append((c, SKOS + "prefLabel", f"concept {i}", "literal", None, "en"))
+        for j in range(2 if i == 2 else 1):
+            rows.append((c, DC + "identifier", f"id{i}-{j}", "literal", None, None))
+    path = tmp_path_factory.mktemp("read_budget") / "kg.parquet"
+    pq.write_table(triples_table(rows), path)
+    kg = spark.read.schema(TRIPLE_SCHEMA).parquet(str(path))
+    shapes = shacl.parse_shapes_ttl(READ_SHAPES)
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    jobs, out = {}, {}
+
+    def run(name, fn):
+        group = f"read-{tag}-{name}"
+        with _job_group(sc, group):
+            out[name] = fn()
+        jobs[name] = _jobs(sc, group)
+
+    sparql = templated.SparqlBuilder().build_from_string(POINT_TEMPLATE, e="urn:c3")
+    run("sparql.point_lookup", lambda: bgp.sparql_query(kg, sparql).collect())
+    run(
+        "shacl.validate",
+        lambda: sorted(
+            (r["focus"], r["constraint"]) for r in shacl.validate(kg, shapes).collect()
+        ),
+    )
+    print(f"read budget run: jobs {jobs}")
+    return {"jobs": jobs, "out": out}
+
+
+class TestReadJobBudgets:
+    def test_read_job_budgets(self, read_run):
+        jobs = read_run["jobs"]
+        assert set(jobs) == set(READ_JOB_BUDGETS)
+        for name, budget in READ_JOB_BUDGETS.items():
+            assert jobs[name] <= budget, (name, jobs[name], budget)
+
+    def test_read_run_results(self, read_run):
+        out = read_run["out"]
+        assert [r["l"] for r in out["sparql.point_lookup"]] == ["concept 3"]
+        assert out["shacl.validate"] == [("urn:c1", "minCount"), ("urn:c2", "maxCount")]

@@ -1,19 +1,12 @@
-"""OGM blueprint emission, Link-header parsing, and the Structured
-Streaming front-end (availableNow extraction + watermarked windows)."""
-
-import os
+"""OGM blueprint emission, Link-header parsing, and templated SPARQL
+rendering. (The module name is historic: the Structured-Streaming
+front-end it also covered is retired.)"""
 
 import pytest
 from pyspark.sql import functions as F
 
 from py_sema_spark.functions.web import link_header_urls_col, parse_link_header
 from py_sema_spark.ogm import build_triples_yaml, rocrate_blueprint, build_triples
-from py_sema_spark.sources.corpus import synth_corpus
-from py_sema_spark.streaming import (
-    run_extraction_stream,
-    stream_corpus,
-    windowed_page_counts,
-)
 
 BLUEPRINT = r"""
 $:
@@ -93,100 +86,6 @@ class TestLinkHeaders:
         assert got == ["./meta.ttl"]
 
 
-class TestStreaming:
-    def test_available_now_extraction(self, spark, tmp_path):
-        corpus_dir = str(tmp_path / "corpus")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        synth_corpus(spark, 120, seed=42).write.parquet(corpus_dir)
-
-        q = run_extraction_stream(spark, corpus_dir, out_dir, ckpt)
-        assert q.lastProgress is not None
-        got = spark.read.parquet(out_dir)
-        # stream output == batch extraction output (stateless stage)
-        from py_sema_spark.model import skolemize
-        from py_sema_spark.operators.extract import (
-            extract_structured,
-            triples_of,
-        )
-
-        batch = skolemize(
-            triples_of(extract_structured(spark.read.parquet(corpus_dir)))
-        )
-        assert got.count() == batch.count()
-
-        # second availableNow run: checkpoint ⇒ no new files ⇒ no growth
-        q2 = run_extraction_stream(spark, corpus_dir, out_dir, ckpt)
-        assert spark.read.parquet(out_dir).count() == batch.count()
-
-    def test_kg_stream_dedups_across_batches_and_restarts(
-        self, spark, tmp_path
-    ):
-        """run_kg_stream: a triple re-extracted in a later micro-batch
-        (same pages land again as new files, after a restart) must not
-        re-emit — keyed dedup state lives in the checkpoint."""
-        from py_sema_spark.model import dedup_triples, skolemize
-        from py_sema_spark.operators.extract import (
-            extract_structured,
-            triples_of,
-        )
-        from py_sema_spark.streaming import run_kg_stream
-
-        corpus_dir = str(tmp_path / "corpus")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(corpus_dir)
-
-        batch1 = synth_corpus(spark, 60, seed=42)
-        batch1.coalesce(1).write.mode("append").parquet(corpus_dir)
-        run_kg_stream(spark, corpus_dir, out_dir, ckpt)
-        n1 = spark.read.parquet(out_dir).count()
-        assert n1 > 0
-
-        # batch 2 = the SAME 60 pages again (new files) + 20 new ones
-        batch1.coalesce(1).write.mode("append").parquet(corpus_dir)
-        synth_corpus(spark, 80, seed=42).where(
-            F.col("url").isin(
-                [r["url"] for r in synth_corpus(spark, 80, seed=42)
-                 .select("url").subtract(batch1.select("url")).collect()]
-            )
-        ).coalesce(1).write.mode("append").parquet(corpus_dir)
-
-        run_kg_stream(spark, corpus_dir, out_dir, ckpt)
-        got = spark.read.parquet(out_dir)
-        # no duplicate triples despite the duplicated input files
-        key = ["s", "p", "o", "o_kind", "o_datatype", "o_lang"]
-        assert got.count() == got.dropDuplicates(key).count()
-        # and the final set equals the batch pipeline's dedup over the
-        # union of all pages
-        batch_all = dedup_triples(
-            skolemize(
-                triples_of(
-                    extract_structured(spark.read.parquet(corpus_dir))
-                )
-            ),
-            keys=key,
-        )
-        assert got.count() == batch_all.count()
-
-    def test_windowed_counts(self, spark, tmp_path):
-        corpus_dir = str(tmp_path / "wcorpus")
-        synth_corpus(spark, 200, seed=42).write.parquet(corpus_dir)
-        stream = stream_corpus(spark, corpus_dir)
-        agg = windowed_page_counts(stream, window="1 day", watermark="1 day")
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("wcounts")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql("select * from wcounts").collect()
-        assert sum(r["cnt"] for r in rows) == 200
-        assert all(r["w"]["start"] is not None for r in rows)
-
-
 class TestTemplatedSparql:
     def test_render_and_execute(self, spark):
         from py_sema_spark.queries.benchqueries import kg_triples
@@ -231,208 +130,3 @@ class TestTemplatedSparql:
         b = SparqlBuilder(str(tmp_path))
         assert b.variables_in_template("q.sparql") == {"pred", "n"}
         assert "LIMIT 5" in b.build_syntax("q.sparql", pred="urn:p", n=5)
-
-
-class TestStatefulStreamDedup:
-    """applyInPandasWithState custom stateful operator (the task
-    brief's streaming requirement): first-per-key across micro-batches
-    AND across restarts — state lives in the checkpoint."""
-
-    def _write_batch(self, spark, path, rows, fname):
-        import pandas as pd
-
-        pdf = pd.DataFrame(rows, columns=["k", "v"])
-        pdf.to_parquet(f"{path}/{fname}")
-
-    def _run_once(self, spark, src, out, ckpt):
-        from py_sema_spark.streaming import stream_unique_filter
-
-        stream = (
-            spark.readStream.schema("k string, v long")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        uniq = stream_unique_filter(stream, ["k"])
-        q = (
-            uniq.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-
-    def test_first_per_key_across_batches_and_restarts(
-        self, spark, tmp_path
-    ):
-        src = str(tmp_path / "src")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        import os
-
-        os.makedirs(src)
-        # two files → two micro-batches within run 1
-        self._write_batch(spark, src, [("a", 1), ("b", 2)], "f1.parquet")
-        self._write_batch(spark, src, [("a", 3), ("c", 4)], "f2.parquet")
-        self._run_once(spark, src, out, ckpt)
-        got = {
-            (r["k"], r["v"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got == {("a", 1), ("b", 2), ("c", 4)}
-
-        # run 2, same checkpoint: 'a' is already in state → only the
-        # brand-new key emits (exactly-once dedup across restarts)
-        self._write_batch(spark, src, [("a", 9), ("d", 5)], "f3.parquet")
-        self._run_once(spark, src, out, ckpt)
-        got = {
-            (r["k"], r["v"])
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got == {("a", 1), ("b", 2), ("c", 4), ("d", 5)}
-
-
-class TestCurationStream:
-    def test_quality_gate_and_cross_restart_dedup(self, spark, tmp_path):
-        """run_curation_stream: low-quality docs never reach the sink;
-        a doc whose text was admitted in an earlier run is dropped on
-        re-ingest because dedup state lives in the checkpoint."""
-        from py_sema_spark.streaming import run_curation_stream
-
-        docs_dir = str(tmp_path / "docs")
-        out_dir = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        good = "the quick brown fox jumps over the lazy dog near the river"
-        junk = "### ### ### ###"
-        batch1 = spark.createDataFrame(
-            [(0, good, "en"), (1, junk, "en"), (2, good + " again", "en")],
-            "doc_id long, text string, lang string",
-        )
-        batch1.coalesce(1).write.mode("append").parquet(docs_dir)
-        run_curation_stream(spark, docs_dir, out_dir, ckpt)
-        got1 = spark.read.parquet(out_dir)
-        assert sorted(r.doc_id for r in got1.collect()) == [0, 2]
-
-        # second run: same good text under a NEW doc_id + one new doc
-        spark.createDataFrame(
-            [(10, good, "en"), (11, good + " entirely new", "en")],
-            "doc_id long, text string, lang string",
-        ).coalesce(1).write.mode("append").parquet(docs_dir)
-        run_curation_stream(spark, docs_dir, out_dir, ckpt)
-        got2 = spark.read.parquet(out_dir)
-        ids = sorted(r.doc_id for r in got2.collect())
-        assert ids == [0, 2, 11]  # 10 deduped against checkpoint state
-        # the admitted set is exactly dedup-by-hash of quality passes
-        assert got2.select("content_hash").distinct().count() == 3
-
-
-class TestStreamSessionize:
-    def test_matches_batch_and_resumes_across_restarts(
-        self, spark, tmp_path
-    ):
-        """Session numbering must equal the batch operator's on the
-        same data, continue across micro-batches, and survive a
-        restart (state in the checkpoint)."""
-        import datetime as dt
-        import os
-
-        from py_sema_spark.operators.windows import sessionize
-        from py_sema_spark.streaming import stream_sessionize
-
-        src = str(tmp_path / "src")
-        out = str(tmp_path / "out")
-        ckpt = str(tmp_path / "ckpt")
-        os.makedirs(src)
-        t0 = dt.datetime(2024, 1, 1)
-
-        def s(sec):
-            return t0 + dt.timedelta(seconds=sec)
-
-        # file 1: user 1 two close events; user 2 one event
-        spark.createDataFrame(
-            [(1, s(0), 1), (1, s(60), 2), (2, s(0), 3)],
-            "user_id long, ts timestamp_ntz, event_id long",
-        ).coalesce(1).write.parquet(src + "/f1")
-        # file 2 (later micro-batch): user 1 beyond the gap → session 2
-        spark.createDataFrame(
-            [(1, s(4000), 4), (2, s(100), 5)],
-            "user_id long, ts timestamp_ntz, event_id long",
-        ).coalesce(1).write.parquet(src + "/f2")
-
-        def run():
-            stream = (
-                spark.readStream.schema(
-                    "user_id long, ts timestamp_ntz, event_id long"
-                )
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src + "/f*")
-            )
-            q = (
-                stream_sessionize(stream, gap_minutes=30)
-                .writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-
-        run()
-        got = {
-            r["event_id"]: r["session_id"]
-            for r in spark.read.parquet(out).collect()
-        }
-        batch = {
-            r["event_id"]: r["session_id"]
-            for r in sessionize(
-                spark.read.parquet(src + "/f*"), gap_minutes=30
-            ).collect()
-        }
-        assert got == batch  # {1:'1#1',2:'1#1',4:'1#2',3:'2#1',5:'2#1'}
-
-        # restart: a third file continues numbering from the checkpoint
-        spark.createDataFrame(
-            [(1, s(8000), 6)],
-            "user_id long, ts timestamp_ntz, event_id long",
-        ).coalesce(1).write.parquet(src + "/f3")
-        run()
-        got2 = {
-            r["event_id"]: r["session_id"]
-            for r in spark.read.parquet(out).collect()
-        }
-        assert got2[6] == "1#3"
-
-
-class TestStreamHoppingCounts:
-    def test_parity_with_batch_hopping(self, spark, tmp_path):
-        import os
-
-        from py_sema_spark.streaming import stream_hopping_counts
-        from py_sema_spark.queries.benchqueries import QUERIES
-
-        sf = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
-        events_dir = str(tmp_path / "events_stream")
-        spark.read.parquet(f"{sf}/events.parquet").write.parquet(events_dir)
-        stream = spark.readStream.schema(
-            spark.read.parquet(events_dir).schema
-        ).parquet(events_dir)
-        agg = stream_hopping_counts(stream)
-        q = (
-            agg.writeStream.format("memory")
-            .queryName("hopstream")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        got = {
-            (r.w_start, r.w_end, r.event_type, r.cnt)
-            for r in spark.sql("select * from hopstream").collect()
-        }
-        want = {
-            (r.w_start, r.w_end, r.event_type, r.cnt)
-            for r in QUERIES["hopping_counts"](spark, sf).collect()
-        }
-        assert got == want and got

@@ -7,10 +7,6 @@ silently adds a shuffle (lost broadcast, un-reused subtree, a window
 acquiring its own partitioning) fails here long before a bench run
 could notice. Budgets are the audited count + headroom of 2 (minor
 planner-version drift), never more.
-
-Iterative operators (pagerank family, closure) materialize rounds via
-localCheckpoint, so their *final* plan is intentionally shallow — the
-budget still guards the last round + assembly.
 """
 
 import pytest
@@ -21,34 +17,7 @@ SF = "/root/testdata/sf0.001"
 
 # audited exchange counts (see PLANS.md) + 2 headroom
 BUDGETS = {
-    "interval_join": 4 + 2,
     "heavy_hitters": 8 + 2,
-    "hits": 2 + 2,
-    "trustrank": 6 + 2,
-    "weighted_pagerank": 10 + 2,
-    "fuzzy_name_pairs": 6 + 2,
-    "apply_changes": 10 + 2,
-    # +4 in round 3: the stale-update guard joins updates against the
-    # key's current valid_from BEFORE the chain window, and that
-    # (updates ⋈ current) subtree feeds two consumers (window +
-    # first_ts agg) — semantically required, delta-sized both sides
-    "scd2_apply": 20 + 2,
-    "rolling_zscore": 2 + 2,
-    "funnel_counts": 17 + 2,
-    "temperature_rebalance": 9 + 2,
-    "negative_samples": 17 + 2,
-    "json_props_rollup": 2 + 2,
-    "quality_audit": 6 + 2,
-    "hopping_counts": 2 + 2,
-    "metric_drift": 3 + 2,
-    "value_histogram": 2 + 2,
-    "label_centroids": 2 + 2,
-    "random_projection": 2 + 2,
-    "centroid_similarity": 7 + 2,
-    "quality_percentile": 2 + 2,
-    "pricing_summary": 2 + 2,
-    "top_customers": 6 + 2,
-    "topk_per_group": 2 + 2,
     # algebra-path SPARQL (queries/algebra.py): certain-var analysis
     # keeps every join a broadcast/hash equi-join — no BNLJ, 1-2
     # exchanges (audited in PLANS.md)

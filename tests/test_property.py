@@ -190,25 +190,3 @@ def test_deletion_blocking_never_misses_distance_one(a, b):
     # maximizes collision-adjacent cases)
     if _lev(a, b) <= 1:
         assert _deletion_keys(a) & _deletion_keys(b)
-
-
-@given(
-    st.integers(min_value=0, max_value=10_000),   # point (µs)
-    st.integers(min_value=0, max_value=10_000),   # interval start
-    st.integers(min_value=1, max_value=3_000),    # interval length
-    st.integers(min_value=1, max_value=500),      # bin width
-)
-@settings(max_examples=300)
-def test_interval_binning_exactly_covers(ts, s, ln, w):
-    # mirror of rangejoin.interval_overlap_join's bucket math: the
-    # point's single bucket is hit by the interval's exploded bucket
-    # range IFF the interval truly covers the point (half-open)
-    e = s + ln
-    point_bin = ts // w
-    interval_bins = range(s // w, (e - 1) // w + 1)
-    joins = point_bin in interval_bins
-    covers = s <= ts < e
-    if covers:
-        assert joins  # never a false negative
-    if joins and not covers:
-        pass  # residual predicate filters these — allowed

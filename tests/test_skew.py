@@ -1,6 +1,5 @@
 """Hub-entity skew machinery, actually exercised (VERDICT r01 #8:
-``with_subject_bucket`` salting and ``max_bucket_size`` were dead code
-paths in tests).
+``with_subject_bucket`` salting was a dead code path in tests).
 
 Fixture shape: one hub subject with 20k ``skos:member`` rows next to a
 long tail — the BODC collection shape that motivates the north rule's
@@ -10,7 +9,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from py_sema_spark.model import TRIPLE_SCHEMA, with_subject_bucket
-from py_sema_spark.operators.dedup import lsh_candidate_pairs, minhash_signatures
 
 HUB = "https://vocab.example.org/collection/HUB/"
 N_HUB = 20_000
@@ -125,137 +123,6 @@ class TestSubjectSalting:
             F.col("salt") != F.col("salt2")
         )
         assert diff.isEmpty()
-
-
-class TestLshBucketCap:
-    @pytest.fixture(scope="class")
-    def clone_tokens(self, spark):
-        """60 documents with IDENTICAL token sets (parked-domain
-        boilerplate) + 10 distinct documents: one adversarial LSH
-        bucket of 60 members → 1770 pairs uncapped."""
-        clones = spark.range(60).select(
-            F.col("id").alias("doc_id"),
-            F.explode(F.array(*[F.lit(f"tok{i}") for i in range(12)])).alias(
-                "token"
-            ),
-        )
-        uniq = spark.range(60, 70).select(
-            F.col("id").alias("doc_id"),
-            F.explode(
-                F.array(*[
-                    F.concat(F.lit("u"), F.col("id"), F.lit(f"-{i}"))
-                    for i in range(12)
-                ])
-            ).alias("token"),
-        )
-        return clones.unionByName(uniq).persist()
-
-    def test_cap_skips_adversarial_bucket(self, clone_tokens):
-        sigs = minhash_signatures(clone_tokens, num_perm=16).persist()
-        uncapped = lsh_candidate_pairs(sigs, bands=4)
-        # 60 identical docs → C(60,2) = 1770 pairs from the clone bucket
-        assert uncapped.count() >= 1770
-        capped = lsh_candidate_pairs(sigs, bands=4, max_bucket_size=10)
-        # every clone bucket exceeds the cap → no clone pairs survive;
-        # distinct docs produce no collisions on this fixture
-        assert capped.count() == 0
-        # cap above the bucket size keeps exact semantics
-        loose = lsh_candidate_pairs(sigs, bands=4, max_bucket_size=100)
-        assert loose.count() == uncapped.count()
-
-
-class TestEmbeddingClusterCaps:
-    """VERDICT r04 #5: the embedding near-dup families had no bound on
-    per-cluster / per-bucket pair output — a mass of near-identical
-    embeddings (boilerplate-heavy crawl) quadratic-bombs a 100-TB run.
-    Fixture: 80 near-constant vectors (one degenerate cluster / LSH
-    bucket) + 20 spread vectors."""
-
-    @pytest.fixture(scope="class")
-    def degenerate_embeddings(self, spark):
-        clones = spark.range(80).select(
-            F.concat(F.lit("c"), F.col("id")).alias("vec_id"),
-            F.array(
-                *[
-                    (F.lit(1.0) + F.col("id") * 1e-6).cast("float")
-                    if i == 0
-                    else F.lit(float(i) / 8.0).cast("float")
-                    for i in range(8)
-                ]
-            ).alias("embedding"),
-        )
-        spread = spark.range(20).select(
-            F.concat(F.lit("s"), F.col("id")).alias("vec_id"),
-            F.array(
-                *[
-                    (
-                        F.when(F.col("id") % 8 == i, F.lit(5.0)).otherwise(
-                            F.lit(0.1) * F.col("id") * (i + 1)
-                        )
-                    ).cast("float")
-                    for i in range(8)
-                ]
-            ).alias("embedding"),
-        )
-        return clones.unionByName(spread).persist()
-
-    def test_semantic_neardup_cluster_cap_bounds_pairs(
-        self, degenerate_embeddings
-    ):
-        from py_sema_spark.operators.similarity import semantic_neardup
-
-        exact = semantic_neardup(
-            degenerate_embeddings, k=4, iterations=2, threshold=0.99
-        )
-        n_exact = exact.count()
-        # the 80 clones co-cluster → ≥ C(80,2) = 3160 pairs
-        assert n_exact >= 3160
-        capped = semantic_neardup(
-            degenerate_embeddings,
-            k=4,
-            iterations=2,
-            threshold=0.99,
-            max_cluster_size=20,
-        ).persist()
-        n_capped = capped.count()
-        # 80 members / cap 20 → 4 sub-buckets of ~20 → ~4·C(20,2)
-        # ≈ 760 pairs instead of 3160; bound with hash-imbalance slack
-        assert n_capped < n_exact * 0.45
-        # nothing dropped: every clone id still appears in some pair
-        ids = {
-            r[0]
-            for r in capped.select(F.explode(F.array("a", "b"))).collect()
-        }
-        assert sum(1 for i in ids if i.startswith("c")) == 80
-        # a cap above every cluster size keeps exact semantics
-        loose = semantic_neardup(
-            degenerate_embeddings,
-            k=4,
-            iterations=2,
-            threshold=0.99,
-            max_cluster_size=1000,
-        )
-        assert loose.count() == n_exact
-
-    def test_embedding_lsh_bucket_cap(self, degenerate_embeddings):
-        from py_sema_spark.operators.similarity import (
-            embedding_neardup_pairs,
-        )
-
-        uncapped = embedding_neardup_pairs(
-            degenerate_embeddings, threshold=0.99, dim=8
-        )
-        n_uncapped = uncapped.count()
-        assert n_uncapped >= 3160
-        capped = embedding_neardup_pairs(
-            degenerate_embeddings, threshold=0.99, dim=8, max_bucket_size=20
-        )
-        # every clone bucket exceeds the cap → clone pairs vanish
-        assert capped.count() < n_uncapped * 0.05
-        loose = embedding_neardup_pairs(
-            degenerate_embeddings, threshold=0.99, dim=8, max_bucket_size=1000
-        )
-        assert loose.count() == n_uncapped
 
 
 def _artifact_is_current(zip_path: str) -> bool:

@@ -1,5 +1,7 @@
-"""Spark-level operator tests: closure, components, dedup, similarity,
-linkage, queries, pipeline resume. One shared session (conftest)."""
+"""Spark-level operator tests: closure, components, linkage, sameAs
+fusion, sketches (weighted sample, KMV distinct, exact quantiles, heavy
+hitters), window ctrl columns, sparqlets, pipeline resume.
+One shared session (conftest)."""
 
 import pandas as pd
 import pytest
@@ -9,20 +11,11 @@ from py_sema_spark.operators.closure import (
     connected_components,
     transitive_closure,
 )
-from py_sema_spark.operators.dedup import (
-    exact_dedup,
-    minhash_dedup,
-    neardup_clusters,
-    ngram_jaccard_pairs,
-    remove_duplicate_spans,
-    simhash,
-)
 from py_sema_spark.operators.linkage import (
     canonical_map,
     detect_mentions,
     rewrite_triples,
 )
-from py_sema_spark.operators.similarity import cosine_topk, lsh_cosine_topk
 from py_sema_spark.queries import (
     rdf_predicates_count,
     skos_broader_depth,
@@ -114,286 +107,6 @@ class TestClosure:
         }
         assert comp["a"] == comp["b"] == comp["c"] == "a"
         assert comp["x"] == comp["y"] == "x"
-
-
-class TestDedup:
-    @pytest.fixture(scope="class")
-    def docs(self, spark):
-        rows = [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy dog"),  # exact dup
-            (3, "the quick brown fox leaps over the lazy dog"),  # near dup
-            (4, "completely different content about spark pipelines"),
-            (5, "Content about Spark pipelines, completely different!"),
-        ]
-        return spark.createDataFrame(rows, ["doc_id", "text"])
-
-    def test_exact(self, docs):
-        out = exact_dedup(docs).collect()
-        canon = {r["doc_id"]: r["is_canonical"] for r in out}
-        assert canon[1] and not canon[2]
-        assert canon[3] and canon[4] and canon[5]
-
-    def test_minhash_finds_near_dup(self, docs):
-        pairs = {
-            (r["a"], r["b"]): r["jaccard"]
-            for r in minhash_dedup(docs, threshold=0.5).collect()
-        }
-        assert (1, 2) in pairs and pairs[(1, 2)] == 1.0
-        assert (1, 3) in pairs and 0.5 <= pairs[(1, 3)] < 1.0
-        # 4/5 share the normalized token set entirely
-        assert (4, 5) in pairs
-
-    def test_ngram_prefix_filter_is_exact_by_default(self, spark):
-        """Two size-6 gram sets at J=0.5 whose two smallest grams are
-        disjoint: the fixed k=2 prefix cap missed this pair; the
-        default per-doc PPJoin bound ⌊(1−t)·|set|⌋+1 must find it."""
-        # unigrams (n=1) keep the sets easy to control
-        a = "a1 a2 s1 s2 s3 s4"
-        b = "b1 b2 s1 s2 s3 s4"
-        docs = spark.createDataFrame(
-            [(1, a), (2, b)], "doc_id long, text string"
-        )
-        got = {
-            (r.a, r.b): r.jaccard
-            for r in ngram_jaccard_pairs(docs, n=1, threshold=0.5).collect()
-        }
-        assert got == {(1, 2): 0.5}
-        # the explicit cap is the documented high-recall block — it
-        # may miss exactly this pair
-        capped = ngram_jaccard_pairs(
-            docs, n=1, threshold=0.5, join_on_prefix=2
-        ).collect()
-        assert capped == []
-
-    def test_ppjoin_prefix_float_bound(self, spark):
-        """t=0.8 over a 10-gram set: (1-0.8)*10 floats to 1.9999…96,
-        so an un-epsiloned floor()+1 gives prefix 2 instead of the
-        exact 3 and silently drops this qualifying pair."""
-        a = "aa ab s1 s2 s3 s4 s5 s6 s7 s8"   # 10 unigrams
-        b = "s1 s2 s3 s4 s5 s6 s7 s8"          # 8-subset, J = 8/10
-        docs = spark.createDataFrame(
-            [(1, a), (2, b)], "doc_id long, text string"
-        )
-        got = {
-            (r.a, r.b): r.jaccard
-            for r in ngram_jaccard_pairs(
-                docs, n=1, threshold=0.8
-            ).collect()
-        }
-        assert got == {(1, 2): pytest.approx(0.8)}
-
-    def test_short_docs_have_no_ngrams(self, spark):
-        """Docs with fewer than n tokens must never pair — position 0
-        used to emit the whole short token list as a bogus sub-n gram."""
-        docs = spark.createDataFrame(
-            [(1, "x y"), (2, "x y"), (3, "x y z")],
-            "doc_id long, text string",
-        )
-        assert ngram_jaccard_pairs(docs, n=3, threshold=0.1).collect() == []
-
-    def test_ngram_jaccard(self, docs):
-        pairs = {
-            (r["a"], r["b"]): r["jaccard"]
-            for r in ngram_jaccard_pairs(docs, n=3, threshold=0.4).collect()
-        }
-        assert pairs[(1, 2)] == 1.0
-        assert (1, 4) not in pairs
-
-    def test_simhash_near_dup_close(self, docs):
-        out = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
-        assert out[1] == out[2]
-        ham_13 = bin(int(out[1]) ^ int(out[3])).count("1")
-        ham_14 = bin(int(out[1]) ^ int(out[4])).count("1")
-        assert ham_13 < ham_14
-
-
-class TestSimilarity:
-    @pytest.fixture(scope="class")
-    def vecs(self, spark):
-        import math
-
-        rows = []
-        for i in range(50):
-            ang = i * math.pi / 50
-            rows.append((i, [math.cos(ang), math.sin(ang), 0.1, 0.0]))
-        return spark.createDataFrame(rows, ["vec_id", "embedding"])
-
-    def test_bruteforce_topk(self, spark, vecs):
-        q = spark.createDataFrame([(0, [1.0, 0.0, 0.1, 0.0])], ["q_id", "q_vec"])
-        top = cosine_topk(vecs, q, k=3).orderBy("rank").collect()
-        assert [r["vec_id"] for r in top] == [0, 1, 2]
-        assert top[0]["cos"] > 0.999
-
-    def test_ivf_empty_corpus_returns_empty(self, spark):
-        """Empty embeddings: ivf degrades to the exact scorer instead
-        of crashing NumPy on a 0-d centroid array (round-3 review
-        fix)."""
-        from py_sema_spark.operators.similarity import ivf_cosine_topk
-
-        emb = spark.createDataFrame(
-            [], "vec_id long, embedding array<double>"
-        )
-        q = spark.createDataFrame(
-            [(0, [1.0, 0.0, 0.1, 0.0])], ["q_id", "q_vec"]
-        )
-        out = ivf_cosine_topk(emb, q, k=3)
-        assert out.count() == 0
-        assert set(out.columns) == {"q_id", "vec_id", "cos", "rank"}
-
-    def test_lsh_dim_mismatch_raises(self, spark, vecs):
-        """A wrong dim must fail loudly, not silently null every
-        bucket and return zero candidates (round-3 review fix)."""
-        from py_sema_spark.operators.similarity import lsh_cosine_topk
-
-        q = spark.createDataFrame(
-            [(0, [1.0, 0.0, 0.1, 0.0])], ["q_id", "q_vec"]
-        )
-        with pytest.raises(Exception, match="dim mismatch"):
-            lsh_cosine_topk(vecs, q, k=3, dim=16).collect()
-
-    def test_lsh_recall_vs_bruteforce(self, spark, vecs):
-        q = spark.createDataFrame([(0, [1.0, 0.0, 0.1, 0.0])], ["q_id", "q_vec"])
-        exact = {r["vec_id"] for r in cosine_topk(vecs, q, k=5).collect()}
-        approx = {
-            r["vec_id"]
-            for r in lsh_cosine_topk(
-                vecs, q, k=5, dim=4, planes=4, tables=6
-            ).collect()
-        }
-        assert len(exact & approx) >= 3  # recall ≥ 0.6 on this toy set
-
-
-class TestAnnRecallGates:
-    """Quantified recall of every approximate ANN path against its
-    exact oracled twin on the real testdata embeddings (500×64d at
-    sf0.001). An LSH/IVF bug that returns wrong-but-right-sized
-    results fails here even though the driver's rows-only check would
-    pass."""
-
-    @pytest.fixture(scope="class")
-    def emb(self, spark, sf_dir):
-        return spark.read.parquet(f"{sf_dir}/embeddings.parquet").persist()
-
-    @pytest.fixture(scope="class")
-    def queries(self, spark, emb):
-        return (
-            emb.where(F.col("vec_id") < 8)
-            .select(
-                F.col("vec_id").alias("q_id"),
-                F.col("embedding").alias("q_vec"),
-            )
-            .persist()
-        )
-
-    @pytest.fixture(scope="class")
-    def clustered(self, spark):
-        """500 vectors in 25 tight clusters (64-d, deterministic) —
-        the regime ANN indexing exists for. The synthetic testdata
-        embeddings are near-random (top-5 neighbor cos ≈ 0.3 vs
-        background p99 ≈ 0.29), where sublinear ANN recall is
-        information-theoretically capped; the clustered fixture is
-        where a bucketing bug actually shows."""
-        import hashlib
-
-        def unit(seed: str):
-            v = []
-            for d in range(64):
-                h = hashlib.md5(f"{seed}|{d}".encode()).digest()
-                v.append(int.from_bytes(h[:4], "big") / 2**31 - 1.0)
-            n = sum(x * x for x in v) ** 0.5
-            return [x / n for x in v]
-
-        rows = []
-        for i in range(500):
-            c = unit(f"c{i % 25}")
-            jit = unit(f"j{i}")
-            rows.append((i, [a + 0.15 * b for a, b in zip(c, jit)]))
-        return spark.createDataFrame(rows, ["vec_id", "embedding"]).persist()
-
-    def _cluster_queries(self, clustered):
-        return clustered.where(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-
-    def test_lsh_topk_recall_clustered(self, clustered):
-        from py_sema_spark.operators.similarity import recall_against_exact
-
-        q = self._cluster_queries(clustered)
-        exact = cosine_topk(clustered, q, k=5)
-        approx = lsh_cosine_topk(
-            clustered, q, k=5, dim=64, planes=6, tables=4, probe_radius=1
-        )
-        assert recall_against_exact(approx, exact) >= 0.9
-
-    def test_lsh_topk_recall_testdata(self, emb, queries):
-        """Even on the near-random testdata, multi-probe radius 2
-        holds ≥0.9 (measured 0.975)."""
-        from py_sema_spark.operators.similarity import recall_against_exact
-
-        exact = cosine_topk(emb, queries, k=5)
-        approx = lsh_cosine_topk(
-            emb, queries, k=5, dim=64, planes=6, tables=4, probe_radius=2
-        )
-        assert recall_against_exact(approx, exact) >= 0.9
-
-    def test_ivf_topk_recall_clustered(self, clustered):
-        from py_sema_spark.operators.similarity import (
-            ivf_cosine_topk,
-            recall_against_exact,
-        )
-
-        q = self._cluster_queries(clustered)
-        exact = cosine_topk(clustered, q, k=5)
-        approx = ivf_cosine_topk(clustered, q, k=5, n_lists=16, n_probe=4)
-        assert recall_against_exact(approx, exact) >= 0.9
-
-    def test_ivf_topk_recall_floor_testdata(self, emb, queries):
-        """Random-data regime: recall tracks the probed fraction
-        (8/16 lists → measured 0.775); gate a 0.6 floor so a broken
-        assignment (recall ≈ k/N) still fails."""
-        from py_sema_spark.operators.similarity import (
-            ivf_cosine_topk,
-            recall_against_exact,
-        )
-
-        exact = cosine_topk(emb, queries, k=5)
-        approx = ivf_cosine_topk(emb, queries, k=5, n_lists=16, n_probe=8)
-        assert recall_against_exact(approx, exact) >= 0.6
-
-    def test_ivf_survives_many_lists(self, emb, queries):
-        """n_lists far beyond the old inlined-literal limit: the plan
-        must stay flat (assignment is one NumPy matmul per batch)."""
-        from py_sema_spark.operators.similarity import ivf_cosine_topk
-
-        out = ivf_cosine_topk(emb, queries, k=5, n_lists=256, n_probe=32)
-        assert out.count() == 40
-
-    def test_neardup_lsh_pair_recall(self, emb):
-        from py_sema_spark.operators.similarity import (
-            cosine,
-            embedding_neardup_pairs,
-            recall_against_exact,
-        )
-
-        a = emb.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
-        b = emb.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
-        exact = (
-            a.join(b, F.col("a") < F.col("b"))
-            .select(
-                "a",
-                "b",
-                cosine(
-                    F.col("va").cast("array<double>"),
-                    F.col("vb").cast("array<double>"),
-                ).alias("cos"),
-            )
-            .where(F.col("cos") >= 0.35)
-        )
-        approx = embedding_neardup_pairs(
-            emb, threshold=0.35, dim=64, planes=4, tables=4, probe_radius=1
-        )
-        assert recall_against_exact(approx, exact, keys=("a", "b")) >= 0.9
 
 
 class TestLinkage:
@@ -717,73 +430,6 @@ class TestPipelineResume:
         assert df.columns == ["event", "status", "ts"]
 
 
-class TestQuantizedCosine:
-    def test_quantize_int8_vectors(self, spark):
-        from py_sema_spark.operators.similarity import quantize_int8
-
-        df = spark.createDataFrame(
-            [(0, [1.0, -0.5, 0.25, 0.0]), (1, [0.0, 0.0, 0.0, 0.0])],
-            "vec_id long, embedding array<float>",
-        )
-        rows = {
-            r.vec_id: r.q
-            for r in df.select(
-                "vec_id", quantize_int8(F.col("embedding")).alias("q")
-            ).collect()
-        }
-        assert rows[0] == [127, -64, 32, 0]  # -63.5 rounds away from zero
-        assert rows[1] == [0, 0, 0, 0]  # zero vector → zeros, no NaN
-
-    def test_quantized_topk_recall_testdata(self, spark, sf_dir):
-        from py_sema_spark.operators.similarity import (
-            cosine_topk,
-            quantized_cosine_topk,
-            recall_against_exact,
-        )
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        q = emb.where(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        exact = cosine_topk(emb, q, k=5)
-        approx = quantized_cosine_topk(emb, q, k=5)
-        # int8 keeps ~7 bits of precision per dim; on 64-d vectors the
-        # cosine error is ~1e-2 — top-5 agreement stays near-perfect
-        assert recall_against_exact(approx, exact) >= 0.9
-
-
-class TestBucketedTables:
-    def test_colocated_join_has_no_exchange(self, spark):
-        from py_sema_spark.model import write_bucketed_table
-
-        a = spark.range(200).select(
-            F.concat(F.lit("urn:s"), (F.col("id") % 40).cast("string"))
-            .alias("s"),
-            F.col("id").alias("va"),
-        )
-        b = spark.range(100).select(
-            F.concat(F.lit("urn:s"), (F.col("id") % 40).cast("string"))
-            .alias("s"),
-            F.col("id").alias("vb"),
-        )
-        ta = write_bucketed_table(a, "t_bkt_a", n_buckets=8)
-        tb = write_bucketed_table(b, "t_bkt_b", n_buckets=8)
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            joined = ta.join(tb, "s")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            # the whole point: both sides read pre-bucketed — the join
-            # runs with no hash-partitioning exchange anywhere
-            assert "Exchange hashpartitioning" not in plan
-            assert "SortMergeJoin" in plan
-            assert joined.count() == 500  # 40-key equijoin: 5×2.5 avg
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-            spark.sql("DROP TABLE IF EXISTS t_bkt_a")
-            spark.sql("DROP TABLE IF EXISTS t_bkt_b")
-
-
 class TestPipelineCurate:
     def test_curate_stage_dedups_recrawls(self, spark, tmp_path_factory):
         from py_sema_spark.pipeline import Pipeline
@@ -806,120 +452,6 @@ class TestPipelineCurate:
         assert out.count() == out2.count()
         stages = [e["event"].listargs[0] for e in p.trace.events]
         assert stages[0] == "00_curate"
-
-
-class TestPageRank:
-    def test_star_graph_hand_computed(self, spark):
-        from py_sema_spark.operators.graph import pagerank
-
-        # spokes a,b,c all link to hub h; h links back to a
-        edges = spark.createDataFrame(
-            [("a", "h"), ("b", "h"), ("c", "h"), ("h", "a")],
-            "src string, dst string",
-        )
-        r = {row.node: row.rank for row in pagerank(edges, iterations=1).collect()}
-        # after 1 iter from uniform 1/4: h = 0.15/4 + 0.85*(3/4) = 0.675
-        assert r["h"] == pytest.approx(0.15 / 4 + 0.85 * 0.75)
-        assert r["b"] == pytest.approx(0.15 / 4)
-        assert r["a"] == pytest.approx(0.15 / 4 + 0.85 * 0.25)
-
-    def test_cycle_stays_uniform(self, spark):
-        from py_sema_spark.operators.graph import pagerank
-
-        n = 6
-        edges = spark.createDataFrame(
-            [(i, (i + 1) % n) for i in range(n)], "src long, dst long"
-        )
-        r = [row.rank for row in pagerank(edges, iterations=7).collect()]
-        assert all(x == pytest.approx(1 / n) for x in r)
-
-    def test_mass_conserved_with_dangling(self, spark):
-        from py_sema_spark.operators.graph import pagerank
-
-        # d has no out-links: its mass must redistribute, not vanish
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "d"), ("a", "d")], "src string, dst string"
-        )
-        out = pagerank(edges, iterations=10).collect()
-        assert sum(r.rank for r in out) == pytest.approx(1.0, abs=1e-9)
-        r = {row.node: row.rank for row in out}
-        assert r["d"] > r["b"] > r["a"]
-
-    def test_hub_destination_preaggregates(self, spark):
-        from py_sema_spark.operators.graph import pagerank
-
-        edges = spark.range(50).select(
-            F.col("id").alias("src"), F.lit(0).alias("dst")
-        )
-        plan = pagerank(edges, iterations=1)._jdf.queryExecution(
-        ).optimizedPlan().toString()
-        # contribution sum is an Aggregate keyed on dst (map-side
-        # combine for hub pages), never a window/collect
-        assert "Aggregate" in plan and "Window" not in plan
-
-
-class TestTriangleCount:
-    def test_k3_and_square(self, spark):
-        from py_sema_spark.operators.graph import triangle_count
-
-        k3 = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
-        )
-        assert {r.node: r.triangles for r in triangle_count(k3).collect()} \
-            == {"a": 1, "b": 1, "c": 1}
-        square = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")],
-            "src string, dst string",
-        )
-        assert all(
-            r.triangles == 0 for r in triangle_count(square).collect()
-        )
-
-    def test_k4_and_direction_duplicates(self, spark):
-        from py_sema_spark.operators.graph import triangle_count
-
-        # K4 given with duplicate and reversed edges + a self loop:
-        # undirected-simple normalization must not double count
-        nodes = ["a", "b", "c", "d"]
-        edges = [(x, y) for x in nodes for y in nodes if x != y]
-        edges += [("a", "a"), ("a", "b"), ("b", "a")]
-        df = spark.createDataFrame(edges, "src string, dst string")
-        out = {r.node: r.triangles for r in triangle_count(df).collect()}
-        assert out == {n: 3 for n in nodes}
-
-
-class TestClusteringCoefficient:
-    def test_triangle_with_pendant(self, spark):
-        """Hand-computed fixed point: triangle a-b-c plus pendant d on
-        a. c(a)=2·1/(3·2)=0.333333, c(b)=c(c)=1.0, c(d)=0 (deg 1)."""
-        from py_sema_spark.operators.graph import clustering_coefficient
-
-        g = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "a"), ("a", "d")],
-            "src string, dst string",
-        )
-        out = {
-            r.node: (r.degree, r.triangles, r.coeff)
-            for r in clustering_coefficient(g).collect()
-        }
-        assert out == {
-            "a": (3, 1, 0.333333),
-            "b": (2, 1, 1.0),
-            "c": (2, 1, 1.0),
-            "d": (1, 0, 0.0),
-        }
-
-    def test_square_all_zero(self, spark):
-        from py_sema_spark.operators.graph import clustering_coefficient
-
-        square = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "d"), ("d", "a")],
-            "src string, dst string",
-        )
-        assert all(
-            r.coeff == 0.0 and r.degree == 2
-            for r in clustering_coefficient(square).collect()
-        )
 
 
 class TestSameasFusion:
@@ -1045,111 +577,6 @@ class TestKmvSketch:
         assert "WindowGroupLimit" in plan
 
 
-class TestDupSpanRemoval:
-    """remove_duplicate_spans — hand-computed expectations (Lee et al.
-    ExactSubstr semantics: every repeated k-token window is dropped at
-    all but its first (doc_id, pos) occurrence)."""
-
-    @pytest.fixture(scope="class")
-    def out(self, spark):
-        rows = [
-            (1, "a b c d e f g h"),              # first occurrence holder
-            (2, "x x a b c d e y"),              # repeats "a b c d e" at pos 2
-            (3, "q r s"),                        # < k tokens: untouched
-            (4, "a b c d e f g h"),              # exact copy: fully covered
-        ]
-        docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        return {
-            r["doc_id"]: r
-            for r in remove_duplicate_spans(docs, k=5).collect()
-        }
-
-    def test_first_occurrence_kept_intact(self, out):
-        assert out[1]["clean_text"] == "a b c d e f g h"
-        assert out[1]["n_removed"] == 0 and out[1]["n_tokens"] == 8
-
-    def test_repeat_span_removed_rest_kept(self, out):
-        assert out[2]["clean_text"] == "x x y"
-        assert out[2]["n_removed"] == 5 and out[2]["n_tokens"] == 8
-
-    def test_short_doc_untouched(self, out):
-        assert out[3]["clean_text"] == "q r s"
-        assert out[3]["n_removed"] == 0
-
-    def test_full_duplicate_fully_removed(self, out):
-        assert out[4]["clean_text"] == ""
-        assert out[4]["n_removed"] == 8 and out[4]["n_tokens"] == 8
-
-
-class TestNeardupClusters:
-    def test_transitive_cluster_with_canonical_survivor(self, spark):
-        # A≈B (J=19/21), B≈C (J=19/21) but A–C (J=18/22) is below the
-        # 0.85 threshold: only transitive closure puts all three in one
-        # cluster — the property pair output alone cannot express.
-        base = [f"w{i:02d}" for i in range(20)]
-        a = " ".join(base)
-        b = " ".join(base[:19] + ["xx"])
-        c = " ".join(base[:18] + ["yy", "xx"])
-        docs = spark.createDataFrame(
-            [(1, a), (2, b), (3, c), (4, "totally unrelated content here")],
-            ["doc_id", "text"],
-        )
-        rows = {
-            r["doc_id"]: r
-            for r in neardup_clusters(
-                docs, threshold=0.85, tokenizer="word"
-            ).collect()
-        }
-        assert set(rows) == {1, 2, 3}  # singleton doc 4 absent
-        assert all(r["cluster_id"] == 1 for r in rows.values())
-        assert all(r["cluster_size"] == 3 for r in rows.values())
-        assert rows[1]["is_canonical"]
-        assert not rows[2]["is_canonical"] and not rows[3]["is_canonical"]
-
-
-class TestSessionize:
-    def test_gap_splits_sessions(self, spark):
-        import datetime as dt
-
-        from py_sema_spark.operators.windows import sessionize
-
-        t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-        def m(minutes):
-            return t0 + dt.timedelta(minutes=minutes)
-
-        rows = [
-            (1, m(0), 10),    # user 1, session 1
-            (1, m(10), 11),   # +10min: same session
-            (1, m(50), 12),   # +40min gap: session 2
-            (2, m(0), 20),    # user 2, own session
-        ]
-        df = spark.createDataFrame(rows, ["user_id", "ts", "event_id"])
-        out = {
-            r["event_id"]: r
-            for r in sessionize(df, gap_minutes=30).collect()
-        }
-        assert out[10]["session_id"] == "1#1" and out[10]["is_session_start"]
-        assert out[11]["session_id"] == "1#1" and not out[11]["is_session_start"]
-        assert out[12]["session_id"] == "1#2" and out[12]["is_session_start"]
-        assert out[20]["session_id"] == "2#1" and out[20]["is_session_start"]
-
-    def test_boundary_gap_stays_in_session(self, spark):
-        import datetime as dt
-
-        from py_sema_spark.operators.windows import sessionize
-
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [(1, t0, 1), (1, t0 + dt.timedelta(minutes=30), 2)]
-        df = spark.createDataFrame(rows, ["user_id", "ts", "event_id"])
-        out = {
-            r["event_id"]: r
-            for r in sessionize(df, gap_minutes=30).collect()
-        }
-        # gap == threshold is NOT a new session (strict >)
-        assert out[2]["session_id"] == "1#1"
-
-
 class TestExactQuantiles:
     def test_linear_interpolation_values(self, spark):
         from py_sema_spark.operators.sketch import exact_quantiles
@@ -1162,61 +589,6 @@ class TestExactQuantiles:
         assert abs(row["p50"] - 5.5) < 1e-9
         assert abs(row["p90"] - 9.1) < 1e-9
         assert abs(row["p99"] - 9.91) < 1e-9
-
-
-class TestEntityCooccurrence:
-    def test_pmi_hand_computed(self, spark):
-        import math
-
-        from py_sema_spark.operators.linkage import entity_cooccurrence
-
-        docs = spark.createDataFrame(
-            [
-                (1, "alpha beta"),
-                (2, "alpha beta"),
-                (3, "alpha gamma"),
-                (4, "delta only"),
-            ],
-            ["doc_id", "text"],
-        )
-        d = spark.createDataFrame(
-            [("urn:a", "alpha"), ("urn:b", "beta"), ("urn:c", "gamma")],
-            ["entity", "label"],
-        )
-        rows = {
-            (r["e1"], r["e2"]): r
-            for r in entity_cooccurrence(docs, d, max_gram=1).collect()
-        }
-        ab = rows[("urn:a", "urn:b")]
-        assert (ab["n_ab"], ab["n_a"], ab["n_b"]) == (2, 3, 2)
-        # PMI = ln(n_ab·N / (n_a·n_b)) = ln(2·4/6)
-        assert abs(ab["pmi"] - round(math.log(8 / 6), 6)) < 1e-9
-        ac = rows[("urn:a", "urn:c")]
-        assert (ac["n_ab"], ac["n_a"], ac["n_b"]) == (1, 3, 1)
-        assert ("urn:b", "urn:c") not in rows
-
-
-class TestDupSpanOverlap:
-    def test_overlapping_and_intra_doc_repeats(self, spark):
-        from py_sema_spark.operators.dedup import remove_duplicate_spans
-
-        rows = [
-            (1, "a b c d e f"),
-            (2, "a b c d e f"),              # both 5-grams repeat: fully covered
-            (3, "a b c d e z a b c d e"),    # same gram twice within one doc
-        ]
-        docs = spark.createDataFrame(rows, ["doc_id", "text"])
-        out = {
-            r["doc_id"]: r
-            for r in remove_duplicate_spans(docs, k=5).collect()
-        }
-        assert out[1]["clean_text"] == "a b c d e f"  # holds both firsts
-        # doc 2: overlapping covered ranges [0,4] and [1,5] merge to all 6
-        assert out[2]["clean_text"] == "" and out[2]["n_removed"] == 6
-        # doc 3: neither occurrence is the global first (doc 1 pos 0 is),
-        # so positions 0-4 and 6-10 are both removed; only "z" survives
-        assert out[3]["clean_text"] == "z"
-        assert out[3]["n_tokens"] == 11 and out[3]["n_removed"] == 10
 
 
 class TestWindowsNullSafety:
@@ -1256,308 +628,6 @@ class TestWindowsNullSafety:
             for r in with_ctrl(df, ["user"], ["ts", "event_id"]).collect()
         }
         assert out == {1: False, 2: False, 3: True}
-
-    def test_asof_ignores_null_right_timestamps(self, spark):
-        from py_sema_spark.operators.windows import asof_join
-
-        left = spark.createDataFrame(
-            [(1, 100)], "k long, ts long"
-        )
-        right = spark.createDataFrame(
-            [(1, None, 99)], "k long, ts long, v long"
-        )
-        out = asof_join(left, right, on="k", ts_col="ts", value_cols=["v"]).collect()
-        assert len(out) == 1 and out[0]["v_asof"] is None
-
-    def test_trustrank_empty_seed_guard(self, spark):
-        from py_sema_spark.operators.graph import trustrank
-
-        edges = spark.createDataFrame([("a", "b")], "src string, dst string")
-        seeds = spark.createDataFrame([("zzz",)], "node string")
-        with pytest.raises(ValueError, match="no seed"):
-            trustrank(edges, seeds)
-
-
-class TestAsofJoin:
-    def test_at_or_before_semantics(self, spark):
-        import datetime as dt
-
-        from py_sema_spark.operators.windows import asof_join
-
-        t0 = dt.datetime(2024, 1, 1)
-
-        def s(sec):
-            return t0 + dt.timedelta(seconds=sec)
-
-        clicks = spark.createDataFrame(
-            [(100, 1, s(5)), (101, 1, s(10)), (102, 1, s(20)), (103, 1, s(35)),
-             (104, 2, s(50))],
-            ["event_id", "user_id", "ts"],
-        )
-        views = spark.createDataFrame(
-            [(1, s(10), 200, 1.0), (1, s(30), 201, 2.0)],
-            ["user_id", "ts", "event_id", "value"],
-        )
-        out = {
-            r["event_id"]: r["value_asof"]
-            for r in asof_join(
-                clicks, views, on="user_id", ts_col="ts",
-                value_cols=["value"], tiebreak_col="event_id",
-            ).collect()
-        }
-        assert out[100] is None          # click before any view
-        assert out[101] == 1.0           # tie: at-or-before includes equal ts
-        assert out[102] == 1.0           # carried forward
-        assert out[103] == 2.0           # newer view wins
-        assert out[104] is None          # other user: no views at all
-
-    def test_matched_row_null_value_is_honored(self, spark):
-        """merge_asof matches the latest right ROW: if that row's
-        value is NULL, the result is NULL — not a carried-forward
-        stale older value (the pre-round-3 ignorenulls bug)."""
-        import datetime as dt
-
-        from py_sema_spark.operators.windows import asof_join
-
-        t0 = dt.datetime(2024, 1, 1)
-        s = lambda sec: t0 + dt.timedelta(seconds=sec)
-        clicks = spark.createDataFrame(
-            [(100, 1, s(6))], ["event_id", "user_id", "ts"]
-        )
-        views = spark.createDataFrame(
-            [(1, s(0), 200, 5.0), (1, s(5), 201, None)],
-            "user_id long, ts timestamp, event_id long, value double",
-        )
-        row = asof_join(
-            clicks, views, on="user_id", ts_col="ts",
-            value_cols=["value"], tiebreak_col="event_id",
-        ).first()
-        assert row.value_asof is None
-
-    def test_internal_name_collision_raises(self, spark):
-        from py_sema_spark.operators.windows import first_per_key
-
-        df = spark.createDataFrame([(1, 2)], "k long, _rn long")
-        with pytest.raises(ValueError, match="_rn"):
-            first_per_key(df, ["k"], ["_rn"])
-
-
-class TestCommonNeighbors:
-    def test_hand_computed_scores_and_adjacency_exclusion(self, spark):
-        from py_sema_spark.operators.graph import common_neighbors
-
-        # N(1)=N(2)={3,4}; N(3)=N(4)={1,2}. Candidate pairs are the two
-        # non-adjacent ones, each with 2 common neighbors, Jaccard 1.0.
-        edges = spark.createDataFrame(
-            [(1, 3), (2, 3), (1, 4), (2, 4)], ["src", "dst"]
-        )
-        rows = {
-            (r["a"], r["b"]): r
-            for r in common_neighbors(edges, min_common=2).collect()
-        }
-        assert set(rows) == {(1, 2), (3, 4)}
-        assert rows[(1, 2)]["common"] == 2
-        assert rows[(1, 2)]["jaccard"] == 1.0
-        assert rows[(3, 4)]["common"] == 2
-
-    def test_max_degree_drops_hub_centers(self, spark):
-        from py_sema_spark.operators.graph import common_neighbors
-
-        # hub 0 connects to 1..5; without the cap every leaf pair
-        # shares the hub; with max_degree=3 the hub center is dropped
-        # and no pair has any common neighbor left
-        edges = spark.createDataFrame(
-            [(0, i) for i in range(1, 6)], ["src", "dst"]
-        )
-        out = common_neighbors(edges, min_common=1, max_degree=3)
-        assert out.count() == 0
-
-
-class TestNewOpPlanShapes:
-    """Physical-plan assertions for the round-2 window/graph additions
-    — the documented scale properties, held by test."""
-
-    def _plan(self, df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    def test_sessionize_single_exchange(self, spark, sf_dir):
-        from py_sema_spark.operators.windows import sessionize
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        plan = self._plan(sessionize(ev))
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert plan.count("Sort ") <= 2  # one physical sort (+AQE read)
-
-    def test_asof_join_single_exchange(self, spark, sf_dir):
-        from pyspark.sql import functions as F
-
-        from py_sema_spark.operators.windows import asof_join
-
-        ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-        clicks = ev.where(F.col("event_type") == "click").select(
-            "event_id", "user_id", "ts"
-        )
-        views = ev.where(F.col("event_type") == "view").select(
-            "user_id", "ts", "event_id", "value"
-        )
-        plan = self._plan(
-            asof_join(
-                clicks, views, on="user_id", ts_col="ts",
-                value_cols=["value"], tiebreak_col="event_id",
-            )
-        )
-        # the whole as-of join costs ONE hash exchange (the union's
-        # window) — no range join, no per-side re-shuffle
-        assert plan.count("Exchange hashpartitioning") == 1
-        assert "SortMergeJoin" not in plan
-        assert "BroadcastNestedLoopJoin" not in plan
-
-
-class TestNewOpEdgeCases:
-    def test_neardup_clusters_empty_pairs(self, spark):
-        from py_sema_spark.operators.dedup import neardup_clusters
-
-        docs = spark.createDataFrame(
-            [(1, "completely unique first text"),
-             (2, "another unrelated document body")],
-            ["doc_id", "text"],
-        )
-        assert neardup_clusters(docs, threshold=0.9).count() == 0
-
-    def test_asof_join_no_right_rows_for_key(self, spark):
-        import datetime as dt
-
-        from py_sema_spark.operators.windows import asof_join
-
-        t0 = dt.datetime(2024, 1, 1)
-        left = spark.createDataFrame(
-            [(1, 9, t0)], ["event_id", "user_id", "ts"]
-        )
-        right = spark.createDataFrame(
-            [], "user_id long, ts timestamp, event_id long, value double"
-        )
-        out = asof_join(
-            left, right, on="user_id", ts_col="ts",
-            value_cols=["value"], tiebreak_col="event_id",
-        ).collect()
-        assert len(out) == 1 and out[0]["value_asof"] is None
-
-
-class TestAdamicAdar:
-    def test_rare_neighbor_outranks_hub(self, spark):
-        from py_sema_spark.operators.graph import adamic_adar
-
-        # pair (1,2) shares rare neighbor 10 (deg 2) and hub 20;
-        # pair (3,4) shares hub 20 and hub 21 (both deg 4).
-        # Equal common counts, but (1,2)'s rare neighbor weighs more.
-        edges = [(1, 10), (2, 10)]
-        for leaf in (1, 2, 3, 4):
-            edges += [(leaf, 20), (leaf, 21)]
-        df = spark.createDataFrame(edges, ["src", "dst"])
-        rows = {
-            (r["a"], r["b"]): r
-            for r in adamic_adar(df, min_common=2, top_k=10).collect()
-        }
-        assert rows[(1, 2)]["common"] == 3  # 10, 20, 21
-        assert rows[(3, 4)]["common"] == 2  # 20, 21
-        assert rows[(1, 2)]["aa"] > rows[(3, 4)]["aa"]
-
-
-class TestShortestPaths:
-    def test_chain_with_unreachable(self, spark):
-        from py_sema_spark.operators.graph import shortest_paths
-
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")],
-            "src string, dst string",
-        )
-        src = spark.createDataFrame([("a",)], "node string")
-        got = {r.node: r.dist for r in shortest_paths(edges, src).collect()}
-        assert got == {"a": 0, "b": 1, "c": 2, "d": 3}
-
-    def test_multi_source_takes_min(self, spark):
-        from py_sema_spark.operators.graph import shortest_paths
-
-        edges = spark.createDataFrame(
-            [(0, 1), (1, 2), (2, 3), (3, 4), (5, 4)], "src long, dst long"
-        )
-        src = spark.createDataFrame([(0,), (5,)], "node long")
-        got = {r.node: r.dist for r in shortest_paths(edges, src).collect()}
-        # node 4 reachable at dist 4 from 0 but dist 1 from 5
-        assert got[4] == 1 and got[3] == 3 and got[0] == 0 and got[5] == 0
-
-    def test_cycle_terminates(self, spark):
-        from py_sema_spark.operators.graph import shortest_paths
-
-        edges = spark.createDataFrame(
-            [(0, 1), (1, 2), (2, 0)], "src long, dst long"
-        )
-        src = spark.createDataFrame([(0,)], "node long")
-        got = {r.node: r.dist for r in shortest_paths(edges, src).collect()}
-        assert got == {0: 0, 1: 1, 2: 2}
-
-    def test_max_hops_caps_search(self, spark):
-        from py_sema_spark.operators.graph import shortest_paths
-
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(6)], "src long, dst long"
-        )
-        src = spark.createDataFrame([(0,)], "node long")
-        got = shortest_paths(edges, src, max_hops=2).collect()
-        assert max(r.dist for r in got) == 2 and len(got) == 3
-
-
-class TestIntervalOverlapJoin:
-    def _frames(self, spark):
-        import datetime as dt
-
-        t0 = dt.datetime(2024, 1, 1, 0, 0, 0)
-
-        def at(m):
-            return t0 + dt.timedelta(minutes=m)
-
-        pts = spark.createDataFrame(
-            [(1, at(0), "a"), (1, at(10), "b"), (1, at(30), "c"),
-             (2, at(5), "d")],
-            "user_id long, ts timestamp, tag string",
-        )
-        iv = spark.createDataFrame(
-            [(1, 100, at(0), at(30)), (2, 200, at(0), at(30)),
-             (1, 300, at(30), at(30))],  # empty interval: matches nothing
-            "user_id long, iid long, start timestamp, end timestamp",
-        )
-        return pts, iv
-
-    def test_half_open_semantics(self, spark):
-        from py_sema_spark.operators.rangejoin import interval_overlap_join
-
-        pts, iv = self._frames(spark)
-        got = sorted(
-            (r.iid, r.tag)
-            for r in interval_overlap_join(
-                pts, iv, keys=["user_id"], bin_minutes=7
-            ).collect()
-        )
-        # 'c' at minute 30 is excluded (end-exclusive); empty interval gone
-        assert got == [(100, "a"), (100, "b"), (200, "d")]
-
-    def test_no_duplicate_matches_across_bins(self, spark):
-        from py_sema_spark.operators.rangejoin import interval_overlap_join
-
-        pts, iv = self._frames(spark)
-        # tiny bins force the interval to explode over many buckets —
-        # each (interval, point) pair must still appear exactly once
-        out = interval_overlap_join(pts, iv, keys=["user_id"], bin_minutes=1)
-        assert out.count() == out.dropDuplicates(["iid", "tag"]).count() == 3
-
-    def test_single_equijoin_no_nested_loop(self, spark):
-        from py_sema_spark.operators.rangejoin import interval_overlap_join
-
-        pts, iv = self._frames(spark)
-        plan = interval_overlap_join(
-            pts, iv, keys=["user_id"], bin_minutes=30
-        )._jdf.queryExecution().executedPlan().toString()
-        assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 
 class TestHeavyHitters:
@@ -1606,810 +676,3 @@ class TestHeavyHitters:
         )
         got = {r.item: r.cnt for r in heavy_hitters(df, "v", k=3).collect()}
         assert got == {True: 9}
-
-
-class TestHits:
-    def test_bipartite_hand_computed(self, spark):
-        from py_sema_spark.operators.graph import hits
-
-        edges = spark.createDataFrame(
-            [("h1", "a1"), ("h1", "a2"), ("h2", "a1")],
-            "src string, dst string",
-        )
-        r = {row.node: (row.hub, row.auth) for row in
-             hits(edges, iterations=1).collect()}
-        # auth raw (a1,a2)=(2,1) → L1 (2/3,1/3); hub raw (h1,h2)=(1,2/3)
-        # → L1 (3/5,2/5); pure hubs have auth 0 and vice versa
-        assert r["a1"] == (0.0, round(2 / 3, 6))
-        assert r["a2"] == (0.0, round(1 / 3, 6))
-        assert r["h1"] == (0.6, 0.0)
-        assert r["h2"] == (0.4, 0.0)
-
-    def test_mass_is_one_each_side(self, spark):
-        from py_sema_spark.operators.graph import hits
-
-        n = 8
-        edges = spark.createDataFrame(
-            [(i, (i * 3 + 1) % n) for i in range(n)], "src long, dst long"
-        )
-        out = hits(edges, iterations=4).collect()
-        assert sum(r.hub for r in out) == pytest.approx(1.0, abs=1e-5)
-        assert sum(r.auth for r in out) == pytest.approx(1.0, abs=1e-5)
-
-
-class TestTrustRank:
-    def test_trust_decays_from_seed(self, spark):
-        from py_sema_spark.operators.graph import trustrank
-
-        # chain s -> a -> b; seed = s. Trust must strictly decay along
-        # the chain, and s keeps the teleport floor.
-        edges = spark.createDataFrame(
-            [("s", "a"), ("a", "b"), ("b", "b")], "src string, dst string"
-        )
-        seeds = spark.createDataFrame([("s",)], "node string")
-        r = {row.node: row.rank for row in
-             trustrank(edges, seeds, iterations=10).collect()}
-        assert r["s"] > 0 and r["s"] == pytest.approx(0.15, abs=1e-6)
-        assert r["a"] < r["s"] or r["b"] > 0  # a gets d*s's mass
-        assert r["a"] == pytest.approx(0.85 * r["s"], abs=1e-6)
-
-    def test_unreachable_scores_zero_and_mass_conserved(self, spark):
-        from py_sema_spark.operators.graph import trustrank
-
-        # x,y disconnected from the seed component; d dangles so its
-        # mass teleports back to the seed set
-        edges = spark.createDataFrame(
-            [("s", "a"), ("a", "d"), ("x", "y"), ("y", "x")],
-            "src string, dst string",
-        )
-        seeds = spark.createDataFrame([("s",)], "node string")
-        out = trustrank(edges, seeds, iterations=12).collect()
-        r = {row.node: row.rank for row in out}
-        assert r["x"] == 0.0 and r["y"] == 0.0
-        assert sum(v.rank for v in out) == pytest.approx(1.0, abs=1e-9)
-
-    def test_seed_not_in_graph_ignored(self, spark):
-        from py_sema_spark.operators.graph import trustrank
-
-        edges = spark.createDataFrame(
-            [("s", "a"), ("a", "s")], "src string, dst string"
-        )
-        seeds = spark.createDataFrame(
-            [("s",), ("ghost",)], "node string"
-        )
-        out = trustrank(edges, seeds, iterations=8).collect()
-        assert sum(v.rank for v in out) == pytest.approx(1.0, abs=1e-9)
-        assert {v.node for v in out} == {"s", "a"}
-
-
-class TestNeighborAgg:
-    def test_one_hop_mean(self, spark):
-        from py_sema_spark.operators.graph import neighbor_agg
-
-        edges = spark.createDataFrame(
-            [("a", "b"), ("a", "c"), ("b", "c")], "src string, dst string"
-        )
-        feats = spark.createDataFrame(
-            [("a", 10.0), ("b", 20.0), ("c", 40.0)], "node string, f double"
-        )
-        got = {r.node: r.f_nbr_avg for r in
-               neighbor_agg(edges, feats, feature_cols=["f"]).collect()}
-        # c has no out-edges → absent; a averages b,c; b averages c
-        assert got == {"a": 30.0, "b": 40.0}
-
-    def test_two_hop_mean_of_means(self, spark):
-        from py_sema_spark.operators.graph import neighbor_agg
-
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("b", "d")], "src string, dst string"
-        )
-        feats = spark.createDataFrame(
-            [("a", 1.0), ("b", 2.0), ("c", 6.0), ("d", 10.0)],
-            "node string, f double",
-        )
-        got = {r.node: r.f_nbr_avg for r in
-               neighbor_agg(edges, feats, feature_cols=["f"], hops=2).collect()}
-        # hop1: a→8? no: a's nbr b=2 → a:2... hop1 {a:2, b:8}; hop2:
-        # a's nbr b has hop1 8 → a:8; b's nbrs c,d have no hop1 → drop
-        assert got == {"a": 8.0}
-
-
-class TestKCore:
-    def test_triangle_with_tail(self, spark):
-        from py_sema_spark.operators.graph import k_core
-
-        # triangle abc (each degree 2) + pendant d; 2-core = triangle
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "a"), ("c", "d")],
-            "src string, dst string",
-        )
-        got = {r.node for r in k_core(edges, k=2, rounds=5).collect()}
-        assert got == {"a", "b", "c"}
-
-    def test_cascade_needs_multiple_sweeps(self, spark):
-        from py_sema_spark.operators.graph import k_core
-
-        # chain hanging off a triangle: each sweep peels one more
-        # chain node; rounds=1 must differ from convergence
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "c"), ("c", "a"),
-             ("a", "x1"), ("x1", "x2"), ("x2", "x3")],
-            "src string, dst string",
-        )
-        one = {r.node for r in k_core(edges, k=2, rounds=1).collect()}
-        full = {r.node for r in k_core(edges, k=2, rounds=5).collect()}
-        assert full == {"a", "b", "c"} and len(one) > len(full)
-
-    def test_empty_core(self, spark):
-        from py_sema_spark.operators.graph import k_core
-
-        edges = spark.createDataFrame(
-            [("a", "b"), ("b", "c")], "src string, dst string"
-        )
-        assert k_core(edges, k=3, rounds=4).count() == 0
-
-    def test_default_converges_past_any_fixed_round_count(self, spark):
-        """A 25-node path at k=2 peels one endpoint layer per bulk
-        sweep (~12 sweeps to the empty 2-core); the convergence
-        default must reach the true (empty) core where a fixed
-        rounds=10 run still reports phantom survivors."""
-        from py_sema_spark.operators.graph import k_core
-
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(24)], "src long, dst long"
-        )
-        assert k_core(edges, k=2).count() == 0          # converged
-        assert k_core(edges, k=2, rounds=10).count() > 0  # fixed-round gap
-
-
-class TestGraphDegenerateInputs:
-    def test_pagerank_null_endpoint_mass_conserved(self, spark):
-        """NULL is not a vertex: edges touching NULL drop, N counts
-        real nodes only, and total rank mass stays 1 (before the
-        round-3 fix, node 2's whole contribution grouped under NULL
-        and vanished at the join back to the node set)."""
-        from py_sema_spark.operators.graph import pagerank
-
-        edges = spark.createDataFrame(
-            [(1, 2), (2, None)], "src long, dst long"
-        )
-        rows = pagerank(edges, iterations=5).collect()
-        assert {r.node for r in rows} == {1, 2}
-        assert sum(r.rank for r in rows) == pytest.approx(1.0)
-
-    def test_label_propagation_keeps_self_loop_only_node(self, spark):
-        """Published LPA assigns every vertex a community: a node
-        whose only incident edge is a self-loop keeps its own label
-        instead of vanishing from the assignment."""
-        from py_sema_spark.operators.graph import label_propagation
-
-        edges = spark.createDataFrame(
-            [(5, 5), (1, 2)], "src long, dst long"
-        )
-        got = {r.node: r.label
-               for r in label_propagation(edges, iterations=2).collect()}
-        # the 1–2 pair oscillates under synchronous sweeps (expected);
-        # the pinned property is node 5's presence with its own label
-        assert set(got) == {1, 2, 5}
-        assert got[5] == 5
-
-
-class TestFuzzyNamePairs:
-    def test_substitution_insertion_deletion_found(self, spark):
-        from py_sema_spark.operators.linkage import fuzzy_name_pairs
-
-        df = spark.createDataFrame(
-            [(1, "smith"), (2, "smyth"), (3, "smiths"), (4, "mith"),
-             (5, "jones")],
-            "id long, name string",
-        )
-        got = {(r.id_a, r.id_b): r.dist
-               for r in fuzzy_name_pairs(df).collect()}
-        # substitution (1,2), insertion (1,3), deletion (1,4); jones
-        # matches nothing; (2,3)=(3,4)=(2,4)=2 must be verified away
-        assert got == {(1, 2): 1, (1, 3): 1, (1, 4): 1}
-
-    def test_shared_prefix_does_not_explode(self, spark):
-        from py_sema_spark.operators.linkage import fuzzy_name_pairs
-
-        # long constant prefix (the case that kills prefix blocking)
-        rows = [(i, f"Customer#{i:04d}") for i in range(100)]
-        df = spark.createDataFrame(rows, "id long, name string")
-        out = fuzzy_name_pairs(df)
-        brute = {
-            (a, b)
-            for a, na in rows
-            for b, nb in rows
-            if a < b and sum(x != y for x, y in zip(na, nb)) == 1
-        }
-        assert {(r.id_a, r.id_b) for r in out.collect()} == brute
-
-    def test_identical_names_distance_zero(self, spark):
-        from py_sema_spark.operators.linkage import fuzzy_name_pairs
-
-        df = spark.createDataFrame(
-            [(1, "acme"), (2, "acme")], "id long, name string"
-        )
-        rows = fuzzy_name_pairs(df).collect()
-        assert len(rows) == 1 and rows[0].dist == 0
-
-    def test_empty_name_within_distance_one(self, spark):
-        """An empty name is a legitimate string at edit distance 1
-        from every single-char name; only NULL names are dropped.
-        Before the round-3 fix length(_nm) > 0 filtered both."""
-        from py_sema_spark.operators.linkage import fuzzy_name_pairs
-
-        df = spark.createDataFrame(
-            [(1, ""), (2, "x"), (3, None), (4, "xy")],
-            "id long, name string",
-        )
-        got = {(r.id_a, r.id_b): r.dist
-               for r in fuzzy_name_pairs(df).collect()}
-        assert got == {(1, 2): 1, (2, 4): 1}
-
-
-class TestApplyChanges:
-    def test_upsert_delete_passthrough(self, spark):
-        from py_sema_spark.operators.cdc import apply_changes
-
-        snap = spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "k long, v string"
-        )
-        chg = spark.createDataFrame(
-            [(2, "B", "upsert"), (3, "c", "delete"), (4, "d", "upsert")],
-            "k long, v string, op string",
-        )
-        got = {(r.k, r.v) for r in apply_changes(snap, chg, ["k"]).collect()}
-        assert got == {(1, "a"), (2, "B"), (4, "d")}
-
-    def test_null_op_upserts_not_silently_deletes(self, spark):
-        """A malformed NULL op must behave as an upsert: before the
-        round-3 fix the key was anti-joined out of the snapshot but
-        never re-inserted — vanishing as if deleted."""
-        from py_sema_spark.operators.cdc import apply_changes
-
-        snap = spark.createDataFrame([(1, "a")], "k long, v string")
-        chg = spark.createDataFrame(
-            [(1, "A", None)], "k long, v string, op string"
-        )
-        got = {(r.k, r.v) for r in apply_changes(snap, chg, ["k"]).collect()}
-        assert got == {(1, "A")}
-
-    def test_delete_wins_over_same_key_upsert(self, spark):
-        from py_sema_spark.operators.cdc import apply_changes
-
-        snap = spark.createDataFrame([(1, "a")], "k long, v string")
-        chg = spark.createDataFrame(
-            [(1, "x", "upsert"), (1, "x", "delete")],
-            "k long, v string, op string",
-        )
-        assert apply_changes(snap, chg, ["k"]).count() == 0
-
-    def test_null_key_replaced_and_delete_wins(self, spark):
-        """NULL key components behave as one ordinary key value: a
-        NULL-key upsert replaces the snapshot's NULL-key row and a
-        NULL-key delete wins. Null-unsafe joins would duplicate the
-        row and silently ignore the delete."""
-        from py_sema_spark.operators.cdc import apply_changes
-
-        snap = spark.createDataFrame(
-            [(None, "old"), (1, "a")], "k long, v string"
-        )
-        up = spark.createDataFrame(
-            [(None, "new", "upsert")], "k long, v string, op string"
-        )
-        got = {(r.k, r.v) for r in apply_changes(snap, up, ["k"]).collect()}
-        assert got == {(None, "new"), (1, "a")}
-
-        both = spark.createDataFrame(
-            [(None, "new", "upsert"), (None, "new", "delete")],
-            "k long, v string, op string",
-        )
-        got2 = {(r.k, r.v) for r in apply_changes(snap, both, ["k"]).collect()}
-        assert got2 == {(1, "a")}
-
-
-class TestScd2Apply:
-    def test_close_and_chain(self, spark):
-        import datetime as dt
-        from py_sema_spark.operators.cdc import scd2_apply
-
-        t = lambda s: dt.datetime.fromisoformat(s)
-        dim = spark.createDataFrame(
-            [(1, 10.0, t("2024-01-01"), None),
-             (2, 20.0, t("2024-01-01"), None),
-             (1, 5.0, t("2023-01-01"), t("2024-01-01"))],
-            "k long, bal double, valid_from timestamp, valid_to timestamp",
-        )
-        ups = spark.createDataFrame(
-            [(1, 11.0, t("2024-02-01")), (1, 12.0, t("2024-03-01"))],
-            "k long, bal double, ts timestamp",
-        )
-        rows = {(r.k, r.bal, r.valid_from, r.valid_to)
-                for r in scd2_apply(dim, ups, ["k"]).collect()}
-        assert rows == {
-            (1, 5.0, t("2023-01-01"), t("2024-01-01")),   # history kept
-            (1, 10.0, t("2024-01-01"), t("2024-02-01")),  # closed at 1st upd
-            (1, 11.0, t("2024-02-01"), t("2024-03-01")),  # chained
-            (1, 12.0, t("2024-03-01"), None),             # new current
-            (2, 20.0, t("2024-01-01"), None),             # untouched
-        }
-
-    def test_exactly_one_current_per_updated_key(self, spark):
-        import datetime as dt
-        from py_sema_spark.operators.cdc import scd2_apply
-
-        t = lambda s: dt.datetime.fromisoformat(s)
-        dim = spark.createDataFrame(
-            [(i, float(i), t("2024-01-01"), None) for i in range(20)],
-            "k long, bal double, valid_from timestamp, valid_to timestamp",
-        )
-        ups = spark.createDataFrame(
-            [(i, i + 0.5, t("2024-02-01")) for i in range(0, 20, 2)],
-            "k long, bal double, ts timestamp",
-        )
-        out = scd2_apply(dim, ups, ["k"])
-        cur = out.where(F.col("valid_to").isNull())
-        assert cur.count() == 20
-        assert cur.groupBy("k").count().where("count > 1").count() == 0
-
-    def test_stale_update_dropped_no_inverted_interval(self, spark):
-        """An update whose ts predates the key's current valid_from is
-        stale: splicing it would rewrite closed history, and closing
-        the current row before it opened would mint an inverted
-        interval [2024-03-01, 2024-02-01). It is dropped whole."""
-        import datetime as dt
-        from py_sema_spark.operators.cdc import scd2_apply
-
-        t = lambda s: dt.datetime.fromisoformat(s)
-        dim = spark.createDataFrame(
-            [(1, 10.0, t("2024-03-01"), None),
-             (1, 5.0, t("2024-01-01"), t("2024-03-01"))],
-            "k long, bal double, valid_from timestamp, valid_to timestamp",
-        )
-        ups = spark.createDataFrame(
-            [(1, 99.0, t("2024-02-01")),   # stale — inside closed history
-             (1, 11.0, t("2024-04-01"))],  # live
-            "k long, bal double, ts timestamp",
-        )
-        rows = {(r.k, r.bal, r.valid_from, r.valid_to)
-                for r in scd2_apply(dim, ups, ["k"]).collect()}
-        assert rows == {
-            (1, 5.0, t("2024-01-01"), t("2024-03-01")),
-            (1, 10.0, t("2024-03-01"), t("2024-04-01")),
-            (1, 11.0, t("2024-04-01"), None),
-        }
-        # no inverted interval anywhere
-        assert all(vf is None or vt is None or vf <= vt
-                   for _, _, vf, vt in rows)
-
-    def test_equal_ts_ties_chain_on_attribute_order(self, spark):
-        """Two updates in one tick chain deterministically by the
-        attribute values themselves (portable ordering — no
-        engine-private hash): the larger bal stays current."""
-        import datetime as dt
-        from py_sema_spark.operators.cdc import scd2_apply
-
-        t = lambda s: dt.datetime.fromisoformat(s)
-        dim = spark.createDataFrame(
-            [(1, 1.0, t("2024-01-01"), None)],
-            "k long, bal double, valid_from timestamp, valid_to timestamp",
-        )
-        ups = spark.createDataFrame(
-            [(1, 7.0, t("2024-02-01")), (1, 3.0, t("2024-02-01"))],
-            "k long, bal double, ts timestamp",
-        )
-        rows = {(r.bal, r.valid_from, r.valid_to)
-                for r in scd2_apply(dim, ups, ["k"]).collect()}
-        assert rows == {
-            (1.0, t("2024-01-01"), t("2024-02-01")),
-            (3.0, t("2024-02-01"), t("2024-02-01")),  # empty interval
-            (7.0, t("2024-02-01"), None),             # larger bal current
-        }
-
-
-class TestSortedNeighborhood:
-    def test_window_and_block_semantics(self, spark):
-        """Docs sharing a prefix rank adjacently and pair up; docs more
-        than `window` ranks apart (or in another prefix block) never
-        become candidates, whatever their true similarity."""
-        from py_sema_spark.operators.dedup import sorted_neighborhood_pairs
-
-        docs = spark.createDataFrame(
-            [
-                (1, "alpha beta gamma one"),
-                (2, "alpha beta gamma two"),
-                (3, "alpha beta gamma three"),
-                (4, "alpha beta gamma four"),
-                (5, "alpha beta gamma five"),
-                (6, "zeta totally different text"),
-            ],
-            "doc_id long, text string",
-        )
-        out = {
-            (r.a, r.b): r.jaccard
-            for r in sorted_neighborhood_pairs(docs, window=2).collect()
-        }
-        # rank order within block 'alp' is by 24-char key:
-        # five(5) < four(4) < one(1) < three(3) < two(2);
-        # candidates = pairs within 2 ranks of each other
-        order = [5, 4, 1, 3, 2]
-        want = {
-            tuple(sorted((order[i], order[j])))
-            for i in range(len(order))
-            for j in range(i + 1, min(i + 3, len(order)))
-        }
-        assert set(out) == want
-        # every pair shares exactly {alpha, beta, gamma} of 5 distinct
-        # tokens → jaccard 3/5, verifying the similarity math itself
-        assert all(abs(j - 0.6) < 1e-9 for j in out.values())
-        # doc 6 is alone in its block: no pair mentions it
-        assert all(6 not in p for p in out)
-
-
-class TestIncrementalMinhash:
-    def test_ingest_dup_found_via_index_only(self, spark):
-        from py_sema_spark.operators.dedup import (
-            incremental_minhash_dedup,
-            minhash_signatures,
-            token_set,
-        )
-
-        corpus = spark.createDataFrame(
-            [(1, "the quick brown fox jumps over the lazy dog"),
-             (2, "completely different content about spark plans")],
-            "doc_id long, text string",
-        )
-        newd = spark.createDataFrame(
-            [(10, "the quick brown fox jumps over the lazy dog"),
-             (11, "nothing like anything in the corpus at all zzz")],
-            "doc_id long, text string",
-        )
-        idx = minhash_signatures(token_set(corpus), num_perm=16)
-        got = {(r.doc_id, r.dup_of, r.est_jaccard)
-               for r in incremental_minhash_dedup(newd, idx).collect()}
-        # identical text → all 16 perms agree → est 1.0; 11 survives
-        assert got == {(10, 1, 1.0)}
-
-    def test_best_match_ties_to_smallest_corpus_id(self, spark):
-        from py_sema_spark.operators.dedup import (
-            incremental_minhash_dedup,
-            minhash_signatures,
-            token_set,
-        )
-
-        txt = "alpha beta gamma delta epsilon zeta eta theta"
-        corpus = spark.createDataFrame(
-            [(5, txt), (3, txt)], "doc_id long, text string"
-        )
-        newd = spark.createDataFrame([(9, txt)], "doc_id long, text string")
-        idx = minhash_signatures(token_set(corpus), num_perm=16)
-        rows = incremental_minhash_dedup(newd, idx).collect()
-        assert len(rows) == 1 and rows[0].dup_of == 3
-
-    def test_max_bucket_size_caps_boilerplate(self, spark):
-        from py_sema_spark.operators.dedup import (
-            incremental_minhash_dedup,
-            minhash_signatures,
-            token_set,
-        )
-
-        # 6 exact clones in the corpus (a boilerplate bucket) + one
-        # unique doc; the new batch carries one clone and one match
-        # for the unique doc
-        boiler = "error page not found please try again later thanks"
-        uniq = "entirely unique prose about catalyst physical plans"
-        corpus = spark.createDataFrame(
-            [(i, boiler) for i in range(6)] + [(7, uniq)],
-            "doc_id long, text string",
-        )
-        newd = spark.createDataFrame(
-            [(10, boiler), (11, uniq)], "doc_id long, text string"
-        )
-        idx = minhash_signatures(token_set(corpus), num_perm=16)
-        # uncapped: both found
-        got = {r.doc_id for r in
-               incremental_minhash_dedup(newd, idx).collect()}
-        assert got == {10, 11}
-        # cap 4: the 7-member boilerplate bucket is skipped, the
-        # 2-member unique bucket survives
-        got = {r.doc_id for r in incremental_minhash_dedup(
-            newd, idx, max_bucket_size=4).collect()}
-        assert got == {11}
-
-    def test_agrees_with_batch_banding(self, spark):
-        from py_sema_spark.operators.dedup import (
-            band_buckets,
-            minhash_signatures,
-            token_set,
-        )
-
-        docs = spark.createDataFrame(
-            [(i, f"tok{i % 3} shared words here") for i in range(6)],
-            "doc_id long, text string",
-        )
-        sigs = minhash_signatures(token_set(docs), num_perm=16)
-        b1 = {(r.doc_id, r.bucket) for r in band_buckets(sigs).collect()}
-        b2 = {(r.doc_id, r.bucket) for r in band_buckets(sigs).collect()}
-        assert b1 == b2 and len(b1) == 6 * 4
-
-
-class TestRollingZscore:
-    def test_flags_spike_and_skips_warmup(self, spark):
-        import datetime as dt
-        from py_sema_spark.operators.windows import rolling_zscore
-
-        t0 = dt.datetime(2024, 1, 1)
-        rows = [(i, 1, t0 + dt.timedelta(minutes=i),
-                 100.0 if i == 10 else float(i % 3))
-                for i in range(12)]
-        ev = spark.createDataFrame(
-            rows, "event_id long, user_id long, ts timestamp, value double"
-        )
-        out = {r.event_id: (r.z, r.is_anomaly)
-               for r in rolling_zscore(ev, lookback=5).collect()}
-        # first event has no preceding rows → z NULL, not anomalous
-        assert out[0] == (None, False)
-        assert out[10][1] is True          # the spike
-        assert out[11][1] is False         # normal again
-
-    def test_single_window_node_single_exchange(self, spark):
-        import datetime as dt
-        from py_sema_spark.operators.windows import rolling_zscore
-
-        t0 = dt.datetime(2024, 1, 1)
-        ev = spark.createDataFrame(
-            [(i, i % 3, t0, float(i)) for i in range(30)],
-            "event_id long, user_id long, ts timestamp, value double",
-        )
-        plan = rolling_zscore(ev)._jdf.queryExecution().executedPlan(
-        ).toString()
-        assert plan.count("Window") == 1
-        assert plan.count("Exchange") == 1
-
-
-class TestFunnelCounts:
-    def test_strict_ordering_required(self, spark):
-        import datetime as dt
-        from py_sema_spark.operators.windows import funnel_counts
-
-        t = lambda m: dt.datetime(2024, 1, 1) + dt.timedelta(minutes=m)
-        # u1 completes in order; u2 clicked BEFORE signup (no credit);
-        # u3 signed up only
-        ev = spark.createDataFrame(
-            [(1, t(0), "signup"), (1, t(1), "click"), (1, t(2), "purchase"),
-             (2, t(0), "click"), (2, t(1), "signup"), (2, t(2), "purchase"),
-             (3, t(0), "signup")],
-            "user_id long, ts timestamp, event_type string",
-        )
-        got = {r.step: r.users for r in funnel_counts(ev).collect()}
-        # u2 has no click after signup, so drops at stage 2 even
-        # though a purchase exists
-        assert got == {"signup": 3, "click": 1, "purchase": 1}
-
-    def test_first_touch_anchor(self, spark):
-        import datetime as dt
-        from py_sema_spark.operators.windows import funnel_counts
-
-        t = lambda m: dt.datetime(2024, 1, 1) + dt.timedelta(minutes=m)
-        # click sits between the two signups: only the FIRST signup
-        # anchors, so the click at t1 counts (strictly after t0)
-        ev = spark.createDataFrame(
-            [(1, t(0), "signup"), (1, t(1), "click"), (1, t(2), "signup")],
-            "user_id long, ts timestamp, event_type string",
-        )
-        got = {r.step: r.users for r in funnel_counts(ev).collect()}
-        assert got == {"signup": 1, "click": 1, "purchase": 0}
-
-
-class TestKmeansAssign:
-    def test_two_obvious_clusters(self, spark):
-        """Points packed around (0,0) and (10,10), with the two
-        lowest ids (= the seeds) one in each blob, must split exactly
-        by location after one Lloyd round."""
-        from py_sema_spark.operators.similarity import kmeans_assign
-
-        pts = [(0, [0.0, 0.0]), (1, [10.0, 10.0])]
-        pts += [(2 + i, [0.1 + i * 0.01, 0.1 - i * 0.01]) for i in range(4)]
-        pts += [(10 + i, [9.9 + i * 0.01, 9.9 - i * 0.01]) for i in range(4)]
-        df = spark.createDataFrame(
-            pts, "vec_id long, embedding array<double>"
-        )
-        out = kmeans_assign(df, k=2, iterations=3).collect()
-        by_cluster = {}
-        for r in out:
-            by_cluster.setdefault(r.cluster, set()).add(r.vec_id)
-        assert sorted(map(sorted, by_cluster.values())) == [
-            [0, 2, 3, 4, 5],
-            [1, 10, 11, 12, 13],
-        ]
-        assert all(r.dist < 1.0 for r in out)
-
-    def test_deterministic_under_repartition(self, spark):
-        from py_sema_spark.operators.similarity import kmeans_assign
-
-        pts = [
-            (i, [float((i * 37) % 11), float((i * 53) % 13)])
-            for i in range(60)
-        ]
-        df = spark.createDataFrame(pts, "vec_id long, embedding array<double>")
-        a = sorted(
-            (r.vec_id, r.cluster, r.dist)
-            for r in kmeans_assign(df, k=3, iterations=2).collect()
-        )
-        b = sorted(
-            (r.vec_id, r.cluster, r.dist)
-            for r in kmeans_assign(
-                df.repartition(7), k=3, iterations=2
-            ).collect()
-        )
-        assert a == b
-
-
-class TestSemanticNeardup:
-    def test_subset_of_exact_and_recall(self, spark, sf_dir):
-        """Every within-cluster pair must appear in the exact all-pairs
-        result with the identical cosine (SemDeDup only *drops*
-        cross-cluster pairs, never invents or rescores), and on the
-        fixture corpus the cluster constraint must retain a meaningful
-        fraction of true pairs — the premise that near-dups co-cluster."""
-        from py_sema_spark.operators.similarity import semantic_neardup
-        from py_sema_spark.queries.benchqueries import QUERIES
-
-        emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-        exact = {
-            (r.a, r.b): r.cos
-            for r in QUERIES["embedding_neardup"](spark, sf_dir).collect()
-        }
-        sem = {
-            (r.a, r.b): r.cos
-            for r in semantic_neardup(emb, k=4, iterations=2).collect()
-        }
-        assert set(sem) <= set(exact)
-        assert all(exact[p] == c for p, c in sem.items())
-        assert len(sem) >= 0.25 * len(exact) > 0
-
-
-class TestSignedRandomProjection:
-    def test_deterministic_and_linear(self, spark):
-        from py_sema_spark.operators.similarity import (
-            signed_random_projection,
-        )
-
-        emb = spark.createDataFrame(
-            [(1, [1.0, 0.0, 2.0]), (2, [2.0, 0.0, 4.0])],
-            "vec_id long, embedding array<double>",
-        )
-        out = signed_random_projection(emb, out_dim=4)
-        p = {(r.vec_id, r.j): r.proj for r in out.collect()}
-        assert len(p) == 8
-        # projection is linear: vec 2 = 2 × vec 1 componentwise
-        for j in range(4):
-            assert p[(2, j)] == pytest.approx(2 * p[(1, j)], abs=1e-6)
-
-    def test_dim_literal_path_bit_identical_and_shuffle_free(self, spark):
-        """dim=N inlines the sign matrix driver-side: identical output
-        to the explode+groupBy fallback, zero Exchange in the plan
-        (round-3 review fix)."""
-        from py_sema_spark.operators.similarity import (
-            signed_random_projection,
-        )
-
-        emb = spark.createDataFrame(
-            [(1, [1.0, -0.5, 2.0, 0.25]), (2, [0.0, 3.0, -1.0, 1.5])],
-            "vec_id long, embedding array<double>",
-        )
-        slow = signed_random_projection(emb, out_dim=4)
-        fast = signed_random_projection(emb, out_dim=4, dim=4)
-        a = {(r.vec_id, r.j): r.proj for r in slow.collect()}
-        b = {(r.vec_id, r.j): r.proj for r in fast.collect()}
-        assert a == b
-        plan = fast._jdf.queryExecution().executedPlan().toString()
-        # the sign matrix ships as a BroadcastExchange (out_dim rows);
-        # the DATA path must stay shuffle-free
-        assert "Exchange hashpartitioning" not in plan
-
-    def test_cosine_roughly_preserved(self, spark):
-        import math
-        from py_sema_spark.operators.similarity import (
-            signed_random_projection,
-        )
-
-        # two nearly-parallel and one orthogonal-ish vector, 32-d
-        base = [1.0 if i % 3 else -0.5 for i in range(32)]
-        near = [v + (0.01 if i % 7 else -0.01) for i, v in enumerate(base)]
-        far = [(-1.0) ** i * (1.0 + i % 5) for i in range(32)]
-        emb = spark.createDataFrame(
-            [(1, base), (2, near), (3, far)],
-            "vec_id long, embedding array<double>",
-        )
-        rows = signed_random_projection(emb, out_dim=16).collect()
-        vecs = {}
-        for r in rows:
-            vecs.setdefault(r.vec_id, {})[r.j] = r.proj
-
-        def cos(a, b):
-            xs = [a[j] for j in sorted(a)]
-            ys = [b[j] for j in sorted(b)]
-            dot = sum(x * y for x, y in zip(xs, ys))
-            na = math.sqrt(sum(x * x for x in xs))
-            nb = math.sqrt(sum(y * y for y in ys))
-            return dot / (na * nb)
-
-        assert cos(vecs[1], vecs[2]) > 0.95
-        assert cos(vecs[1], vecs[2]) > cos(vecs[1], vecs[3]) + 0.3
-
-
-class TestTopkPerGroupPlan:
-    def test_window_group_limit_applies(self, spark):
-        from py_sema_spark.queries.benchqueries import QUERIES
-
-        df = QUERIES["topk_per_group"](spark, "/root/testdata/sf0.001")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan
-
-
-class TestWeightedPageRank:
-    def test_weight_shifts_mass(self, spark):
-        from py_sema_spark.operators.graph import weighted_pagerank
-
-        # a splits 3:1 between b and c; b,c return to a
-        edges = spark.createDataFrame(
-            [("a", "b", 3.0), ("a", "c", 1.0),
-             ("b", "a", 1.0), ("c", "a", 1.0)],
-            "src string, dst string, weight double",
-        )
-        r = {row.node: row.rank
-             for row in weighted_pagerank(edges, iterations=1).collect()}
-        # from uniform 1/3: b gets 0.85*(1/3)*0.75, c 0.85*(1/3)*0.25
-        assert r["b"] == pytest.approx(0.15 / 3 + 0.85 / 3 * 0.75)
-        assert r["c"] == pytest.approx(0.15 / 3 + 0.85 / 3 * 0.25)
-        assert sum(r.values()) == pytest.approx(1.0, abs=1e-9)
-
-    def test_uniform_weights_match_unweighted(self, spark):
-        from py_sema_spark.operators.graph import pagerank, weighted_pagerank
-
-        edges = spark.createDataFrame(
-            [(i, (i * 3 + 1) % 7) for i in range(7)], "src long, dst long"
-        )
-        wedges = edges.withColumn("weight", F.lit(1.0))
-        ru = {r.node: r.rank for r in pagerank(edges, iterations=4).collect()}
-        rw = {r.node: r.rank
-              for r in weighted_pagerank(wedges, iterations=4).collect()}
-        for n in ru:
-            assert rw[n] == pytest.approx(ru[n], abs=1e-12)
-
-    def test_parallel_edges_presummed_zero_dropped(self, spark):
-        from py_sema_spark.operators.graph import weighted_pagerank
-
-        edges = spark.createDataFrame(
-            [("a", "b", 1.0), ("a", "b", 2.0), ("a", "c", 3.0),
-             ("a", "d", 0.0), ("b", "a", 1.0), ("c", "a", 1.0)],
-            "src string, dst string, weight double",
-        )
-        r = {row.node: row.rank
-             for row in weighted_pagerank(edges, iterations=1).collect()}
-        assert "d" not in r  # zero-weight edge contributes no node
-        assert r["b"] == pytest.approx(r["c"])  # 3 vs 3 after pre-sum
-
-
-class TestGraphDiff:
-    def test_both_directions_and_unchanged_silent(self, spark):
-        from py_sema_spark.model import graph_diff
-
-        old = spark.createDataFrame(
-            [("a", "p", "1"), ("b", "p", "2")], "s string, p string, o string"
-        )
-        new = spark.createDataFrame(
-            [("a", "p", "1"), ("b", "p", "3")], "s string, p string, o string"
-        )
-        got = {(r.op, r.s, r.o) for r in graph_diff(old, new).collect()}
-        assert got == {("added", "b", "3"), ("removed", "b", "2")}
-
-    def test_identical_graphs_empty_diff(self, spark):
-        from py_sema_spark.model import graph_diff
-
-        g = spark.createDataFrame(
-            [("a", "p", "1")], "s string, p string, o string"
-        )
-        assert graph_diff(g, g).count() == 0

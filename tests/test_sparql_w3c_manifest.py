@@ -21,7 +21,9 @@ import pytest
 
 from py_sema_spark.model import TRIPLE_SCHEMA
 from py_sema_spark.queries.bgp import sparql_query
+from py_sema_spark.rdf.terms import bnode, iri
 from w3c_manifest import (
+    ExpectedResults,
     compare_select,
     load_manifest,
     load_result_set,
@@ -80,3 +82,44 @@ def test_w3c_sparql(spark, entry):
     rows = out.collect()
     mismatch = compare_select(rows, expected)
     assert mismatch is None, f"{entry.name} ({entry.comment}): {mismatch}"
+
+
+class _Row(dict):
+    def asDict(self):
+        return dict(self)
+
+
+class TestCompareSelectBnodes:
+    """Expected bnodes match engine ``_:``/``urn:skolem:`` values under
+    one label bijection per result set."""
+
+    def _expected(self, *labels, ordered=False):
+        sols = [{"x": bnode(lb), "y": iri(f"urn:{i}")} for i, lb in enumerate(labels)]
+        return ExpectedResults(["x", "y"], sols, ordered, None)
+
+    def _rows(self, *labels):
+        return [_Row(x=lb, y=f"urn:{i}") for i, lb in enumerate(labels)]
+
+    def test_consistent_relabeling_matches(self):
+        exp = self._expected("b0", "b1", "b0")
+        assert compare_select(self._rows("_:q", "urn:skolem:r", "_:q"), exp) is None
+        assert compare_select(
+            list(reversed(self._rows("_:q", "_:r", "_:q"))), exp
+        ) is None
+        assert compare_select(
+            self._rows("_:q", "_:r", "_:q"), self._expected("b0", "b1", "b0", ordered=True)
+        ) is None
+
+    def test_non_bnode_engine_value_rejected(self):
+        exp = self._expected("b0")
+        assert compare_select(self._rows("b0"), exp) is not None
+        assert compare_select(self._rows("bob"), exp) is not None
+
+    def test_merged_or_split_labels_rejected(self):
+        # two expected bnodes collapsed to one engine bnode
+        assert compare_select(self._rows("_:q", "_:q"), self._expected("b0", "b1")) is not None
+        # one expected bnode split into two engine bnodes
+        assert compare_select(self._rows("_:q", "_:r"), self._expected("b0", "b0")) is not None
+        assert compare_select(
+            self._rows("_:q", "_:r"), self._expected("b0", "b0", ordered=True)
+        ) is not None

@@ -260,6 +260,11 @@ def _kill_runs(base: dict, plan: str, start: str, tmp: Path):
     return [(p, n, d, proc) for (p, n, d), proc in zip(cases, procs)]
 
 
+def _staged_files(store_dir) -> list:
+    """Staged graph files anywhere in the store."""
+    return sorted(str(p) for p in Path(store_dir).rglob("_stage*"))
+
+
 def _graphs(store) -> dict:
     """Registered graphs as triple sets, read on the driver."""
     return {k: frozenset(store._read_rows(k)) for k in store.keys}
@@ -290,9 +295,12 @@ class TestKillMidWrite:
             assert "b.ttl" in graphs, where
             for key, triples in graphs.items():
                 assert triples in (old.get(key), new.get(key)), (key, where)
+            if point == "staged":
+                assert _staged_files(d), where  # the kill left one
             rep = perform_sync(spark, kill_base["d2"], store)
             assert "b.ttl" in rep["skipped"], where
             assert _spark_graphs(store) == new, where
+            assert _staged_files(d) == [], where
 
     def test_kill_mid_insert_update_drop(self, spark, kill_base, tmp_path):
         from py_sema_spark.store import ParquetTripleStore
@@ -317,6 +325,7 @@ class TestKillMidWrite:
             assert _spark_graphs(store) == {
                 "a.ttl": a | {NOTE_A}, "b.ttl": b | {EXTRA_B}
             }, where
+            assert _staged_files(dr) == [], where
 
 
 SPARK_CHILD = r"""

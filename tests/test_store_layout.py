@@ -150,7 +150,8 @@ class TestGraphLayout:
         store.insert_for_key(self._frame(spark, rows[1:] + [self._row(9)]), "k")
         gdir = store._graph_dir("k")
         assert os.listdir(gdir) == [GRAPH_FILE]
-        assert os.listdir(tmp_path / "store" / "_stage") == []
+        assert not (tmp_path / "store" / "_stage").exists()
+        assert not list((tmp_path / "store").rglob("_stage*"))
         got = sorted(tuple(r) for r in store.graph_for_key("k").collect())
         assert got == sorted(rows + [self._row(9)])
 

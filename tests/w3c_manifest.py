@@ -275,9 +275,9 @@ def _cell_matches(engine_value, term: Optional[Term]) -> bool:
         except (TypeError, ValueError):
             return False
     if term.kind == "bnode":
-        # bnode labels are scoped to each document; any engine bnode
-        # matches structurally (bijection enforced by the caller)
-        return str(engine_value).startswith(("_:", "urn:skolem:", "b"))
+        # bnode labels are scoped to each document, so any engine bnode
+        # matches here; compare_select enforces the label bijection
+        return _is_engine_bnode(engine_value)
     if term.kind == "literal" and term.datatype and term.datatype.endswith(
         ("#double", "#float", "#decimal")
     ):
@@ -288,35 +288,85 @@ def _cell_matches(engine_value, term: Optional[Term]) -> bool:
     return str(engine_value) == term.value
 
 
+def _is_engine_bnode(value) -> bool:
+    return isinstance(value, str) and value.startswith(("_:", "urn:skolem:"))
+
+
+def _has_bnode(solution: Dict[str, Term]) -> bool:
+    return any(t.kind == "bnode" for t in solution.values())
+
+
+def _row_match(engine_row, solution, variables, fwd, bwd):
+    """The bnode label maps (engine -> expected, expected -> engine)
+    extended by matching ``engine_row`` to ``solution``, or None when
+    a cell differs or a label would map to two labels."""
+    fwd, bwd = dict(fwd), dict(bwd)
+    for var in variables:
+        value, term = engine_row.get(var), solution.get(var)
+        if not _cell_matches(value, term):
+            return None
+        if term is not None and term.kind == "bnode":
+            if fwd.setdefault(value, term.value) != term.value:
+                return None
+            if bwd.setdefault(term.value, value) != value:
+                return None
+    return fwd, bwd
+
+
+def _match_all(rows, solutions, variables, fwd, bwd) -> bool:
+    """Backtracking match of ``rows`` onto ``solutions`` under one
+    bnode label bijection for the whole result set."""
+    if not rows:
+        return True
+    for i, sol in enumerate(solutions):
+        maps = _row_match(rows[0], sol, variables, fwd, bwd)
+        if maps is not None and _match_all(
+            rows[1:], solutions[:i] + solutions[i + 1:], variables, *maps
+        ):
+            return True
+    return False
+
+
 def compare_select(rows, expected: ExpectedResults) -> Optional[str]:
     """None if the engine rows match the expected solution multiset
-    (or sequence, when ordered); else a human-readable mismatch."""
+    (or sequence, when ordered) with one bijection between engine and
+    expected bnode labels over the result set; else a human-readable
+    mismatch."""
     got = [row.asDict() for row in rows]
     if len(got) != len(expected.solutions):
         return (
             f"cardinality: engine={len(got)} "
             f"expected={len(expected.solutions)}"
         )
-
-    def row_matches(engine_row, solution):
-        for var in expected.variables:
-            if not _cell_matches(engine_row.get(var), solution.get(var)):
-                return False
-        return True
+    variables = expected.variables
 
     if expected.ordered:
+        maps = ({}, {})
         for i, (er, sol) in enumerate(zip(got, expected.solutions)):
-            if not row_matches(er, sol):
+            maps = _row_match(er, sol, variables, *maps)
+            if maps is None:
                 return f"ordered mismatch at index {i}: {er} vs {sol}"
         return None
-    # unordered: greedy bipartite match (solution multisets are tiny)
-    remaining = list(expected.solutions)
+    # unordered: rows without bnodes match independently of the label
+    # map, greedily (solution multisets are tiny); the rest backtrack
+    plain = [sol for sol in expected.solutions if not _has_bnode(sol)]
+    with_bnodes = [sol for sol in expected.solutions if _has_bnode(sol)]
+    rest = []
     for er in got:
         hit = next(
-            (i for i, sol in enumerate(remaining) if row_matches(er, sol)),
+            (
+                i for i, sol in enumerate(plain)
+                if _row_match(er, sol, variables, {}, {}) is not None
+            ),
             None,
         )
         if hit is None:
-            return f"engine row {er} matches no remaining expected solution"
-        remaining.pop(hit)
+            rest.append(er)
+        else:
+            plain.pop(hit)
+    if plain or not _match_all(rest, with_bnodes, variables, {}, {}):
+        return (
+            f"engine rows {rest} match no bijective assignment to the "
+            f"remaining expected solutions {plain + with_bnodes}"
+        )
     return None
