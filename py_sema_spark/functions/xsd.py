@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 from .clean import check_valid_uri, clean_uri_str
 
 
-class FormatError(ValueError):
-    pass
-
-
 def xsd_value(content: Any, quote: str, type_name: str, suffix: Optional[str] = None) -> str:
     # j2_functions.py:44-52
     if suffix is None:

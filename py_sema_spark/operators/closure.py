@@ -110,15 +110,6 @@ def transitive_closure(
     return paths
 
 
-def reflexive_closure(closure: DataFrame, nodes: DataFrame) -> DataFrame:
-    """closure(+) → closure(*): add dist-0 self-pairs for every node."""
-    selfp = nodes.select(
-        F.col(nodes.columns[0]).alias("src"),
-        F.col(nodes.columns[0]).alias("dst"),
-    ).withColumn("dist", F.lit(0))
-    return closure.unionByName(selfp.distinct())
-
-
 def connected_components(
     edges: DataFrame,
     src: str = "src",

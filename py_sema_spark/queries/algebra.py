@@ -383,15 +383,6 @@ class _MergedResolver(Resolver):
         return self._get(name + "__kind")
 
 
-def _companions_of(var: str, cols) -> List[str]:
-    return [
-        c
-        for c in cols
-        if c.startswith(var + "__")
-        and c[len(var) + 2 :] in ("lang", "dt", "kind")
-    ]
-
-
 def _compatible_join(
     left: Rel,
     right: Rel,

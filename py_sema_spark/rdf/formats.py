@@ -2,14 +2,10 @@
 the reference's mapping modules
 (/root/reference/sema/commons/fileformats/rdffiles.py:4-58,
 mimetypes.py:26-69) for the formats our engine supports. Used for
-reader dispatch, sink suffixes, and content-kind hints; exposed both
-as Python dicts and as a broadcastable column map builder.
+reader dispatch, sink suffixes, and content-kind hints.
 """
 
 from __future__ import annotations
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 SUFFIX_TO_FORMAT = {
     ".ttl": "turtle",
@@ -52,15 +48,6 @@ FORMAT_TO_SUFFIX = {
     "nquads": ".nq",
     "xml": ".rdf",
 }
-
-
-def mime_to_format_col(mime: Column) -> Column:
-    """Column form: literal map lookup (constant-folded by Catalyst —
-    the broadcast-dict shape the survey names)."""
-    m = F.create_map(
-        *[F.lit(x) for kv in MIME_TO_FORMAT.items() for x in kv]
-    )
-    return m[mime]
 
 
 def format_for_suffix(path: str) -> str | None:

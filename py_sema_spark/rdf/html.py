@@ -18,7 +18,6 @@ share this single implementation, and tests pin its output bytes.
 from __future__ import annotations
 
 import re
-from html import unescape
 from html.parser import HTMLParser
 from typing import Dict, List, Tuple
 
@@ -188,7 +187,3 @@ def decode_bytes(data: bytes) -> str:
         return data.decode("utf-8")
     except UnicodeDecodeError:
         return data.decode("latin-1")
-
-
-def unescape_entities(text: str) -> str:
-    return unescape(text)

@@ -39,13 +39,6 @@ _PARSERS = {
 }
 
 
-def parse_rdf(text: str, fmt: str, base: str = "") -> List[Triple]:
-    parser = _PARSERS.get(fmt)
-    if parser is None:
-        raise ValueError(f"unsupported rdf format {fmt!r}")
-    return parser(text, base)
-
-
 def parse_rdf_auto(
     text: str, base: str = "", formats: Optional[Tuple[str, ...]] = None
 ) -> Tuple[List[Triple], Optional[str]]:

@@ -19,7 +19,7 @@ a failed parse is not fatal, it just yields no triples).
 from __future__ import annotations
 
 import re
-from typing import Iterator, List, Optional, Tuple
+from typing import List, Optional
 from urllib.parse import urljoin
 
 from .terms import (
@@ -531,15 +531,3 @@ def parse_nquads(text: str, base: str = "") -> List[Triple]:
             p._skip_ws()
         p._expect(".")
     return p.triples
-
-
-def iter_statements(text: str) -> Iterator[Tuple[int, int]]:
-    """Yield (start, end) spans of top-level statements (for debugging)."""
-    p = _TurtleParser(text)
-    while True:
-        p._skip_ws()
-        if p.pos >= p.n:
-            return
-        start = p.pos
-        p._parse_statement()
-        yield (start, p.pos)

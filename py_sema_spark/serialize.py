@@ -434,10 +434,3 @@ def write_csv(df: DataFrame, path: str, sep: str = ",") -> None:
     df.write.mode("overwrite").option("header", True).option(
         "sep", sep
     ).csv(path)
-
-
-def to_pandas(df: DataFrame):
-    """§1.4 tabular-result shape: the reference materializes query
-    results as a pandas DataFrame with Python-typed cells
-    (query.py:170-183); dimension-sized results only."""
-    return df.toPandas()

@@ -317,9 +317,3 @@ def synth_corpus(spark: SparkSession, n_pages: int, seed: int = 42) -> DataFrame
         spark.range(0, n_pages, numPartitions=parts)
         .mapInPandas(gen, CORPUS_SCHEMA)
     )
-
-
-def write_corpus(
-    spark: SparkSession, path: str, n_pages: int, seed: int = 42
-) -> None:
-    synth_corpus(spark, n_pages, seed).write.mode("overwrite").parquet(path)

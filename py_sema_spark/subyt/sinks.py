@@ -3,24 +3,31 @@
 - :class:`StdOutSink` / :class:`SingleFileSink` — the whole stream
   concatenated in ctrl order (/root/reference/sema/subyt/sinks.py:55-110).
   One output object ⇒ the final assembly is driver-side by nature;
-  the rendering itself already ran distributed.
+  the rendering itself already ran distributed (or on the driver, for
+  driver-local records). :class:`SingleFileSink` collects
+  ``(idx, part)`` once and sorts on the driver; :class:`StdOutSink`
+  streams in ``idx`` order.
 - :class:`PatternedSink` — one file per record at a URITemplate-
   expanded path (sinks.py:113-196), with the reference's duplicate-
   path policy: error out, or deduplicate with a ``_N`` suffix
-  (sinks.py:181-196). Files are written executor-side via
-  ``foreachPartition`` — the idiomatic many-small-files writer on a
-  shared filesystem; on object storage the same frame feeds
-  ``df.write.partitionBy`` instead.
+  (sinks.py:181-196). It collects ``(idx, pattern columns, part)``
+  once — the same memory :class:`SingleFileSink` takes — and does the
+  rest on the driver: sort by ``idx``, expand each path with
+  :func:`..functions.uritemplate.uritemplate_expand` (full RFC 6570
+  encoding), apply the duplicate policy before any file is written,
+  then write the files.
 """
 
 from __future__ import annotations
 
 import os
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from collections import Counter
 
-from ..functions.uritemplate import uritemplate_col, uritemplate_expand
+import pyarrow as pa
+from pyspark.sql import DataFrame
+
+from ..functions.uritemplate import template_variables, uritemplate_expand
+from .engine import _quoted
 
 
 class StdOutSink:
@@ -34,13 +41,10 @@ class SingleFileSink:
         self.path = path
 
     def write(self, parts: DataFrame) -> None:
-        chunks = [
-            r["part"]
-            for r in parts.orderBy("idx").select("part").toLocalIterator()
-        ]
+        rows = sorted(parts.select("idx", "part").collect(), key=lambda r: r["idx"])
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         with open(self.path, "w", encoding="utf-8") as f:
-            f.write("".join(chunks))
+            f.write("".join(r["part"] for r in rows))
 
 
 class PatternedSink:
@@ -48,8 +52,8 @@ class PatternedSink:
 
     ``allow_repeated=False`` raises on duplicate paths (the reference's
     default GeneratorError, sinks.py:181-187); ``True`` appends ``_N``
-    before the suffix for the 2nd+ occurrence (sinks.py:188-196),
-    ordered by ctrl index so numbering is deterministic.
+    to the 2nd+ occurrence (sinks.py:188-196), numbered in ``idx``
+    order so numbering is deterministic.
     """
 
     def __init__(self, root: str, pattern: str, allow_repeated: bool = False):
@@ -57,67 +61,43 @@ class PatternedSink:
         self.pattern = pattern
         self.allow_repeated = allow_repeated
 
-    def with_paths(self, parts: DataFrame) -> DataFrame:
-        try:
-            colmap = {
-                c: F.col(c) for c in parts.columns if c not in ("idx", "part")
-            }
-            path_col = uritemplate_col(self.pattern, colmap)
-            df = parts.withColumn("path", path_col)
-        except (ValueError, KeyError):
-            # full-RFC-6570 pattern → batch Python expansion
-            import pandas as pd
-
-            pattern = self.pattern
-            cols = [c for c in parts.columns if c not in ("idx", "part")]
-
-            def gen(batches):
-                for pdf in batches:
-                    paths = [
-                        uritemplate_expand(
-                            pattern, {c: row[c] for c in cols}
-                        )
-                        for row in pdf.to_dict("records")
-                    ]
-                    yield pd.DataFrame(
-                        {"idx": pdf["idx"], "part": pdf["part"], "path": paths}
-                    )
-
-            df = parts.mapInPandas(gen, "idx long, part string, path string")
-        # pin the rendered stream once: the dup-check job, the file
-        # write, and the returned (idx, path) frame would otherwise
-        # each re-run the whole Jinja-rendering upstream
-        df = df.localCheckpoint(eager=True)
-        w = Window.partitionBy("path").orderBy("idx")
-        df = df.withColumn("_dup", F.row_number().over(w))
+    def write(self, parts: DataFrame) -> DataFrame:
+        names = set(template_variables(self.pattern))
+        cols = [c for c in parts.columns if c in names and c not in ("idx", "part")]
+        rows = sorted(
+            parts.select("idx", *map(_quoted, cols), "part").collect(),
+            key=lambda r: r["idx"],
+        )
+        paths = [
+            uritemplate_expand(self.pattern, {c: r[c] for c in cols}) for r in rows
+        ]
         if not self.allow_repeated:
-            dups = df.where(F.col("_dup") > 1).limit(1).collect()
-            if dups:
+            dup = next((p for p, n in Counter(paths).items() if n > 1), None)
+            if dup is not None:
                 raise ValueError(
-                    f"duplicate sink path {dups[0]['path']!r} "
+                    f"duplicate sink path {dup!r} "
                     "(pass allow_repeated=True for _N suffixing)"
                 )
-        # reference parity (sinks.py:185-187): the Nth repeat appends
-        # ``_<N-2>`` AFTER the full path — a.txt, a.txt_0, a.txt_1 —
-        # not before the extension
-        suffixed = F.when(F.col("_dup") == 1, F.col("path")).otherwise(
-            F.concat(
-                F.col("path"), F.lit("_"), (F.col("_dup") - 2).cast("string")
+        else:
+            # reference parity (sinks.py:185-187): the Nth repeat appends
+            # ``_<N-2>`` AFTER the full path — a.txt, a.txt_0, a.txt_1 —
+            # not before the extension
+            seen: Counter = Counter()
+            for k, p in enumerate(paths):
+                seen[p] += 1
+                if seen[p] > 1:
+                    paths[k] = f"{p}_{seen[p] - 2}"
+        os.makedirs(self.root, exist_ok=True)
+        for r, p in zip(rows, paths):
+            full = os.path.join(self.root, p.lstrip("/"))
+            os.makedirs(os.path.dirname(full) or ".", exist_ok=True)
+            with open(full, "w", encoding="utf-8") as f:
+                f.write(r["part"])
+        return parts.sparkSession.createDataFrame(
+            pa.table(
+                {
+                    "idx": pa.array([r["idx"] for r in rows], pa.int64()),
+                    "path": pa.array(paths, pa.string()),
+                }
             )
         )
-        return df.withColumn("path", suffixed).drop("_dup")
-
-    def write(self, parts: DataFrame) -> DataFrame:
-        df = self.with_paths(parts)
-        root = self.root
-        os.makedirs(root, exist_ok=True)
-
-        def _write_partition(rows):
-            for row in rows:
-                full = os.path.join(root, row["path"].lstrip("/"))
-                os.makedirs(os.path.dirname(full) or ".", exist_ok=True)
-                with open(full, "w", encoding="utf-8") as f:
-                    f.write(row["part"])
-
-        df.select("path", "part").foreachPartition(_write_partition)
-        return df.select("idx", "path")

@@ -2,9 +2,9 @@
 metrics and canonicalization parity of that same run, and a
 differential test of the two canonicalization paths on random graphs;
 then job budgets of the serve-side operations (syncfs, the parquet
-store and its registry) on a few tiny Turtle dumps, and of the read
-path (a templated SPARQL point lookup, a SHACL validation) on a tiny
-triples file.
+store and its registry) on a few tiny Turtle dumps, of the subyt
+render and its sinks on two records, and of the read path (a templated
+SPARQL point lookup, a SHACL validation) on a tiny triples file.
 
 At today's sizes a job costs ~0.2-0.4 s whatever its input, so a build's
 cost follows how many jobs it starts. Job counts per stage are
@@ -394,6 +394,91 @@ class TestServeJobBudgets:
             assert sorted(store.graph_for_key(key).collect()) == sorted(want)
         assert store.graph_for_key("b.ttl").count() == 3
 
+
+# jobs per subyt call (upper bounds, the measured counts): records
+# built from pandas render on the driver; the patterned write collects
+# the join of the parts with a list-built file-name frame (a broadcast
+# and a collect); a single-file write of driver-rendered parts is one
+# collect of a LocalRelation
+SUBYT_JOB_BUDGETS = {
+    "subyt.process": 0,
+    "subyt.patterned_write": 2,
+    "subyt.single_file_write": 0,
+}
+SUBYT_TEMPLATE = (
+    "<{{ _.key }}> <urn:p:title> \"{{ _.title }}\" .\n"
+    "{% for j in range(_.n_items) %}<{{ _.key }}/{{ j }}> <urn:p:of> <{{ _.key }}> .\n{% endfor %}"
+)
+
+
+@pytest.fixture(scope="module")
+def subyt_run(spark, tmp_path_factory):
+    """The refresh round's render: two records built from pandas, one
+    dump file per record named through a joined (idx, fname) frame,
+    plus one single-file write of the same parts; each call in its own
+    job group."""
+    import pandas as pd
+
+    from py_sema_spark.subyt import PatternedSink, SingleFileSink, SparkSubyt
+
+    records = [
+        {"key": f"urn:ds:{k}", "fname": f"ds-{k}.nt", "title": f"t {k}", "n_items": 2}
+        for k in ("b", "a")
+    ]
+    root = tmp_path_factory.mktemp("subyt_budget")
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    jobs, out = {}, {}
+
+    def run(name, fn):
+        group = f"subyt-{tag}-{name}"
+        with _job_group(sc, group):
+            out[name] = fn()
+        jobs[name] = _jobs(sc, group)
+
+    df = spark.createDataFrame(pd.DataFrame(records))
+    run("subyt.process", lambda: SparkSubyt(SUBYT_TEMPLATE, order_by=["key"]).process(df))
+    parts = out["subyt.process"]
+    names = spark.createDataFrame(
+        [(i, r["fname"]) for i, r in enumerate(sorted(records, key=lambda r: r["key"]))],
+        "idx long, fname string",
+    )
+    run(
+        "subyt.patterned_write",
+        lambda: PatternedSink(str(root / "dumps"), "{fname}")
+        .write(parts.join(names, "idx"))
+        .collect(),
+    )
+    run(
+        "subyt.single_file_write",
+        lambda: SingleFileSink(str(root / "all.nt")).write(parts),
+    )
+    print(f"subyt budget run: jobs {jobs}")
+    return {"jobs": jobs, "out": out, "root": root}
+
+
+class TestSubytJobBudgets:
+    def test_subyt_job_budgets(self, subyt_run):
+        jobs = subyt_run["jobs"]
+        assert set(jobs) == set(SUBYT_JOB_BUDGETS)
+        for name, budget in SUBYT_JOB_BUDGETS.items():
+            assert jobs[name] <= budget, (name, jobs[name], budget)
+
+    def test_subyt_run_results(self, subyt_run):
+        root, out = subyt_run["root"], subyt_run["out"]
+        want = {
+            k: f'<urn:ds:{k}> <urn:p:title> "t {k}" .\n'
+            + "".join(f"<urn:ds:{k}/{j}> <urn:p:of> <urn:ds:{k}> .\n" for j in range(2))
+            for k in ("a", "b")
+        }
+        assert sorted(os.listdir(root / "dumps")) == ["ds-a.nt", "ds-b.nt"]
+        for k, body in want.items():
+            assert (root / "dumps" / f"ds-{k}.nt").read_text() == body
+        assert sorted(tuple(r) for r in out["subyt.patterned_write"]) == [
+            (0, "ds-a.nt"),
+            (1, "ds-b.nt"),
+        ]
+        assert (root / "all.nt").read_text() == want["a"] + want["b"]
 
 # jobs per read-path call (upper bounds, the measured counts) on a
 # tiny parquet-backed triples frame

@@ -5,10 +5,16 @@ Fixture shape: one hub subject with 20k ``skos:member`` rows next to a
 long tail — the BODC collection shape that motivates the north rule's
 "explicit salting for hub-entity skew"."""
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from py_sema_spark.model import TRIPLE_SCHEMA, with_subject_bucket
+
+# the checkout this test file belongs to: its dist/ and sources, not
+# another copy's
+ROOT = Path(__file__).resolve().parents[1]
 
 HUB = "https://vocab.example.org/collection/HUB/"
 N_HUB = 20_000
@@ -128,20 +134,18 @@ class TestSubjectSalting:
 def _artifact_is_current(zip_path: str) -> bool:
     """True iff the zip's .py members byte-match the source tree."""
     import zipfile
-    from pathlib import Path
 
-    root = Path("/root/repo")
     try:
         with zipfile.ZipFile(zip_path) as z:
             names = {n for n in z.namelist() if n.endswith(".py")}
             on_disk = {
-                str(p.relative_to(root))
-                for p in (root / "py_sema_spark").rglob("*.py")
+                str(p.relative_to(ROOT))
+                for p in (ROOT / "py_sema_spark").rglob("*.py")
                 if "__pycache__" not in str(p)
             }
             if names != on_disk:
                 return False
-            return all(z.read(n) == (root / n).read_bytes() for n in names)
+            return all(z.read(n) == (ROOT / n).read_bytes() for n in names)
     except (OSError, zipfile.BadZipFile):
         return False
 
@@ -156,10 +160,10 @@ def _ensure_artifact() -> str:
     import importlib.util
     import os
 
-    zip_path = "/root/repo/dist/py_sema_spark.zip"
+    zip_path = str(ROOT / "dist" / "py_sema_spark.zip")
     if not os.path.exists(zip_path) or not _artifact_is_current(zip_path):
         spec = importlib.util.spec_from_file_location(
-            "make_pyfiles", "/root/repo/tools/make_pyfiles.py"
+            "make_pyfiles", str(ROOT / "tools" / "make_pyfiles.py")
         )
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)
@@ -204,14 +208,12 @@ class TestPyFilesSubmission:
         artifact ships stale code to the cluster. Rebuild with
         `python tools/make_pyfiles.py` after source changes."""
         import zipfile
-        from pathlib import Path
 
-        root = Path("/root/repo")
         with zipfile.ZipFile(_ensure_artifact()) as z:
             names = {n for n in z.namelist() if n.endswith(".py")}
             on_disk = {
-                str(p.relative_to(root))
-                for p in (root / "py_sema_spark").rglob("*.py")
+                str(p.relative_to(ROOT))
+                for p in (ROOT / "py_sema_spark").rglob("*.py")
                 if "__pycache__" not in str(p)
             }
             assert names == on_disk, (
@@ -220,6 +222,6 @@ class TestPyFilesSubmission:
                 f"missing={sorted(on_disk - names)[:5]})"
             )
             for n in sorted(names):
-                assert z.read(n) == (root / n).read_bytes(), (
+                assert z.read(n) == (ROOT / n).read_bytes(), (
                     f"{n} is stale in dist/py_sema_spark.zip — rebuild"
                 )

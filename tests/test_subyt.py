@@ -182,6 +182,263 @@ class TestSinks:
             "same.ttl_0",
         ]
 
+    def test_patterned_paths_follow_rfc6570(self, spark, tmp_path):
+        """Paths are RFC 6570 expansions of the record values, the same
+        as ``uritemplate_expand``: every reserved and non-ASCII byte is
+        percent-encoded under ``{key}`` (so a ``/`` makes no
+        subdirectory), ``{+key}`` keeps reserved characters but still
+        encodes ``é``, a double formats as Python does (``1e+20``, not
+        Spark's ``1.0E20``), and a null expands to nothing."""
+        df = spark.createDataFrame(
+            [(0, "p0", "a b/é?", 1e20), (1, "p1", "é", 2.5), (2, "p2", None, None)],
+            "idx long, part string, key string, x double",
+        )
+
+        def written(pattern, sub):
+            root = tmp_path / sub
+            out = PatternedSink(str(root), pattern).write(df)
+            paths = {r["idx"]: r["path"] for r in out.collect()}
+            for i, p in paths.items():
+                assert (root / p).read_text() == f"p{i}"
+            return paths, sorted(os.listdir(root))
+
+        assert written("{key}.ttl", "simple") == (
+            {0: "a%20b%2F%C3%A9%3F.ttl", 1: "%C3%A9.ttl", 2: ".ttl"},
+            ["%C3%A9.ttl", ".ttl", "a%20b%2F%C3%A9%3F.ttl"],
+        )
+        assert written("{+key}.ttl", "reserved")[0] == {
+            0: "a%20b/%C3%A9?.ttl",
+            1: "%C3%A9.ttl",
+            2: ".ttl",
+        }
+        assert written("n/{+x}.nt", "double")[0] == {
+            0: "n/1e+20.nt",
+            1: "n/2.5.nt",
+            2: "n/.nt",
+        }
+
+    def test_patterned_dup_raises_before_writing(self, spark, tmp_path):
+        df = spark.createDataFrame(
+            [(0, "p0", "a"), (1, "p1", "b"), (2, "p2", "a")],
+            "idx long, part string, key string",
+        )
+        with pytest.raises(ValueError, match="duplicate sink path 'a.ttl'"):
+            PatternedSink(str(tmp_path / "s"), "{key}.ttl").write(df)
+        assert not (tmp_path / "s").exists() or not os.listdir(tmp_path / "s")
+        out = PatternedSink(str(tmp_path / "r"), "{key}.ttl", allow_repeated=True).write(
+            df.repartition(3)
+        )
+        assert sorted((r["idx"], r["path"]) for r in out.collect()) == [
+            (0, "a.ttl"),
+            (1, "b.ttl"),
+            (2, "a.ttl_0"),
+        ]
+        assert (tmp_path / "r" / "a.ttl_0").read_text() == "p2"
+
+    def test_single_file_sink_orders_by_idx(self, spark, tmp_path):
+        df = spark.createDataFrame(
+            [(2, "c"), (0, "a"), (1, "b")], "idx long, part string"
+        ).repartition(3)
+        path = tmp_path / "sub" / "all.txt"
+        SingleFileSink(str(path)).write(df)
+        assert path.read_text() == "abc"
+
+
+# every record column, its Python type and value as the template sees
+# it, then the ctrl, a set and a variable
+DIFF_TEMPLATE = (
+    "{% for k, v in _ | dictsort %}"
+    "{{ k }}={{ v }}:{{ v.__class__.__name__ }};"
+    "{% endfor %}"
+    "|{{ ctrl.index }}|{{ ctrl.isFirst }}|{{ ctrl.isLast }}"
+    "|{{ sets['extra'][0]['v'] }}|{{ prefix }}\n"
+)
+DIFF_SCHEMA = (
+    "k1 string, k2 long, g string, s string, n long, x double, "
+    "b boolean, d date, t timestamp, dec decimal(10,2)"
+)
+
+
+def _diff_records(spark, with_int_null=True):
+    """A pandas-built (driver-local) frame of every column type the
+    driver path renders; ``x`` gets a NaN through a projection, which
+    keeps the plan a LocalRelation."""
+    import datetime as dt
+    from decimal import Decimal
+
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    pdf = pd.DataFrame(
+        {
+            "k1": ["b", "a", None, "b", "a", "c"],
+            "k2": [2, 1, 5, 1, 3, 0],
+            "g": ["x", "y", "x", None, "y", "x"],
+            "s": ["ünï", '日本 "q"', None, "a\\b", "", "z"],
+            "n": [1, None, 3, 4, 5, 6] if with_int_null else [1, 2, 3, 4, 5, 6],
+            "x": [1.5, None, 0.1, -0.0, 1e20, 3.0],
+            "b": [True, None, False, True, False, True],
+            "d": [
+                dt.date(2020, 1, 2),
+                dt.date(1969, 12, 31),
+                None,
+                dt.date(2024, 2, 29),
+                dt.date(2000, 1, 1),
+                dt.date(2001, 1, 1),
+            ],
+            "t": [
+                dt.datetime(2021, 1, 2, 3, 4, 5, 6),
+                None,
+                dt.datetime(1960, 5, 6, 7, 8, 9),
+                dt.datetime(2021, 11, 7, 1, 30),
+                dt.datetime(2000, 1, 1),
+                dt.datetime(2030, 1, 1, 0, 0, 0, 999999),
+            ],
+            "dec": [
+                Decimal("1.50"),
+                Decimal("-2.00"),
+                None,
+                Decimal("0.01"),
+                Decimal("12345678.90"),
+                Decimal("0"),
+            ],
+        }
+    )
+    df = spark.createDataFrame(pdf, DIFF_SCHEMA)
+    return df.withColumn(
+        "x", F.when(F.col("k2") == 0, F.lit(float("nan"))).otherwise(F.col("x"))
+    )
+
+
+def _rendered(df):
+    return sorted((r["idx"], r["part"]) for r in df.collect())
+
+
+class TestDriverPath:
+    """A driver-local record frame renders on the driver; the same
+    records in a frame that is not driver-local render in
+    ``mapInPandas``. Both must give byte-identical ``(idx, part)``."""
+
+    CASES = [
+        {"order_by": ["k1", "k2"]},  # ties on k1 broken by k2; null k1 first
+        {"order_by": ["x", "k2"]},  # NaN last, -0.0 == 0.0
+        {"order_by": ["t", "k2"]},
+        {"order_by": ["dec"]},
+        {"order_by": ["b", "k2"]},
+        {"order_by": ["d", "k2"]},
+    ]
+    STREAM_CASES = [
+        {"order_by": ["k1", "k2"], "stream_by": ["g"]},  # a null stream
+        {"order_by": ["k2"], "stream_by": ["x"]},  # NaN and -0.0 streams
+        {"order_by": ["k2"], "stream_by": ["b", "g"]},
+    ]
+
+    def _both(self, df, **kw):
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        sub = SparkSubyt(
+            DIFF_TEMPLATE,
+            sets={"extra": [{"v": "E"}]},
+            variables={"prefix": "P"},
+            **kw,
+        )
+        on_driver = sub.process(df)
+        in_spark = sub.process(df.repartition(2))
+        assert not _is_driver_local(in_spark)
+        return on_driver, _rendered(on_driver), _rendered(in_spark)
+
+    @pytest.mark.parametrize("kw", CASES)
+    def test_global_stream_matches_spark(self, spark, kw):
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        df = _diff_records(spark)
+        assert _is_driver_local(df)
+        out, driver, spark_rows = self._both(df, **kw)
+        assert _is_driver_local(out)
+        assert driver == spark_rows
+        assert [i for i, _ in driver] == list(range(6))
+        # as pandas hands them over: an int column with a null as
+        # floats, a null timestamp as NaT, a decimal at its scale
+        joined = "".join(p for _, p in driver)
+        for cell in ("n=1.0:float;", "n=nan:float;", "t=NaT:NaTType;", "dec=0.00:Decimal;"):
+            assert cell in joined
+
+    @pytest.mark.parametrize("kw", STREAM_CASES)
+    def test_streams_match_spark(self, spark, kw):
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        out, driver, spark_rows = self._both(
+            _diff_records(spark, with_int_null=False), **kw
+        )
+        assert _is_driver_local(out)
+        assert driver == spark_rows
+
+    def test_session_time_zone(self, spark):
+        """Timestamps reach the template in the session zone, also for
+        an hour the zone's DST change makes ambiguous."""
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        key = "spark.sql.session.timeZone"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "America/New_York")
+        try:
+            out, driver, spark_rows = self._both(
+                _diff_records(spark), order_by=["t", "k2"]
+            )
+        finally:
+            spark.conf.set(key, prev)
+        assert _is_driver_local(out)
+        assert driver == spark_rows
+        assert "t=2021-11-07 01:30:00:Timestamp;" in "".join(p for _, p in driver)
+
+    def test_frames_the_driver_cannot_match_render_in_spark(self, spark):
+        """An int column with a null under ``stream_by`` (its pandas
+        type depends on which streams share an Arrow batch), a column
+        type outside the driver's set, and a record column named like a
+        ctrl column all keep the ``mapInPandas`` path."""
+        import pandas as pd
+        from pyspark.sql import functions as F
+
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        df = _diff_records(spark)
+        out, driver, spark_rows = self._both(df, order_by=["k2"], stream_by=["g"])
+        assert not _is_driver_local(out)
+        assert driver == spark_rows
+        arr = df.withColumn("arr", F.array(F.col("k2")))
+        assert _is_driver_local(arr)
+        out = SparkSubyt("{{ _['arr'] }};", order_by=["k2"]).process(arr)
+        assert not _is_driver_local(out)
+        assert _rendered(out)[0] == (0, "[0];")
+        ctrl_named = spark.createDataFrame(pd.DataFrame({"idx": [7, 8]}))
+        out = SparkSubyt("{{ _['idx'] }};", order_by=["idx"]).process(ctrl_named)
+        assert not _is_driver_local(out)
+        assert _rendered(out) == [(0, "0;"), (1, "1;")]
+
+    def test_empty_frame(self, spark):
+        import pandas as pd
+
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        # an empty pandas frame is not Arrow-built; a filter that keeps
+        # no row of a LocalRelation folds into an empty one
+        df = spark.createDataFrame(pd.DataFrame({"k": [1, 2]})).where("k > 5")
+        assert _is_driver_local(df)
+        out, driver, spark_rows = self._both(df, order_by=["k"])
+        assert _is_driver_local(out)
+        assert driver == spark_rows == []
+        assert out.schema.simpleString() == "struct<idx:bigint,part:string>"
+
+    def test_template_cannot_change_callers_sets(self, spark):
+        import pandas as pd
+
+        sets = {"seen": []}
+        df = spark.createDataFrame(pd.DataFrame({"k": [1, 2]}))
+        template = "{{ sets['seen'].append(_['k']) or sets['seen'] | length }};"
+        out = SparkSubyt(template, order_by=["k"], sets=sets).process(df)
+        assert _rendered(out) == [(0, "1;"), (1, "2;")]
+        assert sets == {"seen": []}
+
 
 def _with_cols(parts, records):
     """Attach record columns to rendered parts by ctrl order (test
