@@ -34,6 +34,7 @@ from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, IntegerType, MapType, StructField, StructType
 
 from .model import dedup_triples, skolemize
 from .operators.extract import extract_structured, triples_of
@@ -80,12 +81,16 @@ class Pipeline:
         partition directories in a Spark job once there are more than
         ``parallelPartitionDiscovery.threshold`` (32) of them, as the
         64 ``s_bucket`` directories are; up to ``_DRIVER_LISTING_MAX``
-        they are listed on the driver instead."""
+        they are listed on the driver instead. The scan takes the
+        schema :func:`_stored_schema` reads from a footer, so Spark runs
+        no schema-inference job either."""
         conf = self.spark.conf
         prev = conf.get(_LISTING_THRESHOLD)
         conf.set(_LISTING_THRESHOLD, str(max(int(prev), _DRIVER_LISTING_MAX)))
+        schema = _stored_schema(path)
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
         try:
-            return self.spark.read.parquet(path)
+            return reader.parquet(path)
         finally:
             conf.set(_LISTING_THRESHOLD, prev)
 
@@ -97,12 +102,7 @@ class Pipeline:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        files = sorted(
-            os.path.join(dp, f)
-            for dp, _dirs, fs in os.walk(path)
-            for f in fs
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
+        files = _part_files(path)
         counts = [
             (i, n)
             for i, f in enumerate(files)
@@ -362,3 +362,62 @@ class Pipeline:
 
         final = self.stage("05_materialize", _final, partition_by="s_bucket")
         return final
+
+
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+_INT_MIN, _INT_MAX = -(2**31), 2**31 - 1
+
+
+def _part_files(path: str) -> list:
+    """The parquet part files under ``path``, partition subdirectories
+    included, in sorted order; hidden and ``_`` directories are skipped
+    as Spark skips them."""
+    out = []
+    for dp, dirs, fs in os.walk(path):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        out += [os.path.join(dp, f) for f in fs if f.startswith("part-") and f.endswith(".parquet")]
+    return sorted(out)
+
+
+def _stored_schema(path: str) -> Optional[StructType]:
+    """The schema Spark infers for the parquet output under ``path``,
+    without its inference job: the Spark schema the writer stored in
+    the first part file's footer, every field nullable as Spark reads
+    it, then the ``key=value`` partition columns as Spark types them
+    (integer). None when a footer lacks that schema or a partition
+    value is not an integer; the caller then lets Spark infer."""
+    import pyarrow.parquet as pq
+
+    files = _part_files(path)
+    if not files:
+        return None
+    raw = (pq.read_metadata(files[0]).metadata or {}).get(_SPARK_ROW_METADATA)
+    if raw is None:
+        return None
+    schema = _nullable(StructType.fromJson(json.loads(raw)))
+    keys: dict = {}
+    for f in files:
+        rel = os.path.relpath(os.path.dirname(f), path)
+        for seg in [] if rel == "." else rel.split(os.sep):
+            key, eq, value = seg.partition("=")
+            try:
+                ok = bool(eq) and _INT_MIN <= int(value) <= _INT_MAX
+            except ValueError:
+                ok = False
+            if not ok:
+                return None
+            keys.setdefault(key, None)
+    for key in keys:
+        schema.add(StructField(key, IntegerType(), True))
+    return schema
+
+
+def _nullable(dt):
+    """``dt`` with every nested field, element and value nullable."""
+    if isinstance(dt, StructType):
+        return StructType([StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt])
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt

@@ -1,27 +1,42 @@
-"""SHACL-core subset compiled to DataFrame group-checks (SURVEY.md §2.10
+"""SHACL-core subset compiled to DataFrame aggregates (SURVEY.md §2.10
 E6).
 
-The reference validates with pyshacl and hard-asserts conformance
-(/root/reference/sema/bench/handler.py:61-81); the constraint surface
-it actually exercises is the fixture shape graph
-(/root/reference/tests/bench/resources/sembench_data/example_shape.ttl):
+py-sema validates with pyshacl and hard-asserts conformance
+(``sema/bench/handler.py:61-81``); the constraint surface it actually
+exercises is its fixture shape graph
+(``tests/bench/resources/sembench_data/example_shape.ttl``):
 ``sh:datatype, sh:maxCount, sh:in, sh:lessThan, sh:node, sh:closed,
 sh:minInclusive, sh:maxInclusive`` on ``sh:targetClass``-targeted node
 shapes. That subset is compiled here, plus the most common remaining
-SHACL-core property constraints (``sh:minCount, sh:pattern/sh:flags,
-sh:minLength, sh:maxLength, sh:hasValue, sh:nodeKind, sh:class``) — each constraint becomes a filter/aggregation over the
-triples table, every check pushes its predicate-literal filter to the
-scan, and the result is a **violations DataFrame** instead of an
-assert (the assert form is :func:`assert_conforms`).
+SHACL-core components (``sh:minCount, sh:pattern/sh:flags,
+sh:minLength, sh:maxLength, sh:hasValue, sh:nodeKind, sh:class``,
+logical and qualified shapes, property paths). The result is a
+**violations DataFrame** instead of an assert (the assert form is
+:func:`assert_conforms`).
 
 Shapes are parsed from Turtle with our own parser (the same input
 format the reference consumes), driver-side — shape graphs are tiny;
 the data side stays distributed.
 
-Scale: each property constraint touches one predicate slice
-(``p = path`` pushed down); counts are partial-aggregated groupBys on
-``s``; ``closed`` is one anti-join of the focus slice against the
-allowed-predicate list. Nothing quadratic, nothing collected.
+One pass per node shape: one scan of ``p IN P`` (``rdf:type`` for the
+target class, the targetSubjectsOf/targetObjectsOf predicates, every
+plain ``sh:path``) and one aggregate on ``s``, so one exchange. Explicit
+target nodes and the objects of targetObjectsOf enter the same
+aggregate as focus rows with their term kind; compound-path values
+enter it tagged with their property shape. Per group the aggregate
+gives the focus terms, a ``count_if`` per cardinality and a list of the
+violating values per per-value component (:func:`_value_checks`, the
+one definition of each); one ``explode`` turns them into violation
+rows. At today's sizes that is a shuffle-map job and a result job per
+validation, whatever the number of constraints.
+
+Constraints that need a second relation stay joins, with their focus
+nodes and values read from the same aggregate: ``sh:class`` (the
+instance set), ``sh:node`` (the child shape's violations),
+``lessThan/equals/disjoint`` (the other predicate's values, also
+collected in the aggregate), logical and qualified shapes (branch
+violators), ``uniqueLang`` (a count per language) and ``closed``
+(every predicate of the focus nodes, a second scan).
 """
 
 from __future__ import annotations
@@ -29,6 +44,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Dict, List, Optional
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -374,19 +390,18 @@ def _viol(df: DataFrame, shape: str, path: str, constraint: str, msg: str,
     )
 
 
-def _effective_datatype():
+def _effective_datatype(t):
     """RDF 1.1: a plain literal's datatype is xsd:string, but a
     LANG-TAGGED literal's is rdf:langString (terms.py nulls the
     datatype when a lang tag is present, so coalescing straight to
     xsd:string would both miss real langString matches and silently
     pass "x"@en for sh:datatype xsd:string)."""
-    rdf_ns = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
     return F.when(
-        F.col("o_kind") == "literal",
+        t["o_kind"] == "literal",
         F.coalesce(
-            F.col("o_datatype"),
+            t["o_datatype"],
             F.when(
-                F.col("o_lang").isNotNull(), F.lit(rdf_ns + "langString")
+                t["o_lang"].isNotNull(), F.lit(RDF + "langString")
             ).otherwise(F.lit(XSD + "string")),
         ),
     )
@@ -401,12 +416,107 @@ _NODE_KIND_ALLOWED = {
     SH + "IRIOrLiteral": ["iri", "literal"],
 }
 
+_TERM = ("o", "o_kind", "o_datatype", "o_lang")
+
+_RANGES = (
+    ("min_inclusive", "minInclusive", lambda v, b: v < b),
+    ("max_inclusive", "maxInclusive", lambda v, b: v > b),
+    ("min_exclusive", "minExclusive", lambda v, b: v <= b),
+    ("max_exclusive", "maxExclusive", lambda v, b: v >= b),
+)
+
+
+def _bound_check(incomparable, measure, mk, bound):
+    """``violates(t)`` for a bound: ``t`` cannot be compared, or
+    ``mk(measure(t), bound)`` (a one-argument function, as Spark's
+    higher-order functions need)."""
+    return lambda t: incomparable(t) | mk(measure(t), bound)
+
+
+def _value_checks(ps: PropertyShape) -> list:
+    """The per-value constraints of ``ps`` as ``(component, message,
+    violates)``; ``violates(t)`` is True where the value term ``t`` (a
+    struct Column with fields ``o, o_kind, o_datatype, o_lang``)
+    violates the component. This is the one definition of each of
+    these components: the validation aggregate and logical branches
+    (:func:`_value_cond`) both use it."""
+    checks = []
+    if ps.datatype:
+        checks.append((
+            "datatype",
+            f"value is not a literal of datatype <{ps.datatype}>",
+            lambda t: (t["o_kind"] != "literal")
+            | (_effective_datatype(t) != ps.datatype),
+        ))
+    if ps.node_kind in _NODE_KIND_ALLOWED:
+        allowed = _NODE_KIND_ALLOWED[ps.node_kind]
+        checks.append((
+            "nodeKind",
+            f"value is not a {ps.node_kind.rsplit('#', 1)[-1]}",
+            lambda t: ~t["o_kind"].isin(allowed),
+        ))
+    if ps.pattern is not None:
+        rx = f"(?{ps.flags}){ps.pattern}" if ps.flags else ps.pattern
+        checks.append((
+            "pattern",
+            f"value does not match pattern /{ps.pattern}/",
+            lambda t: (t["o_kind"] == "bnode") | ~t["o"].rlike(rx),
+        ))
+    # per-bound component ids (§4.4.1/2 — blank nodes violate either
+    # declared bound)
+    for attr, comp, mk in (
+        ("min_length", "minLength", lambda ln, b: ln < b),
+        ("max_length", "maxLength", lambda ln, b: ln > b),
+    ):
+        bound = getattr(ps, attr)
+        if bound is not None:
+            checks.append((
+                comp,
+                f"value violates sh:{comp} {bound}",
+                _bound_check(
+                    lambda t: t["o_kind"] == "bnode",
+                    lambda t: F.length(t["o"]), mk, bound,
+                ),
+            ))
+    if ps.in_values is not None:
+        checks.append((
+            "in",
+            f"value not in {ps.in_values}",
+            lambda t: ~t["o"].isin(ps.in_values),
+        ))
+    # one result per declared bound with its own component id (§4.3;
+    # matches the W3C report shape — a value that "cannot be compared"
+    # violates each declared bound). try_cast: ANSI mode (Spark 4
+    # default) makes a plain cast THROW on a non-numeric value mid-job;
+    # SHACL semantics make it a violation instead
+    for attr, comp, mk in _RANGES:
+        bound = getattr(ps, attr)
+        if bound is not None:
+            checks.append((
+                comp,
+                f"value violates sh:{comp} {bound:g}",
+                _bound_check(
+                    lambda t: t["o"].try_cast("double").isNull(),
+                    lambda t: t["o"].try_cast("double"), mk, bound,
+                ),
+            ))
+    if ps.language_in is not None:
+        langs = [x.lower() for x in ps.language_in]
+        checks.append((
+            "languageIn",
+            f"language tag not in {ps.language_in}",
+            lambda t: (t["o_kind"] != "literal")
+            | t["o_lang"].isNull()
+            | ~F.lower(t["o_lang"]).isin(langs),
+        ))
+    return checks
+
 
 def _value_cond(ps: PropertyShape):
     """VALUE-level violation condition for a logical branch: a Column
-    that is True where the value violates the branch's constraints.
-    Branches support the Column-expressible constraint components
-    (datatype, nodeKind, pattern, length, range, in, languageIn);
+    that is True where the row's value term (columns ``o, o_kind,
+    o_datatype, o_lang``) violates the branch's constraints. Branches
+    support the per-value components of :func:`_value_checks`;
     join-backed or per-focus constraints inside sh:or/and/not raise a
     clear error rather than silently passing."""
     unsupported = [
@@ -426,55 +536,14 @@ def _value_cond(ps: PropertyShape):
             f"sh:{unsupported[0]} inside a logical constraint branch "
             "is not supported (value-level constraints only)"
         )
-    conds = []
-    if ps.datatype:
-        conds.append(
-            (F.col("o_kind") != "literal")
-            | (_effective_datatype() != ps.datatype)
-        )
-    if ps.node_kind:
-        allowed = _NODE_KIND_ALLOWED.get(ps.node_kind)
-        if allowed is not None:
-            conds.append(~F.col("o_kind").isin(allowed))
-    if ps.pattern is not None:
-        rx = f"(?{ps.flags}){ps.pattern}" if ps.flags else ps.pattern
-        conds.append((F.col("o_kind") == "bnode") | ~F.col("o").rlike(rx))
-    if ps.min_length is not None:
-        conds.append(
-            (F.col("o_kind") == "bnode")
-            | (F.length(F.col("o")) < ps.min_length)
-        )
-    if ps.max_length is not None:
-        conds.append(
-            (F.col("o_kind") == "bnode")
-            | (F.length(F.col("o")) > ps.max_length)
-        )
-    if ps.in_values is not None:
-        conds.append(~F.col("o").isin(ps.in_values))
-    v = F.col("o").try_cast("double")
-    if ps.min_inclusive is not None:
-        conds.append(v.isNull() | (v < ps.min_inclusive))
-    if ps.max_inclusive is not None:
-        conds.append(v.isNull() | (v > ps.max_inclusive))
-    if ps.min_exclusive is not None:
-        conds.append(v.isNull() | (v <= ps.min_exclusive))
-    if ps.max_exclusive is not None:
-        conds.append(v.isNull() | (v >= ps.max_exclusive))
-    if ps.language_in is not None:
-        conds.append(
-            (F.col("o_kind") != "literal")
-            | F.col("o_lang").isNull()
-            | ~F.lower(F.col("o_lang")).isin(
-                [t.lower() for t in ps.language_in]
-            )
-        )
+    t = F.struct(*[F.col(c) for c in _TERM])
     out = F.lit(False)
-    for c in conds:
-        out = out | c
+    for _comp, _msg, violates in _value_checks(ps):
+        out = out | violates(t)
     return out
 
 
-_VAL_COLS = ["s", "o", "o_kind", "o_datatype", "o_lang"]
+_VAL_COLS = ["s", *_TERM]
 
 
 def _node_kind(col):
@@ -603,23 +672,15 @@ def _norm_focus(df: DataFrame) -> DataFrame:
     )
 
 
-def _class_instances(triples: DataFrame, class_iri: str) -> DataFrame:
-    """Distinct SHACL instances of ``class_iri``, as column ``o``:
-    nodes whose rdf:type reaches the class through rdfs:subClassOf*
-    (§2.1.3.1 — "SHACL instance"; pyshacl matches). The subclass
-    closure runs over the class-hierarchy slice only (schema-sized);
-    instance lookup stays one pushed-down type slice + broadcast
-    semi-join on the (small) class set."""
+def _class_set(triples: DataFrame, class_iri: str) -> List[str]:
+    """``class_iri`` and every class below it through rdfs:subClassOf*
+    (§2.1.3.1 — "SHACL instance"; pyshacl matches). Whether the frame
+    has any rdfs:subClassOf triple is an eager ``isEmpty`` job, probed
+    once per frame object and memoized on it (``validate`` passes the
+    same frame through every shape and sh:node recursion). Only a frame
+    with a class hierarchy pays more: the closure over the
+    hierarchy slice (schema-sized) and one collect of the subclasses."""
     sub = triples.where(F.col("p") == RDFS_SUBCLASS_OF)
-    classes = triples.sparkSession.createDataFrame(
-        [(class_iri,)], "o string"
-    )
-    # ADVICE r04: isEmpty is an eager driver-side job; shapes with many
-    # sh:class occurrences (incl. per logical branch / nested child)
-    # fired one per occurrence at plan-construction time. Memoize the
-    # answer on the (shared) triples frame object — validate() passes
-    # the same DataFrame through every recursion, so the slice is
-    # probed once per validation run.
     has_subclass = getattr(triples, "_psp_has_subclass", None)
     if has_subclass is None:
         has_subclass = not sub.isEmpty()
@@ -627,18 +688,27 @@ def _class_instances(triples: DataFrame, class_iri: str) -> DataFrame:
             triples._psp_has_subclass = has_subclass
         except AttributeError:
             pass
-    if has_subclass:
-        from .operators.closure import transitive_closure
+    if not has_subclass:
+        return [class_iri]
+    from .operators.closure import transitive_closure
 
-        desc = (
-            transitive_closure(sub, src="s", dst="o")
-            .where(F.col("dst") == class_iri)
-            .select(F.col("src").alias("o"))
-        )
-        classes = classes.unionByName(desc).distinct()
+    desc = (
+        transitive_closure(sub, src="s", dst="o", with_distance=False)
+        .where(F.col("dst") == class_iri)
+        .select("src")
+        .collect()
+    )
+    return sorted({class_iri, *(r["src"] for r in desc)})
+
+
+def _class_instances(triples: DataFrame, class_iri: str) -> DataFrame:
+    """Distinct SHACL instances of ``class_iri``, as column ``o``: one
+    pushed-down rdf:type slice filtered to :func:`_class_set`."""
     return (
-        triples.where(F.col("p") == RDF_TYPE)
-        .join(F.broadcast(classes), "o", "left_semi")
+        triples.where(
+            (F.col("p") == RDF_TYPE)
+            & F.col("o").isin(_class_set(triples, class_iri))
+        )
         .select(F.col("s").alias("o"))
         .distinct()
     )
@@ -661,9 +731,6 @@ def _conforming_values(triples: DataFrame, vals: DataFrame,
     return conf
 
 
-_VKEY = ("o", "o_kind", "o_datatype", "o_lang")
-
-
 def _branch_violators(triples: DataFrame, vals: DataFrame,
                       branch: PropertyShape) -> DataFrame:
     """Distinct value-term keys of ``vals`` that VIOLATE a logical
@@ -674,7 +741,7 @@ def _branch_violators(triples: DataFrame, vals: DataFrame,
     per child. All equi-joins on the value column; nothing collected."""
     from dataclasses import replace
 
-    keys = vals.select(*_VKEY).distinct()
+    keys = vals.select(*_TERM).distinct()
     parts = [keys.where(_value_cond(replace(branch, class_=None, props=[])))]
     if branch.class_:
         typed = _class_instances(triples, branch.class_)
@@ -720,9 +787,9 @@ def _branch_violators(triples: DataFrame, vals: DataFrame,
                 .select(F.col("s").alias("o")).distinct()
             )
             parts.append(keys.join(badc, "o", "left_semi"))
-    out = parts[0].select(*_VKEY)
+    out = parts[0].select(*_TERM)
     for p in parts[1:]:
-        out = out.unionByName(p.select(*_VKEY))
+        out = out.unionByName(p.select(*_TERM))
     return out.distinct()
 
 
@@ -739,18 +806,87 @@ def _branch_viol_cond(triples: DataFrame, vals: DataFrame,
         return vals, _value_cond(branch)
     flag = f"__branch{next(_FLAG_SEQ)}"
     v = _branch_violators(triples, vals, branch).select(
-        *[F.col(k).alias(flag + k) for k in _VKEY]
+        *[F.col(k).alias(flag + k) for k in _TERM]
     ).withColumn(flag, F.lit(True))
     cond = None
-    for k in _VKEY:
+    for k in _TERM:
         c = F.col(k).eqNullSafe(F.col(flag + k))
         cond = c if cond is None else (cond & c)
     vals = (
         vals.join(v, cond, "left")
-        .drop(*[flag + k for k in _VKEY])
+        .drop(*[flag + k for k in _TERM])
         .withColumn(flag, F.coalesce(F.col(flag), F.lit(False)))
     )
     return vals, F.col(flag)
+
+
+_TERM_TYPE = "struct<o:string,o_kind:string,o_datatype:string,o_lang:string>"
+
+
+def _term(o, kind, datatype=None, lang=None):
+    """A value-term struct (``o, o_kind, o_datatype, o_lang``)."""
+    null = F.lit(None).cast("string")
+    return F.struct(
+        o.alias("o"),
+        kind.alias("o_kind"),
+        (null if datatype is None else datatype).alias("o_datatype"),
+        (null if lang is None else lang).alias("o_lang"),
+    )
+
+
+def _agg_row(s, p=None, k=None, v=None, f=None) -> list:
+    """One input row of a shape's aggregate on ``s``: predicate ``p``
+    (plain-path values and targets), compound-path tag ``__k``, value
+    term ``__v`` and focus term ``__f`` (set where ``s`` is a focus
+    node of the shape)."""
+    return [
+        s.alias("s"),
+        (F.lit(None).cast("string") if p is None else p).alias("p"),
+        (F.lit(None).cast("int") if k is None else k).alias("__k"),
+        (F.lit(None).cast(_TERM_TYPE) if v is None else v).alias("__v"),
+        (F.lit(None).cast(_TERM_TYPE) if f is None else f).alias("__f"),
+    ]
+
+
+def _iris(x) -> List[str]:
+    # str-or-list: the parser stores every sh:targetSubjectsOf /
+    # targetObjectsOf value (§2.1.3.3/4 allow several); direct
+    # construction may still pass a single string
+    if not x:
+        return []
+    return [x] if isinstance(x, str) else list(x)
+
+
+class _Values:
+    """The value nodes of one property shape inside its node shape's
+    aggregate on ``s``. A plain predicate path selects input rows
+    (``sel``): its counts and value lists are aggregates over those
+    rows, repeated triples included. A compound path, or the node-level
+    pseudo path, is an array of distinct value terms per group
+    (``arr``), read after the aggregate."""
+
+    def __init__(self, aggs: list, sel=None, arr=None):
+        self.aggs, self.sel, self.arr = aggs, sel, arr
+
+    def count(self, cond=None):
+        """Values per focus node (those where ``cond`` holds)."""
+        if self.sel is None:
+            return F.size(self.arr if cond is None else F.filter(self.arr, cond))
+        sel = self.sel if cond is None else self.sel & cond(F.col("__v"))
+        return _aggregate(self.aggs, F.count_if(sel))
+
+    def where(self, cond=None):
+        """Array of the value terms (those where ``cond`` holds)."""
+        if self.sel is None:
+            return self.arr if cond is None else F.filter(self.arr, cond)
+        sel = self.sel if cond is None else self.sel & cond(F.col("__v"))
+        return _aggregate(self.aggs, F.collect_list(F.when(sel, F.col("__v"))))
+
+
+def _aggregate(aggs: list, expr):
+    name = f"__a{len(aggs)}"
+    aggs.append(expr.alias(name))
+    return F.col(name)
 
 
 def validate(
@@ -767,476 +903,408 @@ def validate(
     the sh:node recursion path so mutually-referencing node shapes
     (A sh:node B, B sh:node A — legal in SHACL shape graphs) terminate
     instead of recursing unboundedly on the driver."""
-    spark = triples.sparkSession
-    out = spark.createDataFrame([], VIOLATION_SCHEMA)
     by_iri = {sh.iri: sh for sh in shapes}
     if _registry:
         by_iri = {**_registry, **by_iri}
     _visiting = _visiting or frozenset()
 
+    parts: List[DataFrame] = []
     for shape in shapes:
         if shape.deactivated:
             continue  # sh:deactivated true: shape contributes nothing
-        if focus_override and shape.iri in focus_override:
-            focus = _norm_focus(focus_override[shape.iri])
-        else:
-            # union of every declared target (§2.1.3): class instances,
-            # explicit nodes, subjects-of, objects-of — each a pushed-
-            # down predicate slice. The frame carries full term columns
-            # so a LITERAL focus node (possible via targetObjectsOf —
-            # "every object of ex:age …") keeps its kind/datatype/lang
-            # for node-level and zero-length-path checks.
-            def _subject_focus(df, col):
-                return df.select(
-                    F.col(col).alias("focus"),
-                    _node_kind(F.col(col)).alias("f_kind"),
-                    F.lit(None).cast("string").alias("f_datatype"),
-                    F.lit(None).cast("string").alias("f_lang"),
-                )
-
-            parts = []
-            if shape.target_class:
-                parts.append(_subject_focus(
-                    triples.where(
-                        (F.col("p") == RDF_TYPE)
-                        & (F.col("o") == shape.target_class)
-                    ), "s",
-                ))
-            if shape.target_nodes:
-                parts.append(_subject_focus(
-                    spark.createDataFrame(
-                        [(n,) for n in shape.target_nodes], "focus string"
-                    ), "focus",
-                ))
-            if shape.target_subjects_of:
-                # str-or-list: the parser stores every
-                # sh:targetSubjectsOf value (§2.1.3.3 allows several);
-                # direct construction may still pass a single string
-                tso = shape.target_subjects_of
-                parts.append(_subject_focus(
-                    triples.where(
-                        F.col("p").isin(
-                            [tso] if isinstance(tso, str) else list(tso)
-                        )
-                    ), "s",
-                ))
-            if shape.target_objects_of:
-                too = shape.target_objects_of
-                parts.append(
-                    triples.where(
-                        F.col("p").isin(
-                            [too] if isinstance(too, str) else list(too)
-                        )
-                    ).select(
-                        F.col("o").alias("focus"),
-                        F.col("o_kind").alias("f_kind"),
-                        F.col("o_datatype").alias("f_datatype"),
-                        F.col("o_lang").alias("f_lang"),
-                    )
-                )
-            if not parts:
-                continue  # shape only reachable via sh:node
-            focus = parts[0]
-            for p_ in parts[1:]:
-                focus = focus.unionByName(p_)
-            focus = focus.distinct()
-
-        focus_s = focus.select(F.col("focus").alias("s"))
-        # focus nodes AS value terms (node-level constraints and the
-        # zero-length part of sh:zeroOr…Path)
-        focus_vals = focus.select(
-            F.col("focus").alias("s"),
-            F.col("focus").alias("o"),
-            F.col("f_kind").alias("o_kind"),
-            F.col("f_datatype").alias("o_datatype"),
-            F.col("f_lang").alias("o_lang"),
+        override = (focus_override or {}).get(shape.iri)
+        if override is None and not (
+            shape.target_class or shape.target_nodes
+            or shape.target_subjects_of or shape.target_objects_of
+        ):
+            continue  # shape only reachable via sh:node
+        parts += _shape_violations(
+            triples, shape, override, by_iri, _visiting
         )
-        # no broadcast hint: a targetClass focus set is DATA-sized (every
-        # instance of the class) — let the optimizer pick; a forced
-        # broadcast caps out at the 8 GB table limit on a real corpus
-        shape_triples = triples.join(focus_s, "s", "left_semi")
+    if not parts:
+        return triples.limit(0).select(*[
+            F.lit(None).cast(t).alias(c)
+            for c, t in (f.split() for f in VIOLATION_SCHEMA.split(", "))
+        ])
+    out = parts[0]
+    for p_ in parts[1:]:
+        out = out.unionByName(p_)
+    return out
 
-        for ps in shape.properties:
-            if ps.path_ast is not None and ps.path_ast[0] == "focus":
-                # node-shape-level constraints: the value set of each
-                # focus node is the node itself, with its real term
-                # metadata (a literal focus keeps kind/datatype/lang)
-                vals = focus_vals
-            elif ps.path_ast is not None and ps.path_ast[0] != "pred":
-                # compound path: resolve the (focus → value) relation,
-                # restricted to this shape's focus set; zero-capable
-                # paths add each focus node as its own value (§2.3.1)
-                pairs, inc0 = _path_values(triples, ps.path_ast)
-                vals = pairs.join(focus_s, "s", "left_semi")
-                if inc0:
-                    vals = vals.unionByName(focus_vals)
-                vals = vals.distinct()
-            else:
-                vals = shape_triples.where(F.col("p") == ps.path)
 
-            # sh:message replaces the engine's default text; each
-            # shape's severity independently defaults to sh:Violation
-            # (§3.5 / pyshacl) — a node shape's sh:severity does NOT
-            # cascade onto its property shapes' results
-            def viol_fn(df, sh_, p_, c_, _m, value=None,
-                        _msg=ps.message,
-                        _sev=(ps.severity or SEVERITY_VIOLATION)):
-                return _viol(
-                    df, sh_, p_, c_,
-                    _msg if _msg is not None else _m,
-                    value, severity=_sev,
-                )
-
-            if ps.datatype:
-                bad = vals.where(
-                    (F.col("o_kind") != "literal")
-                    | (_effective_datatype() != ps.datatype)
-                )
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "datatype",
-                    f"value is not a literal of datatype <{ps.datatype}>",
-                ))
-
-            if ps.max_count is not None:
-                over = (
-                    vals.groupBy("s").agg(F.count("*").alias("n"))
-                    .where(F.col("n") > ps.max_count)
-                )
-                out = out.unionByName(viol_fn(
-                    over, shape.iri, ps.path, "maxCount",
-                    f"more than {ps.max_count} values",
-                    value=F.col("n"),
-                ))
-
-            if ps.min_count is not None:
-                counts = (
-                    focus_s.join(
-                        vals.groupBy("s").agg(F.count("*").alias("n")),
-                        "s", "left",
-                    )
-                    .withColumn("n", F.coalesce(F.col("n"), F.lit(0)))
-                    .where(F.col("n") < ps.min_count)
-                )
-                out = out.unionByName(viol_fn(
-                    counts, shape.iri, ps.path, "minCount",
-                    f"fewer than {ps.min_count} values",
-                    value=F.col("n"),
-                ))
-
-            if ps.in_values is not None:
-                bad = vals.where(~F.col("o").isin(ps.in_values))
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "in",
-                    f"value not in {ps.in_values}",
-                ))
-
-            if ps.less_than:
-                other = shape_triples.where(F.col("p") == ps.less_than).select(
-                    F.col("s"), F.col("o").alias("o2"),
-                    F.col("o_datatype").alias("dt2"),
-                )
-                pairs = vals.select(
-                    "s", "o", F.col("o_datatype").alias("dt1")
-                ).join(other, "s")
-                both_num = F.col("dt1").isin(list(NUMERIC_DATATYPES)) & F.col(
-                    "dt2"
-                ).isin(list(NUMERIC_DATATYPES))
-                both_date = (F.col("dt1") == XSD + "date") & (
-                    F.col("dt2") == XSD + "date"
-                )
-                ok = (
-                    F.when(both_num, F.col("o").cast("double") < F.col("o2").cast("double"))
-                    .when(both_date, F.to_date("o") < F.to_date("o2"))
-                    .otherwise(F.col("o") < F.col("o2"))
-                )
-                out = out.unionByName(viol_fn(
-                    pairs.where(~ok), shape.iri, ps.path, "lessThan",
-                    f"value not less than <{ps.less_than}> value",
-                ))
-
-            for attr, comp, mk in (
-                ("min_inclusive", "minInclusive",
-                 lambda v, b: v.isNull() | (v < b)),
-                ("max_inclusive", "maxInclusive",
-                 lambda v, b: v.isNull() | (v > b)),
-                ("min_exclusive", "minExclusive",
-                 lambda v, b: v.isNull() | (v <= b)),
-                ("max_exclusive", "maxExclusive",
-                 lambda v, b: v.isNull() | (v >= b)),
-            ):
-                bound = getattr(ps, attr)
-                if bound is None:
-                    continue
-                # one result per declared bound with its own component
-                # id (§4.3; matches the W3C report shape — a value that
-                # "cannot be compared" violates each declared bound).
-                # try_cast: ANSI mode (Spark 4 default) makes a plain
-                # cast THROW on a non-numeric value mid-job; SHACL
-                # semantics make it a violation row instead
-                out = out.unionByName(viol_fn(
-                    vals.where(mk(F.col("o").try_cast("double"), bound)),
-                    shape.iri, ps.path, comp,
-                    f"value violates sh:{comp} {bound:g}",
-                ))
-
-            if ps.language_in is not None:
-                bad = vals.where(
-                    (F.col("o_kind") != "literal")
-                    | F.col("o_lang").isNull()
-                    | ~F.lower(F.col("o_lang")).isin(
-                        [t.lower() for t in ps.language_in]
-                    )
-                )
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "languageIn",
-                    f"language tag not in {ps.language_in}",
-                ))
-
-            if ps.unique_lang:
-                dup = (
-                    vals.where(F.col("o_lang").isNotNull())
-                    .groupBy("s", F.lower(F.col("o_lang")).alias("lang"))
-                    .agg(F.count("*").alias("n"))
-                    .where(F.col("n") > 1)
-                )
-                out = out.unionByName(viol_fn(
-                    dup, shape.iri, ps.path, "uniqueLang",
-                    "language tag used more than once",
-                    value=F.col("lang"),
-                ))
-
-            if ps.equals:
-                # §4.6.1: violation for every value of path absent
-                # from equals-path, and vice versa (symmetric diff,
-                # per focus node)
-                other = shape_triples.where(
-                    F.col("p") == ps.equals
-                ).select("s", "o")
-                mine = vals.select("s", "o")
-                bad = mine.join(other, ["s", "o"], "left_anti").unionByName(
-                    other.join(mine, ["s", "o"], "left_anti")
-                )
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "equals",
-                    f"value sets of <{ps.path}> and <{ps.equals}> differ",
-                ))
-
-            if ps.disjoint:
-                other = shape_triples.where(
-                    F.col("p") == ps.disjoint
-                ).select("s", "o")
-                bad = vals.select("s", "o").join(
-                    other, ["s", "o"], "left_semi"
-                )
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "disjoint",
-                    f"value shared with <{ps.disjoint}>",
-                ))
-
-            if ps.pattern is not None:
-                rx = ps.pattern
-                if ps.flags:
-                    rx = f"(?{ps.flags}){rx}"
-                bad = vals.where(
-                    (F.col("o_kind") == "bnode") | ~F.col("o").rlike(rx)
-                )
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "pattern",
-                    f"value does not match pattern /{ps.pattern}/",
-                ))
-
-            for attr, comp, mk in (
-                ("min_length", "minLength", lambda ln, b: ln < b),
-                ("max_length", "maxLength", lambda ln, b: ln > b),
-            ):
-                bound = getattr(ps, attr)
-                if bound is None:
-                    continue
-                # per-bound component ids (§4.4.1/2 — blank nodes
-                # violate either declared bound)
-                out = out.unionByName(viol_fn(
-                    vals.where(
-                        (F.col("o_kind") == "bnode")
-                        | mk(F.length(F.col("o")), bound)
-                    ),
-                    shape.iri, ps.path, comp,
-                    f"value violates sh:{comp} {bound}",
-                ))
-
-            if ps.has_value is not None:
-                # existence per focus node: anti-join focus against the
-                # slice holding the required value (broadcast focus set)
-                have = vals.where(F.col("o") == ps.has_value).select("s")
-                missing = focus_s.join(have, "s", "left_anti")
-                out = out.unionByName(viol_fn(
-                    missing, shape.iri, ps.path, "hasValue",
-                    f"required value {ps.has_value} absent",
-                    value=F.lit(None),
-                ))
-
-            if ps.node_kind is not None:
-                allowed = {
-                    SH + "IRI": ["iri"],
-                    SH + "Literal": ["literal"],
-                    SH + "BlankNode": ["bnode"],
-                    SH + "BlankNodeOrIRI": ["bnode", "iri"],
-                    SH + "BlankNodeOrLiteral": ["bnode", "literal"],
-                    SH + "IRIOrLiteral": ["iri", "literal"],
-                }.get(ps.node_kind)
-                if allowed is not None:
-                    bad = vals.where(~F.col("o_kind").isin(allowed))
-                    out = out.unionByName(viol_fn(
-                        bad, shape.iri, ps.path, "nodeKind",
-                        f"value is not a {ps.node_kind.rsplit('#', 1)[-1]}",
-                    ))
-
-            if ps.class_ is not None:
-                # every value must be a SHACL instance of the class
-                # (rdf:type via rdfs:subClassOf*, §2.1.3.1): one
-                # anti-join of the value slice against the
-                # subclass-aware instance set — no collect
-                typed = _class_instances(triples, ps.class_)
-                bad = vals.where(F.col("o_kind") != "literal").join(
-                    typed, "o", "left_anti"
-                ).unionByName(vals.where(F.col("o_kind") == "literal"))
-                out = out.unionByName(viol_fn(
-                    bad, shape.iri, ps.path, "class",
-                    f"value is not an instance of <{ps.class_}>",
-                ))
-
-            if ps.or_:
-                cur, conds = vals, []
-                for b in ps.or_:
-                    cur, c = _branch_viol_cond(triples, cur, b)
-                    conds.append(c)
-                cond = conds[0]
-                for c in conds[1:]:
-                    cond = cond & c  # violates EVERY branch
-                out = out.unionByName(viol_fn(
-                    cur.where(cond), shape.iri, ps.path, "or",
-                    "value conforms to no sh:or branch",
-                ))
-
-            if ps.and_:
-                cur, conds = vals, []
-                for b in ps.and_:
-                    cur, c = _branch_viol_cond(triples, cur, b)
-                    conds.append(c)
-                cond = conds[0]
-                for c in conds[1:]:
-                    cond = cond | c  # violates ANY branch
-                out = out.unionByName(viol_fn(
-                    cur.where(cond), shape.iri, ps.path, "and",
-                    "value fails an sh:and branch",
-                ))
-
-            if ps.not_:
-                cur, c = _branch_viol_cond(triples, vals, ps.not_)
-                out = out.unionByName(viol_fn(
-                    cur.where(~c), shape.iri, ps.path,
-                    "not", "value conforms to the negated shape",
-                ))
-
-            if ps.xone:
-                # §4.6.3: violation unless EXACTLY ONE branch conforms
-                cur, conds = vals, []
-                for b in ps.xone:
-                    cur, c = _branch_viol_cond(triples, cur, b)
-                    conds.append(c)
-                n_conform = sum(
-                    ((~c).cast("int") for c in conds), F.lit(0)
-                )
-                out = out.unionByName(viol_fn(
-                    cur.where(n_conform != 1), shape.iri, ps.path,
-                    "xone", "value conforms to != 1 sh:xone branch",
-                ))
-
-            if ps.qualified is not None and (
-                ps.qualified_min is not None
-                or ps.qualified_max is not None
-            ):
-                conf = _conforming_values(triples, vals, ps.qualified)
-                counts = conf.groupBy("s").agg(F.count("*").alias("n"))
-                if ps.qualified_min is not None:
-                    under = (
-                        focus_s.join(counts, "s", "left")
-                        .withColumn("n", F.coalesce(F.col("n"), F.lit(0)))
-                        .where(F.col("n") < ps.qualified_min)
-                    )
-                    out = out.unionByName(viol_fn(
-                        under, shape.iri, ps.path, "qualifiedMinCount",
-                        f"fewer than {ps.qualified_min} conforming values",
-                        value=F.col("n"),
-                    ))
-                if ps.qualified_max is not None:
-                    over = counts.where(F.col("n") > ps.qualified_max)
-                    out = out.unionByName(viol_fn(
-                        over, shape.iri, ps.path, "qualifiedMaxCount",
-                        f"more than {ps.qualified_max} conforming values",
-                        value=F.col("n"),
-                    ))
-
-            if ps.node:
-                child = by_iri.get(ps.node)
-                if child is not None and child.iri not in _visiting:
-                    child_focus = vals.select(
-                        F.col("o").alias("focus"),
-                        F.col("o_kind").alias("f_kind"),
-                        F.col("o_datatype").alias("f_datatype"),
-                        F.col("o_lang").alias("f_lang"),
-                    ).distinct()
-                    child_viols = validate(
-                        triples, [child],
-                        focus_override={child.iri: child_focus},
-                        _visiting=_visiting | {shape.iri},
-                        _registry=by_iri,
-                    )
-                    # §4.7.3 NodeConstraintComponent: conformance of
-                    # the value node is checked against the child
-                    # shape, but only the OUTER 'node' result is a
-                    # top-level report row — the child's individual
-                    # results belong under sh:detail, not in the
-                    # report (pyshacl/data-shapes suite behavior; the
-                    # pre-r5 engine leaked them, found by the
-                    # manifest-driven W3C suite: node-001).
-                    bad_vals = vals.join(
-                        child_viols.select(F.col("focus").alias("o")).distinct(),
-                        "o", "left_semi",
-                    )
-                    out = out.unionByName(viol_fn(
-                        bad_vals, shape.iri, ps.path, "node",
-                        f"value does not conform to <{ps.node}>",
-                    ))
-
-        if shape.closed:
-            # SHACL §4.8.1: ONLY sh:ignoredProperties exempts extra
-            # predicates — rdf:type is not implicitly allowed (pyshacl,
-            # the reference's validator, flags it on closed shapes that
-            # don't list it)
-            # §4.8.1: only property shapes whose path is a single
-            # predicate contribute to the allowed set — a compound
-            # path never licenses a direct predicate on the focus node
-            allowed = [
-                p.path
-                for p in shape.properties
-                if p.path_ast is None or p.path_ast[0] == "pred"
-            ] + shape.ignored
-            stray = shape_triples.where(~F.col("p").isin(allowed))
-            out = out.unionByName(
-                stray.select(
-                    F.col("s").alias("focus"),
-                    F.lit(shape.iri).alias("shape"),
-                    F.col("p").alias("path"),
-                    F.lit("closed").alias("constraint"),
-                    F.col("o").cast("string").alias("value"),
-                    F.lit("predicate not allowed on closed shape").alias(
-                        "message"
-                    ),
-                    F.lit(shape.severity or SEVERITY_VIOLATION).alias(
-                        "severity"
-                    ),
-                )
+def _shape_violations(
+    triples: DataFrame,
+    shape: NodeShape,
+    override: Optional[DataFrame],
+    by_iri: Dict[str, NodeShape],
+    visiting: frozenset,
+) -> List[DataFrame]:
+    """One node shape's violations: one scan of the predicates the
+    shape reads and one aggregate on ``s`` give its focus nodes and
+    every per-value and cardinality result; constraints that need a
+    second relation join against that aggregate."""
+    aggs = [F.collect_set("__f").alias("__focus")]
+    focus_terms = F.col("__focus")
+    value_term = _term(*[F.col(c) for c in _TERM])
+    preds: set = set()  # plain predicates the scan reads
+    extra: List[DataFrame] = []  # aggregate input rows beside the scan
+    subject_focus = F.lit(False)  # scan rows whose subject is a focus
+    objects_of: List[str] = []  # predicates whose objects are focus
+    if override is not None:
+        f = _norm_focus(override)
+        extra.append(f.select(*_agg_row(F.col("focus"), f=_term(
+            F.col("focus"), F.col("f_kind"), F.col("f_datatype"),
+            F.col("f_lang"),
+        ))))
+    else:
+        # every declared target (§2.1.3): class instances (SHACL
+        # instances, through rdfs:subClassOf*), explicit nodes,
+        # subjects-of, objects-of. Focus terms keep their kind, so a
+        # LITERAL focus node (possible via targetObjectsOf — "every
+        # object of ex:age …") keeps kind/datatype/lang for node-level
+        # and zero-length-path checks.
+        if shape.target_class:
+            subject_focus = (F.col("p") == RDF_TYPE) & F.col("o").isin(
+                _class_set(triples, shape.target_class)
             )
+        subjects_of = _iris(shape.target_subjects_of)
+        if subjects_of:
+            subject_focus = subject_focus | F.col("p").isin(subjects_of)
+        objects_of = _iris(shape.target_objects_of)
+        preds |= {*subjects_of, *objects_of}
+        if shape.target_nodes:
+            nodes = triples.sparkSession.createDataFrame(
+                pa.table({"s": pa.array(shape.target_nodes, pa.string())})
+            )
+            extra.append(nodes.select(*_agg_row(
+                F.col("s"), f=_term(F.col("s"), _node_kind(F.col("s")))
+            )))
+
+    def plain(pred: str) -> _Values:
+        preds.add(pred)
+        return _Values(aggs, sel=F.col("p") == pred)
+
+    results = []  # arrays of nullable result structs, one per check
+    joined = []  # (ps, all values, {other predicate: its values})
+    for k, ps in enumerate(shape.properties):
+        kind = "pred" if ps.path_ast is None else ps.path_ast[0]
+        if kind == "focus":
+            # node-shape-level constraints: the value set of each focus
+            # node is the node itself, with its real term metadata
+            values = _Values(aggs, arr=focus_terms)
+        elif kind == "pred":
+            values = plain(ps.path)
+        else:
+            # compound path: the (s → value) relation joins the
+            # aggregate input tagged with ``k``; zero-capable paths add
+            # each focus node as its own value (§2.3.1)
+            pairs, inc0 = _path_values(triples, ps.path_ast)
+            extra.append(pairs.select(
+                *_agg_row(F.col("s"), k=F.lit(k), v=value_term)
+            ))
+            arr = _aggregate(
+                aggs, F.collect_set(F.when(F.col("__k") == k, F.col("__v")))
+            )
+            if inc0:
+                arr = F.array_distinct(F.concat(arr, focus_terms))
+            values = _Values(aggs, arr=arr)
+
+        # sh:message replaces the engine's default text; each shape's
+        # severity independently defaults to sh:Violation (§3.5 /
+        # pyshacl) — a node shape's sh:severity does NOT cascade onto
+        # its property shapes' results
+        def result(comp, msg, value):
+            return F.struct(
+                F.lit(ps.path).cast("string").alias("path"),
+                F.lit(comp).alias("constraint"),
+                value.cast("string").alias("value"),
+                F.lit(ps.message if ps.message is not None else msg)
+                .alias("message"),
+                F.lit(ps.severity or SEVERITY_VIOLATION).alias("severity"),
+            )
+
+        for comp, msg, violates in _value_checks(ps):
+            results.append(F.transform(
+                values.where(violates), lambda t: result(comp, msg, t["o"])
+            ))
+        if ps.max_count is not None:
+            n = values.count()
+            results.append(F.array(F.when(
+                n > ps.max_count,
+                result("maxCount", f"more than {ps.max_count} values", n),
+            )))
+        # per-focus results repeat per focus TERM: "x"@en and "x" as
+        # objects-of focus nodes are two focus nodes with one string
+        if ps.min_count is not None:
+            n = values.count()
+            results.append(F.transform(focus_terms, lambda _: F.when(
+                n < ps.min_count,
+                result("minCount", f"fewer than {ps.min_count} values", n),
+            )))
+        if ps.has_value is not None:
+            n = values.count(lambda t: t["o"] == ps.has_value)
+            results.append(F.transform(focus_terms, lambda _: F.when(
+                n == 0,
+                result("hasValue", f"required value {ps.has_value} absent",
+                       F.lit(None)),
+            )))
+        if _needs_join(ps):
+            others = {
+                pred: plain(pred).where()
+                for pred in (ps.less_than, ps.equals, ps.disjoint) if pred
+            }
+            joined.append((ps, values.where(), others))
+
+    scan_cond = F.col("p").isin(sorted(preds)) | subject_focus
+    main = _agg_row(
+        F.col("s"), p=F.col("p"), v=value_term,
+        f=F.when(subject_focus, _term(F.col("s"), _node_kind(F.col("s")))),
+    )
+    if objects_of:
+        obj = _agg_row(F.col("o"), f=value_term)
+        rows = (
+            triples.where(scan_cond)
+            .select(F.explode(F.array(
+                F.struct(*main),
+                F.when(F.col("p").isin(objects_of), F.struct(*obj)),
+            )).alias("r"))
+            .where(F.col("r").isNotNull())
+            .select("r.*")
+        )
+    else:
+        rows = triples.where(scan_cond).select(*main)
+    for e in extra:
+        rows = rows.unionByName(e)
+    agg = rows.groupBy("s").agg(*aggs).where(F.size(focus_terms) > 0)
+
+    out = []
+    if results:
+        out.append(agg.select(
+            F.col("s").alias("focus"),
+            F.inline(F.filter(F.concat(*results), lambda r: r.isNotNull())),
+        ).select(
+            "focus", F.lit(shape.iri).alias("shape"), "path", "constraint",
+            "value", "message", "severity",
+        ))
+    focus_s = agg.select("s")
+    for ps, all_values, others in joined:
+        out += _joined_violations(
+            triples, shape, ps,
+            agg.select("s", F.inline(all_values)),
+            agg.select("s", F.explode(focus_terms)).select("s"),
+            {p: agg.select("s", F.inline(v)) for p, v in others.items()},
+            by_iri, visiting,
+        )
+    if shape.closed:
+        # SHACL §4.8.1: ONLY sh:ignoredProperties exempts extra
+        # predicates — rdf:type is not implicitly allowed (pyshacl, the
+        # reference's validator, flags it on closed shapes that don't
+        # list it); only property shapes whose path is a single
+        # predicate contribute to the allowed set — a compound path
+        # never licenses a direct predicate on the focus node
+        allowed = [
+            p.path
+            for p in shape.properties
+            if p.path_ast is None or p.path_ast[0] == "pred"
+        ] + shape.ignored
+        stray = triples.join(focus_s, "s", "left_semi").where(
+            ~F.col("p").isin(allowed)
+        )
+        out.append(stray.select(
+            F.col("s").alias("focus"),
+            F.lit(shape.iri).alias("shape"),
+            F.col("p").alias("path"),
+            F.lit("closed").alias("constraint"),
+            F.col("o").cast("string").alias("value"),
+            F.lit("predicate not allowed on closed shape").alias("message"),
+            F.lit(shape.severity or SEVERITY_VIOLATION).alias("severity"),
+        ))
+    return out
+
+
+def _needs_join(ps: PropertyShape) -> bool:
+    """Whether ``ps`` has a constraint that needs a second relation."""
+    return bool(
+        ps.less_than or ps.equals or ps.disjoint or ps.unique_lang
+        or ps.class_ is not None or ps.node
+        or ps.or_ or ps.and_ or ps.not_ or ps.xone
+        or (ps.qualified is not None and (
+            ps.qualified_min is not None or ps.qualified_max is not None
+        ))
+    )
+
+
+def _joined_violations(
+    triples: DataFrame,
+    shape: NodeShape,
+    ps: PropertyShape,
+    vals: DataFrame,
+    focus_s: DataFrame,
+    others: Dict[str, DataFrame],
+    by_iri: Dict[str, NodeShape],
+    visiting: frozenset,
+) -> List[DataFrame]:
+    """The constraints of ``ps`` that need a second relation (the value
+    set of another predicate, class instances, a child shape, logical
+    branches, a per-language count). ``vals`` is the (s, value term)
+    relation and ``focus_s`` the focus nodes (one row per focus term),
+    both read from the shape's aggregate."""
+    out = []
+
+    def viol_fn(df, c_, _m, value=None):
+        return _viol(
+            df, shape.iri, ps.path, c_,
+            ps.message if ps.message is not None else _m,
+            value, severity=ps.severity or SEVERITY_VIOLATION,
+        )
+
+    if ps.less_than:
+        other = others[ps.less_than].select(
+            F.col("s"), F.col("o").alias("o2"),
+            F.col("o_datatype").alias("dt2"),
+        )
+        pairs = vals.select(
+            "s", "o", F.col("o_datatype").alias("dt1")
+        ).join(other, "s")
+        both_num = F.col("dt1").isin(list(NUMERIC_DATATYPES)) & F.col(
+            "dt2"
+        ).isin(list(NUMERIC_DATATYPES))
+        both_date = (F.col("dt1") == XSD + "date") & (
+            F.col("dt2") == XSD + "date"
+        )
+        ok = (
+            F.when(both_num, F.col("o").cast("double") < F.col("o2").cast("double"))
+            .when(both_date, F.to_date("o") < F.to_date("o2"))
+            .otherwise(F.col("o") < F.col("o2"))
+        )
+        out.append(viol_fn(
+            pairs.where(~ok), "lessThan",
+            f"value not less than <{ps.less_than}> value",
+        ))
+
+    if ps.unique_lang:
+        dup = (
+            vals.where(F.col("o_lang").isNotNull())
+            .groupBy("s", F.lower(F.col("o_lang")).alias("lang"))
+            .agg(F.count("*").alias("n"))
+            .where(F.col("n") > 1)
+        )
+        out.append(viol_fn(
+            dup, "uniqueLang", "language tag used more than once",
+            value=F.col("lang"),
+        ))
+
+    if ps.equals:
+        # §4.6.1: violation for every value of path absent from
+        # equals-path, and vice versa (symmetric diff, per focus node)
+        other = others[ps.equals].select("s", "o")
+        mine = vals.select("s", "o")
+        bad = mine.join(other, ["s", "o"], "left_anti").unionByName(
+            other.join(mine, ["s", "o"], "left_anti")
+        )
+        out.append(viol_fn(
+            bad, "equals",
+            f"value sets of <{ps.path}> and <{ps.equals}> differ",
+        ))
+
+    if ps.disjoint:
+        other = others[ps.disjoint].select("s", "o")
+        bad = vals.select("s", "o").join(other, ["s", "o"], "left_semi")
+        out.append(viol_fn(
+            bad, "disjoint", f"value shared with <{ps.disjoint}>",
+        ))
+
+    if ps.class_ is not None:
+        # every value must be a SHACL instance of the class (rdf:type
+        # via rdfs:subClassOf*, §2.1.3.1): one anti-join of the values
+        # against the instance set
+        typed = _class_instances(triples, ps.class_)
+        bad = vals.where(F.col("o_kind") != "literal").join(
+            typed, "o", "left_anti"
+        ).unionByName(vals.where(F.col("o_kind") == "literal"))
+        out.append(viol_fn(
+            bad, "class", f"value is not an instance of <{ps.class_}>",
+        ))
+
+    for branches, comp, msg, combine in (
+        # violates EVERY branch / ANY branch / the negated shape's
+        # conformance / != 1 conforming branch (§4.6.3)
+        (ps.or_, "or", "value conforms to no sh:or branch",
+         lambda cs: _fold(cs, lambda a, b: a & b)),
+        (ps.and_, "and", "value fails an sh:and branch",
+         lambda cs: _fold(cs, lambda a, b: a | b)),
+        ([ps.not_] if ps.not_ else None, "not",
+         "value conforms to the negated shape", lambda cs: ~cs[0]),
+        (ps.xone, "xone", "value conforms to != 1 sh:xone branch",
+         lambda cs: sum(((~c).cast("int") for c in cs), F.lit(0)) != 1),
+    ):
+        if not branches:
+            continue
+        cur, conds = vals, []
+        for b in branches:
+            cur, c = _branch_viol_cond(triples, cur, b)
+            conds.append(c)
+        out.append(viol_fn(cur.where(combine(conds)), comp, msg))
+
+    if ps.qualified is not None and (
+        ps.qualified_min is not None or ps.qualified_max is not None
+    ):
+        conf = _conforming_values(triples, vals, ps.qualified)
+        counts = conf.groupBy("s").agg(F.count("*").alias("n"))
+        if ps.qualified_min is not None:
+            under = (
+                focus_s.join(counts, "s", "left")
+                .withColumn("n", F.coalesce(F.col("n"), F.lit(0)))
+                .where(F.col("n") < ps.qualified_min)
+            )
+            out.append(viol_fn(
+                under, "qualifiedMinCount",
+                f"fewer than {ps.qualified_min} conforming values",
+                value=F.col("n"),
+            ))
+        if ps.qualified_max is not None:
+            over = counts.where(F.col("n") > ps.qualified_max)
+            out.append(viol_fn(
+                over, "qualifiedMaxCount",
+                f"more than {ps.qualified_max} conforming values",
+                value=F.col("n"),
+            ))
+
+    if ps.node:
+        child = by_iri.get(ps.node)
+        if child is not None and child.iri not in visiting:
+            child_focus = vals.select(
+                F.col("o").alias("focus"),
+                F.col("o_kind").alias("f_kind"),
+                F.col("o_datatype").alias("f_datatype"),
+                F.col("o_lang").alias("f_lang"),
+            ).distinct()
+            child_viols = validate(
+                triples, [child],
+                focus_override={child.iri: child_focus},
+                _visiting=visiting | {shape.iri},
+                _registry=by_iri,
+            )
+            # §4.7.3 NodeConstraintComponent: conformance of the value
+            # node is checked against the child shape, but only the
+            # OUTER 'node' result is a top-level report row — the
+            # child's individual results belong under sh:detail, not in
+            # the report (pyshacl/data-shapes suite behavior; found by
+            # the manifest-driven W3C suite: node-001).
+            bad_vals = vals.join(
+                child_viols.select(F.col("focus").alias("o")).distinct(),
+                "o", "left_semi",
+            )
+            out.append(viol_fn(
+                bad_vals, "node", f"value does not conform to <{ps.node}>",
+            ))
+    return out
+
+
+def _fold(cols, op):
+    out = cols[0]
+    for c in cols[1:]:
+        out = op(out, c)
     return out
 
 

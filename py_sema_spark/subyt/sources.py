@@ -95,10 +95,7 @@ def _json_file(spark: SparkSession, path: str) -> DataFrame:
         {str(k): v for k, v in it.items()} if isinstance(it, dict) else {"value": it}
         for it in items
     ]
-    df = spark.createDataFrame(
-        [{**r, "_ord": i} for i, r in enumerate(rows)]
-    )
-    return df
+    return _local_frame(spark, [{**r, "_ord": i} for i, r in enumerate(rows)])
 
 
 def _inner_xml(elem: ET.Element) -> str:
@@ -152,7 +149,20 @@ def _xml_file(spark: SparkSession, path: str) -> DataFrame:
     for i, it in enumerate(items):
         d = _xml_as_dict(it)
         rows.append({**(d if isinstance(d, dict) else {"value": d}), "_ord": i})
-    return spark.createDataFrame(rows)
+    return _local_frame(spark, rows)
+
+
+def _local_frame(spark: SparkSession, rows: List[dict]) -> DataFrame:
+    """Row dicts as a driver-local frame: the schema
+    ``createDataFrame(rows)`` infers, built from an Arrow table so it
+    plans as a ``LocalRelation`` (subyt then renders it on the
+    driver)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = spark._inferSchemaFromList(rows, names=None)
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)
 
 
 def make_source_df(

@@ -42,11 +42,11 @@ TERM_COLS = ["s", "p", "o", "o_kind", "o_datatype", "o_lang"]
 # jobs per stage (upper bounds) on the inputs above; a stage's metrics
 # rows cost none of them
 STAGE_JOB_BUDGETS = {
-    "01_extract": 2,
-    "02_clean_skolemize": 3,
-    "03_mention_link": 6,
-    "04_canonicalize": 5,
-    "05_materialize": 9,
+    "01_extract": 1,
+    "02_clean_skolemize": 2,
+    "03_mention_link": 5,
+    "04_canonicalize": 4,
+    "05_materialize": 8,
 }
 
 
@@ -187,6 +187,17 @@ class TestStageMetrics:
             sums[s] = sums.get(s, 0) + r
         assert sums == {k: v[0] for k, v in by_stage.items()}
 
+    def test_stage_read_schema_matches_inferred(self, spark, budget_run):
+        """A stage read-back takes its schema from a footer; it equals
+        what Spark infers (order, types, nullability), partition
+        columns included."""
+        wd = budget_run["wd"]
+        p = Pipeline(spark, wd)
+        for name in STAGE_JOB_BUDGETS:
+            path = f"{wd}/{name}"
+            assert p._read(path).schema == spark.read.parquet(path).schema, name
+        assert "s_bucket" in p._read(f"{wd}/05_materialize").columns
+
     def test_chunked_stage_rows_match_outputs(self, spark, tmp_path_factory):
         from pyspark.sql import functions as F
 
@@ -211,6 +222,8 @@ class TestStageMetrics:
                 f"{wd}/01_extract/chunk={i}"
             ).count()
         assert sum(sums.values()) == total
+        assert p._read(f"{wd}/01_extract").schema == spark.read.parquet(f"{wd}/01_extract").schema
+        assert out.columns == ["url", "v"]
         assert p.metrics().count() == t.num_rows
 
 
@@ -481,10 +494,14 @@ class TestSubytJobBudgets:
         assert (root / "all.nt").read_text() == want["a"] + want["b"]
 
 # jobs per read-path call (upper bounds, the measured counts) on a
-# tiny parquet-backed triples frame
+# tiny parquet-backed triples frame. A SHACL validation is one scan and
+# one aggregate on ``s`` per node shape (a shuffle-map job and a result
+# job); the first sh:targetClass on a frame adds the rdfs:subClassOf
+# probe, memoized on the frame for later calls
 READ_JOB_BUDGETS = {
     "sparql.point_lookup": 1,
-    "shacl.validate": 7,
+    "shacl.validate": 3,
+    "shacl.validate_mixed": 2,
 }
 SKOS = "http://www.w3.org/2004/02/skos/core#"
 DC = "http://purl.org/dc/terms/"
@@ -499,6 +516,19 @@ READ_SHAPES = f"""@prefix sh: <http://www.w3.org/ns/shacl#> .
     sh:targetClass skos:Concept ;
     sh:property [ sh:path skos:prefLabel ; sh:minCount 1 ] ;
     sh:property [ sh:path dc:identifier ; sh:maxCount 1 ] .
+"""
+# per-value and cardinality constraints on one path, focus nodes from an
+# explicit list and from the (literal) objects of dc:identifier
+MIXED_SHAPES = f"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix skos: <{SKOS}> .
+@prefix dc: <{DC}> .
+@prefix xsd: <http://www.w3.org/2001/XMLSchema#> .
+<urn:budget:MixedShape> a sh:NodeShape ;
+    sh:targetNode <urn:c2>, <urn:c4> ;
+    sh:targetObjectsOf dc:identifier ;
+    sh:property [ sh:path skos:prefLabel ; sh:datatype xsd:string ;
+        sh:in ( "concept 0" "concept 2" ) ; sh:pattern "^concept [0-2]$" ;
+        sh:minCount 1 ; sh:maxCount 1 ] .
 """
 
 
@@ -543,6 +573,14 @@ def read_run(spark, tmp_path_factory):
             (r["focus"], r["constraint"]) for r in shacl.validate(kg, shapes).collect()
         ),
     )
+    mixed = shacl.parse_shapes_ttl(MIXED_SHAPES)
+    run(
+        "shacl.validate_mixed",
+        lambda: sorted(
+            (r["focus"], r["constraint"], r["value"])
+            for r in shacl.validate(kg, mixed).collect()
+        ),
+    )
     print(f"read budget run: jobs {jobs}")
     return {"jobs": jobs, "out": out}
 
@@ -558,3 +596,16 @@ class TestReadJobBudgets:
         out = read_run["out"]
         assert [r["l"] for r in out["sparql.point_lookup"]] == ["concept 3"]
         assert out["shacl.validate"] == [("urn:c1", "minCount"), ("urn:c2", "maxCount")]
+        # every identifier literal is a focus node without a prefLabel;
+        # c2's and c4's labels are language-tagged, and only c4's is
+        # outside the list and the pattern
+        ids = ["id0-0", "id1-0", "id2-0", "id2-1", "id3-0", "id4-0", "id5-0"]
+        assert out["shacl.validate_mixed"] == sorted(
+            [(i, "minCount", "0") for i in ids]
+            + [
+                ("urn:c2", "datatype", "concept 2"),
+                ("urn:c4", "datatype", "concept 4"),
+                ("urn:c4", "in", "concept 4"),
+                ("urn:c4", "pattern", "concept 4"),
+            ]
+        )

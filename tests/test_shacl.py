@@ -468,3 +468,39 @@ def test_class_instances_memoizes_subclass_probe(spark, monkeypatch):
     _class_instances(df, "http://example.org/C1").count()
     _class_instances(df, "http://example.org/C2").count()
     assert n["count"] == 1
+
+
+def test_target_class_includes_subclass_instances(spark):
+    """sh:targetClass targets every SHACL instance of the class (§2.1.3.1,
+    rdfs:subClassOf*; pyshacl matches): a Student is a focus node of a
+    shape targeting Person."""
+    shapes = parse_shapes_ttl(
+        """
+        @prefix sh: <http://www.w3.org/ns/shacl#> .
+        @prefix ex: <http://example.org/> .
+        ex:PersonShape a sh:NodeShape ;
+            sh:targetClass ex:Person ;
+            sh:property [ sh:path ex:name ; sh:minCount 1 ] .
+        """
+    )
+    df = triples_df(
+        spark,
+        """
+        @prefix ex: <http://example.org/> .
+        @prefix rdfs: <http://www.w3.org/2000/01/rdf-schema#> .
+        ex:Student rdfs:subClassOf ex:Person .
+        ex:PhD rdfs:subClassOf ex:Student .
+        ex:ann a ex:Person ; ex:name "Ann" .
+        ex:bob a ex:Student .
+        ex:cid a ex:PhD .
+        ex:dan a ex:Robot .
+        """,
+    )
+    got = sorted(
+        (r["focus"], r["constraint"], r["value"])
+        for r in validate(df, shapes).collect()
+    )
+    assert got == [
+        ("http://example.org/bob", "minCount", "0"),
+        ("http://example.org/cid", "minCount", "0"),
+    ]

@@ -400,3 +400,39 @@ def test_differential_shacl(spark, seed):
         f"only_spark={sorted(got - expected, key=str)}\n"
         f"only_naive={sorted(expected - got, key=str)}"
     )
+
+
+def make_repeat_case(rng):
+    """A random case with repeats: some triples appear twice in the
+    input, and every node shape gains property shapes that reuse one of
+    its paths with other constraints."""
+    graph = make_graph(rng)
+    graph = graph + rng.sample(graph, min(len(graph), 8))
+    shapes = make_shapes(rng)
+    for shape in shapes:
+        extra = make_shapes(rng)[0].properties
+        for ps in extra:
+            ps.path = rng.choice(shape.properties).path
+        shape.properties += extra
+    return graph, shapes
+
+
+@pytest.mark.parametrize("seed", range(10))
+def test_differential_shacl_repeats(spark, seed):
+    rng = random.Random(9100 + seed)
+    graph, shapes = make_repeat_case(rng)
+    df = spark.createDataFrame(
+        graph,
+        "s string, p string, o string, o_kind string, "
+        "o_datatype string, o_lang string",
+    )
+    got = {
+        (r["focus"], r["shape"], r["path"], r["constraint"], r["value"])
+        for r in validate(df, shapes).collect()
+    }
+    expected = naive_validate(graph, shapes)
+    assert got == expected, (
+        f"seed={seed}\nshapes={shapes}\n"
+        f"only_spark={sorted(got - expected, key=str)}\n"
+        f"only_naive={sorted(expected - got, key=str)}"
+    )

@@ -488,6 +488,29 @@ class TestSources:
             {"id": "2", "name": "b"},
         ]
 
+    def test_flat_json_and_xml_sources_are_driver_local(self, spark, tmp_path):
+        """A flat JSON or XML source plans as a LocalRelation, with the
+        schema ``createDataFrame`` infers from the same row dicts."""
+        from py_sema_spark.subyt.engine import _is_driver_local
+
+        j = tmp_path / "flat.json"
+        j.write_text('[{"id": 1, "name": "a", "w": 0.5}, {"id": 2, "name": null, "w": 1.5}]')
+        x = tmp_path / "flat.xml"
+        x.write_text(
+            '<root><item k="p"><id>1</id><name>a</name></item>'
+            '<item k="q"><id>2</id><name>b</name></item></root>'
+        )
+        for path, rows in (
+            (j, [{"id": 1, "name": "a", "w": 0.5, "_ord": 0},
+                 {"id": 2, "name": None, "w": 1.5, "_ord": 1}]),
+            (x, [{"id": "1", "name": "a", "@k": "p", "_ord": 0},
+                 {"id": "2", "name": "b", "@k": "q", "_ord": 1}]),
+        ):
+            df = make_source_df(spark, str(path))
+            assert _is_driver_local(df), path
+            assert df.schema == spark.createDataFrame(rows).schema, path
+            assert [r.asDict() for r in df.orderBy("_ord").collect()] == rows
+
     def test_folder_and_glob(self, spark, tmp_path):
         (tmp_path / "a.csv").write_text("n\n1\n2\n")
         (tmp_path / "b.csv").write_text("n\n3\n")
