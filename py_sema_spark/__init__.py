@@ -8,12 +8,11 @@ semantics only) over Spark DataFrames:
                    subset) used inside Arrow-batched UDFs,
 - ``functions``  : scalar column builders (xsd formatting ladder, URI
                    cleaning, URI-template expansion, content
-                   negotiation, text analysis),
+                   negotiation, URL canonicalization),
 - ``operators``  : extraction, transitive closure, connected components,
                    entity linkage and sameAs canonicalization, RDFS/OWL
-                   entailment, URL/line dedup, sketches, window ctrl
-                   columns, text curation, robots.txt and sitemap
-                   crawl filters,
+                   entailment, URL dedup, heavy hitters, window ctrl
+                   columns,
 - ``sources``    : record sources (csv/json/xml/glob), synthetic corpus,
                    sinks,
 - ``queries``    : the reference SPARQL-template surface as DataFrame

@@ -9,17 +9,13 @@ over scalar / list / dict values. Unset/None variables contribute
 nothing (and drop their separator), matching RFC 6570 §3.2.1.
 
 Used by the subyt ``uritexpand`` function (X12) and the patterned
-file sink (S14). Simple ``{var}`` templates additionally compile to
-pure Spark column expressions via :func:`uritemplate_col`.
+file sink (S14).
 """
 
 from __future__ import annotations
 
 import re
 from typing import Any, Dict, List, Optional, Tuple
-
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 
 _UNRESERVED = (
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
@@ -133,45 +129,3 @@ def template_variables(template: str) -> List[str]:
             if vm:
                 out.append(vm.group(1))
     return out
-
-
-def uritemplate_col(template: str, colmap: Dict[str, Column]) -> Column:
-    """Compile a simple-expression template (only ``{var}`` / ``{+var}``
-    / ``{/var}`` / ``{#var}`` single-variable forms) to one
-    ``concat`` column expression. Falls back to raising ValueError for
-    forms that need the full engine — callers then use a batched UDF."""
-    pieces: List[Column] = []
-    pos = 0
-    for m in _EXPR_RE.finditer(template):
-        if m.start() > pos:
-            pieces.append(F.lit(template[pos : m.start()]))
-        op, varlist = m.group(1), m.group(2)
-        if op in (";", "?", "&", ".") or "," in varlist:
-            raise ValueError(f"unsupported template form for column compile: {template}")
-        vm = _VARSPEC_RE.match(varlist.strip())
-        if not vm or vm.group(2) or vm.group(3):
-            raise ValueError(f"unsupported varspec for column compile: {varlist}")
-        name = vm.group(1)
-        if name not in colmap:
-            raise KeyError(f"no column for template variable {name}")
-        # RFC 6570: an undefined (NULL) variable contributes nothing
-        # (operator prefix included) — without this, one NULL column
-        # makes F.concat return NULL for the WHOLE expansion,
-        # diverging from the Python form
-        raw = colmap[name].cast("string")
-        # percent-encoding of unreserved-violating chars: the common
-        # identifier case needs none; guard with a cheap replace of
-        # space (the frequent offender) — full parity via the UDF path.
-        encoded = F.regexp_replace(raw, " ", "%20")
-        if op in ("#", "/"):
-            pieces.append(
-                F.when(raw.isNull(), F.lit("")).otherwise(
-                    F.concat(F.lit(op), encoded)
-                )
-            )
-        else:
-            pieces.append(F.coalesce(encoded, F.lit("")))
-        pos = m.end()
-    if pos < len(template):
-        pieces.append(F.lit(template[pos:]))
-    return F.concat(*pieces) if pieces else F.lit(template)

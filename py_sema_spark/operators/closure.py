@@ -22,6 +22,8 @@ Scale notes:
 
 from __future__ import annotations
 
+from typing import Iterable, List, Tuple
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -108,6 +110,27 @@ def transitive_closure(
     if not with_distance:
         return paths.select("src", "dst")
     return paths
+
+
+def reachable_pairs(edges: Iterable[Tuple[str, str]]) -> List[Tuple[str, str]]:
+    """(start, reached) for every node reachable over one or more of
+    the (src, dst) ``edges`` — the driver twin of
+    :func:`transitive_closure` for schema-sized inputs (class and
+    property hierarchies), a DFS per start node and no Spark job."""
+    adj: dict = {}
+    for a, b in edges:
+        adj.setdefault(a, set()).add(b)
+    out = []
+    for start in adj:
+        seen, stack = set(), list(adj[start])
+        while stack:
+            nxt = stack.pop()
+            if nxt in seen:
+                continue
+            seen.add(nxt)
+            stack.extend(adj.get(nxt, ()))
+        out.extend((start, reached) for reached in seen)
+    return out
 
 
 def connected_components(

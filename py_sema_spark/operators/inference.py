@@ -33,6 +33,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .closure import reachable_pairs
+
 RDF_NS = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS_NS = "http://www.w3.org/2000/01/rdf-schema#"
 
@@ -106,21 +108,7 @@ def rdfs_entailment(
     )
 
     def close_pairs(pred: str) -> list:
-        adj: dict = {}
-        for r in schema_rows:
-            if r["p"] == pred:
-                adj.setdefault(r["s"], set()).add(r["o"])
-        out = []
-        for start in adj:
-            seen, stack = set(), list(adj[start])
-            while stack:
-                nxt = stack.pop()
-                if nxt in seen:
-                    continue
-                seen.add(nxt)
-                stack.extend(adj.get(nxt, ()))
-            out.extend((start, sup) for sup in seen)
-        return out
+        return reachable_pairs((r["s"], r["o"]) for r in schema_rows if r["p"] == pred)
 
     spark = triples.sparkSession
     pair_schema = "sub string, sup string"

@@ -3,10 +3,9 @@ reference has no implementation, BASELINE.json:6 defines the contract):
 
 1. **Mention detection** — n-gram candidate generation over document
    text joined against a broadcast entity dictionary (exact surface
-   forms). No Python: token n-grams are column algebra.
-2. **Candidate scoring** — dictionary-match score fused with an
-   embedding-cosine score (mention context vs entity embedding).
-3. **Canonicalization** — owl:sameAs-style equivalence edges →
+   forms). No Python: token n-grams are column algebra. Every match
+   becomes a ``schema:about`` triple (:func:`mention_triples`).
+2. **Canonicalization** — owl:sameAs-style equivalence edges →
    connected components → rewrite triples' s/o to the deterministic
    component representative (lexicographic min IRI). Up to
    ``DRIVER_CANON_MAX_EDGES`` edges the components come from a
@@ -29,7 +28,6 @@ from pyspark.sql import functions as F
 
 from .closure import connected_components
 from .dedup import normalized_tokens
-from .similarity import dot, norm
 
 
 def detect_mentions(
@@ -82,67 +80,6 @@ def detect_mentions(
         .select(F.col(id_col), F.col("gram").alias("mention"), F.col("entity"))
         .distinct()
     )
-
-
-def score_candidates(
-    mentions: DataFrame,
-    entity_embeddings: DataFrame,
-    doc_embeddings: DataFrame,
-    id_col: str = "doc_id",
-    entity_col: str = "entity",
-    vec_col: str = "embedding",
-    dict_weight: float = 0.5,
-) -> DataFrame:
-    """Fuse dictionary and embedding evidence per (doc, mention, entity).
-
-    score = dict_weight · 1.0 + (1−dict_weight) · cos(doc_vec, ent_vec)
-    (every row here already passed the exact dictionary match, so the
-    dictionary component is 1; fuzzy dictionary tiers would lower it).
-    Returns mentions + score, ranked per (doc, mention).
-    """
-    from pyspark.sql.window import Window
-
-    ev = entity_embeddings.select(
-        F.col(entity_col).alias("entity"), F.col(vec_col).alias("_evec")
-    )
-    dv = doc_embeddings.select(
-        F.col(id_col), F.col(vec_col).alias("_dvec")
-    )
-    scored = (
-        mentions.join(F.broadcast(ev), "entity", "left")
-        .join(dv, id_col, "left")
-        .withColumn(
-            "emb_cos",
-            F.when(
-                F.col("_evec").isNotNull() & F.col("_dvec").isNotNull(),
-                # a zero-norm vector (empty/OOV doc) makes cosine 0/0
-                # — a DIVIDE_BY_ZERO error under ANSI, NULL otherwise;
-                # either way it must degrade to "no embedding
-                # evidence" (0.0), not poison the fused score and drop
-                # the mention downstream
-                F.coalesce(
-                    F.try_divide(
-                        dot(
-                            F.col("_evec").cast("array<double>"),
-                            F.col("_dvec").cast("array<double>"),
-                        ),
-                        norm(F.col("_evec").cast("array<double>"))
-                        * norm(F.col("_dvec").cast("array<double>")),
-                    ),
-                    F.lit(0.0),
-                ),
-            ).otherwise(F.lit(0.0)),
-        )
-        .withColumn(
-            "score",
-            F.lit(dict_weight) + (1 - dict_weight) * F.col("emb_cos"),
-        )
-        .drop("_evec", "_dvec")
-    )
-    w = Window.partitionBy(id_col, "mention").orderBy(
-        F.desc("score"), F.asc("entity")
-    )
-    return scored.withColumn("rank", F.row_number().over(w))
 
 
 def canonical_map(equiv_edges: DataFrame) -> DataFrame:
@@ -258,25 +195,15 @@ def rewrite_triples(triples: DataFrame, mapping: DataFrame) -> DataFrame:
 
 
 def mention_triples(
-    scored_mentions: DataFrame,
-    min_score: float = 0.5,
+    mentions: DataFrame,
     about_pred: str = "https://schema.org/about",
-    doc_base: str = "",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Top-ranked mention links as (s,p,o,…) triples: document →
+    """:func:`detect_mentions` output as (s,p,o,…) triples: document →
     schema:about → entity. Emitted in the standard triple schema so
     they materialize alongside extracted triples."""
-    top = scored_mentions.where(
-        (F.col("rank") == 1) & (F.col("score") >= min_score)
-    )
-    s = (
-        F.concat(F.lit(doc_base), F.col(id_col).cast("string"))
-        if doc_base
-        else F.col(id_col).cast("string")
-    )
-    return top.select(
-        s.alias("s"),
+    return mentions.select(
+        F.col(id_col).cast("string").alias("s"),
         F.lit(about_pred).alias("p"),
         F.col("entity").alias("o"),
         F.lit("iri").alias("o_kind"),

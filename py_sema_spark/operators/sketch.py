@@ -1,111 +1,16 @@
-"""Deterministic cardinality sketches.
+"""Exact heavy hitters without a full-table groupBy.
 
-``kmv_distinct`` is a K-Minimum-Values estimator (Bar-Yossef et al.
-2002): hash every value to a uniform integer, keep the k smallest
-per group, and estimate ``|distinct| ≈ (k−1) / u_k`` where ``u_k`` is
-the k-th smallest hash normalized to (0,1). Unlike
-``approx_count_distinct`` (HLL++, whose register layout is
-engine-private), every step here is portable column algebra over
-md5 — so the DuckDB oracle reproduces the estimate *bit-exactly*,
-and reruns/retries can never flicker the estimate.
-
-Scale shape: the value explode pre-distincts per (group, hash) with
-map-side combine; "k smallest per group" is a rank filter that
-compiles to ``WindowGroupLimit`` (each map task forwards at most k
-hashes per group), so a group with 10¹⁰ distinct values ships
-k·partitions rows, not 10¹⁰. Memory per group is O(k).
+:func:`misra_gries_candidates` summarizes each partition in O(k)
+counters (no shuffle) into a superset of the items with frequency
+above n/k; :func:`heavy_hitters` then counts only the rows whose value
+is a candidate, so the result is exact while the shuffle carries only
+plausible hitters. Hub detection in :mod:`..model` uses it.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-#: hash domain: first 13 hex digits of md5 → [0, 2^52), exact in a
-#: double on both engines
-HASH_BITS = 52
-HASH_DOMAIN = float(2**HASH_BITS)
-
-
-def kmv_hash(value: Column) -> Column:
-    """Uniform deterministic hash of a value into [0, 2^52) as long."""
-    return F.conv(F.substring(F.md5(value), 1, 13), 16, 10).cast("long")
-
-
-def kmv_distinct(
-    df: DataFrame,
-    value_col: str,
-    k: int = 256,
-    group_cols: Optional[Sequence[str]] = None,
-) -> DataFrame:
-    """Distinct-count estimate per group (or globally).
-
-    Returns ``(*group_cols, est_distinct)``; groups with fewer than
-    ``k`` distinct hashes report the exact count (the estimator's
-    standard small-range behavior). Relative error ≈ 1/√(k−2)
-    (~6% at k=256), asserted in tests.
-    """
-    if k < 2:
-        raise ValueError("k must be ≥ 2")
-    groups = list(group_cols or [])
-    hashed = (
-        # NULLs don't count as a distinct value (SQL count-distinct
-        # semantics) — and md5(NULL) → NULL would sort NULLS FIRST into
-        # the top-k window, stealing a slot and biasing the estimate
-        df.where(F.col(value_col).isNotNull())
-        .select(*groups, kmv_hash(F.col(value_col)).alias("_h"))
-        .distinct()
-    )
-    if groups:
-        w = Window.partitionBy(*groups).orderBy("_h")
-    else:
-        w = Window.partitionBy(F.lit(1)).orderBy("_h")
-    topk = hashed.withColumn("_rn", F.row_number().over(w)).where(
-        F.col("_rn") <= k
-    )
-    agg = topk.groupBy(*groups).agg(
-        F.count(F.lit(1)).alias("_m"), F.max("_h").alias("_hk")
-    )
-    est = F.when(
-        F.col("_m") < k, F.col("_m").cast("double")
-    ).otherwise(
-        F.lit(float(k - 1)) * F.lit(HASH_DOMAIN) / F.col("_hk")
-    )
-    return agg.select(*groups, est.alias("est_distinct"))
-
-
-def exact_quantiles(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list | None = None,
-    quantiles: tuple = (0.5, 0.9, 0.99),
-) -> DataFrame:
-    """Per-group exact quantiles (linear interpolation — the
-    definition Spark's ``percentile`` and DuckDB's ``quantile_cont``
-    share, so results are cross-engine comparable).
-
-    Returns one row per group: ``(group…, n, p50, p90, …)``.
-
-    Scale note: exact quantiles sort every group's values — Spark's
-    ``percentile`` aggregates per-group value buffers, fine for the
-    bounded-group-count profile this targets (per-language corpus
-    stats: thousands of groups × millions of values). For quantiles
-    OVER high-cardinality groups or as a single global pass over 100
-    TB, swap in ``percentile_approx`` (t-digest, mergeable map-side)
-    — same call shape, bounded memory, no longer bit-portable; the
-    exact form stays as its correctness oracle at test scale, the
-    same twin pattern as :func:`kmv_distinct` vs exact count-distinct.
-    """
-    groups = list(group_cols or [])
-    aggs = [F.count(F.lit(1)).alias("n")] + [
-        F.percentile(F.col(value_col), F.lit(q)).alias(
-            f"p{str(q)[2:].ljust(2, '0')}"
-        )
-        for q in quantiles
-    ]
-    return df.groupBy(*groups).agg(*aggs)
 
 
 def misra_gries_candidates(
@@ -180,58 +85,4 @@ def heavy_hitters(df: DataFrame, value_col: str, k: int = 100) -> DataFrame:
         counts.crossJoin(n_df)
         .where(F.col("cnt") * k > F.col("_n"))
         .select("item", "cnt")
-    )
-
-
-def weighted_sample(
-    df: DataFrame,
-    weight_col: str,
-    k: int = 20,
-    group_cols: Optional[Sequence[str]] = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Weighted sampling WITHOUT replacement (Efraimidis–Spirakis
-    A-ES): each row gets key ``ln(u)/w`` with ``u`` uniform from the
-    portable md5 hash of its id, and the k largest keys per group are
-    the sample — inclusion probability proportional to weight, no
-    driver-side pass, no rejection loop.
-
-    The md5-derived ``u`` makes the draw *deterministic and
-    engine-independent* (same property as :func:`kmv_distinct`):
-    reruns, repartitions, and the DuckDB oracle all pick the identical
-    sample. Selection is one rank window per group —
-    WindowGroupLimit pushes the top-k down, so per-group shipping is
-    bounded by k, the exact shape of ``topk_per_group``. Rows with
-    non-positive weight are excluded (they have probability 0).
-
-    The rank is taken over the key **rounded to 6 decimals** with the
-    id as tiebreak: ``log`` is not required by IEEE 754 to be
-    correctly rounded, so two near-equal keys computed from different
-    (u, w) pairs could otherwise straddle 1 ulp differently per
-    engine; rounding first makes the ordering engine-portable.
-
-    Returns (*group_cols, id, weight, key, rank), key rounded to 6.
-    """
-    groups = list(group_cols or [])
-    u = (kmv_hash(F.col(id_col).cast("string")) + 1).cast(
-        "double"
-    ) / F.lit(HASH_DOMAIN)
-    part = groups if groups else [F.lit(1)]
-    w = Window.partitionBy(*part).orderBy(
-        F.desc("_key"), F.asc(id_col)
-    )
-    return (
-        df.where(F.col(weight_col) > 0)
-        .withColumn("_key", F.round(F.log(u) / F.col(weight_col), 6))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .select(
-            *groups,
-            id_col,
-            # native type preserved — fractional weights must not
-            # truncate in the report even though only the key uses them
-            F.col(weight_col).alias("weight"),
-            F.col("_key").alias("key"),
-            "rank",
-        )
     )

@@ -43,13 +43,18 @@ from .operators.linkage import (
     mention_triples,
     rewrite_triples,
     sameas_canonical_map,
-    score_candidates,
 )
 from .functions.clean import apply_node_clean_chain
 
 METRICS_SCHEMA = (
     "stage string, partition_id int, rows bigint, ts timestamp, status string"
 )
+
+# 05_materialize salts only detected hub subjects (row count above
+# HUB_SHARE × the average bucket size) over HUB_SALT sub-partitions;
+# see model.with_subject_bucket.
+HUB_SALT = 8
+HUB_SHARE = 0.25
 
 _LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
 _DRIVER_LISTING_MAX = 1024
@@ -247,53 +252,30 @@ class Pipeline:
         self,
         corpus: DataFrame,
         dictionary: Optional[DataFrame] = None,
-        entity_embeddings: Optional[DataFrame] = None,
-        doc_embeddings: Optional[DataFrame] = None,
         graph: str = "urn:kg:corpus",
         n_buckets: int = 64,
-        hub_salt: int = 8,
-        hub_share: Optional[float] = 0.25,
-        curate: bool = False,
         extract_chunks: int = 0,
     ) -> DataFrame:
         """Full run; returns the materialized triples DataFrame.
 
-        With ``curate=True`` a stage ``00_curate`` runs first: URL
-        canonicalization dedup (first crawl of a recrawled page wins,
-        min ``warc_ts``-free deterministic survivor by url order) and
-        content-hash exact dedup over the extracted ``text`` — the
-        crawl-side hygiene every webtext KG build runs before paying
-        for extraction. Off by default so reference fixed-point counts
-        are unaffected.
+        ``dictionary`` (``entity, label``) adds the ``03_mention_link``
+        stage: every exact label match in a page's ``text`` becomes a
+        ``<url> schema:about <entity>`` triple. The triples land in
+        ``graph``, written as ``n_buckets`` subject-hash buckets. With
+        ``extract_chunks > 0`` extraction commits per chunk (see
+        :meth:`chunked_stage`).
         """
-        if curate:
-            def _curate() -> DataFrame:
-                from .operators.dedup import url_dedup
-                from pyspark.sql import Window
-
-                deduped = url_dedup(corpus, url_col="url", id_col="url")
-                w = Window.partitionBy(F.md5("text")).orderBy("url")
-                return (
-                    deduped.withColumn("_rk", F.row_number().over(w))
-                    .where(F.col("_rk") == 1)
-                    .drop("_rk", "url_canon")
-                )
-
-            source = self.stage("00_curate", _curate)
-        else:
-            source = corpus
-
         # extract is the expensive Arrow-UDF stage — with
         # extract_chunks > 0 it commits per chunk so a kill loses at
         # most one chunk of work (see chunked_stage)
         if extract_chunks > 0:
             extracted = self.chunked_stage(
-                "01_extract", source, extract_structured,
+                "01_extract", corpus, extract_structured,
                 n_chunks=extract_chunks,
             )
         else:
             extracted = self.stage(
-                "01_extract", lambda: extract_structured(source)
+                "01_extract", lambda: extract_structured(corpus)
             )
 
         def _clean() -> DataFrame:
@@ -306,18 +288,9 @@ class Pipeline:
 
         if dictionary is not None:
             def _mentions() -> DataFrame:
-                # over the CURATED corpus: mention triples must not
-                # resurrect documents curation dropped
-                m = detect_mentions(source, dictionary, id_col="url")
-                if entity_embeddings is not None and doc_embeddings is not None:
-                    scored = score_candidates(
-                        m, entity_embeddings, doc_embeddings, id_col="url"
-                    )
-                else:
-                    scored = m.withColumns(
-                        {"score": F.lit(1.0), "rank": F.lit(1), "emb_cos": F.lit(0.0)}
-                    )
-                return mention_triples(scored, id_col="url")
+                return mention_triples(
+                    detect_mentions(corpus, dictionary, id_col="url"), id_col="url"
+                )
 
             mention_t = self.stage("03_mention_link", _mentions)
             linked = clean.select(
@@ -342,13 +315,13 @@ class Pipeline:
         canonical = self.stage("04_canonicalize", _canon)
 
         def _final() -> DataFrame:
-            # degree-triggered hub salting (hub_share): canonical is a
+            # degree-triggered hub salting (HUB_SHARE): canonical is a
             # checkpoint scan, so the heavy-hitter pass re-reads parquet,
             # not the upstream plan
             out = canonical.withColumn("g", F.lit(graph))
             from .model import with_subject_bucket
 
-            out = with_subject_bucket(out, n_buckets, hub_salt, hub_share)
+            out = with_subject_bucket(out, n_buckets, HUB_SALT, HUB_SHARE)
             out = out.repartition(F.col("s_bucket"), F.col("salt"))
             # s_bucket/salt in the dedup key: functions of the triple,
             # so semantics unchanged — but the repartition exchange then

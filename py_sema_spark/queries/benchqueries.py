@@ -28,9 +28,10 @@ from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from ..functions.clean import normalise_scheme_col
-from ..functions.uritemplate import uritemplate_col
+from ..functions.uritemplate import uritemplate_expand
 from ..functions.xsd import (
     unite_col,
     uri_format_col,
@@ -1389,18 +1390,26 @@ WHERE ('C' || CAST(c_custkey AS VARCHAR)) LIKE 'C1%'
 """,
 )
 
+_PART_IRI = "https://example.org/part/{p_brand}/{p_partkey}"
+
+
+@F.udf(StringType())
+def _part_iri(brand, partkey):
+    return uritemplate_expand(_PART_IRI, {"p_brand": brand, "p_partkey": partkey})
+
+
+# TPC-H p_brand is 'Brand#MN': '#' is its only character outside the
+# RFC 6570 unreserved set, so the simple-expression expansion is
+# p_brand with '#' percent-encoded.
 _register(
     "uritemplate_expand",
     lambda spark, sf: _t(spark, sf, "part").select(
         "p_partkey",
-        uritemplate_col(
-            "https://example.org/part/{p_brand}/{p_partkey}",
-            {"p_brand": F.col("p_brand"), "p_partkey": F.col("p_partkey")},
-        ).alias("expanded"),
+        _part_iri("p_brand", "p_partkey").alias("expanded"),
     ),
     """
 SELECT p_partkey,
-  concat('https://example.org/part/', replace(p_brand, ' ', '%20'), '/', p_partkey) AS expanded
+  concat('https://example.org/part/', replace(p_brand, '#', '%23'), '/', p_partkey) AS expanded
 FROM part
 """,
 )

@@ -48,6 +48,8 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .operators.closure import reachable_pairs
+
 SH = "http://www.w3.org/ns/shacl#"
 RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
@@ -674,31 +676,30 @@ def _norm_focus(df: DataFrame) -> DataFrame:
 
 def _class_set(triples: DataFrame, class_iri: str) -> List[str]:
     """``class_iri`` and every class below it through rdfs:subClassOf*
-    (§2.1.3.1 — "SHACL instance"; pyshacl matches). Whether the frame
-    has any rdfs:subClassOf triple is an eager ``isEmpty`` job, probed
-    once per frame object and memoized on it (``validate`` passes the
-    same frame through every shape and sh:node recursion). Only a frame
-    with a class hierarchy pays more: the closure over the
-    hierarchy slice (schema-sized) and one collect of the subclasses."""
-    sub = triples.where(F.col("p") == RDFS_SUBCLASS_OF)
-    has_subclass = getattr(triples, "_psp_has_subclass", None)
-    if has_subclass is None:
-        has_subclass = not sub.isEmpty()
+    (§2.1.3.1 — "SHACL instance"; pyshacl matches). The frame's
+    rdfs:subClassOf slice (schema-sized) is collected in one job and
+    closed on the driver, once per frame object: the closure is
+    memoized on it (``validate`` passes the same frame through every
+    shape and sh:node recursion)."""
+    below = getattr(triples, "_psp_subclasses", None)
+    if below is None:
+        rows = (
+            triples.where(
+                (F.col("p") == RDFS_SUBCLASS_OF)
+                & F.col("s").isNotNull()
+                & F.col("o").isNotNull()
+            )
+            .select("s", "o")
+            .collect()
+        )
+        below = {}
+        for sub, sup in reachable_pairs((r["s"], r["o"]) for r in rows):
+            below.setdefault(sup, set()).add(sub)
         try:
-            triples._psp_has_subclass = has_subclass
+            triples._psp_subclasses = below
         except AttributeError:
             pass
-    if not has_subclass:
-        return [class_iri]
-    from .operators.closure import transitive_closure
-
-    desc = (
-        transitive_closure(sub, src="s", dst="o", with_distance=False)
-        .where(F.col("dst") == class_iri)
-        .select("src")
-        .collect()
-    )
-    return sorted({class_iri, *(r["src"] for r in desc)})
+    return sorted({class_iri, *below.get(class_iri, ())})
 
 
 def _class_instances(triples: DataFrame, class_iri: str) -> DataFrame:

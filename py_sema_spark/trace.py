@@ -5,10 +5,10 @@ re-entry guarding (``TraceMode`` once/keep/refresh +
 ``RestartException``) and decorator-mixed event capture.
 
 Re-expressed for the batch engine rather than translated: events are
-plain records that can be exported as a DataFrame
-(:meth:`Trace.events_df`) and appended to the pipeline's
-``stage_metrics`` table, so a traced service run lands in the same
-lineage store the checkpointed pipeline writes (SURVEY.md §2.10 E8).
+plain records that can be exported as an ``(event, status, ts)``
+DataFrame (:meth:`Trace.events_df`). That is not the pipeline's
+``stage_metrics`` schema (``METRICS_SCHEMA``, rows per part file), so
+events are kept apart from those rows (SURVEY.md §2.10 E8).
 Driver-side only by design — a trace records orchestration events
 (stage started, config resolved, sink written), never per-row data.
 """
@@ -105,8 +105,7 @@ class Trace:
         return self._events
 
     def events_df(self, spark):
-        """The trace as rows compatible with the pipeline's
-        ``stage_metrics`` lineage store: (event, status, ts)."""
+        """The trace as ``(event, status, ts)`` rows, one per event."""
         rows = [
             (e["event"].name, str(e["status"]), e["ts"])
             for e in self._events

@@ -194,26 +194,6 @@ class TestReviewRegressions:
             == "https://schema.org/x"
         )
 
-    def test_uritemplate_col_null_variable(self, spark):
-        from pyspark.sql import functions as F
-
-        from py_sema_spark.functions.uritemplate import (
-            uritemplate_col,
-            uritemplate_expand,
-        )
-
-        df = spark.createDataFrame(
-            [("x", None), ("x", "y")], "a string, b string"
-        )
-        got = [r["u"] for r in df.select(
-            uritemplate_col("p/{a}/q{/b}", {
-                "a": F.col("a"), "b": F.col("b")}).alias("u")
-        ).collect()]
-        assert got[0] == uritemplate_expand("p/{a}/q{/b}", {"a": "x"})
-        assert got[1] == uritemplate_expand(
-            "p/{a}/q{/b}", {"a": "x", "b": "y"})
-        assert got == ["p/x/q", "p/x/q/y"]
-
     def test_fmt_scalar_nonfinite(self):
         from py_sema_spark.functions.uritemplate import uritemplate_expand
 

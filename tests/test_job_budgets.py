@@ -609,3 +609,88 @@ class TestReadJobBudgets:
                 ("urn:c4", "pattern", "concept 4"),
             ]
         )
+
+
+# rdfs:subClassOf jobs of one validation over a class hierarchy: the
+# slice is collected once and closed on the driver, however many
+# sh:targetClass and sh:class occurrences ask for a class set
+SUBCLASS_JOB_BUDGET = 1
+EX = "http://example.org/"
+RDFS_SUBCLASS_OF = "http://www.w3.org/2000/01/rdf-schema#subClassOf"
+CLASS_SHAPES = f"""@prefix sh: <http://www.w3.org/ns/shacl#> .
+@prefix ex: <{EX}> .
+ex:PersonShape a sh:NodeShape ;
+    sh:targetClass ex:Person ;
+    sh:property [ sh:path ex:name ; sh:minCount 1 ] .
+ex:AdvisedShape a sh:NodeShape ;
+    sh:targetSubjectsOf ex:advisor ;
+    sh:property [ sh:path ex:advisor ; sh:class ex:Student ] .
+"""
+
+
+@pytest.fixture(scope="module")
+def class_run(spark, tmp_path_factory):
+    """One SHACL validation of a targetClass shape and an sh:class shape
+    over a parquet-backed frame with a 3-level class hierarchy
+    (Postdoc ⊑ PhD ⊑ Student ⊑ Person); every class-set lookup runs in
+    its own job group."""
+    import pyarrow.parquet as pq
+
+    from py_sema_spark import shacl
+    from py_sema_spark.model import TRIPLE_SCHEMA, triples_table
+
+    def iri(s, p, o):
+        return (EX + s, p, EX + o, "iri", None, None)
+
+    rows = [
+        iri("Student", RDFS_SUBCLASS_OF, "Person"),
+        iri("PhD", RDFS_SUBCLASS_OF, "Student"),
+        iri("Postdoc", RDFS_SUBCLASS_OF, "PhD"),
+        iri("ann", RDF_TYPE, "Person"),
+        iri("bob", RDF_TYPE, "Student"),
+        iri("cid", RDF_TYPE, "PhD"),
+        iri("eve", RDF_TYPE, "Postdoc"),
+        iri("dan", RDF_TYPE, "Robot"),
+        iri("bob", EX + "advisor", "ann"),
+        iri("cid", EX + "advisor", "dan"),
+        iri("eve", EX + "advisor", "bob"),
+    ] + [
+        (EX + n, EX + "name", n.title(), "literal", None, None)
+        for n in ("ann", "cid", "dan")
+    ]
+    path = tmp_path_factory.mktemp("class_budget") / "kg.parquet"
+    pq.write_table(triples_table(rows), path)
+    kg = spark.read.schema(TRIPLE_SCHEMA).parquet(str(path))
+    sc = spark.sparkContext
+    tag = uuid.uuid4().hex[:8]
+    groups = []
+    real_class_set = shacl._class_set
+
+    def class_set(triples, class_iri):
+        groups.append(f"class-{tag}-{len(groups)}")
+        with _job_group(sc, groups[-1]):
+            return real_class_set(triples, class_iri)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shacl, "_class_set", class_set)
+        out = sorted(
+            (r["focus"], r["constraint"], r["value"])
+            for r in shacl.validate(kg, shacl.parse_shapes_ttl(CLASS_SHAPES)).collect()
+        )
+    return {"lookups": len(groups), "jobs": sum(_jobs(sc, g) for g in groups), "out": out}
+
+
+class TestSubclassJobBudget:
+    def test_subclass_jobs(self, class_run):
+        assert class_run["lookups"] >= 2
+        assert class_run["jobs"] <= SUBCLASS_JOB_BUDGET, class_run["jobs"]
+
+    def test_class_run_results(self, class_run):
+        # Person's focus nodes include every subclass instance; only a
+        # Student (or below) is a valid advisor
+        assert class_run["out"] == [
+            (EX + "bob", "class", EX + "ann"),
+            (EX + "bob", "minCount", "0"),
+            (EX + "cid", "class", EX + "dan"),
+            (EX + "eve", "minCount", "0"),
+        ]

@@ -372,6 +372,7 @@ class TestUriTemplate:
             ("{/list*}", {"list": ["a", "b"]}, "/a/b"),
             ("{missing}", {}, ""),
             ("no-vars", {}, "no-vars"),
+            ("p/{a}/q{/b}", {"a": "x", "b": None}, "p/x/q"),
         ],
     )
     def test_rfc6570_vectors(self, tpl, ctx, expect):

@@ -447,27 +447,29 @@ class TestLogicalConstraints:
             _value_cond(PropertyShape(path="", class_="urn:C"))
 
 
-def test_class_instances_memoizes_subclass_probe(spark, monkeypatch):
-    """ADVICE r04: the rdfs:subClassOf slice emptiness probe (an eager
-    isEmpty job) must run once per validation run, not once per
-    sh:class occurrence."""
+def test_class_instances_memoizes_subclass_probe(spark, tmp_path):
+    """ADVICE r04: the rdfs:subClassOf probe (one Spark job collecting
+    the slice) must run once per frame, not once per sh:class
+    occurrence. The frame is parquet-backed, so the probe is a real job."""
+    import uuid
+
     from py_sema_spark.shacl import _class_instances
 
-    df = triples_df(spark, CONFORM_TTL)
-    n = {"count": 0}
-    # patch the concrete class (pyspark 4: the classic impl overrides
-    # the pyspark.sql.DataFrame base methods)
-    cls = type(df)
-    orig = cls.isEmpty
-
-    def counting(self):
-        n["count"] += 1
-        return orig(self)
-
-    monkeypatch.setattr(cls, "isEmpty", counting)
-    _class_instances(df, "http://example.org/C1").count()
-    _class_instances(df, "http://example.org/C2").count()
-    assert n["count"] == 1
+    triples_df(spark, CONFORM_TTL).write.parquet(str(tmp_path / "kg"))
+    df = spark.read.parquet(str(tmp_path / "kg"))
+    sc = spark.sparkContext
+    group = f"subclass-probe-{uuid.uuid4().hex[:8]}"
+    keys = ("spark.jobGroup.id", "spark.job.description")
+    prev = [sc.getLocalProperty(k) for k in keys]
+    sc.setJobGroup(group, group)
+    try:
+        _class_instances(df, "http://example.org/C1")
+        _class_instances(df, "http://example.org/C2")
+    finally:
+        for k, v in zip(keys, prev):
+            sc.setLocalProperty(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_target_class_includes_subclass_instances(spark):

@@ -1,9 +1,8 @@
 """Spark-level operator tests: closure, components, linkage, sameAs
-fusion, sketches (weighted sample, KMV distinct, exact quantiles, heavy
-hitters), window ctrl columns, sparqlets, pipeline resume.
+fusion, heavy hitters, window ctrl columns, sparqlets, pipeline resume,
+URL canonicalization and URL dedup.
 One shared session (conftest)."""
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -164,27 +163,6 @@ class TestLinkage:
         assert {r["s"] for r in out} == {"http://e/belcoast", "http://d/1"}
         assert [r["o"] for r in out if r["o_kind"] == "iri"] == ["http://e/belcoast"]
 
-    def test_zero_norm_embedding_degrades_to_dict_score(self, spark):
-        """A present but all-zero embedding makes cosine 0/0 → NULL;
-        that must fall back to the dictionary component (score =
-        dict_weight), not poison the fused score to NULL and drop the
-        mention at the downstream score >= threshold filter."""
-        from py_sema_spark.operators.linkage import score_candidates
-
-        mentions = spark.createDataFrame(
-            [(1, "acme", "http://e/acme")],
-            ["doc_id", "mention", "entity"],
-        )
-        evecs = spark.createDataFrame(
-            [("http://e/acme", [1.0, 0.0])], ["entity", "embedding"]
-        )
-        dvecs = spark.createDataFrame(
-            [(1, [0.0, 0.0])], ["doc_id", "embedding"]
-        )
-        row = score_candidates(mentions, evecs, dvecs).first()
-        assert row.emb_cos == 0.0
-        assert row.score == pytest.approx(0.5)
-
 
 class TestSparqlets:
     @pytest.fixture(scope="class")
@@ -344,40 +322,6 @@ class TestPipelineResume:
         assert len(calls2) == 3
         assert out3.count() == ref.count()
 
-    def test_mentions_run_over_curated_corpus(
-        self, spark, tmp_path_factory
-    ):
-        """With curate=True, mention linking must read the CURATED
-        corpus: a document dropped by exact-text dedup gets no
-        schema:about triples (round-3 review fix — mentions previously
-        read the raw corpus and resurrected dropped docs)."""
-        import datetime as dt
-
-        from py_sema_spark.pipeline import Pipeline
-
-        wd = str(tmp_path_factory.mktemp("pipe_mcur"))
-        ts = dt.datetime(2024, 1, 1)
-        html = b"<html><body>acme corp announces</body></html>"
-        rows = [
-            ("http://a.ex/p1", ts, html, "acme corp announces", "en"),
-            # exact-duplicate text under another URL: curation drops it
-            ("http://b.ex/p1", ts, html, "acme corp announces", "en"),
-        ]
-        corpus = spark.createDataFrame(
-            rows,
-            "url string, warc_ts timestamp, html binary, "
-            "text string, lang string",
-        )
-        dictionary = spark.createDataFrame(
-            [("http://e/acme", "acme corp")], ["entity", "label"]
-        )
-        p = Pipeline(spark, wd)
-        out = p.run(corpus, dictionary=dictionary, curate=True)
-        about = out.where(
-            F.col("p") == "https://schema.org/about"
-        ).select("s").distinct()
-        assert about.count() == 1  # only the curated survivor
-
     def test_chunked_stage_rejects_changed_n_chunks(
         self, spark, tmp_path_factory
     ):
@@ -430,30 +374,6 @@ class TestPipelineResume:
         assert df.columns == ["event", "status", "ts"]
 
 
-class TestPipelineCurate:
-    def test_curate_stage_dedups_recrawls(self, spark, tmp_path_factory):
-        from py_sema_spark.pipeline import Pipeline
-        from py_sema_spark.sources.corpus import synth_corpus
-
-        wd = str(tmp_path_factory.mktemp("pipe_cur"))
-        base = synth_corpus(spark, 40, seed=7)
-        # recrawl: same pages again under tracking-param'd urls
-        recrawl = base.withColumn(
-            "url", F.concat("url", F.lit("?utm_source=recrawl"))
-        )
-        corpus = base.unionByName(recrawl)
-        p = Pipeline(spark, wd)
-        out = p.run(corpus, curate=True)
-        curated = spark.read.parquet(f"{wd}/00_curate")
-        assert curated.count() == 40  # both dedup layers collapse it
-        # triples equal the single-crawl pipeline's output
-        wd2 = str(tmp_path_factory.mktemp("pipe_cur2"))
-        out2 = Pipeline(spark, wd2).run(base)
-        assert out.count() == out2.count()
-        stages = [e["event"].listargs[0] for e in p.trace.events]
-        assert stages[0] == "00_curate"
-
-
 class TestSameasFusion:
     def test_chain_rewrites_and_dedups(self, spark):
         """sameAs chain x↔y↔z (transitive — needs real CC): all three
@@ -490,105 +410,6 @@ class TestSameasFusion:
             ("urn:a", "ex:knows", "urn:x"),
             ("urn:a", "ex:note", "urn:z"),
         }
-
-
-class TestWeightedSample:
-    def test_deterministic_and_weight_biased(self, spark):
-        """Same draw under repartition; a 100×-weighted stratum must
-        dominate a k=30 sample from a 50/50 id split."""
-        from py_sema_spark.operators.sketch import weighted_sample
-
-        rows = [(i, 1000 if i < 50 else 10) for i in range(100)]
-        df = spark.createDataFrame(rows, "doc_id long, w long")
-        a = sorted(
-            (r.doc_id, r.rank)
-            for r in weighted_sample(df, "w", k=30).collect()
-        )
-        b = sorted(
-            (r.doc_id, r.rank)
-            for r in weighted_sample(df.repartition(7), "w", k=30).collect()
-        )
-        assert a == b and len(a) == 30
-        heavy = sum(1 for doc_id, _ in a if doc_id < 50)
-        assert heavy >= 24  # 100× weight ⇒ heavy stratum dominates
-
-    def test_zero_weight_excluded(self, spark):
-        from py_sema_spark.operators.sketch import weighted_sample
-
-        df = spark.createDataFrame(
-            [(1, 0), (2, 5), (3, -2)], "doc_id long, w long"
-        )
-        got = {r.doc_id for r in weighted_sample(df, "w", k=10).collect()}
-        assert got == {2}
-
-
-class TestKmvSketch:
-    def test_small_groups_exact(self, spark):
-        from py_sema_spark.operators.sketch import kmv_distinct
-
-        df = spark.createDataFrame(
-            [("g1", f"v{i % 7}") for i in range(100)]
-            + [("g2", f"w{i}") for i in range(30)],
-            "g string, v string",
-        )
-        out = {
-            r.g: r.est_distinct
-            for r in kmv_distinct(df, "v", k=64, group_cols=["g"]).collect()
-        }
-        assert out == {"g1": 7.0, "g2": 30.0}  # below k → exact
-
-    def test_nulls_do_not_count_or_bias(self, spark):
-        """SQL count-distinct semantics: NULL is not a value — and its
-        NULL md5 hash must not steal a NULLS-FIRST top-k slot (round-3
-        review fix)."""
-        from py_sema_spark.operators.sketch import kmv_distinct
-
-        df = spark.createDataFrame(
-            [(f"v{i}",) for i in range(10)] + [(None,)] * 5, "v string"
-        )
-        assert kmv_distinct(df, "v", k=64).first().est_distinct == 10.0
-
-    def test_estimate_accuracy_at_scale(self, spark):
-        from py_sema_spark.operators.sketch import kmv_distinct
-
-        n = 20_000
-        df = spark.range(n).select(
-            F.concat(F.lit("val"), F.col("id").cast("string")).alias("v")
-        )
-        est = kmv_distinct(df, "v", k=256).first().est_distinct
-        assert abs(est - n) / n < 0.15  # ~1/sqrt(254) expected error
-
-    def test_deterministic_across_runs_and_partitions(self, spark):
-        from py_sema_spark.operators.sketch import kmv_distinct
-
-        df = spark.range(5000).select(F.col("id").cast("string").alias("v"))
-        a = kmv_distinct(df.repartition(2), "v", k=64).first().est_distinct
-        b = kmv_distinct(df.repartition(17), "v", k=64).first().est_distinct
-        assert a == b  # bit-identical regardless of layout
-
-    def test_rank_filter_compiles_to_group_limit(self, spark):
-        from py_sema_spark.operators.sketch import kmv_distinct
-
-        df = spark.createDataFrame(
-            [("g", "x"), ("g", "y")], "g string, v string"
-        )
-        plan = kmv_distinct(df, "v", k=4, group_cols=["g"])._jdf\
-            .queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan
-
-
-class TestExactQuantiles:
-    def test_linear_interpolation_values(self, spark):
-        from py_sema_spark.operators.sketch import exact_quantiles
-
-        df = spark.createDataFrame(
-            [("a", float(v)) for v in range(1, 11)], ["g", "v"]
-        )
-        row = exact_quantiles(df, "v", ["g"]).collect()[0]
-        assert row["n"] == 10
-        assert abs(row["p50"] - 5.5) < 1e-9
-        assert abs(row["p90"] - 9.1) < 1e-9
-        assert abs(row["p99"] - 9.91) < 1e-9
 
 
 class TestWindowsNullSafety:
@@ -676,3 +497,156 @@ class TestHeavyHitters:
         )
         got = {r.item: r.cnt for r in heavy_hitters(df, "v", k=3).collect()}
         assert got == {True: 9}
+
+
+class TestUrlOps:
+    def test_canonicalize_vectors(self, spark):
+        from py_sema_spark.functions.web import url_canonicalize
+
+        cases = [
+            ("HTTP://WWW.Example.ORG:80/A/b/?utm_source=x&b=2&a=1#f",
+             "http://example.org/A/b?a=1&b=2"),
+            ("https://example.org:443/x", "https://example.org/x"),
+            ("https://example.org:8443/x", "https://example.org:8443/x"),
+            ("http://example.org/", "http://example.org"),
+            ("http://example.org/p?fbclid=abc", "http://example.org/p"),
+            ("http://example.org/p?z=1&y=2", "http://example.org/p?y=2&z=1"),
+        ]
+        df = spark.createDataFrame(
+            [(i, u) for i, (u, _) in enumerate(cases)], "i long, url string"
+        )
+        from pyspark.sql import functions as F
+
+        got = {
+            r.i: r.c
+            for r in df.select(
+                "i", url_canonicalize(F.col("url")).alias("c")
+            ).collect()
+        }
+        for i, (_, want) in enumerate(cases):
+            assert got[i] == want, (cases[i][0], got[i], want)
+
+    def test_url_dedup_keeps_min_id(self, spark):
+        from py_sema_spark.operators.dedup import url_dedup
+
+        df = spark.createDataFrame(
+            [
+                (5, "http://a.org/x?utm_source=1"),
+                (2, "http://WWW.A.org/x/"),
+                (9, "http://a.org/y"),
+            ],
+            "doc_id long, url string",
+        )
+        out = url_dedup(df).orderBy("doc_id").collect()
+        assert [(r.doc_id, r.url_canon) for r in out] == [
+            (2, "http://a.org/x"),
+            (9, "http://a.org/y"),
+        ]
+
+    def test_url_dedup_group_limit_plan(self, spark):
+        from py_sema_spark.operators.dedup import url_dedup
+
+        df = spark.createDataFrame(
+            [(1, "http://a.org/x")], "doc_id long, url string"
+        )
+        plan = url_dedup(df)._jdf.queryExecution().executedPlan().toString()
+        assert "WindowGroupLimit" in plan
+
+
+class TestUrlCanonProperties:
+    """Batch-property check: one Spark job over ~400 structurally
+    random URLs, compared against an independent urllib-based Python
+    reimplementation of the documented normalization rules."""
+
+    @staticmethod
+    def _py_canon(url: str) -> str:
+        import re
+        from urllib.parse import urlsplit
+
+        u = url.split("#", 1)[0]
+        sp = urlsplit(u)
+        if sp.scheme and "://" in u:
+            netloc = sp.netloc.lower()
+            if netloc.startswith("www."):
+                netloc = netloc[4:]
+            if sp.scheme.lower() == "http" and netloc.endswith(":80"):
+                netloc = netloc[:-3]
+            if sp.scheme.lower() == "https" and netloc.endswith(":443"):
+                netloc = netloc[:-4]
+            prefix = sp.scheme.lower() + "://" + netloc
+            rest = u.split("://", 1)[1]
+            rest = rest[len(sp.netloc):]
+        else:
+            prefix, rest = "", u
+        path = rest.split("?", 1)[0].rstrip("/")
+        query = rest.split("?", 1)[1] if "?" in rest else ""
+        keep = [
+            p
+            for p in query.split("&")
+            if p
+            and not re.match(
+                r"^(utm_[A-Za-z0-9_]*|fbclid|gclid|mc_cid|mc_eid|ref)(=|$)",
+                p,
+            )
+        ]
+        qstr = "&".join(sorted(keep))
+        return prefix + path + ("?" + qstr if qstr else "")
+
+    def _random_urls(self, n=400):
+        import random
+
+        rng = random.Random(42)
+        urls = []
+        for _ in range(n):
+            scheme = rng.choice(["http", "HTTP", "https", "HTTPS"])
+            www = rng.choice(["", "www.", "WWW."])
+            host = rng.choice(["ex.org", "Sub.Ex.ORG", "a-b.net"])
+            port = rng.choice(["", ":80", ":443", ":8080"])
+            segs = "/".join(
+                rng.choice(["p", "Q", "r2", "s-t"])
+                for _ in range(rng.randint(0, 3))
+            )
+            trail = rng.choice(["", "/", "//"])
+            params = "&".join(
+                rng.sample(
+                    ["a=1", "b=2", "utm_source=x", "fbclid=9",
+                     "ref", "z=Z&y"],
+                    rng.randint(0, 3),
+                )
+            )
+            frag = rng.choice(["", "#f", "#a/b?c=1"])
+            url = f"{scheme}://{www}{host}{port}"
+            if segs:
+                url += "/" + segs
+            url += trail
+            if params:
+                url += "?" + params
+            url += frag
+            urls.append(url)
+        return urls
+
+    def test_matches_python_reference(self, spark):
+        from py_sema_spark.functions.web import url_canonicalize
+
+        urls = self._random_urls()
+        df = spark.createDataFrame(
+            [(i, u) for i, u in enumerate(urls)], "i long, url string"
+        )
+        got = {
+            r.i: r.c
+            for r in df.select(
+                "i", url_canonicalize(F.col("url")).alias("c")
+            ).collect()
+        }
+        for i, u in enumerate(urls):
+            assert got[i] == self._py_canon(u), (u, got[i], self._py_canon(u))
+
+    def test_idempotent(self, spark):
+        from py_sema_spark.functions.web import url_canonicalize
+
+        urls = self._random_urls(200)
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        once = df.select(url_canonicalize(F.col("url")).alias("c"))
+        twice = once.select(url_canonicalize(F.col("c")).alias("c2"))
+        pairs = once.collect(), twice.collect()
+        assert [r.c for r in pairs[0]] == [r.c2 for r in pairs[1]]

@@ -41,8 +41,10 @@ def imports(name: str, path: Path, known: set) -> set:
     return prefixes & known
 
 
-def main() -> None:
-    root = Path(sys.argv[1] if len(sys.argv) > 1 else ".").resolve()
+def reach(root: Path) -> tuple:
+    """``(modules, reached)``: every ``py_sema_spark`` module name with
+    its path, and the set of names the surfaces import directly or
+    transitively."""
     mods = {module_name(root, p): p for p in (root / "py_sema_spark").rglob("*.py")}
     todo = [
         m for m in mods
@@ -57,6 +59,12 @@ def main() -> None:
         if m not in seen:
             seen.add(m)
             todo += imports(m, mods[m], set(mods))
+    return mods, seen
+
+
+def main() -> None:
+    root = Path(sys.argv[1] if len(sys.argv) > 1 else ".").resolve()
+    mods, seen = reach(root)
 
     def lines(names) -> int:
         return sum(len(mods[m].read_text().splitlines()) for m in names)
